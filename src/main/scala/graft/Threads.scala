@@ -11,18 +11,30 @@ package graft
   * stragglers' idle capacity. FIFO scheduling (the default) gives
   * exactly the back-fill behaviour. */
 private[graft] object Threads {
-  /** Run the thunks on up to `width` threads, return results in
-    * order, rethrow the first failure. */
+  /** Run the thunks on up to `width` threads and return their results
+    * in order. The first thunk to fail (in completion order) wins: its
+    * own exception is rethrown — not the pool's `ExecutionException`
+    * wrapper — after the thunks still queued or running are cancelled:
+    * queued ones never start, running ones are interrupted. */
   def inParallel[T](work: Seq[() => T], width: Int = 4): Seq[T] = {
     if (work.size <= 1) work.map(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(width, work.size))
+      val done = new java.util.concurrent.ExecutorCompletionService[T](pool)
       try {
-        val futs = work.map(w => pool.submit(
+        val futs = work.map(w => done.submit(
           new java.util.concurrent.Callable[T] { def call(): T = w() }))
+        futs.foreach { _ =>
+          try done.take().get()
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              futs.foreach(_.cancel(true))
+              throw e.getCause
+          }
+        }
         futs.map(_.get())
-      } finally pool.shutdown()
+      } finally pool.shutdownNow()
     }
   }
 }

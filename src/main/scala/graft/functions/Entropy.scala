@@ -48,17 +48,21 @@ object EntropyKernel {
     val nChars = text.numChars()
     val n = nChars - 1
     if (n < 1) return new GenericArrayData(Array(0L, 0L, 0L))
-    // char → byte offset map (UTF-8 chars span 1-4 bytes)
+    // char → byte offset map, widths by UTF8String's first-byte table
+    // (so malformed input splits into the same chars substring sees):
+    // 0x00-0xC1 → 1 (ASCII, stray continuations, overlong leads),
+    // 0xC2-0xDF → 2, 0xE0-0xEF → 3, 0xF0-0xF4 → 4, 0xF5-0xFF → 1
     val offs = new Array[Int](nChars + 1)
     var b = 0
     var c = 0
     while (b < bytes.length) {
       offs(c) = b
       val first = bytes(b) & 0xFF
-      b += (if (first < 0x80) 1
+      b += (if (first < 0xC2) 1
         else if (first < 0xE0) 2
         else if (first < 0xF0) 3
-        else 4)
+        else if (first < 0xF5) 4
+        else 1)
       c += 1
     }
     offs(nChars) = bytes.length

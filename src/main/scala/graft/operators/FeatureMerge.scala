@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cross-level / cross-tile feature merge (SURVEY.md §2c).
@@ -40,13 +40,16 @@ object FeatureMerge {
     * geometry, snapping near-coincident endpoints (2.1 µdeg) before a
     * second merge. Row-local (the heavy co-location already happened
     * in [[unionGeoms]]), so it pipelines with no extra shuffle. */
-  def mergeLines(feats: DataFrame, wkbCol: String): DataFrame = {
-    val mergeUdf = udf { (wkb: Array[Byte]) =>
-      if (wkb == null || wkb.isEmpty) wkb
-      else graft.functions.GeomOps.toWkb(
-        graft.functions.GeomOps.mergeLineFeature(
-          graft.functions.GeomOps.fromWkb(wkb)))
-    }
-    feats.withColumn(wkbCol, mergeUdf(col(wkbCol)))
+  def mergeLines(feats: DataFrame, wkbCol: String): DataFrame =
+    feats.withColumn(wkbCol, mergedLine(col(wkbCol)))
+
+  /** [[mergeLines]] as a column: the stitched WKB of `wkb`. */
+  def mergedLine(wkb: Column): Column = mergeUdf(wkb)
+
+  private val mergeUdf = udf { (wkb: Array[Byte]) =>
+    if (wkb == null || wkb.isEmpty) wkb
+    else graft.functions.GeomOps.toWkb(
+      graft.functions.GeomOps.mergeLineFeature(
+        graft.functions.GeomOps.fromWkb(wkb)))
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+import org.locationtech.jts.geom.Geometry
 
 import graft.functions.{GeomFunctions, GeomOps}
 import graft.sources.Mapsforge
@@ -11,29 +13,44 @@ import graft.sources.Mapsforge.{Poi, Way}
 /** End-to-end map2db pipeline on Spark (SURVEY.md §2c).
   *
   * Mirrors the reference's per-tile feature handling
-  * (map2db.py:815-1077) and cross-tile/level merge (747-812) as a
-  * declarative plan:
+  * (map2db.py:815-1077) and cross-tile/level merge (747-812). The
+  * reference reads each tile once and handles its POIs and ways in the
+  * same serial walk; [[build]] keeps that shape as ONE plan for all
+  * three feature tables:
   *
-  *  1. executors decode tiles → Poi/Way rows (Mapsforge.scan);
-  *  2. per row: build geometry, clip to the row's tile box on the
-  *     microdegree grid, make-valid for areas, drop empties —
-  *     all row-local, no shuffle;
-  *  3. one shuffle per feature table: groupBy(fid) merges fragments —
-  *     geometry union at the max (least simplified) level, zoom range
-  *     extended to the min level seen (window + agg over one
-  *     exchange);
-  *  4. line features get the reference's two-pass endpoint-snap
-  *     linemerge, row-local after the merge shuffle.
+  *  1. decode: executors decode their tiles (Mapsforge.decodeTiles,
+  *     no shuffle) and hand the Poi/Way objects straight on;
+  *  2. clip: per row, [[poiFeature]] / [[wayFeature]] build the
+  *     geometry, clip it to the row's tile box on the microdegree grid,
+  *     make areas valid and drop empties — row-local, and the decoded
+  *     tiles are never encoded as rows;
+  *  3. merge: the fragments form one relation tagged by table, and one
+  *     exchange on (table, fid) serves a window + aggregate that unions
+  *     each feature's max-level fragments and extends its zoom range to
+  *     the min level seen; line rows then get the reference's two-pass
+  *     endpoint-snap linemerge, row-local;
+  *  4. split: the merged relation is persisted once and its vtag keys
+  *     collected once; points, lines and areas are filters of it.
   *
   * The reference walks tiles serially and mutates sqlite row-by-row;
   * here every stage is partition-parallel and the only data movement
-  * is the per-table fid shuffle.
+  * is the one fid shuffle. [[pointFeatures]], [[lineFeatures]],
+  * [[areaFeatures]] and [[mergeFeatures]] expose the same clip and
+  * merge per table over a scanned Dataset.
   */
 object MapPipeline {
 
   case class Feature(fid: Long, level: Int, minz: Int, maxz: Int,
       layer: Int, tags: String, vtags: Map[String, String],
       wkb: Array[Byte])
+
+  /** The feature tables, in output order, with their id columns; a
+    * fragment's `table` column is its index here. */
+  private val FeatureTables =
+    Seq("points" -> "m2db_pnum", "lines" -> "m2db_lnum", "areas" -> "m2db_anum")
+  private val PointT = 0
+  private val LineT = 1
+  private val AreaT = 2
 
   private def jsonArray(tags: Seq[String]): String =
     tags.map(t => "\"" + t.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -48,69 +65,96 @@ object MapPipeline {
       r6(Mapsforge.latFromY(level, tileY)))
   }
 
-  /** POIs → point features, clipped to their tile box
-    * (map2db.py:837-886). Row-local. */
-  def pointFeatures(pois: Dataset[Poi]): Dataset[Feature] = {
-    import pois.sparkSession.implicits._
-    pois.flatMap { p =>
-      p.pnum.flatMap { fid =>
-        val (minx, miny, maxx, maxy) = tileBox(p.level, p.tileX, p.tileY)
-        val g = GeomOps.multiPoint(Seq((p.lon, p.lat)))
-        val clipped = GeomOps.clipToBox(g, minx, miny, maxx, maxy)
-        if (clipped.isEmpty) None // point was in the tile's edge buffer
-        else Some(Feature(fid, p.level, p.minz, p.maxz, p.layer,
-          jsonArray(p.tags), p.vtags,
-          GeomOps.toWkb(GeomOps.normalized(clipped))))
-      }
+  /** The table a way's fragment belongs to: areas are the
+    * MULTIPOLYGON ways, lines the rest. */
+  private def wayTable(w: Way): Int =
+    if (w.geomType == "MULTIPOLYGON") AreaT else LineT
+
+  /** A way's dbl feature id: anum for areas, lnum for lines. */
+  private def wayId(w: Way): Option[Long] =
+    if (wayTable(w) == AreaT) w.anum else w.lnum
+
+  /** One POI clipped to its tile box (map2db.py:837-886); None when
+    * the point lies in the tile's edge buffer. `fid` is the dbl pnum,
+    * 0 on a map without one. */
+  private def poiFeature(p: Poi): Option[Feature] = {
+    val (minx, miny, maxx, maxy) = tileBox(p.level, p.tileX, p.tileY)
+    val clipped = GeomOps.clipToBox(GeomOps.multiPoint(Seq((p.lon, p.lat))),
+      minx, miny, maxx, maxy)
+    if (clipped.isEmpty) None
+    else Some(Feature(p.pnum.getOrElse(0L), p.level, p.minz, p.maxz,
+      p.layer, jsonArray(p.tags), p.vtags,
+      GeomOps.toWkb(GeomOps.normalized(clipped))))
+  }
+
+  /** One way clipped to its tile box: a line (map2db.py:888-966), or an
+    * area built as shell+holes per data block and made valid first
+    * (967-1072). None when nothing linear / polygonal is left. `fid` is
+    * the dbl lnum / anum, 0 on a map without one. */
+  private def wayFeature(w: Way): Option[Feature] = {
+    val (minx, miny, maxx, maxy) = tileBox(w.level, w.tileX, w.tileY)
+    def clip(g: Geometry): Option[Geometry] = {
+      val c =
+        if (GeomOps.boxCovers(g, minx, miny, maxx, maxy)) g
+        else GeomOps.clipToBox(g, minx, miny, maxx, maxy)
+      if (c.isEmpty) None else Some(c)
     }
-  }
-
-  /** Ways → line features (map2db.py:888-966). Row-local. */
-  def lineFeatures(ways: Dataset[Way]): Dataset[Feature] = {
-    import ways.sparkSession.implicits._
-    ways.filter(w => w.geomType == "MULTILINESTRING" && w.lnum.isDefined)
-      .flatMap { w =>
-        val (minx, miny, maxx, maxy) = tileBox(w.level, w.tileX, w.tileY)
-        val g = GeomOps.multiLineString(
-          w.coords.flatten.map(_.map(c => (c.lon, c.lat))))
-        val clipped =
-          if (GeomOps.boxCovers(g, minx, miny, maxx, maxy)) g
-          else GeomOps.clipToBox(g, minx, miny, maxx, maxy)
-        if (clipped.isEmpty) None
-        else GeomOps.keepLinear(clipped).map { kept =>
-          Feature(w.lnum.get, w.level, w.minz, w.maxz, w.layer,
-            jsonArray(w.tags), w.vtags,
-            GeomOps.toWkb(GeomOps.normalized(kept)))
-        }
-      }
-  }
-
-  /** Ways → area features: shell+holes per data block, make-valid,
-    * clip (map2db.py:967-1072). Row-local. */
-  def areaFeatures(ways: Dataset[Way]): Dataset[Feature] = {
-    import ways.sparkSession.implicits._
-    ways.filter(w => w.geomType == "MULTIPOLYGON" && w.anum.isDefined)
-      .flatMap { w =>
-        val (minx, miny, maxx, maxy) = tileBox(w.level, w.tileX, w.tileY)
-        val polys = w.coords.map { dblock =>
+    val kept =
+      if (wayTable(w) == AreaT) {
+        val raw = GeomOps.multiPolygon(w.coords.map { dblock =>
           GeomOps.polygon(dblock.head.map(c => (c.lon, c.lat)),
             dblock.tail.map(_.map(c => (c.lon, c.lat))))
-        }
-        val raw = GeomOps.multiPolygon(polys)
+        })
         val valid =
           if (raw.isValid) Some(raw) else GeomOps.makeValidPolygonal(raw)
-        valid.flatMap { v =>
-          val clipped =
-            if (GeomOps.boxCovers(v, minx, miny, maxx, maxy)) v
-            else GeomOps.clipToBox(v, minx, miny, maxx, maxy)
-          if (clipped.isEmpty) None
-          else GeomOps.keepPolygonal(clipped).map { kept =>
-            Feature(w.anum.get, w.level, w.minz, w.maxz, w.layer,
-              jsonArray(w.tags), w.vtags,
-              GeomOps.toWkb(GeomOps.normalized(kept)))
-          }
-        }
+        valid.flatMap(clip).flatMap(GeomOps.keepPolygonal)
+      } else {
+        clip(GeomOps.multiLineString(
+          w.coords.flatten.map(_.map(c => (c.lon, c.lat)))))
+          .flatMap(GeomOps.keepLinear)
       }
+    kept.map(g => Feature(wayId(w).getOrElse(0L), w.level, w.minz, w.maxz,
+      w.layer, jsonArray(w.tags), w.vtags,
+      GeomOps.toWkb(GeomOps.normalized(g))))
+  }
+
+  /** POIs → point features of the dbl points table. Row-local. */
+  def pointFeatures(pois: Dataset[Poi]): Dataset[Feature] = {
+    import pois.sparkSession.implicits._
+    pois.flatMap(p => if (p.pnum.isDefined) poiFeature(p) else None)
+  }
+
+  /** Ways → line features of the dbl lines table. Row-local. */
+  def lineFeatures(ways: Dataset[Way]): Dataset[Feature] = {
+    import ways.sparkSession.implicits._
+    ways.flatMap(w =>
+      if (wayTable(w) == LineT && wayId(w).isDefined) wayFeature(w) else None)
+  }
+
+  /** Ways → area features of the dbl areas table. Row-local. */
+  def areaFeatures(ways: Dataset[Way]): Dataset[Feature] = {
+    import ways.sparkSession.implicits._
+    ways.flatMap(w =>
+      if (wayTable(w) == AreaT && wayId(w).isDefined) wayFeature(w) else None)
+  }
+
+  /** decode → clip for every tile of `path`: one relation of all three
+    * tables' fragments, `table` followed by [[Feature]]'s columns. With
+    * `dbl`, rows without their feature id are dropped, as the per-table
+    * functions above drop them. */
+  private def fragments(spark: SparkSession, path: String, dbl: Boolean)
+      : (DataFrame, LongAccumulator) = {
+    import spark.implicits._
+    val (tiles, decoded) =
+      Mapsforge.decodeTiles(spark, Seq(path), 0, permissive = false)
+    val frags = tiles.flatMap { case (pois, ways) =>
+      pois.iterator.filter(p => !dbl || p.pnum.isDefined)
+        .flatMap(p => poiFeature(p).map(PointT -> _)) ++
+        ways.iterator.filter(w => !dbl || wayId(w).isDefined)
+          .flatMap(w => wayFeature(w).map(wayTable(w) -> _))
+    }
+    (spark.createDataset(frags).select(col("_1").as("table"), col("_2.*")),
+      decoded)
   }
 
   /** The integrity invariants the reference enforces row-by-row as it
@@ -127,29 +171,35 @@ object MapPipeline {
     * Returns (fid, kind) violation rows; empty for a well-formed dbl
     * map. Runs on the pre-merge fragments so the checks see exactly
     * what the reference's serial loop saw. */
-  def validate(feats: Dataset[Feature]): DataFrame = {
-    val norm = feats.toDF().withColumn("vt",
+  def validate(feats: Dataset[Feature]): DataFrame =
+    validateBy(feats.toDF(), Seq("fid"))
+
+  /** [[validate]] with features identified by the `keys` columns;
+    * returns the keys and the violation kind. */
+  private def validateBy(feats: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val norm = feats.withColumn("vt",
       array_sort(transform(map_entries(col("vtags")),
         e => concat(e("key"), lit("="), e("value")))))
-    val sameLevel = norm.groupBy(col("fid"), col("level"))
+    val sameLevel = norm.groupBy(k :+ col("level"): _*)
       .agg(countDistinct(struct(col("layer"), col("tags"), col("vt"),
         col("minz"), col("maxz"))).as("variants"),
         first(struct(col("layer"), col("tags"), col("vt"))).as("attrs"),
         min(col("minz")).as("minz"), max(col("maxz")).as("maxz"))
     val sameLevelBad = sameLevel.filter(col("variants") > 1)
-      .select(col("fid"), lit("same_level_attr").as("kind"))
+      .select(k :+ lit("same_level_attr").as("kind"): _*)
     // drift BETWEEN levels: compare one canonical attr tuple per level
     // (same-level disagreement is already its own violation above)
-    val crossBad = sameLevel.groupBy(col("fid"))
+    val crossBad = sameLevel.groupBy(k: _*)
       .agg(countDistinct(col("attrs")).as("variants"))
       .filter(col("variants") > 1)
-      .select(col("fid"), lit("cross_level_attr").as("kind"))
-    val w = Window.partitionBy(col("fid")).orderBy(col("level"))
+      .select(k :+ lit("cross_level_attr").as("kind"): _*)
+    val w = Window.partitionBy(k: _*).orderBy(col("level"))
     val gapBad = sameLevel
       .withColumn("prev_maxz", lag(col("maxz"), 1).over(w))
       .filter(col("prev_maxz").isNotNull &&
         col("minz") =!= col("prev_maxz") + 1)
-      .select(col("fid"), lit("zoom_gap").as("kind"))
+      .select(k :+ lit("zoom_gap").as("kind"): _*)
     sameLevelBad.unionByName(crossBad).unionByName(gapBad)
   }
 
@@ -157,13 +207,19 @@ object MapPipeline {
     * the union of the max-level fragments; m2db_minz extends to the
     * lowest level seen; attributes come from the max level. One fid
     * exchange, reused by the window and the aggregate. */
-  def mergeFeatures(feats: Dataset[Feature]): DataFrame = {
-    val w = Window.partitionBy(col("fid"))
-    feats.toDF()
+  def mergeFeatures(feats: Dataset[Feature]): DataFrame =
+    mergeBy(feats.toDF(), Seq("fid"))
+
+  /** [[mergeFeatures]] with features identified by the `keys` columns
+    * (the window and the aggregate share their one exchange). */
+  private def mergeBy(feats: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val w = Window.partitionBy(k: _*)
+    feats
       .withColumn("max_level", max(col("level")).over(w))
       .withColumn("minz_all", min(col("minz")).over(w))
       .filter(col("level") === col("max_level"))
-      .groupBy(col("fid"))
+      .groupBy(k: _*)
       .agg(
         first(col("max_level")).as("m2db_level"),
         first(col("minz_all")).as("m2db_minz"),
@@ -174,159 +230,86 @@ object MapPipeline {
         GeomFunctions.unionWkb(col("wkb")).as("m2db_geometry"))
   }
 
-  /** Dynamic variable-tag columns, as the reference ALTER TABLEs them
-    * in (map2db.py:856-871): the key universe is the (small) tag
-    * dictionary, so collecting distinct keys is driver-safe. */
-  def explodeVtags(merged: DataFrame): (DataFrame, Seq[String]) = {
-    val keys = merged.select(explode(map_keys(col("vtags"))).as("k"))
-      .distinct().collect().map(_.getString(0)).sorted.toSeq
-    val withCols = keys.foldLeft(merged) { (df, k) =>
-      df.withColumn(k, col("vtags").getItem(k))
-    }
-    (withCols.drop("vtags"), keys)
-  }
-
-  /** `release()` drops every relation the build persisted (the decoded
-    * tile rows + the per-table results); call it after the last action
-    * on the tables (e.g. after the sink finishes). `decodedTiles()`
-    * reads the executor-side decode counter — a decode-once pipeline
-    * keeps it at the file's non-empty tile count (pinned by
-    * MapsforgeSpec). */
+  /** `release()` drops the relation the build persisted; call it after
+    * the last action on the tables (e.g. after the sink finishes).
+    * `decodedTiles()` reads the executor-side decode counter — a
+    * decode-once pipeline keeps it at the file's non-empty tile count
+    * (pinned by MapsforgeSpec). */
   case class MapTables(points: DataFrame, lines: DataFrame,
       areas: DataFrame, vtagKeys: Seq[String],
       release: () => Unit = () => (),
       decodedTiles: () => Long = () => 0L)
+
+  /** Splits one persisted relation of `table`, `fid`, the m2db columns
+    * and `vtags` into the three tables. The vtag key collect, as
+    * (table, key) pairs, is the first action on `merged`: it fills the
+    * cache, so decode, clip and merge run once, and the sink reads
+    * cached rows. Each table gets one column per key its rows carry,
+    * as the reference ALTER TABLEs them in (map2db.py:856-871); the key
+    * universe is the (small) tag dictionary, so the collect is
+    * driver-safe. */
+  private def split(merged: DataFrame, decoded: LongAccumulator): MapTables = {
+    val keys = merged.select(col("table"), explode(map_keys(col("vtags"))))
+      .distinct().collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    val Seq(points, lines, areas) = FeatureTables.zipWithIndex.map {
+      case ((_, idCol), t) =>
+        val base = merged.filter(col("table") === t).drop("table")
+          .withColumnRenamed("fid", idCol)
+        keys.collect { case (`t`, k) => k }.sorted
+          .foldLeft(base)((df, k) => df.withColumn(k, col("vtags").getItem(k)))
+          .drop("vtags")
+    }
+    MapTables(points, lines, areas, keys.map(_._2).distinct.sorted,
+      release = () => { merged.unpersist(); () },
+      decodedTiles = () => decoded.value)
+  }
 
   /** Non-dbl path (map2db.py:878-885,958-964,1064-1070): no feature
     * ids exist, so every tile fragment becomes its own row — clipped
     * (TRIM_NONUM) but never merged — with a synthetic unique id.
     * The reference numbers rows sequentially in its serial tile walk;
     * a parallel scan has no meaningful order, so ids are unique, not
-    * dense (documented divergence). */
+    * dense (documented divergence). Persisting freezes the
+    * monotonically_increasing_id values between the key collect and
+    * the sink. */
   def buildRaw(spark: SparkSession, path: String): MapTables = {
-    import spark.implicits._
-    val scanned = Mapsforge.scanCached(spark, path)
-    val (pois, cachedWays) = (scanned.pois, scanned.ways)
-
-    val rawPoints = pois.flatMap { p =>
-      val (minx, miny, maxx, maxy) = tileBox(p.level, p.tileX, p.tileY)
-      val g = GeomOps.clipToBox(GeomOps.multiPoint(Seq((p.lon, p.lat))),
-        minx, miny, maxx, maxy)
-      if (g.isEmpty) None
-      else Some(Feature(0L, p.level, p.minz, p.maxz, p.layer,
-        jsonArray(p.tags), p.vtags,
-        GeomOps.toWkb(GeomOps.normalized(g))))
-    }
-    val rawLines = cachedWays.filter(_.geomType == "MULTILINESTRING")
-      .flatMap { w =>
-        val (minx, miny, maxx, maxy) = tileBox(w.level, w.tileX, w.tileY)
-        val g = GeomOps.multiLineString(
-          w.coords.flatten.map(_.map(c => (c.lon, c.lat))))
-        val clipped =
-          if (GeomOps.boxCovers(g, minx, miny, maxx, maxy)) g
-          else GeomOps.clipToBox(g, minx, miny, maxx, maxy)
-        if (clipped.isEmpty) None
-        else GeomOps.keepLinear(clipped).map(kept =>
-          Feature(0L, w.level, w.minz, w.maxz, w.layer, jsonArray(w.tags),
-            w.vtags, GeomOps.toWkb(GeomOps.normalized(kept))))
-      }
-    val rawAreas = cachedWays.filter(_.geomType == "MULTIPOLYGON")
-      .flatMap { w =>
-        val (minx, miny, maxx, maxy) = tileBox(w.level, w.tileX, w.tileY)
-        val polys = w.coords.map { dblock =>
-          GeomOps.polygon(dblock.head.map(c => (c.lon, c.lat)),
-            dblock.tail.map(_.map(c => (c.lon, c.lat))))
-        }
-        val raw = GeomOps.multiPolygon(polys)
-        val valid =
-          if (raw.isValid) Some(raw) else GeomOps.makeValidPolygonal(raw)
-        valid.flatMap { v =>
-          val clipped =
-            if (GeomOps.boxCovers(v, minx, miny, maxx, maxy)) v
-            else GeomOps.clipToBox(v, minx, miny, maxx, maxy)
-          if (clipped.isEmpty) None
-          else GeomOps.keepPolygonal(clipped).map(kept =>
-            Feature(0L, w.level, w.minz, w.maxz, w.layer,
-              jsonArray(w.tags), w.vtags,
-              GeomOps.toWkb(GeomOps.normalized(kept))))
-        }
-      }
-
-    // Persisted per table: the explodeVtags key collect is the first
-    // action and fills the cache (reading tile rows from the decode
-    // cache, clipping once); the sink then reads the cached rows, so
-    // decode and clip each run exactly once per table. Persisting
-    // also freezes the monotonically_increasing_id values between the
-    // key collect and the save.
-    def numbered(df: org.apache.spark.sql.Dataset[Feature],
-        idName: String): DataFrame =
-      df.toDF()
-        .withColumn(idName, monotonically_increasing_id())
-        .drop("fid")
-        .withColumnsRenamed(Map("level" -> "m2db_level",
-          "minz" -> "m2db_minz", "maxz" -> "m2db_maxz",
-          "layer" -> "m2db_layer_num", "tags" -> "m2db_tags",
-          "wkb" -> "m2db_geometry"))
-        .persist()
-
-    val tables = Seq(numbered(rawPoints, "m2db_pnum"),
-      numbered(rawLines, "m2db_lnum"), numbered(rawAreas, "m2db_anum"))
-    // r17 (guide §2.6): overlap the three independent key collects —
-    // see build() below; the decode cache still fills exactly once.
-    val Seq((p, pk), (l, lk), (a, ak)) =
-      graft.Threads.inParallel(tables.map(t => () => explodeVtags(t)))
-    MapTables(p, l, a, (pk ++ lk ++ ak).distinct.sorted,
-      release = () => { tables.foreach(_.unpersist()); scanned.release() },
-      decodedTiles = () => scanned.tilesDecoded.value)
+    val (frags, decoded) = fragments(spark, path, dbl = false)
+    split(frags.withColumn("fid", monotonically_increasing_id())
+      .withColumnsRenamed(Map("level" -> "m2db_level",
+        "minz" -> "m2db_minz", "maxz" -> "m2db_maxz",
+        "layer" -> "m2db_layer_num", "tags" -> "m2db_tags",
+        "wkb" -> "m2db_geometry"))
+      .persist(), decoded)
   }
 
-  /** Full decode→merge for a dbl map. Lines additionally get the
-    * endpoint-snap linemerge pass (map2db.py:1080-1182). With
-    * `strict`, the reference's integrity checks run first and any
+  /** Full decode→merge for a dbl map, all three tables in one plan.
+    * Lines additionally get the endpoint-snap linemerge pass
+    * (map2db.py:1080-1182). With `strict`, the reference's integrity
+    * checks run first, over all three tables in one check, and any
     * violation aborts, as the reference's ValueError would — off by
-    * default because at 100 TB a report table beats a crashed job. */
+    * default because at 100 TB a report table beats a crashed job.
+    * A strict build persists the fragments until the merge has read
+    * them, so the tiles still decode once. */
   def build(spark: SparkSession, path: String,
       strict: Boolean = false): MapTables = {
-    val scanned = Mapsforge.scanCached(spark, path)
-    val (pois, cachedWays) = (scanned.pois, scanned.ways)
+    val (clipped, decoded) = fragments(spark, path, dbl = true)
+    val frags = if (strict) clipped.persist() else clipped
     if (strict) {
-      // p/l/a ids are independent key spaces — validate per table
-      Seq("points" -> validate(pointFeatures(pois)),
-        "lines" -> validate(lineFeatures(cachedWays)),
-        "areas" -> validate(areaFeatures(cachedWays))).foreach {
-        case (table, v) =>
-          val bad = v.limit(10).collect()
-          require(bad.isEmpty, s"integrity violations in $table: " +
-            bad.map(r => s"${r.getLong(0)}:${r.getString(1)}")
-              .mkString(", "))
-      }
+      // p/l/a ids are independent key spaces: key on (table, fid)
+      val bad = validateBy(frags, Seq("table", "fid")).limit(10).collect()
+      if (bad.nonEmpty) frags.unpersist()
+      require(bad.isEmpty, "integrity violations: " +
+        bad.map(r => s"${FeatureTables(r.getInt(0))._1} " +
+          s"${r.getLong(1)}:${r.getString(2)}").mkString(", "))
     }
-    // Each merged table persists so clip+merge run once: the
-    // explodeVtags key collect fills the cache (tile rows come from
-    // the decode cache, so the binary decode itself runs exactly
-    // once across all three tables) and the sink reads cached rows.
-    val points = mergeFeatures(pointFeatures(pois))
-      .withColumnRenamed("fid", "m2db_pnum").persist()
-    val lines = FeatureMerge.mergeLines(
-      mergeFeatures(lineFeatures(cachedWays)), "m2db_geometry")
-      .withColumnRenamed("fid", "m2db_lnum").persist()
-    val areas = mergeFeatures(areaFeatures(cachedWays))
-      .withColumnRenamed("fid", "m2db_anum").persist()
-    // r17 (guide §2.6): the three per-table key collects are
-    // independent actions — run them from a pool so their merge
-    // stages overlap instead of paying three sequential job floors;
-    // the shared decode cache computes once under the block
-    // manager's per-partition locks whichever thread gets there
-    // first.
-    val Seq((p, pk), (l, lk), (a, ak)) = graft.Threads.inParallel(Seq(
-      () => explodeVtags(points),
-      () => explodeVtags(lines),
-      () => explodeVtags(areas)))
-    MapTables(p, l, a, (pk ++ lk ++ ak).distinct.sorted,
-      release = () => {
-        Seq(points, lines, areas).foreach(_.unpersist())
-        scanned.release()
-      },
-      decodedTiles = () => scanned.tilesDecoded.value)
+    val geom = col("m2db_geometry")
+    val merged = mergeBy(frags, Seq("table", "fid"))
+      .withColumn("m2db_geometry",
+        when(col("table") === LineT, FeatureMerge.mergedLine(geom))
+          .otherwise(geom))
+      .persist()
+    val tables = split(merged, decoded)
+    if (strict) frags.unpersist()
+    tables
   }
 }

@@ -250,7 +250,12 @@ object Relational3 {
     * relation iteratively, the canonical graph-walk SQL surface
     * (hierarchies, chains, transitive closure). The identical text
     * runs on DuckDB as the oracle; a window formulation cross-checks
-    * it in ScalaTest. */
+    * it in ScalaTest.
+    *
+    * Each call pins a local checkpoint of the orders window that the
+    * returned (lazy) DataFrame reads, so it cannot be freed here:
+    * callers must call `Similarity.releaseSimCache()` once they are
+    * done with the result, as Bench and Verify do between runs. */
   def q58Recursive(spark: SparkSession, dir: String): DataFrame = {
     // Spark guards recursive CTEs with a 1M-row output limit by
     // default; this recursion is depth-capped by its OWN predicate

@@ -44,9 +44,8 @@ object FdoSink {
     // over different directories — submit them from a small pool so
     // each job's tasks back-fill the previous job's tail instead of
     // paying eight sequential per-job scheduling floors. The three
-    // feature tables are persisted by the build, so concurrent first
-    // actions share one computation under the block manager's
-    // per-partition locks.
+    // feature tables are filters of the relation the build persisted
+    // and filled, so the writes read cached rows.
     graft.Threads.inParallel(Seq(
       () => saveByLevel(tables.points, "points"),
       () => saveByLevel(tables.lines, "lines"),

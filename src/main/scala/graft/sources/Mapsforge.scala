@@ -3,7 +3,9 @@ package graft.sources
 import java.io.RandomAccessFile
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.util.LongAccumulator
 
 /** Distributed MapsForge binary map reader (SURVEY.md §2b).
   *
@@ -383,7 +385,7 @@ object Mapsforge {
     * count (MapsforgeSpec pins this). Call `release()` after the last
     * action (e.g. after the sink) to drop the cached rows. */
   final case class CachedScan(pois: Dataset[Poi], ways: Dataset[Way],
-      tilesDecoded: org.apache.spark.util.LongAccumulator,
+      tilesDecoded: LongAccumulator,
       release: () => Unit)
 
   def scanCached(spark: SparkSession, path: String,
@@ -393,9 +395,9 @@ object Mapsforge {
   def scanManyCached(spark: SparkSession, paths: Seq[String],
       numPartitions: Int = 0, permissive: Boolean = false): CachedScan = {
     import spark.implicits._
-    val (decoded, counter) =
-      decodedTiles(spark, paths, numPartitions, permissive)
-    val cached = decoded.persist(
+    val (tiles, counter) =
+      decodeTiles(spark, paths, numPartitions, permissive)
+    val cached = spark.createDataset(tiles).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     CachedScan(cached.flatMap(_._1), cached.flatMap(_._2), counter,
       () => { cached.unpersist(); () })
@@ -411,19 +413,26 @@ object Mapsforge {
       numPartitions: Int = 0, permissive: Boolean = false)
       : (Dataset[Poi], Dataset[Way]) = {
     import spark.implicits._
-    val (decoded, _) = decodedTiles(spark, paths, numPartitions, permissive)
-    (decoded.flatMap(_._1), decoded.flatMap(_._2))
+    val (tiles, _) = decodeTiles(spark, paths, numPartitions, permissive)
+    (spark.createDataset(tiles.flatMap(_._1)),
+      spark.createDataset(tiles.flatMap(_._2)))
   }
 
-  private def decodedTiles(spark: SparkSession, paths: Seq[String],
+  /** Every non-empty tile of `paths`, decoded on the executors into
+    * its POI and way objects: one element per tile, plus the
+    * `graft.tilesDecoded` counter. The (file, offset)-sorted task list
+    * ships with `parallelize`, which slices it into contiguous runs, so
+    * each partition reads one byte range per file in order and the
+    * scan needs no shuffle. Callers that clip the objects directly
+    * (MapPipeline.build) never encode them as rows. */
+  private[graft] def decodeTiles(spark: SparkSession, paths: Seq[String],
       numPartitions: Int, permissive: Boolean)
-      : (Dataset[(Seq[Poi], Seq[Way])],
-        org.apache.spark.util.LongAccumulator) = {
-    import spark.implicits._
+      : (RDD[(Seq[Poi], Seq[Way])], LongAccumulator) = {
     val headers = paths.zipWithIndex.map { case (p, i) =>
       (p, i, readHeader(p))
     }
     val tasks = headers.flatMap { case (p, i, h) => tileTasks(h, p, i) }
+      .sortBy(t => (t.fileId, t.offset))
     val parts =
       if (numPartitions > 0) numPartitions
       else math.max(1, math.min(spark.sparkContext.defaultParallelism,
@@ -435,10 +444,8 @@ object Mapsforge {
     val badTiles = spark.sparkContext.longAccumulator("graft.badTiles")
     val tileCount =
       spark.sparkContext.longAccumulator("graft.tilesDecoded")
-    val taskDs = spark.createDataset(tasks).repartition(parts)
-    val decoded = taskDs.mapPartitions { it =>
-      // sequential IO per file within the task batch
-      val sorted = it.toSeq.sortBy(t => (t.fileId, t.offset))
+    val taskRdd = spark.sparkContext.parallelize(tasks, parts)
+    val decoded = taskRdd.mapPartitions { it =>
       var raf: RandomAccessFile = null
       var openPath: String = null
       def file(p: String): RandomAccessFile = {
@@ -448,7 +455,7 @@ object Mapsforge {
         }
         raf
       }
-      sorted.iterator.map { t =>
+      it.map { t =>
         val f = file(t.path)
         val len = (t.endOffset - t.offset).toInt
         val buf = new Array[Byte](len)

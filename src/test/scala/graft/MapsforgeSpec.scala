@@ -169,15 +169,49 @@ class MapsforgeSpec extends AnyFunSuite {
     assert(toml.contains("{column_name = \"population\"}"))
   }
 
-  test("merge pipeline pays exactly one exchange per feature table") {
-    import spark.implicits._
-    val (pois, _) = Mapsforge.scan(spark, mapPath)
-    val plan = MapPipeline.mergeFeatures(MapPipeline.pointFeatures(pois))
-      .queryExecution.executedPlan.toString
-    // the window's fid exchange must be reused by the groupBy — a
-    // second Exchange means the SURVEY §4 single-shuffle claim broke
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges == 1, s"expected 1 exchange, got $exchanges\n$plan")
+  test("fused build pays one hash exchange for all three feature tables") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every shuffle of a plan, walking into the final adaptive plan
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case e: ShuffleExchangeExec => e +: shuffles(e.child)
+      case _ => p.children.flatMap(shuffles)
+    }
+    // the tile scan ships its tasks without a shuffle (no
+    // round-robin repartition of the task list)
+    val (pois, ways) = Mapsforge.scan(spark, mapPath)
+    Seq(pois, ways).foreach { ds =>
+      assert(shuffles(ds.queryExecution.executedPlan).isEmpty,
+        ds.queryExecution.executedPlan.toString)
+    }
+    val t = MapPipeline.build(spark, mapPath)
+    try {
+      // points, lines and areas are filters of ONE persisted relation
+      val caches = Seq(t.points, t.lines, t.areas).map(
+        _.queryExecution.optimizedPlan.collect {
+          case r: InMemoryRelation => r.cacheBuilder
+        })
+      assert(caches.forall(_.size == 1))
+      assert(caches.flatten.forall(_ eq caches.head.head))
+      // ...merged over one exchange on (table, fid), reused by the
+      // window and the aggregate — a second exchange means the
+      // single-shuffle design broke
+      val plan = caches.head.head.cachedPlan
+      val ex = shuffles(plan)
+      assert(ex.size == 1, s"expected 1 exchange, got ${ex.size}\n$plan")
+      ex.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.map(_.references.head.name) ==
+            Seq("table", "fid"))
+        case other => fail(s"expected hash partitioning, got $other")
+      }
+    } finally t.release()
   }
 
   test("integrity validation: clean map passes, tampered fragments fail") {
