@@ -63,14 +63,11 @@ object Bench {
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       var err: Option[String] = None
       def rep(): Unit = {
-        // drop cross-query operator caches so every query (and every
-        // rep) pays its OWN pipeline: d02 fills the LSH cache that d07
+        // free every pin and memo so every query (and every rep) pays
+        // its OWN pipeline: d02 memoizes the LSH pipeline that d07
         // would otherwise read, turning d07's number into
         // clustering-only — a measurement artifact, not a speedup.
-        graft.operators.Dedup.releaseLshCache()
-        graft.operators.Similarity.releaseSimCache()
-        graft.operators.MapBench.releaseFleetCache()
-        graft.operators.LinkGraph.releaseGraphCache()
+        Pins.release()
         System.gc()
         Thread.sleep(50)
         val t0 = System.nanoTime()

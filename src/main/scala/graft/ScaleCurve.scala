@@ -202,10 +202,7 @@ object ScaleCurve {
         }
 
     def time(key: String, dir: String): Double = {
-      graft.operators.Dedup.releaseLshCache()
-      graft.operators.Similarity.releaseSimCache()
-      graft.operators.MapBench.releaseFleetCache()
-      graft.operators.LinkGraph.releaseGraphCache()
+      Pins.release()
       val fn = SparkEntry.queries(key)
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()

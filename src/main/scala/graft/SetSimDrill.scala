@@ -52,9 +52,9 @@ object SetSimDrill {
     val spark = Sessions.local()
     val sizes = Seq(200000L, 400000L, 800000L)
     val pts = sizes.map { n =>
-      // localCheckpoint, same role as d76's pin: the generated set
+      // checkpointed, same role as d76's pin: the generated set
       // relation feeds four plan branches — materialize it once
-      val docs = sparseCorpus(spark, n).localCheckpoint()
+      val docs = Pins.checkpoint(sparseCorpus(spark, n))
       val t0 = System.nanoTime()
       graft.operators.SetSim.setSimJoin(docs)
         .write.format("noop").mode("overwrite").save()
@@ -62,7 +62,7 @@ object SetSimDrill {
       val postings = docs.select(explode(col("toks"))).count()
       val cands = graft.operators.SetSim.prefixCandidates(docs).count()
       val pairs = graft.operators.SetSim.setSimJoin(docs).count()
-      graft.operators.Similarity.releaseSimCache()
+      Pins.release()
       val line = f"""{"docs":${n + n / PlantEvery},"postings":$postings,""" +
         s""""prefix_candidates":$cands,"qualifying_pairs":$pairs,""" +
         f""""sec":$sec%.2f}"""

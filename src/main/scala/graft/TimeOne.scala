@@ -1,7 +1,7 @@
 package graft
 
 /** Ad-hoc single-query timer: `runMain graft.TimeOne <key> <dir> [reps]`
-  * — full-plan noop execution, cache releases between reps (the
+  * — full-plan noop execution, `Pins.release()` between reps (the
   * ScaleCurve measurement discipline), one line per rep. */
 object TimeOne {
   def main(args: Array[String]): Unit = {
@@ -10,10 +10,7 @@ object TimeOne {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = Sessions.local()
     (1 to reps).foreach { i =>
-      graft.operators.Dedup.releaseLshCache()
-      graft.operators.Similarity.releaseSimCache()
-      graft.operators.MapBench.releaseFleetCache()
-      graft.operators.LinkGraph.releaseGraphCache()
+      Pins.release()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()

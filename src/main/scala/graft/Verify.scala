@@ -74,17 +74,14 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        // r17 (ADVICE r16): drop the per-query operator pins before
-        // each query, exactly as Bench does between reps — the r16
+        // r17 (ADVICE r16): free every operator pin (Pins.release)
+        // before each query, exactly as Bench does between reps — the r16
         // eager-checkpoint pins (d63/d72/d85/d92/d93/d21/q71/d74/
         // d29/d47 and the beam walks) otherwise ACCUMULATE
         // MEMORY_AND_DISK blocks across all 300+ queries in this one
         // session. Safe here: each query's parquet is fully written
         // before the next query builds.
-        graft.operators.Dedup.releaseLshCache()
-        graft.operators.Similarity.releaseSimCache()
-        graft.operators.MapBench.releaseFleetCache()
-        graft.operators.LinkGraph.releaseGraphCache()
+        Pins.release()
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pins
+
 /** ANN QUALITY measurement (SURVEY.md §2d): recall@k vs nprobe for
   * the trained IVF index.
   *
@@ -136,8 +138,8 @@ object AnnQuality {
     val cents = Similarity.kmeansQuantized(
       corp, init, Similarity.KmIters)
     val (edges, entries, _) = Similarity.navGraphParts(corp, cents)
-    val edgesC = edges.localCheckpoint()
-    val entriesC = entries.localCheckpoint()
+    val edgesC = Pins.checkpoint(edges)
+    val entriesC = Pins.checkpoint(entries)
     val truth = bruteTopK(qs, corp, RecallK)
     val denom = (QueryN * RecallK).toDouble
     try beams.map { b =>
@@ -147,7 +149,7 @@ object AnnQuality {
         .join(truth, Seq("q_id", "vec_id"), "left_semi")
         .count()
       (b, hits / denom)
-    } finally { edgesC.unpersist(); entriesC.unpersist() }
+    } finally { Pins.unpin(edgesC); Pins.unpin(entriesC) }
   }
 
   /** recall@[[RecallK]] of the beam walk over the INSERTED graph
@@ -177,10 +179,10 @@ object AnnQuality {
     val cks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val (dEdges, redges, _) = Similarity.navInsertParts(
       corp, cents, bPosted, bEdges, delta, cks)
-    val merged = Similarity.mergeNavEdges(bEdges, dEdges, redges)
-      .localCheckpoint()
-    cks.foreach(_.unpersist()) // merged is materialized past them
-    val entriesC = bEntries.localCheckpoint()
+    val merged = Pins.checkpoint(
+      Similarity.mergeNavEdges(bEdges, dEdges, redges))
+    cks.foreach(Pins.unpin) // merged is materialized past them
+    val entriesC = Pins.checkpoint(bEntries)
     val truth = bruteTopK(qs, corp, RecallK)
     val denom = (QueryN * RecallK).toDouble
     try beams.map { b =>
@@ -190,7 +192,7 @@ object AnnQuality {
         .join(truth, Seq("q_id", "vec_id"), "left_semi")
         .count()
       (b, hits / denom)
-    } finally { merged.unpersist(); entriesC.unpersist() }
+    } finally { Pins.unpin(merged); Pins.unpin(entriesC) }
   }
 
   /** recall@[[RecallK]] of the HIERARCHICAL walk (d86) per beam
@@ -593,13 +595,12 @@ object AnnQuality {
     * scheme proposes, exactly as its generator joins them. */
   def candidateVolumes(spark: SparkSession): Seq[(String, Long)] = {
     val corp = corpus(spark)
-    // checkpointed for the three reuses below, unpersisted before
+    // checkpointed for the three reuses below, unpinned before
     // returning — everything here is materialized by the count()s,
     // so the blocks must not outlive the call (ADVICE r10)
-    val sigs = corp.select(col("vec_id"),
+    val sigs = Pins.checkpoint(corp.select(col("vec_id"),
         Similarity.portableLshSignature(
-          col("qv").cast("array<double>")).as("sig"))
-      .localCheckpoint()
+          col("qv").cast("array<double>")).as("sig")))
     try {
       val wide = (0 until Similarity.WideTables).map { h =>
         val b = sigs.select(col("vec_id"),
@@ -623,6 +624,6 @@ object AnnQuality {
         .select(col("q_id"), col("vec_id")).distinct().count()
       Seq("wide_2x16" -> wide, "multiprobe_20bit_h1" -> mp,
         "cell_blocked_16x2" -> cell)
-    } finally Similarity.unpinCheckpoint(sigs)
+    } finally Pins.unpin(sigs)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Distributed byte-pair-encoding merge training + application
   * (SURVEY.md §2d) — the tokenizer-construction step of a training
@@ -85,7 +85,7 @@ object Bpe {
 
   private def trainMergesUncached(spark: SparkSession, dir: String,
       rounds: Int): Seq[Rule] = {
-    var seqs = vocab(spark, dir).localCheckpoint()
+    var seqs = Pins.checkpoint(vocab(spark, dir))
     val rules = Seq.newBuilder[Rule]
     try {
       for (r <- 1 to rounds) {
@@ -111,12 +111,12 @@ object Bpe {
         val prev = seqs
         // eager localCheckpoint: materializes the round AND cuts the
         // plan back to a one-deep scan of the checkpointed blocks
-        seqs = seqs.withColumn("seq",
-          expr(s"replace(seq, '$pair', '$merged')")).localCheckpoint()
-        prev.unpersist()
+        seqs = Pins.checkpoint(seqs.withColumn("seq",
+          expr(s"replace(seq, '$pair', '$merged')")))
+        Pins.unpin(prev)
       }
       rules.result()
-    } finally seqs.unpersist()
+    } finally Pins.unpin(seqs)
   }
 
   /** d43: the learned merge table itself — one row per round. */
@@ -203,7 +203,7 @@ object Bpe {
     for (batch <- batches.drop(1)) {
       // truncate lineage so the next batch's plan is one replace-chain
       // deep over materialized blocks, not (rules/batch) chains deep
-      enc = enc.localCheckpoint()
+      enc = Pins.checkpoint(enc)
       val applied = batch.foldLeft("enc") { (e, ru) =>
         s"replace($e, '${ru.pair}', '${ru.merged}')"
       }

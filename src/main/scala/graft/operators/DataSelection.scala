@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.TextFunctions
 
 /** Data-selection operators for the training-corpus pipeline
@@ -65,7 +65,7 @@ object DataSelection {
     // the initial plan). One eager checkpoint of the narrow
     // (doc_id, lang, b) relation caps tokenization at one pass
     // (guide §3.3); rows identical, oracle unchanged.
-    val docs = Similarity.pinCheckpoint(
+    val docs = Pins.checkpoint(
       Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("lang"),
           explode(TextFunctions.words(col("text"))).as("w"))
@@ -89,7 +89,7 @@ object DataSelection {
     // scored feeds both the percentile threshold and the final
     // report — pin the doc-count-sized relation so the scoring join
     // runs once (same guide §3.3 rationale as docs above)
-    val scored = Similarity.pinCheckpoint(docs
+    val scored = Pins.checkpoint(docs
       .join(broadcast(lr), Seq("b"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -233,7 +233,7 @@ object DataSelection {
     // initial plan). One eager checkpoint of the small
     // (doc_id, np, fph) relation caps the md5 work at one pass
     // (guide §3.3); rows identical, oracle hash unchanged.
-    val fp = Similarity.pinCheckpoint(base
+    val fp = Pins.checkpoint(base
       .select(col("doc_id"), col("np"),
         explode(graft.functions.WinnowKernel.fingerprintsCol(
           col("t"), GramK, WinW, HashSpace, PosSpace)).as("fph")))

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.TextFunctions
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2d).
@@ -107,37 +108,20 @@ object Dedup {
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashLshCapped(spark, dir, MaxBucketSize)
 
-  /** Cached relations pinned by the LSH pipeline, keyed by
-    * (session, dir, cap): repeated d02/d07 invocations reuse ONE
-    * cached pipeline instead of stacking a new persist per call
-    * (the round-2 leak). [[releaseLshCache]] is the explicit drop. */
-  private val lshCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), (DataFrame, Seq[DataFrame])]
-
-  def releaseLshCache(): Unit = {
-    (lshCache.values ++ d14Cache.values).foreach { case (_, pinned) =>
-      pinned.foreach(_.unpersist())
-    }
-    lshCache.clear()
-    d14Cache.clear()
-  }
-
-  /** d14's pinned pipeline, same lifecycle as [[lshCache]]. */
-  private val d14Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Seq[DataFrame])]
-
+  /** The verified pair relation, memoized per (session, dir, cap)
+    * through [[graft.Pins]]: repeated d02/d07 invocations reuse ONE
+    * pinned pipeline instead of stacking a new persist per call (the
+    * round-2 leak). */
   def minhashLshCapped(spark: SparkSession, dir: String,
-      maxBucket: Long): DataFrame = {
-    val (verified, _) = lshCache.getOrElseUpdate((spark, dir, maxBucket),
+      maxBucket: Long): DataFrame =
+    Pins.memo(spark, ("d02", dir, maxBucket))(
       buildMinhashLsh(spark, dir, maxBucket))
-    verified.orderBy(col("a_id"), col("b_id"))
-  }
+      .orderBy(col("a_id"), col("b_id"))
 
   private def buildMinhashLsh(spark: SparkSession, dir: String,
-      maxBucket: Long): (DataFrame, Seq[DataFrame]) = {
-    val signed = withSignature(corpusWithPlants(spark, dir))
-      .select(col("doc_id"), col("shingles"), col("sig"))
-      .persist()
+      maxBucket: Long): DataFrame = {
+    val signed = Pins.persist(withSignature(corpusWithPlants(spark, dir))
+      .select(col("doc_id"), col("shingles"), col("sig")), MEMORY_AND_DISK)
     // Keep the banded relation NARROW — (doc_id, band, bh) only — so
     // the bucket self-join and the pair distinct never shuffle the
     // shingle arrays. Shingles re-attach to the (few) candidates.
@@ -165,8 +149,8 @@ object Dedup {
     val sh = signed.select(col("doc_id"), col("shingles"))
     // persist the verified candidate set (tiny): d07's clustering
     // consumes the same relation, so within one session the whole
-    // LSH pipeline runs once and the cache serves both queries
-    val verified = pairs
+    // LSH pipeline runs once and the memo serves both queries
+    Pins.persist(pairs
       .join(sh.withColumnRenamed("doc_id", "a_id")
         .withColumnRenamed("shingles", "sa"), "a_id")
       .join(sh.withColumnRenamed("doc_id", "b_id")
@@ -174,9 +158,7 @@ object Dedup {
       .withColumn("jaccard", round(
         graft.functions.MinHash.sortedJaccard(col("sa"), col("sb")), 6))
       .filter(col("jaccard") >= 0.5)
-      .select(col("a_id"), col("b_id"), col("jaccard"))
-      .persist()
-    (verified, Seq(signed, verified))
+      .select(col("a_id"), col("b_id"), col("jaccard")), MEMORY_AND_DISK)
   }
 
   // ---- duplicate clustering -----------------------------------------
@@ -204,11 +186,9 @@ object Dedup {
       spark.sparkContext.defaultParallelism)
     // adjacency keyed by source, symmetrized, co-partitioned once
     val adj = e.flatMap { case (x, y) => Seq((x, y), (y, x)) }
-      .distinct().partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct().partitionBy(part).persist(MEMORY_AND_DISK)
     var labels = adj.keys.distinct(part.numPartitions)
-      .map(n => (n, n)).partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .map(n => (n, n)).partitionBy(part).persist(MEMORY_AND_DISK)
     // convergence = "no node changed label this round", counted
     // EXACTLY by an accumulator (one count() action per round — the
     // same single action the previous label-sum fold cost). A sum
@@ -234,7 +214,7 @@ object Dedup {
           val nl = math.min(own, m.getOrElse(Long.MaxValue))
           if (nl != own) changed.add(1L)
           nl }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(MEMORY_AND_DISK)
       next.count()
       labels.unpersist(blocking = false)
       labels = next
@@ -243,7 +223,9 @@ object Dedup {
     }
     adj.unpersist(blocking = false)
     import spark.implicits._
-    labels.toDF("node", "label")
+    // the returned plan reads the final labels: registering them (the
+    // level is unchanged) leaves their release to Pins.release()
+    Pins.persist(labels, MEMORY_AND_DISK).toDF("node", "label")
   }
 
   /** d07: near-dup clusters — LSH pairs → connected components →
@@ -325,16 +307,14 @@ object Dedup {
     * persisted by connectedComponents, so each consumer pays a
     * narrow derivation, not a re-clustering). */
   def d14Labels(spark: SparkSession, dir: String): DataFrame =
-    d14Cache.getOrElseUpdate((spark, dir), {
+    Pins.memo(spark, ("d14", dir)) {
       // signed feeds the banded relation (2 uses: roots + star join)
       // and the shingle re-attach (2 uses) — pin it so the shingle +
       // MinHash kernel pass over the corpus runs exactly once
-      val signed = withSignature(corpusWithPlants(spark, dir))
-        .select(col("doc_id"), col("shingles"), col("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (connectedComponents(starVerifiedEdges(signed), "a_id", "b_id"),
-        Seq(signed))
-    })._1
+      val signed = Pins.persist(withSignature(corpusWithPlants(spark, dir))
+        .select(col("doc_id"), col("shingles"), col("sig")), MEMORY_AND_DISK)
+      connectedComponents(starVerifiedEdges(signed), "a_id", "b_id")
+    }
 
   def d14ClustersAtScale(spark: SparkSession, dir: String): DataFrame =
     d14Labels(spark, dir)
@@ -650,7 +630,7 @@ object Dedup {
     // audit: 16 scans in the initial plan). One eager checkpoint of
     // the tiny (doc_id, sig) relation caps it at one pass (guide
     // §3.3); rows identical, oracle unchanged.
-    val sig = Similarity.pinCheckpoint(corpusWithPlants(spark, dir)
+    val sig = Pins.checkpoint(corpusWithPlants(spark, dir)
       .withColumn("t", trim(col("text")))
       .withColumn("w", split(col("t"), " "))
       .select(col("doc_id"), simhashCol(col("t"), col("w")).as("sig")))
@@ -1073,10 +1053,10 @@ object Dedup {
     // truncation each consumer re-executes the shingle explode + md5
     // chain (r16 plan audit: 40 scans / 38 exchanges in the initial
     // plan). Checkpoint each once (guide §3.3); oracle unchanged.
-    val sh = Similarity.pinCheckpoint(base.select(col("doc_id"),
+    val sh = Pins.checkpoint(base.select(col("doc_id"),
       explode(array_distinct(
         shingleStrings(col("t"), col("w"), 3))).as("s")))
-    val binned = Similarity.pinCheckpoint(
+    val binned = Pins.checkpoint(
       sh.select(col("doc_id"), md5Long(col("s")).as("hv"))
         .withColumn("bin",
           col("hv").bitwiseAND(lit((OphBins - 1).toLong)))

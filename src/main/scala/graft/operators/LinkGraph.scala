@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Link-graph analytics (SURVEY.md §2d): PageRank centrality — the
   * link-quality signal web-corpus pipelines rank crawl frontiers and
@@ -34,88 +35,23 @@ object LinkGraph {
 
   val PrIters = 3
 
-  /** The (src, dst, deg) graph relation pinned per (session, dir) —
-    * iterative algorithms re-walk their edge relation every round, so
-    * it materializes ONCE (the GraphX/Pregel convention, and this
-    * repo's simCache pattern); without the pin each iteration's
-    * lineage re-derives the edge build from the full lineitem scan.
-    * [[releaseGraphCache]] drops the pin; Bench/ScaleCurve call it
-    * between sections. */
-  private val graphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Checkpointed per-round relations (node-scale, bounded): each
-    * round's output is localCheckpoint'ed — truncating lineage keeps
-    * every round's plan one join deep instead of rounds-deep (the
-    * Bpe.trainMerges discipline) — and pinned here so
-    * [[releaseGraphCache]] can free the blocks.
-    *
-    * An RDD Pregel loop (the connectedComponents treatment) was
-    * MEASURED SLOWER here (sf10: 246 s vs the DataFrame loop's 92 s):
-    * the trade graph's edge relation is corpus-scale, and RDD object
-    * shuffles give up Tungsten's columnar serialization — the
-    * re-planning overhead the RDD loop saves is smaller than the
-    * serialization cost it adds. Checkpointed DataFrame rounds keep
-    * Tungsten AND cap the planning cost. */
-  private val roundCache = scala.collection.mutable.ArrayBuffer
-    .empty[DataFrame]
-
-  private def checkpointRound(df: DataFrame): DataFrame = {
-    val p = df.localCheckpoint() // eager: materializes + truncates
-    roundCache.synchronized { roundCache += p }
-    p
-  }
-
-  /** Directed (c, s) trade-pair relation, pinned like [[graphCache]]
-    * and shared by d32 (which folds it undirected) and d36 (which
-    * walks it as-is) — one edge extraction serves both. */
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Release every pinned relation. `Dataset.unpersist()` frees the
-    * CacheManager-backed pins (graphCache/pairCache), but NOT the
-    * localCheckpoint'ed rounds — localCheckpoint persists the
-    * Dataset's INTERNAL RDD directly (MEMORY_AND_DISK), outside the
-    * CacheManager, so a checkpointed round's blocks would otherwise
-    * linger until GC + ContextCleaner get to the RDD (ADVICE r9: they
-    * accumulated across bench iterations). The checkpointed Dataset's
-    * plan is a LogicalRDD wrapping exactly that persisted RDD, so the
-    * release path unpersists it there — safe because release runs
-    * only after results are materialized. */
-  def releaseGraphCache(): Unit = {
-    graphCache.values.foreach(_.unpersist())
-    graphCache.clear()
-    pairCache.values.foreach(_.unpersist())
-    pairCache.clear()
-    roundCache.synchronized {
-      roundCache.foreach { p =>
-        p.queryExecution.analyzed match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(blocking = false)
-          case _ => p.unpersist()
-        }
-      }
-      roundCache.clear()
-    }
-  }
-
-  /** The pinned distinct customer→supplier pair relation.
-    * Duplicate-tolerant: distinct BELOW the join bounds the orderkey
-    * join by true key cardinality (measured 130 s → 13 s on the 100×
-    * replica — re-ingested/replicated rows would otherwise multiply
-    * on both sides). */
+  /** The pinned distinct customer→supplier pair relation, memoized
+    * per (session, dir) and shared by d32 (which folds it undirected)
+    * and d36 (which walks it as-is). Duplicate-tolerant: distinct
+    * BELOW the join bounds the orderkey join by true key cardinality
+    * (measured 130 s → 13 s on the 100× replica — re-ingested/
+    * replicated rows would otherwise multiply on both sides). */
   private def tradePairs(spark: SparkSession, dir: String): DataFrame =
-    pairCache.getOrElseUpdate((spark, dir), {
+    Pins.memo(spark, ("trade-pairs", dir)) {
       val ord = Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey")).distinct()
       val li = Tables.load(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey")).distinct()
-      ord.join(li.hint("shuffle_hash"),
+      Pins.persist(ord.join(li.hint("shuffle_hash"),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+        .distinct(), MEMORY_AND_DISK)
+    }
 
   /** d32: PageRank over the customer↔supplier graph. Iteration k:
     * r'(v) = (1−d)·scale + floor(d · Σ_{u∼v} floor(r(u)/deg(u))).
@@ -132,13 +68,16 @@ object LinkGraph {
     * outside every edge have no walk semantics and are excluded by
     * construction. */
   /** Iteration discipline (r9): each round's rank relation is
-    * localCheckpoint'ed ([[checkpointRound]]) — the plan stays one
+    * local-checkpointed (`Pins.checkpoint`) — the plan stays one
     * join deep every round instead of rounds-deep, killing the
     * re-plan/re-codegen growth the round-8 audit flagged, while the
     * per-round work (one shuffled equi-join against the pinned edge
     * relation + one dst-keyed sum) keeps Tungsten's columnar shuffle.
-    * (The RDD Pregel alternative was measured 2.7× SLOWER at sf10 —
-    * see [[roundCache]].) */
+    * (An RDD Pregel loop — the connectedComponents treatment — was
+    * MEASURED 2.7× SLOWER at sf10, 246 s vs 92 s: the trade graph's
+    * edge relation is corpus-scale, and RDD object shuffles give up
+    * Tungsten's columnar serialization, which costs more than the
+    * re-planning the RDD loop saves.) */
   def d32Pagerank(spark: SparkSession, dir: String): DataFrame = {
     val edges = tradePairs(spark, dir)
     val und = edges.select(col("c").as("src"),
@@ -146,25 +85,26 @@ object LinkGraph {
       .unionAll(edges.select((col("s") + SuppBase).as("src"),
         col("c").as("dst")))
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // pinned PRE-PARTITIONED on src: the cached relation's output
+    // memoized per (session, dir): every round re-walks it, and
+    // unpinned each round would re-derive it from the lineitem scan.
+    // Pinned PRE-PARTITIONED on src: the cached relation's output
     // partitioning satisfies every round's join requirement, so each
     // iteration shuffles ONLY the node-scale rank relation — the
     // corpus-scale edge side never re-exchanges (the fixed-partitioner
     // idea of a Pregel loop, kept inside Tungsten)
-    val withDeg = graphCache.getOrElseUpdate((spark, dir),
+    val withDeg = Pins.memo(spark, ("d32-graph", dir))(Pins.persist(
       und.join(deg.hint("shuffle_hash"), Seq("src"))
-        .repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .repartition(col("src")), MEMORY_AND_DISK))
     // NOTE (r17, measured and kept as-is): initializing r₀ from deg
     // (the oracle's shape — same rows) re-derives the degree
     // aggregate from the pair pin because deg's subtree isn't cached,
     // while this distinct reads the already-persisted withDeg —
     // same-window A/B read 5.2 s vs 3.6 s in favor of THIS form.
-    var ranks = checkpointRound(
+    var ranks = Pins.checkpoint(
       withDeg.select(col("src").as("node")).distinct()
         .select(col("node"), lit(RankScale).as("r")))
     for (_ <- 1 to PrIters) {
-      ranks = checkpointRound(withDeg
+      ranks = Pins.checkpoint(withDeg
         .join(ranks.hint("shuffle_hash"),
           col("src") === col("node"))
         .select(col("dst"), expr("r div deg").as("contrib"))
@@ -205,13 +145,13 @@ object LinkGraph {
     * — document-scale graphs far past this corpus.
     *
     * Plan shape at scale: the directed pair relation materializes
-    * ONCE ([[pairCache]]); each half-step is one shuffled equi-join
+    * ONCE ([[tradePairs]]); each half-step is one shuffled equi-join
     * of a node-scale score relation against it plus one key-keyed sum
     * (score relations are statless aggregate outputs — broadcast
     * would OOM at scale, so builds pin shuffled), and ONE collected
     * scalar (the max — the d23 bounded-driver-scalar pattern) turns
     * normalization into a literal. Each half-step's raw sum is
-    * localCheckpoint'ed ([[checkpointRound]], r9): the eager cut both
+    * local-checkpointed (`Pins.checkpoint`, r9): the eager cut both
     * materializes the relation ONCE for its two consumers (the max
     * and the next half-step) and truncates lineage, so no action ever
     * replays the iteration chain and the per-round plan stays one
@@ -223,13 +163,13 @@ object LinkGraph {
       .select(col("c"), lit(RankScale).as("h"))
     var auths: DataFrame = null
     for (_ <- 1 to HitsIters) {
-      val aRaw = checkpointRound(
+      val aRaw = Pins.checkpoint(
         ed.join(hubs.hint("shuffle_hash"), Seq("c"))
           .groupBy(col("s")).agg(sum(col("h")).as("ar")))
       val amax = aRaw.agg(max(col("ar"))).collect()(0).getLong(0)
       auths = aRaw.select(col("s"),
         expr(s"(ar * $RankScale) div $amax").as("a"))
-      val hRaw = checkpointRound(
+      val hRaw = Pins.checkpoint(
         ed.join(auths.hint("shuffle_hash"), Seq("s"))
           .groupBy(col("c")).agg(sum(col("a")).as("hr")))
       val hmax = hRaw.agg(max(col("hr"))).collect()(0).getLong(0)
@@ -342,7 +282,7 @@ object LinkGraph {
     // edge list caps the plan at graph size (optimization guide §3.3:
     // materialise a multiply-referenced intermediate to truncate the
     // plan); rows are identical, so the oracle hash is untouched.
-    val edges = checkpointRound(Similarity.cellKnnEdges(spark, dir)
+    val edges = Pins.checkpoint(Similarity.cellKnnEdges(spark, dir)
       .select(least(col("vec_id"), col("nbr_id")).as("u"),
         greatest(col("vec_id"), col("nbr_id")).as("v"))
       .distinct())
@@ -356,7 +296,7 @@ object LinkGraph {
         .select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = checkpointRound(withDeg.select(
+    val oriented = Pins.checkpoint(withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("src"),
       when(uFirst, col("v")).otherwise(col("u")).as("dst"),
       when(uFirst, col("dv")).otherwise(col("du")).as("ddst")))

@@ -3,8 +3,9 @@ package graft.operators
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-import graft.MapEncoder
+import graft.{MapEncoder, Pins}
 import graft.MapEncoder.{MapSpec, PoiSpec, SubfileSpec, TileSpec, WaySpec}
 import graft.Tables
 import graft.sources.FdoSink
@@ -49,20 +50,6 @@ object MapBench {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }
     rm(new java.io.File(path))
-  }
-
-  /** Fleet CachedScan memoized per (session, path-set) — the
-    * Dedup.lshCache pattern. Without this every g14 invocation
-    * persisted a NEW MEMORY_AND_DISK dataset and none was ever
-    * unpersisted (the same stacking-persist leak fixed for LSH in
-    * round 2). [[releaseFleetCache]] is the explicit drop; the bench
-    * calls it between queries. */
-  private val fleetCache = TrieMap.empty[
-    (SparkSession, Seq[String]), graft.sources.Mapsforge.CachedScan]
-
-  def releaseFleetCache(): Unit = {
-    fleetCache.values.foreach(_.release())
-    fleetCache.clear()
   }
 
   /** Pre-encode the synthetic fixture maps g13/g14 read, so a timed
@@ -211,16 +198,19 @@ object MapBench {
     val n = g14FixtureSize(spark, dir)
     val p1 = mapCache.getOrElseUpdate(n, encodeFixture(n))
     val p2 = mapCache.getOrElseUpdate(n / 2, encodeFixture(n / 2))
-    // cached scan: the poi and way aggregates are two consumers of
-    // one decode (scanMany would run the full binary decode twice);
-    // memoized so repeat invocations reuse one persist (see fleetCache)
-    val scanned = fleetCache.getOrElseUpdate((spark, Seq(p1, p2)),
-      graft.sources.Mapsforge.scanManyCached(spark, Seq(p1, p2)))
+    // persisted decode: the poi and way aggregates are two consumers
+    // of one decode (scanMany would run the full binary decode twice);
+    // memoized per (session, path-set) so repeat invocations reuse one
+    // persist instead of stacking a new one per call (the round-2 leak)
+    import spark.implicits._
+    val tiles = Pins.memo(spark, ("g14", p1, p2))(Pins.persist(
+      spark.createDataset(graft.sources.Mapsforge.decodeTiles(
+        spark, Seq(p1, p2), 0, permissive = false)._1), MEMORY_AND_DISK))
     import org.apache.spark.sql.functions._
-    val p = scanned.pois.toDF().groupBy(col("fileId"))
+    val p = tiles.flatMap(_._1).toDF().groupBy(col("fileId"))
       .agg(count(lit(1)).as("n_pois"),
         countDistinct(col("pnum")).as("n_features"))
-    val w = scanned.ways.toDF().groupBy(col("fileId"))
+    val w = tiles.flatMap(_._2).toDF().groupBy(col("fileId"))
       .agg(count(lit(1)).as("n_ways"))
     // left join: a file with POIs but zero ways must still report
     // (n_ways = 0), not vanish from the fleet stats

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.TextFunctions
 
 /** d21: the whole corpus-prep pipeline as ONE declarative plan
@@ -54,7 +54,7 @@ object PipelineE2e {
     // scans / 24 exchanges in the initial plan). One eager
     // checkpoint caps that at one pass (guide §3.3); oracle
     // unchanged.
-    val gated = Similarity.pinCheckpoint(attributed
+    val gated = Pins.checkpoint(attributed
       .withColumn("st", TextFunctions.wordStats(col("text")))
       .filter(col("lang") === "en"
         && col("st.n_words") >= MinWords))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Third tranche of the relational surface (SURVEY.md §2a): OLS
   * regression aggregates and the higher-order array-function surface.
@@ -252,10 +252,12 @@ object Relational3 {
     * runs on DuckDB as the oracle; a window formulation cross-checks
     * it in ScalaTest.
     *
-    * Each call pins a local checkpoint of the orders window that the
-    * returned (lazy) DataFrame reads, so it cannot be freed here:
-    * callers must call `Similarity.releaseSimCache()` once they are
-    * done with the result, as Bench and Verify do between runs. */
+    * Each call pins a local checkpoint of the orders window in
+    * [[graft.Pins]]. The returned (lazy) DataFrame reads it, so it
+    * cannot be freed here: every caller must call `Pins.release()`
+    * once the result is materialized, as Bench, Verify, TimeOne and
+    * ScaleCurve do between runs. Until then each call's blocks stay
+    * pinned. */
   def q58Recursive(spark: SparkSession, dir: String): DataFrame = {
     // Spark guards recursive CTEs with a 1M-row output limit by
     // default; this recursion is depth-capped by its OWN predicate
@@ -288,7 +290,7 @@ object Relational3 {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
-    val base = Similarity.pinCheckpoint(
+    val base = Pins.checkpoint(
       scoped.read.parquet(s"$dir/orders.parquet")
         .select(col("o_custkey"), col("o_orderkey"),
           lead(col("o_orderkey"), 1).over(w).as("nxt"),

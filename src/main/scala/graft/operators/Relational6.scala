@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Sixth relational tranche (SURVEY.md §2a): the reporting-layer
   * analytics a warehouse user runs daily over the reference's data
@@ -304,7 +304,7 @@ object Relational6 {
     // (r16 plan audit: 6 scans / 12 windows in the initial plan).
     // One eager checkpoint of the 3-row relation halves the lineitem
     // passes (guide §3.3); same rows, oracle unchanged.
-    val med = Similarity.pinCheckpoint(medianRanks(li, "pc")
+    val med = Pins.checkpoint(medianRanks(li, "pc")
       .select(col("l_returnflag"), col("n"), col("sum2").as("med2")))
     val dev = li.join(broadcast(med), Seq("l_returnflag"))
       .select(col("l_returnflag"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.TextFunctions
 
 /** Retrieval operators over the documents corpus (SURVEY.md §2d):
@@ -665,7 +665,7 @@ object Retrieval {
     // explode + tf aggregate (r16 plan audit: 32 scans / 44
     // exchanges in the initial plan). Checkpoint each once (guide
     // §3.3); rows identical, oracle unchanged.
-    val post = Similarity.pinCheckpoint(
+    val post = Pins.checkpoint(
       Dedup.corpusWithPlants(spark, dir)
         .select(col("doc_id"),
           graft.functions.TextFunctions.words(col("text")).as("ws"))
@@ -675,7 +675,7 @@ object Retrieval {
             "i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1]))")).as("term"))
         .groupBy(col("term"), col("doc_id"))
         .agg(count(lit(1)).as("tf")))
-    val rare = Similarity.pinCheckpoint(post.join(
+    val rare = Pins.checkpoint(post.join(
       post.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= SparseDfCap)
         .select(col("term"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.functions.TextFunctions
 
 /** Exact set-similarity self-join with prefix filtering (SURVEY.md
@@ -67,11 +68,10 @@ object SetSim {
   def d76SetSimJoin(spark: SparkSession, dir: String): DataFrame = {
     // the (doc_id, shingle-set) relation feeds FOUR plan branches
     // (frequency agg, ranked postings, and both verify joins); pinned
-    // via localCheckpoint so the corpus scan + shingle assembly runs
-    // once, not four times (measured 13.9 → ~7 s at sf0.1) —
-    // released by Bench through releaseSimCache, the
-    // LinkGraph.roundCache discipline
-    val docs = Similarity.pinCheckpoint(
+    // via Pins.checkpoint so the corpus scan + shingle assembly runs
+    // once, not four times (measured 13.9 → ~7 s at sf0.1) — freed by
+    // Pins.release() once the result is materialized
+    val docs = Pins.checkpoint(
       Dedup.corpusWithPlants(spark, dir)
         .filter(length(trim(col("text"))) > 0)
         .withColumn("t", trim(col("text")))
@@ -162,7 +162,7 @@ object SetSim {
     val eval0 = TextAnalysis.EvalDocs
     // pinned for the same reason as d76: the shingle-set relation
     // feeds both the eval and train branches — one scan, not two
-    val docs = Similarity.pinCheckpoint(
+    val docs = Pins.checkpoint(
       Dedup.corpusWithPlants(spark, dir)
         .filter(length(trim(col("text"))) > 0)
         .withColumn("t", trim(col("text")))

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Similarity search over the embedding column (SURVEY.md §2d).
   *
@@ -195,49 +196,6 @@ object Similarity {
       .replace("q.embedding", "a.embedding")
       .replace("c.embedding", "b.embedding")
 
-  /** Cached relations pinned by the embedding LSH pipelines, keyed
-    * by (session, dir, query): repeated d12/d15 invocations reuse ONE
-    * cached pipeline instead of stacking a new persist per call (the
-    * Dedup.lshCache pattern). [[releaseSimCache]] is the explicit
-    * drop; Bench calls it between scale sections. */
-  private val simCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (DataFrame, Seq[DataFrame])]
-
-  /** localCheckpoint'ed relations pinned OUTSIDE the CacheManager
-    * (localCheckpoint persists the Dataset's internal RDD directly,
-    * so `Dataset.unpersist()` can't free it — the
-    * LinkGraph.roundCache lesson, ADVICE r10); released by
-    * [[releaseSimCache]], which Bench calls between reps. */
-  private val ckptCache = scala.collection.mutable.ArrayBuffer
-    .empty[DataFrame]
-
-  private[operators] def pinCheckpoint(df: DataFrame): DataFrame = {
-    val p = df.localCheckpoint()
-    ckptCache.synchronized { ckptCache += p }
-    p
-  }
-
-  /** Free a checkpointed Dataset's blocks directly (its plan is a
-    * LogicalRDD wrapping exactly the persisted RDD). Safe once its
-    * consumers are materialized. */
-  private[operators] def unpinCheckpoint(p: DataFrame): Unit =
-    p.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => p.unpersist()
-    }
-
-  def releaseSimCache(): Unit = {
-    simCache.values.foreach { case (_, pinned) =>
-      pinned.foreach(_.unpersist())
-    }
-    simCache.clear()
-    ckptCache.synchronized {
-      ckptCache.foreach(unpinCheckpoint)
-      ckptCache.clear()
-    }
-  }
-
   /** d12: the SCALE path for near-dup pairs — candidates meet only
     * where their hyperplane signatures share a (table, bucket) cell
     * (an EQUI-join on the banded signature, same shape as d02's
@@ -255,14 +213,12 @@ object Similarity {
     * the whole pipeline; the XXH64 kernel stays the corpus-scale
     * throughput family under the spec pins. */
   def embedNearDupLsh(spark: SparkSession, dir: String): DataFrame =
-    simCache.getOrElseUpdate((spark, dir, "d12"), {
-      val emb = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (df, pinned) = nearDupPairsLshPinned(emb, NearDupThreshold,
-        NearDupMaxBucket, portable = true)
-      (df, emb +: pinned)
-    })._1
+    Pins.memo(spark, ("d12", dir)) {
+      val emb = Pins.persist(Tables.load(spark, dir, "embeddings")
+        .select(col("vec_id"), col("embedding")), MEMORY_AND_DISK)
+      nearDupPairsLshPinned(emb, NearDupThreshold, NearDupMaxBucket,
+        portable = true)
+    }
 
   /** Bucket cap for d12's candidate join — same role as d02's
     * MaxBucketSize: a degenerate cell (mass-duplicated vectors all
@@ -282,17 +238,17 @@ object Similarity {
     * difference between moving ids and moving the corpus). */
   def nearDupPairsLsh(emb: DataFrame, threshold: Double,
       maxBucket: Long = NearDupMaxBucket): DataFrame =
-    nearDupPairsLshPinned(emb, threshold, maxBucket, pin = false)._1
+    nearDupPairsLshPinned(emb, threshold, maxBucket, pin = false)
 
   /** As [[nearDupPairsLsh]], but persists the banded signature
-    * relation (scanned twice: cell-bound aggregate + self-join) so
-    * the signature kernel runs over the corpus exactly once. Returns
-    * the pinned relations for the caller's release hook — only the
-    * memoized path-entry queries pin (direct spec calls on ad-hoc
-    * frames must not leak persists into a shared session). */
+    * relation (scanned twice: cell-bound aggregate + self-join) in
+    * [[graft.Pins]] so the signature kernel runs over the corpus
+    * exactly once — only the memoized path-entry queries pin (direct
+    * spec calls on ad-hoc frames must not leak persists into a
+    * shared session). */
   private def nearDupPairsLshPinned(emb: DataFrame, threshold: Double,
       maxBucket: Long, pin: Boolean = true,
-      portable: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+      portable: Boolean = false): DataFrame = {
     val bandedRaw = emb
       .withColumn("sig",
         if (portable) portableLshSignature(col("embedding"))
@@ -304,9 +260,7 @@ object Similarity {
         s"(sig >> (t * $BitsPerTable)) & ${(1L << BitsPerTable) - 1}"))
       .select(col("vec_id"), col("t"), col("bucket"))
     val bandedNarrow =
-      if (pin) bandedRaw.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else bandedRaw
+      if (pin) Pins.persist(bandedRaw, MEMORY_AND_DISK) else bandedRaw
     // one narrow aggregate bounds every cell before the self-join.
     // The cell list and the candidate pairs are aggregate-derived
     // (statless) and corpus-scaling — unhinted, Catalyst broadcasts
@@ -327,7 +281,7 @@ object Similarity {
       .select(col("keep_id"), col("dup_id"))
       .dropDuplicates(Seq("keep_id", "dup_id"))
       .hint("shuffle_hash")
-    val pairs = cand
+    cand
       .join(emb.select(col("vec_id").as("keep_id"),
         col("embedding").as("a_emb")), Seq("keep_id"))
       .join(emb.select(col("vec_id").as("dup_id"),
@@ -336,7 +290,6 @@ object Similarity {
       .filter(col("cos") >= threshold)
       .select(col("keep_id"), col("dup_id"), col("cos"))
       .orderBy(col("keep_id"), col("dup_id"))
-    (pairs, if (pin) Seq(bandedNarrow) else Nil)
   }
 
   /** d15: embedding duplicate CLUSTERS at mass-duplication scale.
@@ -356,22 +309,22 @@ object Similarity {
     * count. Output: (keep_id, cluster_size) histogram over ORIGINAL
     * rows, matching d07/d14's contract shape. */
   def d15EmbedClustersScale(spark: SparkSession, dir: String): DataFrame =
-    simCache.getOrElseUpdate((spark, dir, "d15"), {
+    Pins.memo(spark, ("d15", dir)) {
       embedClustersLshPinned(
         Tables.load(spark, dir, "embeddings")
           .select(col("vec_id"), col("embedding")),
         NearDupThreshold, NearDupMaxBucket, portable = true)
-    })._1
+    }
 
   /** Core of d15, reusable on any (vec_id, embedding) relation.
     * Un-pinned form for ad-hoc/spec inputs (no persist leak). */
   def embedClustersLsh(emb: DataFrame, threshold: Double,
       maxBucket: Long = NearDupMaxBucket): DataFrame =
-    embedClustersLshPinned(emb, threshold, maxBucket, pin = false)._1
+    embedClustersLshPinned(emb, threshold, maxBucket, pin = false)
 
   private def embedClustersLshPinned(emb: DataFrame, threshold: Double,
       maxBucket: Long, pin: Boolean = true,
-      portable: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+      portable: Boolean = false): DataFrame = {
     // exact collapse: identical vectors → one representative row
     // carrying its member count (grouping on the raw array column —
     // bit-exact equality, which is what replicated/mass-dup data has)
@@ -381,25 +334,20 @@ object Similarity {
     // reps feeds the LSH pipeline (sig pass + 2 re-attach joins) AND
     // the final weight join — pin it so the exact-collapse shuffle
     // runs once
-    val reps =
-      if (pin) repsRaw.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else repsRaw
-    val (pairDf, pairPinned) = nearDupPairsLshPinned(
+    val reps = if (pin) Pins.persist(repsRaw, MEMORY_AND_DISK) else repsRaw
+    val edges = nearDupPairsLshPinned(
       reps.select(col("vec_id"), col("embedding")), threshold, maxBucket,
       pin, portable)
-    val edges = pairDf
       .select(col("keep_id").as("a_id"), col("dup_id").as("b_id"))
     val labels = Dedup.connectedComponents(edges, "a_id", "b_id")
     // representatives untouched by any edge are singleton clusters
-    val clusters = reps.select(col("vec_id"), col("n_members"))
+    reps.select(col("vec_id"), col("n_members"))
       .join(labels.withColumnRenamed("node", "vec_id"), Seq("vec_id"),
         "left")
       .withColumn("label", coalesce(col("label"), col("vec_id")))
       .groupBy(col("label").as("keep_id"))
       .agg(sum(col("n_members")).cast("long").as("cluster_size"))
       .orderBy(col("keep_id"))
-    (clusters, if (pin) reps +: pairPinned else Nil)
   }
 
   /** PORTABLE hyperplane family for d06's oracle-replayable form —
@@ -749,9 +697,9 @@ object Similarity {
     // of re-deriving it per width, and derive the dims=64 control row
     // from it directly (its self-join recall is 1.0 by construction,
     // so a second full-width topk computed the same relation twice —
-    // ADVICE r9); pinned through ckptCache so releaseSimCache frees
-    // the blocks (ADVICE r10)
-    val base = pinCheckpoint(topk(64))
+    // ADVICE r9); pinned in Pins so Pins.release() frees the blocks
+    // (ADVICE r10)
+    val base = Pins.checkpoint(topk(64))
     MatryoshkaDims.map { p =>
       val hits =
         if (p == 64) base.agg(count(lit(1)).as("n_hits"))
@@ -2323,10 +2271,10 @@ object Similarity {
     // initial plan). Checkpoint each ONCE up front (guide §3.3 /
     // §2.4): the hops then join against materialized narrow
     // (vec_id, qv) blocks. Same rows, same hashes; blocks are freed
-    // by releaseSimCache between bench reps.
-    val qs = pinCheckpoint(queries)
-    val corp = pinCheckpoint(corpus)
-    val eg = pinCheckpoint(edges)
+    // by Pins.release() between bench reps.
+    val qs = Pins.checkpoint(queries)
+    val corp = Pins.checkpoint(corpus)
+    val eg = Pins.checkpoint(edges)
     val wp = Window.partitionBy(col("q_id"))
       .orderBy(col("dist"), col("cent_id"))
     val entry = qs.join(broadcast(cents))
@@ -2362,8 +2310,8 @@ object Similarity {
     // logical plan DOUBLES per hop — 2^hops copies of the base scan
     // (measured: 3× the walk's wall at 8 hops). Checkpoint blocks are
     // queries × beam rows (KBs); all but the one the returned plan
-    // reads are unpersisted before return.
-    var beam = entry.localCheckpoint()
+    // reads are unpinned before return.
+    var beam = Pins.checkpoint(entry)
     var scored = score(beam)
     for (h <- 1 to hops) {
       val expanded = broadcast(beam)
@@ -2372,10 +2320,9 @@ object Similarity {
       val cand = beam.unionByName(expanded).distinct()
       scored = score(cand)
       if (h < hops) {
-        val next = scored.filter(col("rn") <= beamW)
-          .select(col("q_id"), col("vec_id"))
-          .localCheckpoint()
-        beam.unpersist()
+        val next = Pins.checkpoint(scored.filter(col("rn") <= beamW)
+          .select(col("q_id"), col("vec_id")))
+        Pins.unpin(beam)
         beam = next
       }
     }
@@ -2980,7 +2927,7 @@ object Similarity {
             redges.write.parquet(s"$tmp/redges")
             dPosted.repartition(col("cell"))
               .write.partitionBy("cell").parquet(s"$tmp/postings")
-          } finally cks.foreach(_.unpersist())
+          } finally cks.foreach(Pins.unpin)
         })
       path
     }
@@ -2994,9 +2941,9 @@ object Similarity {
     * the edge relations come back checkpointed (bounded: delta ×
     * NavK rows) and constraint-severed so downstream unions are safe.
     * The checkpoint handles land in `checkpoints` so the caller can
-    * unpersist them once the results are consumed (ADVICE r13: the
-    * pinned blocks otherwise live for the session); an absent buffer
-    * keeps them pinned for callers that return the DataFrames.
+    * unpin them once the results are consumed (ADVICE r13: the
+    * pinned blocks otherwise live until `Pins.release()`); an absent
+    * buffer keeps them pinned for callers that return the DataFrames.
     * Shared by the committed lifecycle and the recall-curve drill. */
   def navInsertParts(qz: DataFrame, cents: DataFrame,
       basePost: DataFrame, baseEdges: DataFrame, delta: DataFrame,
@@ -3049,7 +2996,7 @@ object Similarity {
     // key-not-found) — createDataFrame over the materialized rows
     // drops the stale constraints
     def sever(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
+      val ck = Pins.checkpoint(df)
       checkpoints += ck
       spark.createDataFrame(ck.rdd, ck.schema)
     }
@@ -3416,9 +3363,9 @@ object Similarity {
     // of every walk re-scanned and re-quantized the embedding table
     // (~18 scans per d86 call in the r16 plan audit); see
     // navBeamWalk's checkpoint note (guide §3.3)
-    val queries = pinCheckpoint(qz.filter(col("vec_id") < NumQueries)
+    val queries = Pins.checkpoint(qz.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv")))
-    val corpus = pinCheckpoint(qz.filter(col("vec_id") >= NumQueries))
+    val corpus = Pins.checkpoint(qz.filter(col("vec_id") >= NumQueries))
     val top = loadIndexPart(spark, root, "entry")
     var seed = queries.select(col("q_id")).crossJoin(broadcast(top))
     for (l <- HnswMaxLvl to 1 by -1) {
@@ -3427,7 +3374,7 @@ object Similarity {
         HnswDescentBeam, HnswDescentHops, 1)
         .select(col("q_id"), col("vec_id"))
     }
-    val edges0 = pinCheckpoint(loadIndexPart(spark, root, "edges_l0"))
+    val edges0 = Pins.checkpoint(loadIndexPart(spark, root, "edges_l0"))
     beamWalkFrom(queries, corpus, edges0, seed, NavBeam, NavHops, TopK)
       .orderBy(col("q_id"), col("rank"))
   }
@@ -4159,7 +4106,7 @@ object Similarity {
     // run unpartitioned end to end (the PlanShapeSpec gate catches
     // exactly that shape). Hash-partitioned, the checkpoint keeps
     // scan parallelism and the q_id exchanges stay in the plan.
-    val resid = pinCheckpoint(
+    val resid = Pins.checkpoint(
       cellResiduals(cands, cents).repartition(col("vec_id")))
     val book = trainResidualBook(resid, initBelow)
     residualAdcScan(queries, resid, cents, book, nprobe, k)
@@ -5160,27 +5107,25 @@ object Similarity {
       r: Int, k: Int): DataFrame = {
     val wShort = Window.partitionBy(col("q_id"))
       .orderBy(col("dq"), col("vec_id"))
-    val sl = cands.crossJoin(broadcast(queries))
+    val sl = Pins.checkpoint(cands.crossJoin(broadcast(queries))
       .withColumn("dq", qDist(col("q_qv"), col("qv")))
       .withColumn("rn", row_number().over(wShort))
       .filter(col("rn") <= r)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("dq"))
-      .localCheckpoint()
+      .select(col("q_id"), col("vec_id"), col("qv"), col("dq")))
     // the R×R per-query pairwise distances, once — queries×R×(R−1)
     // rows, bounded by construction
-    val pairs = sl.select(col("q_id"), col("vec_id"), col("qv"))
+    val pairs = Pins.checkpoint(sl
+      .select(col("q_id"), col("vec_id"), col("qv"))
       .join(sl.select(col("q_id"), col("vec_id").as("sel_id"),
         col("qv").as("qb")), Seq("q_id"))
       .filter(col("vec_id") =!= col("sel_id"))
       .withColumn("dp", qDist(col("qv"), col("qb")))
-      .select(col("q_id"), col("vec_id"), col("sel_id"), col("dp"))
-      .localCheckpoint()
+      .select(col("q_id"), col("vec_id"), col("sel_id"), col("dp")))
     val slim = sl.select(col("q_id"), col("vec_id"), col("dq"))
-    var selected = slim.groupBy(col("q_id"))
+    var selected = Pins.checkpoint(slim.groupBy(col("q_id"))
       .agg(min(struct(col("dq"), col("vec_id"))).as("b"))
       .select(col("q_id"), col("b.vec_id").as("vec_id"),
-        col("b.dq").as("dq"), lit(1).as("pick"))
-      .localCheckpoint()
+        col("b.dq").as("dq"), lit(1).as("pick")))
     for (t <- 2 to k) {
       val selIds = selected
         .select(col("q_id"), col("vec_id").as("sel_id"))
@@ -5198,10 +5143,13 @@ object Similarity {
           .as("b"))
         .select(col("q_id"), col("b.vec_id").as("vec_id"),
           col("b.dq").as("dq"), lit(t).as("pick"))
-      val grown = selected.unionByName(next).localCheckpoint()
-      selected.unpersist()
+      val grown = Pins.checkpoint(selected.unionByName(next))
+      Pins.unpin(selected)
       selected = grown
     }
+    // the returned plan reads only the last checkpoint of selected
+    Pins.unpin(sl)
+    Pins.unpin(pairs)
     selected
       .select(col("q_id"), col("pick"), col("vec_id"),
         col("dq").as("dist"))
@@ -5790,7 +5738,7 @@ object Similarity {
     // 64-dim projection fold over the corpus. One eager checkpoint
     // of the narrow (vec_id, pmic) relation halves that (guide
     // §3.3); rows identical, oracle unchanged.
-    val proj = pinCheckpoint(pcaQuantized(spark, dir)
+    val proj = Pins.checkpoint(pcaQuantized(spark, dir)
       .withColumn("pmic", floor(aggregate(
         sequence(lit(1), lit(64)), lit(0.0),
         (acc, d) => acc + element_at(col("qv"), d).cast("double")

@@ -943,16 +943,16 @@ class PipelineSpec extends AnyFunSuite {
     pr.unpersist()
   }
 
-  test("releaseGraphCache frees the localCheckpoint'd round blocks " +
-    "(ADVICE r9: Dataset.unpersist can't reach them)") {
+  test("Pins.release frees d32's checkpointed round blocks") {
+    // ADVICE r9: Dataset.unpersist can't reach a local checkpoint
     import graft.operators.LinkGraph
-    LinkGraph.releaseGraphCache() // reset to a known cache state
+    Pins.release() // reset to a known pin state
     val before = spark.sparkContext.getPersistentRDDs.size
     LinkGraph.d32Pagerank(spark, sf).collect()
     val during = spark.sparkContext.getPersistentRDDs.size
     assert(during > before,
       s"pagerank pinned nothing? before=$before during=$during")
-    LinkGraph.releaseGraphCache()
+    Pins.release()
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after == before,
       s"release leaked persisted RDD blocks: before=$before after=$after")
@@ -1256,7 +1256,7 @@ class PipelineSpec extends AnyFunSuite {
     // O(s²) but must land on the SAME clusters wherever band-hash
     // collisions between dissimilar docs don't occur (true on this
     // corpus by construction)
-    Dedup.releaseLshCache()
+    Pins.release()
     val full = Dedup.dedupClusters(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val star = Dedup.d14ClustersAtScale(spark, sf).collect()
