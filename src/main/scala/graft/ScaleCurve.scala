@@ -132,61 +132,36 @@ object ScaleCurve {
           val fb = t(
             graft.sources.Interchange.resetBucketedLayout(spark, d),
             graft.sources.Interchange.buildBucketedLayout(spark, d))
-          val ib = t(
-            graft.operators.Similarity.resetIvfIndex(spark, d),
-            graft.operators.Similarity.ensureIvfIndex(spark, d))
-          val pb = t(
-            graft.operators.Similarity.resetPqIndex(spark, d),
-            graft.operators.Similarity.ensurePqIndex(spark, d))
+          import graft.operators.Similarity.{HnswIndex, IvfBase,
+            IvfDelta, IvfIndex, NavBase, NavDelta, NavIndex, NavPromote,
+            PqIndex, Purged, Tombstones}
+          def cold(as: graft.sources.AtomicCommit.Artifact*): Unit =
+            as.foreach(_.reset(spark, d))
+          val ib = t(cold(IvfIndex), IvfIndex.ensure(spark, d))
+          val pb = t(cold(PqIndex), PqIndex.ensure(spark, d))
           // d81's base-vs-delta pair is the O(delta) claim, measured
           // per sweep (r12 manual numbers: 23.9/1.6 s at sf1,
           // 129.3/4.6 s at sf10)
-          val bb = t({
-              val p = new org.apache.hadoop.fs.Path(
-                graft.operators.Similarity.annBasePath(d))
-              val fs = p.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              if (fs.exists(p)) fs.delete(p, true)
-              val pd = new org.apache.hadoop.fs.Path(
-                graft.operators.Similarity.annDeltaPath(d))
-              if (fs.exists(pd)) fs.delete(pd, true)
-            },
-            graft.operators.Similarity.ensureBaseIvfIndex(spark, d))
-          val db = t((),
-            graft.operators.Similarity.ensureIvfDelta(spark, d))
-          val nb = t(
-            graft.operators.Similarity.resetNavIndex(spark, d),
-            graft.operators.Similarity.ensureNavIndex(spark, d))
+          val bb = t(cold(IvfBase, IvfDelta), IvfBase.ensure(spark, d))
+          val db = t((), IvfDelta.ensure(spark, d))
+          val nb = t(cold(NavIndex), NavIndex.ensure(spark, d))
           // d94's base-vs-insert pair is the nav-graph O(delta)
           // claim (d81's contract applied to the serving graph)
-          val nbb = t(
-            graft.operators.Similarity.resetNavInsert(spark, d),
-            graft.operators.Similarity.ensureNavBase(spark, d))
-          val nbi = t((),
-            graft.operators.Similarity.ensureNavDelta(spark, d))
+          val nbb = t(cold(NavBase, NavDelta), NavBase.ensure(spark, d))
+          val nbi = t((), NavDelta.ensure(spark, d))
           // r14: d86's layered graphs moved behind the same committed
           // lifecycle (verdict item 2) — its one-time build is now an
           // artifact column like the others
-          val hb = t(
-            graft.operators.Similarity.resetHnswIndex(spark, d),
-            graft.operators.Similarity.ensureHnswIndex(spark, d))
+          val hb = t(cold(HnswIndex), HnswIndex.ensure(spark, d))
           // r15: the lifecycle's new corners — d97's entry promotion
           // (O(postings) election, no retrain, no edge rebuild) and
           // d98's tombstone log + physical purge (O(deletes) log,
           // one O(postings) anti-join merge) — their curves prove
           // the maintenance ops stay FLAT relative to their base
           // builds as the corpus scales
-          val pr = t(
-            { val p = new org.apache.hadoop.fs.Path(
-                graft.operators.Similarity.navPromotePath(d))
-              val fs = p.getFileSystem(
-                spark.sparkContext.hadoopConfiguration)
-              if (fs.exists(p)) fs.delete(p, true) },
-            graft.operators.Similarity.ensureNavPromote(spark, d))
-          val tp = t(
-            graft.operators.Similarity.resetTombstones(spark, d),
-            { graft.operators.Similarity.ensureTombstones(spark, d)
-              graft.operators.Similarity.ensurePurgedIndex(spark, d) })
+          val pr = t(cold(NavPromote), NavPromote.ensure(spark, d))
+          val tp = t(cold(Tombstones, Purged),
+            { Tombstones.ensure(spark, d); Purged.ensure(spark, d) })
           println(s"  artifact builds @ $tag: f11 layout ${fmt(fb)} s," +
             s" d79 ivf index ${fmt(ib)} s, d80 pq index ${fmt(pb)} s," +
             s" d81 base ${fmt(bb)} s, d81 delta ${fmt(db)} s," +

@@ -9,43 +9,38 @@ package graft
   * build). */
 object TimeBuild {
   def main(args: Array[String]): Unit = {
+    import graft.operators.Similarity.{HnswIndex, NavIndex}
     val which = args(0) // d84 | d86
     val dir = args(1)
     val spark = Sessions.local()
     val warm = "/root/testdata/sf0.01"
-    graft.operators.Similarity.resetNavIndex(spark, warm)
-    graft.operators.Similarity.ensureNavIndex(spark, warm)
-    graft.operators.Similarity.resetHnswIndex(spark, warm)
-    graft.operators.Similarity.ensureHnswIndex(spark, warm)
+    Seq(NavIndex, HnswIndex).foreach { a =>
+      a.reset(spark, warm)
+      a.ensure(spark, warm)
+    }
     System.gc(); Thread.sleep(100)
-    val t0 = {
-      which match {
-        case "d84" => graft.operators.Similarity.resetNavIndex(spark, dir)
-        case "d86" => graft.operators.Similarity.resetHnswIndex(spark, dir)
-      }
-      System.nanoTime()
+    val artifact = which match {
+      case "d84" => NavIndex
+      case "d86" => HnswIndex
     }
-    which match {
-      case "d84" => graft.operators.Similarity.ensureNavIndex(spark, dir)
-      case "d86" => graft.operators.Similarity.ensureHnswIndex(spark, dir)
-    }
+    artifact.reset(spark, dir)
+    val t0 = System.nanoTime()
+    artifact.ensure(spark, dir)
     println(f"[build] $which $dir: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     spark.stop()
   }
 }
 
-/** Drop every persisted ANN index generation for a corpus dir so the
-  * next query call rebuilds with the CURRENT code — the bit-identity
-  * check after any build-path change (rebuild, re-verify, hashes must
-  * not move). */
+/** Drop every persisted index generation and model for a corpus dir
+  * ([[graft.operators.Similarity.Artifacts]]) so the next query call
+  * rebuilds with the CURRENT code — the bit-identity check after any
+  * build-path change (rebuild, re-verify, hashes must not move). */
 object ResetIndexes {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val spark = Sessions.local()
-    graft.operators.Similarity.resetNavIndex(spark, dir)
-    graft.operators.Similarity.resetHnswIndex(spark, dir)
-    graft.operators.Similarity.resetNavInsert(spark, dir)
-    println(s"[reset] dropped nav/hnsw/navbase indexes for $dir")
+    graft.operators.Similarity.Artifacts.foreach(_.reset(spark, dir))
+    println(s"[reset] dropped every persisted index for $dir")
     spark.stop()
   }
 }

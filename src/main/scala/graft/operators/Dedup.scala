@@ -1604,159 +1604,29 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Ensure-and-read the committed (h → base_doc) fingerprint index —
-    * d56's lifecycle as a reusable leg (s20 probes the same index on
-    * a stream): a committed index with a matching dataset fingerprint
-    * is REUSED (the production daily-job lifecycle — base documents
-    * are never rescanned while the index stands); an absent/torn
-    * directory OR a dataset-fingerprint mismatch triggers a rebuild
-    * (ADVICE r9: path identity alone let a regenerated corpus at the
-    * same path serve stale base_doc mappings — the stamp records WHAT
-    * corpus the index was built from, not just where). */
-  def committedFingerprintIndex(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val idxDir = fingerprintIndexDir(dir)
-    val fp = datasetFingerprint(spark, dir)
-    val reusable =
-      graft.sources.AtomicCommit.isCommitted(spark, idxDir) &&
-        readIndexFingerprint(spark, idxDir).contains(fp)
-    if (!reusable)
-      buildFingerprintIndex(spark, idxDir,
+  /** d56's (h → base_doc) fingerprint index over the base corpus,
+    * committed as an [[graft.sources.AtomicCommit.Artifact]] keyed on
+    * `documents` (ADVICE r9: path identity alone let a regenerated
+    * corpus at the same path serve stale base_doc mappings — the stamp
+    * records WHAT corpus the index was built from, not just where). */
+  lazy val FingerprintIndex: graft.sources.AtomicCommit.Artifact =
+    graft.sources.AtomicCommit.Artifact("graft_fpindex", "documents") {
+      (spark, dir, tmp) =>
         Tables.load(spark, dir, "documents")
           .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
           .filter(col("doc_id") % 10 =!= 0)
-          .groupBy(col("h")).agg(min(col("doc_id")).as("base_doc")),
-        fp)
-    graft.sources.AtomicCommit.readParquetCommitted(spark, idxDir)
-  }
-
-  /** The d56 index directory for `dir`: keyed on the SHA-256 digest
-    * of the dataset's ABSOLUTE path — collision-free by construction
-    * (ADVICE r9: the r8 sanitize-the-whole-path key aliased distinct
-    * dirs — `/a/b` and `/a_b` both sanitize to `_a_b` — and a deep
-    * path could overrun the 255-char filename component limit). The
-    * sanitized basename survives only as a human-readable prefix; the
-    * digest is the identity. Staleness of the data AT the path is
-    * handled separately by [[datasetFingerprint]]. */
-  def fingerprintIndexDir(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val prefix = new java.io.File(abs).getName
-      .replaceAll("[^A-Za-z0-9._-]", "_").take(40)
-    s"${sys.props("java.io.tmpdir")}/graft_fpindex_${prefix}_$digest"
-  }
-
-  /** Name of the dataset-fingerprint file inside a committed index. */
-  val IndexFpName = "_GRAFT_DATASET_FP"
-
-  /** Driver-side fingerprint of the base corpus the d56 index derives
-    * from: SHA-256 over the sorted (relative path, length, mtime)
-    * listing of `dir/documents.parquet` — a metadata-only probe (no
-    * data scan) that changes whenever the corpus files are rewritten,
-    * replaced, or appended. Works through the Hadoop FileSystem API so
-    * the same probe runs on local disk, HDFS, or an object store
-    * (where mtime+len is exactly the change signal ETags encode). */
-  def datasetFingerprint(spark: SparkSession, dir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(s"$dir/documents.parquet")
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = Seq.newBuilder[String]
-    if (f.getFileStatus(root).isFile) {
-      val s = f.getFileStatus(root)
-      entries += s"${root.getName}\t${s.getLen}\t${s.getModificationTime}"
-    } else {
-      val it = f.listFiles(root, true)
-      val base = root.toUri.getPath
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && !s.getPath.getName.endsWith(".crc")) {
-          val rel = s.getPath.toUri.getPath.stripPrefix(base)
-          entries += s"$rel\t${s.getLen}\t${s.getModificationTime}"
-        }
-      }
+          .groupBy(col("h")).agg(min(col("doc_id")).as("base_doc"))
+          .write.parquet(tmp)
     }
-    val body = entries.result().sorted.mkString("\n")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
 
-  /** The dataset fingerprint a committed index records, if any. */
-  private def readIndexFingerprint(
-      spark: SparkSession, idxDir: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(idxDir, IndexFpName)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bs = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { bs.write(buf, 0, n); n = in.read(buf) }
-        Some(bs.toString("UTF-8").trim)
-      } finally in.close()
-    }
-  }
-
-  /** Build the fingerprint index into a process-private temp dir and
-    * RENAME it into place — concurrent builders can no longer
-    * interleave part-file writes inside the published directory
-    * (ADVICE r9): each builds its own complete, committed, fp-stamped
-    * tree and the rename is the single publish point. Losing a rename
-    * race is fine — the winner's index is equivalent (same corpus,
-    * same deterministic build) — so the loser just discards its
-    * attempt and reads the winner's. */
-  private def buildFingerprintIndex(spark: SparkSession, idxDir: String,
-      base: DataFrame, fp: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(idxDir)
-    val f = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a committed index with the matching fingerprint is equivalent
-    // by construction (same corpus, deterministic build): NEVER
-    // delete it out from under a concurrent reader — reuse it
-    def committedMatch(): Boolean =
-      graft.sources.AtomicCommit.isCommitted(spark, idxDir) &&
-        readIndexFingerprint(spark, idxDir).contains(fp)
-    if (committedMatch()) return
-    val tmp = new Path(idxDir + ".build-" +
-      java.lang.ProcessHandle.current().pid() + "-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    // try/finally: a failed parquet write or lost race must not leave
-    // the private build tree behind
-    var published = false
-    try {
-      base.write.mode("overwrite").parquet(tmp.toString)
-      // fp stamp BEFORE the commit marker: a torn build can never
-      // present a marker without its fingerprint
-      val out = f.create(new Path(tmp, IndexFpName), true)
-      try out.write(fp.getBytes("UTF-8")) finally out.close()
-      graft.sources.AtomicCommit.commit(spark, tmp.toString)
-      if (f.exists(dst) && !committedMatch())
-        f.delete(dst, true) // stale or torn loser, wrong fingerprint
-      // Hadoop rename(tmp, dst) with dst an EXISTING directory moves
-      // tmp INSIDE dst instead of returning false — so re-check dst
-      // right before the rename and treat any dst-existence as a
-      // lost race rather than trusting rename's return value
-      published = !f.exists(dst) && f.rename(tmp, dst) &&
-        !f.exists(new Path(dst, tmp.getName))
-      if (f.exists(new Path(dst, tmp.getName))) {
-        // rename-into-dir happened anyway (dst appeared in the gap):
-        // our tree nested inside the winner's — remove the orphan
-        f.delete(new Path(dst, tmp.getName), true)
-        published = false
-      }
-      if (!published)
-        // another process published concurrently: its index is
-        // equivalent — drop ours and require theirs whole
-        require(committedMatch(),
-          s"lost index-publish race at $idxDir but no committed " +
-            "matching index found")
-    } finally {
-      if (!published && f.exists(tmp)) f.delete(tmp, true)
-    }
-  }
+  /** Ensure-and-read the committed fingerprint index — d56's
+    * lifecycle as a reusable leg (s20 probes the same index on a
+    * stream): while the index stands, base documents are never
+    * rescanned (the production daily-job lifecycle). */
+  def committedFingerprintIndex(spark: SparkSession, dir: String)
+      : DataFrame =
+    graft.sources.AtomicCommit.readParquetCommitted(spark,
+      FingerprintIndex.ensure(spark, dir))
 
   /** d58: quality-decile duplication calibration — the report that
     * answers "does my quality score PREDICT duplication?" before

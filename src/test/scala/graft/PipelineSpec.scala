@@ -40,7 +40,7 @@ class PipelineSpec extends AnyFunSuite {
     "reload never retrains, stale/torn indexes rebuild") {
     import org.apache.spark.sql.functions._
     import org.apache.hadoop.fs.Path
-    val root = Similarity.ensureIvfIndex(spark, sf)
+    val root = Similarity.IvfIndex.ensure(spark, sf)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def state(): Seq[(String, Long, Long)] = {
@@ -91,7 +91,7 @@ class PipelineSpec extends AnyFunSuite {
   test("d80 persisted PQ index: ADC search equals the retrained d27 " +
     "chain and repeat searches never rebuild") {
     import org.apache.hadoop.fs.Path
-    val root = Similarity.ensurePqIndex(spark, sf)
+    val root = Similarity.PqIndex.ensure(spark, sf)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def mtimes(): Seq[(String, Long)] = {
@@ -194,7 +194,7 @@ class PipelineSpec extends AnyFunSuite {
   test("d84 nav index: beam walk is deterministic, repeat searches " +
     "reload (never rebuild), and the committed tree has all parts") {
     import org.apache.hadoop.fs.Path
-    val root = Similarity.ensureNavIndex(spark, sf)
+    val root = Similarity.NavIndex.ensure(spark, sf)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def mtimes(): Seq[(String, Long)] = {
@@ -282,7 +282,7 @@ class PipelineSpec extends AnyFunSuite {
   test("d96 persisted router: the two-level tree commits once, " +
     "repeat searches reload, and results equal d95's inline chain") {
     import org.apache.hadoop.fs.Path
-    val root = Similarity.ensureRouterIndex(spark, sf)
+    val root = Similarity.RouterIndex.ensure(spark, sf)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def mtimes(): Seq[(String, Long)] = {
@@ -312,7 +312,7 @@ class PipelineSpec extends AnyFunSuite {
   test("d86 hnsw index: the layered graphs live in a committed tree, " +
     "repeat searches reload (never retrain or rebuild), determinism") {
     import org.apache.hadoop.fs.Path
-    val root = Similarity.ensureHnswIndex(spark, sf)
+    val root = Similarity.HnswIndex.ensure(spark, sf)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def mtimes(): Seq[(String, Long)] = {
@@ -345,7 +345,7 @@ class PipelineSpec extends AnyFunSuite {
     "base tree, never retrains, and search covers base and delta") {
     import org.apache.spark.sql.functions._
     import org.apache.hadoop.fs.Path
-    val basePath = Similarity.ensureBaseIvfIndex(spark, sf)
+    val basePath = Similarity.IvfBase.ensure(spark, sf)
     val f = new Path(basePath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def state(root: String): Seq[(String, Long, Long)] = {
@@ -360,7 +360,7 @@ class PipelineSpec extends AnyFunSuite {
       out.result().sortBy(_._1)
     }
     val baseBefore = state(basePath)
-    val deltaPath = Similarity.ensureIvfDelta(spark, sf)
+    val deltaPath = Similarity.IvfDelta.ensure(spark, sf)
     // O(delta) contract: the base tree is byte-identical after the
     // delta build — no retrain, no base-posting rewrite
     assert(state(basePath) == baseBefore)
@@ -393,8 +393,8 @@ class PipelineSpec extends AnyFunSuite {
     "result from ONE tree, sources byte-identical, no retrain") {
     import org.apache.spark.sql.functions._
     import org.apache.hadoop.fs.Path
-    val basePath = Similarity.ensureBaseIvfIndex(spark, sf)
-    val deltaPath = Similarity.ensureIvfDelta(spark, sf)
+    val basePath = Similarity.IvfBase.ensure(spark, sf)
+    val deltaPath = Similarity.IvfDelta.ensure(spark, sf)
     val f = new Path(basePath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def state(root: String): Seq[(String, Long, Long)] = {
@@ -412,7 +412,7 @@ class PipelineSpec extends AnyFunSuite {
     val deltaBefore = state(deltaPath)
     val incremental = Similarity.d81IncrementalIvf(spark, sf)
       .collect().toSeq
-    val compactPath = Similarity.ensureCompactIndex(spark, sf)
+    val compactPath = Similarity.IvfCompact.ensure(spark, sf)
     // compaction result == the two-generation search, row for row
     val compacted = Similarity.d87CompactedSearch(spark, sf)
       .collect().toSeq
@@ -440,7 +440,7 @@ class PipelineSpec extends AnyFunSuite {
   test("d82 persisted production index: search equals the retrained " +
     "d47 chain and repeat searches never rebuild") {
     import org.apache.hadoop.fs.Path
-    val root = Similarity.ensureProdIndex(spark, sf)
+    val root = Similarity.ProdIndex.ensure(spark, sf)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def mtimes(): Seq[(String, Long)] = {
@@ -467,7 +467,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val basePath = Similarity.ensureBaseIvfIndex(spark, sf)
+    val basePath = Similarity.IvfBase.ensure(spark, sf)
     val cents = Similarity.baseCentroidsLocal(spark, sf)
     val postings = spark.read
       .option("basePath", s"$basePath/postings")
@@ -2326,7 +2326,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import org.apache.hadoop.fs.Path
     val spark2 = spark; import spark2.implicits._
-    val basePath = Similarity.ensureNavBase(spark, sf)
+    val basePath = Similarity.NavBase.ensure(spark, sf)
     val f = new Path(basePath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def state(root: String): Seq[(String, Long, Long)] = {
@@ -2341,7 +2341,7 @@ class PipelineSpec extends AnyFunSuite {
       out.result().sortBy(_._1)
     }
     val baseBefore = state(basePath)
-    val deltaPath = Similarity.ensureNavDelta(spark, sf)
+    val deltaPath = Similarity.NavDelta.ensure(spark, sf)
     // O(delta) contract: the base generation is byte-identical after
     // the insert — no retrain, no base edge/posting rewrite
     assert(state(basePath) == baseBefore)
@@ -2513,8 +2513,8 @@ class PipelineSpec extends AnyFunSuite {
     // LIFECYCLE on the real corpus: the promotion pass reads both
     // generations and writes ONLY its own tree — base and delta are
     // byte-identical before and after (the atomic-swap contract)
-    val basePath = Similarity.ensureNavBase(spark, sf)
-    val deltaPath = Similarity.ensureNavDelta(spark, sf)
+    val basePath = Similarity.NavBase.ensure(spark, sf)
+    val deltaPath = Similarity.NavDelta.ensure(spark, sf)
     val f = new Path(basePath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def state(root: String): Seq[(String, Long, Long)] = {
@@ -2529,7 +2529,7 @@ class PipelineSpec extends AnyFunSuite {
       out.result().sortBy(_._1)
     }
     val before = (state(basePath), state(deltaPath))
-    val promPath = Similarity.ensureNavPromote(spark, sf)
+    val promPath = Similarity.NavPromote.ensure(spark, sf)
     assert((state(basePath), state(deltaPath)) == before,
       "promotion touched a base/delta generation")
     // the committed entries equal the election recomputed from the
@@ -2561,8 +2561,8 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val spark2 = spark; import spark2.implicits._
     import org.apache.hadoop.fs.Path
-    val basePath = Similarity.ensureBaseIvfIndex(spark, sf)
-    val deltaPath = Similarity.ensureIvfDelta(spark, sf)
+    val basePath = Similarity.IvfBase.ensure(spark, sf)
+    val deltaPath = Similarity.IvfDelta.ensure(spark, sf)
     val f = new Path(basePath).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def state(root: String): Seq[(String, Long, Long)] = {
@@ -2578,8 +2578,8 @@ class PipelineSpec extends AnyFunSuite {
     }
     val before = (state(basePath), state(deltaPath))
     // the delete log and the purge touch neither source generation
-    val tombPath = Similarity.ensureTombstones(spark, sf)
-    val purgePath = Similarity.ensurePurgedIndex(spark, sf)
+    val tombPath = Similarity.Tombstones.ensure(spark, sf)
+    val purgePath = Similarity.Purged.ensure(spark, sf)
     assert((state(basePath), state(deltaPath)) == before,
       "tombstone/purge touched a source generation")
     // physical delete: the purged postings hold NO tombstoned id
@@ -2630,7 +2630,7 @@ class PipelineSpec extends AnyFunSuite {
   test("d99-d101 committed PCA model: reload never retrains, " +
     "torn/stale artifacts rebuild, served == retrained") {
     import org.apache.hadoop.fs.Path
-    val root = Similarity.ensurePcaArtifact(spark, sf)
+    val root = Similarity.PcaModel.ensure(spark, sf)
     val f = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def state(): Seq[(String, Long, Long)] = {

@@ -376,7 +376,7 @@ class Relational6Spec extends AnyFunSuite {
 
   test("d56 persisted index: equals d54, lands manifest-committed, " +
     "and a committed index is REUSED, not rewritten") {
-    val idx = Dedup.fingerprintIndexDir(sf)
+    val idx = Dedup.FingerprintIndex.path(sf)
     def rmIdx(): Unit = {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
@@ -409,10 +409,10 @@ class Relational6Spec extends AnyFunSuite {
   test("d56 index dir is collision-free and the index invalidates " +
     "when the corpus at the same path changes (ADVICE r9)") {
     // digest keying: paths the old sanitizer aliased now differ
-    assert(Dedup.fingerprintIndexDir("/tmp/a/b") !=
-      Dedup.fingerprintIndexDir("/tmp/a_b"))
+    assert(Dedup.FingerprintIndex.path("/tmp/a/b") !=
+      Dedup.FingerprintIndex.path("/tmp/a_b"))
     val dir = java.nio.file.Files.createTempDirectory("d56inv").toString
-    val idx = Dedup.fingerprintIndexDir(dir)
+    val idx = Dedup.FingerprintIndex.path(dir)
     def rmAll(path: String): Unit = {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
