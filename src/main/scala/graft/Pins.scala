@@ -52,10 +52,11 @@ object Pins {
   def memo[T](spark: SparkSession, key: Any)(build: => T): T =
     memos.getOrElseUpdate((spark, key), build).asInstanceOf[T]
 
-  /** Frees one pin now. Only for a pin nothing lazy still reads. */
-  def unpin(ds: Dataset[_]): Unit = {
+  /** Frees one pin (a Dataset or RDD) now. Only for a pin nothing lazy
+    * still reads. */
+  def unpin(p: AnyRef): Unit = {
     val free = pinned.synchronized {
-      val i = pinned.indexWhere(_._1 eq ds)
+      val i = pinned.indexWhere(_._1 eq p)
       if (i < 0) None else Some(pinned.remove(i)._2)
     }
     free.foreach(_())

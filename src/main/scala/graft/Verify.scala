@@ -77,7 +77,7 @@ object Verify {
         // r17 (ADVICE r16): free every operator pin (Pins.release)
         // before each query, exactly as Bench does between reps — the r16
         // eager-checkpoint pins (d63/d72/d85/d92/d93/d21/q71/d74/
-        // d29/d47 and the beam walks) otherwise ACCUMULATE
+        // d29/d47) otherwise ACCUMULATE
         // MEMORY_AND_DISK blocks across all 300+ queries in this one
         // session. Safe here: each query's parquet is fully written
         // before the next query builds.

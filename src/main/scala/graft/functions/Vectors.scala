@@ -66,6 +66,19 @@ object VectorKernel {
     s
   }
 
+  /** [[quantizedL2]] over collected vectors: the same sum, for the
+    * driver-held ANN loops (beam walk, k-means rounds). */
+  def quantizedL2(a: Array[Long], b: Array[Long]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < a.length) {
+      val d = a(i) - b(i)
+      s += d * d
+      i += 1
+    }
+    s
+  }
+
   /** Integer-quantized squared L2 distance over one subvector:
     * elements [sub*subDim, (sub+1)*subDim) of both arrays are
     * quantized to floor(x·10⁶) longs before differencing, so the

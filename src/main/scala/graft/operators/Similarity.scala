@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.{Pins, Tables}
+import graft.functions.VectorKernel
 import graft.sources.AtomicCommit.Artifact
 
 /** Similarity search over the embedding column (SURVEY.md §2d).
@@ -1111,16 +1112,16 @@ object Similarity {
 
   /** Lloyd's k-means over quantized vectors, deterministic init.
     *
-    * Per round: every vector joins the BROADCAST centroid set (the
-    * big side never shuffles), keeps its argmin cell via one
-    * partial-aggregable struct-min, and new centroids are the
-    * floor-of-mean per dimension (floor(Σ/n) in exact arithmetic:
-    * component sums stay < 2⁵³ so the double division is exact, and
-    * both engines floor identically). Empty cells keep their previous
-    * centroid. Centroids are COLLECTED between rounds — k×dim values,
-    * bounded by construction (the vtag-universe precedent): that
-    * truncates the growing lineage so round r+1's plan doesn't
-    * re-execute rounds 1..r, and makes the broadcast literal.
+    * Per round: every vector is assigned to its argmin centroid by
+    * (dist, cent_id) against the BROADCAST centroid set (the big side
+    * never shuffles), and new centroids are the floor-of-mean per
+    * dimension (floor(Σ/n) in exact arithmetic: component sums stay
+    * < 2⁵³ so the double division is exact, and both engines floor
+    * identically). Empty cells keep their previous centroid. The
+    * centroids live on the DRIVER between rounds — k×dim values per
+    * group, bounded by construction — so a round is exactly ONE job:
+    * executors return long component sums and counts per cell, never
+    * per vector.
     *
     * `vecs` = (vec_id LONG, qv ARRAY<LONG>); `init` = (cent_id, qc)
     * same shapes. Returns (cent_id, qc) after `iters` rounds.
@@ -1141,12 +1142,15 @@ object Similarity {
 
   /** [[kmeansQuantized]] over INDEPENDENT groups in one chain of jobs:
     * `vecs` = (grp, vec_id, qv), `init` = (grp, cent_id, qc); each
-    * grp's k-means runs only against its own centroids (the broadcast
-    * join carries grp as an equi-key). One sequence of `iters` rounds
-    * trains every group — [[trainPqCodebook]]'s four subspaces cost
-    * one chain of jobs instead of four (~4× fewer bounded driver
-    * round-trips; the per-group arithmetic is IDENTICAL to the
-    * single-group form, so trained books don't change). */
+    * grp's k-means runs only against its own centroids. One sequence
+    * of `iters` one-job rounds trains every group —
+    * [[trainPqCodebook]]'s four subspaces cost `iters` jobs, not four
+    * times that; the per-group arithmetic is IDENTICAL to the
+    * single-group form, so trained books don't change. A (grp,
+    * vec_id) that appears twice counts once: the training rows are
+    * de-duplicated by one shuffle, whose output every round re-reads.
+    * Driver state: the centroids, plus one (sums, count) per
+    * (grp, cent_id) and partition while a round merges. */
   def kmeansGrouped(vecs: DataFrame, init: DataFrame, iters: Int,
       sampleFraction: Double = 1.0): DataFrame = {
     val spark = vecs.sparkSession
@@ -1155,35 +1159,47 @@ object Similarity {
       if (sampleFraction >= 1.0) vecs
       else vecs.filter(pmod(col("vec_id") * 2654435761L, lit(1000000L))
         < (sampleFraction * 1000000L).toLong)
-    var cents: Seq[(Long, Long, Seq[Long])] = init
+    var cents: Seq[(Long, Long, Array[Long])] = init
       .select(col("grp").cast("long"), col("cent_id").cast("long"),
         col("qc"))
       .collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+      .map(r => (r.getLong(0), r.getLong(1), longs(r, 2)))
+    val points = train
+      .select(col("grp").cast("long"), col("vec_id").cast("long"),
+        col("qv")).rdd
+      .map(r => ((r.getLong(0), r.getLong(1)), longs(r, 2)))
+      .reduceByKey((a, _) => a)
+      .map { case ((g, _), qv) => (g, qv) }
     for (_ <- 1 to iters) {
-      val centDf = cents.toDF("grp", "cent_id", "qc")
-      val assigned = train.join(broadcast(centDf), Seq("grp"))
-        .withColumn("dist", qDist(col("qv"), col("qc")))
-        .groupBy(col("grp"), col("vec_id"))
-        .agg(min(struct(col("dist"), col("cent_id"))).as("best"),
-          first(col("qv")).as("qv"))
-      val means = assigned
-        .select(col("grp"), col("best.cent_id").as("cent_id"),
-          posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy(col("grp"), col("cent_id"), col("pos"))
-        .agg(floor(sum(col("v")).cast("double") / count(lit(1)))
-          .cast("long").as("comp"))
-        .groupBy(col("grp"), col("cent_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("comp")))),
-          s => s.getField("comp")).as("qc"))
-        .collect()
-        .map(r => ((r.getLong(0), r.getLong(1)), r.getSeq[Long](2))).toMap
+      val book = spark.sparkContext.broadcast(
+        cents.groupMap(_._1)(c => (c._2, c._3)))
+      val sums = try points.mapPartitions { it =>
+        val acc = scala.collection.mutable
+          .HashMap.empty[(Long, Long), (Array[Long], Long)]
+        for ((g, qv) <- it; cs <- book.value.get(g)) {
+          val id = cs.minBy { case (id, qc) =>
+            (VectorKernel.quantizedL2(qv, qc), id) }._1
+          val (s, n) =
+            acc.getOrElse((g, id), (new Array[Long](qv.length), 0L))
+          for (i <- qv.indices) s(i) += qv(i)
+          acc((g, id)) = (s, n + 1)
+        }
+        acc.iterator
+      }.collect() finally book.destroy()
+      val means = sums.groupMapReduce(_._1)(_._2) { case ((a, n), (b, m)) =>
+        (a.indices.map(i => a(i) + b(i)).toArray, n + m) }
       cents = cents.map { case (g, id, old) =>
-        (g, id, means.getOrElse((g, id), old)) }
+        (g, id, means.get((g, id)).fold(old) { case (s, n) =>
+          s.map(x => math.floor(x.toDouble / n).toLong) }) }
     }
-    cents.toDF("grp", "cent_id", "qc")
+    cents.map { case (g, id, qc) => (g, id, qc.toSeq) }
+      .toDF("grp", "cent_id", "qc")
   }
+
+  /** A collected ARRAY<BIGINT> cell as a primitive array. */
+  private def longs(r: org.apache.spark.sql.Row, i: Int)
+      : Array[Long] =
+    r.getSeq[Long](i).toArray
 
   /** Assignment histogram under a quantized codebook: one row per
     * non-empty cell with its member count and total distortion. */
@@ -2076,87 +2092,152 @@ object Similarity {
   def navIndexPath(dir: String): String = NavIndex.path(dir)
 
   /** The deterministic BEAM WALK over a navigable graph — the greedy
-    * search HNSW-class systems serve with, in declarative form: the
-    * query routes to its nearest cell's medoid (entry), then `hops`
-    * rounds of expand-neighbors → union-with-beam → exact-score →
-    * keep-best-`beamW` (ties (dist, vec_id)), and the final round's
-    * candidates cut to top-`k`. Each hop is ONE bounded equi-join of
-    * the tiny frontier (queries × beam rows, broadcast explicitly)
-    * against the graph-sized edge relation plus one re-attach join
-    * and a per-query window — O(hops) passes, nothing quadratic,
-    * nothing corpus-broadcast. A query whose entry cell is empty (no
-    * corpus member) or whose entry node has no edges keeps walking
-    * with what it has — same drop-out contract as every capped
-    * generator, and the oracle replays it identically. */
+    * search HNSW-class systems serve with: each query routes to the
+    * medoids of its [[NavEntryCells]] nearest cells (ties (dist,
+    * cent_id); ranked on the driver against the collected k×dim
+    * router and ≤ cells-row entry relation), then [[beamWalkFrom]]
+    * walks from those entries. A query whose entry cell has no medoid
+    * or whose entry node has no edges keeps walking with what it has
+    * — same drop-out contract as every capped generator, and the
+    * oracle replays it identically. */
   def navBeamWalk(queries: DataFrame, corpus: DataFrame,
       cents: DataFrame, edges: DataFrame, entries: DataFrame,
       beamW: Int, hops: Int, k: Int): DataFrame = {
-    // Every hop of the walk re-reads corpus (the scoring join),
-    // queries (the q_qv re-attach) and edges (the expansion join) —
-    // at NavHops = 8 that was 9 full parquet scans + quantize passes
-    // of the embedding table PER WALK for relations that never change
-    // between hops (r16 plan audit: 12 scans / 18 exchanges in d84's
-    // initial plan). Checkpoint each ONCE up front (guide §3.3 /
-    // §2.4): the hops then join against materialized narrow
-    // (vec_id, qv) blocks. Same rows, same hashes; blocks are freed
-    // by Pins.release() between bench reps.
-    val qs = Pins.checkpoint(queries)
-    val corp = Pins.checkpoint(corpus)
-    val eg = Pins.checkpoint(edges)
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cent_id"))
-    val entry = qs.join(broadcast(cents))
-      .withColumn("dist", qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= NavEntryCells)
-      .select(col("q_id"), col("cent_id").as("cell"))
-      .join(broadcast(entries), Seq("cell"))
-      .select(col("q_id"), col("entry_id").as("vec_id"))
-    beamWalkFrom(qs, corp, eg, entry, beamW, hops, k)
-      .orderBy(col("q_id"), col("rank"))
+    val qv = queryVectors(queries)
+    val router = cents.select(col("cent_id").cast("long"), col("qc"))
+      .collect().map(r => (r.getLong(0), longs(r, 1)))
+    val medoids = entries
+      .select(col("cell").cast("long"), col("entry_id").cast("long"))
+      .collect().toSeq.groupMap(_.getLong(0))(_.getLong(1))
+    val entry = qv.toSeq.flatMap { case (q, v) =>
+      router
+        .sortBy { case (id, c) => (VectorKernel.quantizedL2(v, c), id) }
+        .take(NavEntryCells)
+        .flatMap { case (cell, _) => medoids.getOrElse(cell, Nil) }
+        .map(q -> _)
+    }
+    walkFrame(queries.sparkSession,
+      beamWalk(qv, corpus, edges, entry, beamW, hops, k))
   }
 
   /** The walk alone, from an ARBITRARY per-query entry relation
-    * (q_id, vec_id) — shared by d84 (medoid entries) and d86 (the
-    * hierarchical descent's per-level seeds and final level-0 walk).
-    * Returns (q_id, vec_id, dist, rank ≤ k), unsorted. */
+    * (q_id, vec_id): `queries` = (q_id, q_qv), `corpus` = (vec_id,
+    * qv), both keyed by their id; `edges` = (vec_id, nbr_id). Returns
+    * (q_id, vec_id, dist, rank ≤ k) sorted by (q_id, rank), as a
+    * local relation. */
   def beamWalkFrom(queries: DataFrame, corpus: DataFrame,
       edges: DataFrame, entry: DataFrame, beamW: Int, hops: Int,
       k: Int): DataFrame = {
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    def score(cand: DataFrame): DataFrame =
-      broadcast(cand)
-        .join(corpus.select(col("vec_id"), col("qv")), Seq("vec_id"))
-        .join(queries, Seq("q_id"))
-        .withColumn("dist", qDist(col("q_qv"), col("qv")))
-        .select(col("q_id"), col("vec_id"), col("dist"))
-        .withColumn("rn", row_number().over(wr))
-    // the frontier is LOCAL-CHECKPOINTED each hop (the trainMerges /
-    // kmeans lineage discipline): `beam` appears twice per hop (as
-    // itself and under the expansion join), so without truncation the
-    // logical plan DOUBLES per hop — 2^hops copies of the base scan
-    // (measured: 3× the walk's wall at 8 hops). Checkpoint blocks are
-    // queries × beam rows (KBs); all but the one the returned plan
-    // reads are unpinned before return.
-    var beam = Pins.checkpoint(entry)
-    var scored = score(beam)
-    for (h <- 1 to hops) {
-      val expanded = broadcast(beam)
-        .join(edges, Seq("vec_id"))
-        .select(col("q_id"), col("nbr_id").as("vec_id"))
-      val cand = beam.unionByName(expanded).distinct()
-      scored = score(cand)
-      if (h < hops) {
-        val next = Pins.checkpoint(scored.filter(col("rn") <= beamW)
-          .select(col("q_id"), col("vec_id")))
-        Pins.unpin(beam)
-        beam = next
+    val starts = entry
+      .select(col("q_id").cast("long"), col("vec_id").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    walkFrame(queries.sparkSession, beamWalk(queryVectors(queries),
+      corpus, edges, starts, beamW, hops, k))
+  }
+
+  /** (q_id → q_qv) collected: the query set a walk scores against. */
+  private def queryVectors(queries: DataFrame): Map[Long, Array[Long]] =
+    queries.select(col("q_id").cast("long"), col("q_qv")).collect()
+      .map(r => r.getLong(0) -> longs(r, 1)).toMap
+
+  /** The walk's rows as a one-partition local relation: it writes one
+    * file, in (q_id, rank) order. */
+  private def walkFrame(spark: SparkSession,
+      hits: Seq[(Long, Long, Long, Int)]): DataFrame = {
+    import spark.implicits._
+    hits.toDF("q_id", "vec_id", "dist", "rank").coalesce(1)
+  }
+
+  /** A node of the walk's relation: its vector (None for an edge
+    * source outside the corpus) and its out-edges. */
+  private type NavNode = (Option[Array[Long]], Array[Long])
+
+  /** The beam walk in driver-held form. Per hop: the frontier (each
+    * query's beam ids, their distances and out-edges — at most
+    * queries × beamW × (NavK + 1) values) expands on the driver; ONE
+    * lookup job against the pinned node relation scores only the
+    * hop's new (q_id, vec_id) pairs, against the broadcast query
+    * vectors, and returns their out-edges; the driver unions, ranks
+    * by (dist, vec_id) and cuts the beam. Exactly the join form's
+    * rows: hop 1 expands the raw entries (an entry outside the corpus
+    * still contributes its out-edges but is never scored), every
+    * later beam is scored corpus members, and `hops` = 0 scores the
+    * entry multiset as given. `hops` + 1 lookup jobs; the node pin is
+    * freed before return. */
+  private def beamWalk(qv: Map[Long, Array[Long]],
+      corpus: DataFrame, edges: DataFrame, entry: Seq[(Long, Long)],
+      beamW: Int, hops: Int, k: Int): Seq[(Long, Long, Long, Int)] = {
+    val sc = corpus.sparkSession.sparkContext
+    val part = new org.apache.spark.HashPartitioner(sc.defaultParallelism)
+    val vecs = corpus.select(col("vec_id").cast("long"), col("qv")).rdd
+      .map(r => (r.getLong(0), longs(r, 1)))
+    val outs = edges
+      .select(col("vec_id").cast("long"), col("nbr_id").cast("long")).rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+    // the node relation, hash-partitioned by vec_id into one lookup
+    // map per partition, so a hop's job visits only the partitions
+    // holding its ids
+    val nodes = Pins.persist(vecs.cogroup(outs, part).mapPartitions(
+      it => Iterator(it.map { case (v, (qs, ns)) =>
+        v -> ((qs.headOption, ns.toArray): NavNode) }.toMap),
+      preservesPartitioning = true), MEMORY_AND_DISK)
+    val qb = sc.broadcast(qv)
+    // one job: (q_id, vec_id) → dist for the pairs inside the corpus,
+    // and vec_id → out-edges for every id the relation holds
+    def lookup(pairs: Iterable[(Long, Long)])
+        : (Map[(Long, Long), Long], Map[Long, Array[Long]]) =
+      if (pairs.isEmpty) (Map.empty, Map.empty) else {
+        val want = sc.broadcast(pairs.groupMap(_._2)(_._1).map {
+          case (v, qs) => v -> qs.toArray })
+        val found = try sc.runJob(nodes,
+          (it: Iterator[Map[Long, NavNode]]) => {
+            val m = it.next()
+            want.value.toArray.flatMap { case (v, qs) =>
+              m.get(v).map { case (vec, ns) =>
+                (v, ns, vec.fold(Array.empty[(Long, Long)])(x => qs.map(q =>
+                  q -> VectorKernel.quantizedL2(qb.value(q), x))))
+              }
+            }
+          }, want.value.keys.map(part.getPartition).toSeq.distinct).flatten
+        finally want.destroy()
+        (found.flatMap { case (v, _, ds) =>
+          ds.map { case (q, d) => (q, v) -> d } }.toMap,
+          found.map { case (v, ns, _) => v -> ns }.toMap)
       }
+    def rank(q: Long, ids: Seq[Long], dist: Map[(Long, Long), Long],
+        n: Int): Seq[(Long, Long, Long, Int)] =
+      ids.flatMap(v => dist.get((q, v)).map(v -> _))
+        .sortBy { case (v, d) => (d, v) }.take(n).zipWithIndex
+        .map { case ((v, d), i) => (q, v, d, i + 1) }
+    try {
+      val starts = entry.filter(e => qv.contains(e._1))
+        .groupMap(_._1)(_._2)
+      var beam = starts.map { case (q, vs) => q -> vs.distinct }
+      var (dist, adj) = lookup(beam.toSeq.flatMap { case (q, vs) =>
+        vs.map(q -> _) })
+      var hits = starts.toSeq.flatMap { case (q, vs) => rank(q, vs, dist, k) }
+      for (h <- 1 to hops) {
+        val cand = beam.map { case (q, vs) =>
+          q -> (vs ++ vs.flatMap(adj.getOrElse(_, Array.empty[Long])))
+            .distinct
+        }
+        val (d, a) = lookup(cand.toSeq.flatMap { case (q, vs) =>
+          val old = beam(q).toSet
+          vs.filterNot(old).map(q -> _) })
+        dist ++= d
+        hits = cand.toSeq.flatMap { case (q, vs) =>
+          rank(q, vs, dist, if (h < hops) beamW else k) }
+        beam = hits.groupMap(_._1)(_._2)
+        val kept = hits.map(r => (r._1, r._2)).toSet
+        val ids = kept.map(_._2)
+        dist = dist.filter { case (p, _) => kept(p) }
+        adj = (adj ++ a).filter { case (v, _) => ids(v) }
+      }
+      hits.sortBy(h => (h._1, h._4))
+    } finally {
+      qb.destroy()
+      Pins.unpin(nodes)
     }
-    scored.filter(col("rn") <= k)
-      .withColumnRenamed("rn", "rank")
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
   }
 
   /** d84: graph-navigable search over the PERSISTED nav index — load
@@ -3124,25 +3205,31 @@ object Similarity {
     val root = HnswIndex.ensure(spark, dir)
     val qz = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    // one quantize pass each for queries and corpus, shared by ALL
-    // four walks (3 descent layers + layer 0) — previously every hop
-    // of every walk re-scanned and re-quantized the embedding table
-    // (~18 scans per d86 call in the r16 plan audit); see
-    // navBeamWalk's checkpoint note (guide §3.3)
-    val queries = Pins.checkpoint(qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv")))
-    val corpus = Pins.checkpoint(qz.filter(col("vec_id") >= NumQueries))
-    val top = Artifact.part(spark, root, "entry")
-    var seed = queries.select(col("q_id")).crossJoin(broadcast(top))
-    for (l <- HnswMaxLvl to 1 by -1) {
-      val edgesL = Artifact.part(spark, root, s"edges_l$l")
-      seed = beamWalkFrom(queries, corpus, edgesL, seed,
-        HnswDescentBeam, HnswDescentHops, 1)
-        .select(col("q_id"), col("vec_id"))
-    }
-    val edges0 = Pins.checkpoint(Artifact.part(spark, root, "edges_l0"))
-    beamWalkFrom(queries, corpus, edges0, seed, NavBeam, NavHops, TopK)
-      .orderBy(col("q_id"), col("rank"))
+    hnswDescent(qz.filter(col("vec_id") < NumQueries)
+        .select(col("vec_id").as("q_id"), col("qv").as("q_qv")),
+      qz.filter(col("vec_id") >= NumQueries),
+      Artifact.part(spark, root, "entry"),
+      l => Artifact.part(spark, root, s"edges_l$l"),
+      NavBeam, NavHops, TopK)
+  }
+
+  /** The HNSW search over layer graphs `edgesAt(l)`: every query
+    * starts from the global entry `top` (vec_id), walks each upper
+    * layer at [[HnswDescentBeam]] × [[HnswDescentHops]] keeping its
+    * single best node as the next layer's seed, then walks layer 0 at
+    * (beamW, hops, k). Sorted by (q_id, rank). */
+  private def hnswDescent(queries: DataFrame, corpus: DataFrame,
+      top: DataFrame, edgesAt: Int => DataFrame, beamW: Int, hops: Int,
+      k: Int): DataFrame = {
+    val qv = queryVectors(queries)
+    val entry = top.select(col("vec_id").cast("long")).collect()
+      .map(_.getLong(0))
+    var seed = qv.keys.toSeq.flatMap(q => entry.map(q -> _))
+    for (l <- HnswMaxLvl to 1 by -1)
+      seed = beamWalk(qv, corpus, edgesAt(l), seed,
+        HnswDescentBeam, HnswDescentHops, 1).map(h => (h._1, h._2))
+    walkFrame(queries.sparkSession,
+      beamWalk(qv, corpus, edgesAt(0), seed, beamW, hops, k))
   }
 
   /** The persisted HIERARCHICAL nav index (the d84 lifecycle applied
@@ -3210,9 +3297,10 @@ object Similarity {
   }
 
   /** The full hierarchical chain on an arbitrary (queries, corpus,
-    * trained cents) triple — shared by d86 and the AnnQuality recall
-    * sweep. Builds every layer's graph, elects the entry, descends,
-    * then runs the layer-0 walk at (beamW, hops, k). */
+    * trained cents) triple — d86's search with the layers built
+    * inline, for the AnnQuality recall sweep. Builds every layer's
+    * graph, elects the entry, descends, then runs the layer-0 walk at
+    * (beamW, hops, k). */
   def hnswWalk(queries: DataFrame, corpus: DataFrame,
       cents: DataFrame, beamW: Int, hops: Int, k: Int): DataFrame = {
     val leveled = corpus.withColumn("lvl",
@@ -3223,17 +3311,11 @@ object Similarity {
       .agg(min(struct((-col("lvl")).as("nl"), col("vec_id").as("vid")))
         .as("b"))
       .select(col("b.vid").as("vec_id"))
-    var seed = queries.select(col("q_id")).crossJoin(broadcast(top))
-    for (l <- HnswMaxLvl to 1 by -1) {
-      val members = leveled.filter(col("lvl") >= l)
-        .select(col("vec_id"), col("qv"))
-      val (edgesL, _, _) = navGraphParts(members, cents)
-      seed = beamWalkFrom(queries, corpus, edgesL, seed,
-        HnswDescentBeam, HnswDescentHops, 1)
-        .select(col("q_id"), col("vec_id"))
-    }
-    val (edges0, _, _) = navGraphParts(corpus, cents)
-    beamWalkFrom(queries, corpus, edges0, seed, beamW, hops, k)
+    def layer(l: Int): DataFrame = navGraphParts(
+      if (l == 0) corpus
+      else leveled.filter(col("lvl") >= l).select(col("vec_id"), col("qv")),
+      cents)._1
+    hnswDescent(queries, corpus, top, layer, beamW, hops, k)
   }
 
   /** The md5Long(CAST(vec_id AS VARCHAR)) reassembly in DuckDB —
@@ -4832,8 +4914,8 @@ object Similarity {
     * shortlist generator: d30/d45/d67/d88 all emit the same (q_id,
     * vec_id) relation), so every round touches only queries×R rows
     * and the R×R pairwise-distance relation — all bounded, computed
-    * ONCE and local-checkpointed (the beam-walk lineage discipline:
-    * the selected set re-enters each round's plan). Exact integer
+    * ONCE and local-checkpointed (the selected set re-enters each
+    * round's plan, so each round is checkpointed). Exact integer
     * arithmetic throughout; deterministic ties (score, vec_id); the
     * oracle unrolls all selection rounds as CTEs, bit-for-bit. */
   def d90MmrRerank(spark: SparkSession, dir: String): DataFrame = {

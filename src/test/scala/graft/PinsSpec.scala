@@ -53,6 +53,26 @@ class PinsSpec extends AnyFunSuite {
     assert(leaks.isEmpty, s"persisted past release(): $leaks")
   }
 
+  test("the graph walks leave no persisted RDD behind, even before " +
+    "release") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def run(key: String): Unit = SparkEntry.queries(key)(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    val leaks = Seq("d84_graph_search", "d86_hnsw_search",
+      "d94_nav_insert", "d97_entry_promotion").flatMap { key =>
+      // the first call builds the committed indexes; the second only
+      // reads them and walks
+      run(key)
+      Pins.release()
+      val before = persisted
+      run(key)
+      val left = persisted -- before
+      Pins.release()
+      left.map(id => s"$key: rdd $id")
+    }
+    assert(leaks.isEmpty, s"persisted after the call returned: $leaks")
+  }
+
   test("memo is keyed by session and forgotten on release") {
     Pins.release()
     val other = spark.newSession()

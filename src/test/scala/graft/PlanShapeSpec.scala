@@ -241,17 +241,6 @@ class PlanShapeSpec extends AnyFunSuite {
           "rows) + the bounded per-(query, probed cell) residual " +
           "distance table — both explicit broadcast(), same " +
           "adjudication as d47"),
-      "d84_graph_search" ->
-        ("the beam-walk frontier and its hop expansion: queries x " +
-          "NavBeam and queries x NavBeam x (NavK+1) rows, explicit " +
-          "broadcast() and LOCAL-CHECKPOINTED per hop — bounded by " +
-          "the walk knobs, never corpus-scaling (the d30/d82 " +
-          "bounded-shortlist adjudication applied to graph serving)"),
-      "d86_hnsw_search" ->
-        ("d84's bounded frontier broadcasts (per layer + layer 0) " +
-          "plus the 1-row global-entry reduce every query starts " +
-          "from (the t12 scalar pattern) — all explicit broadcast(), " +
-          "all bounded by the walk knobs"),
       "d88_binary_rerank" ->
         ("all explicit broadcast(), all bounded: per-dimension " +
           "threshold stats (dim rows, d31's contract), the packed " +
@@ -267,7 +256,8 @@ class PlanShapeSpec extends AnyFunSuite {
         ("the greedy selection loop's broadcasts: the selected set " +
           "(queries x pick rows, grows to queries x TopK) and the " +
           "queries relation — all bounded by the serving knobs and " +
-          "local-checkpointed per round (the beam-walk discipline); " +
+          "local-checkpointed per round, since the selected set " +
+          "re-enters the next round's plan; " +
           "the shortlist/pairs relations are queries x R / x R(R-1) " +
           "rows, the d30/d47 bounded-shortlist adjudication"),
       "d91_rank_fusion" ->
@@ -275,20 +265,6 @@ class PlanShapeSpec extends AnyFunSuite {
           "NumQueries packed words) twice over — once per fused " +
           "retriever; the fusion groupBy runs on 2 x queries x R " +
           "rows, never corpus-scaling"),
-      "d94_nav_insert" ->
-        ("d84's walk over the inserted graph: the same bounded " +
-          "queries x NavBeam frontier and hop-expansion broadcasts, " +
-          "explicit broadcast() and local-checkpointed per hop — the " +
-          "d84 adjudication verbatim; the graph/posting relations " +
-          "and the merged-edge union never broadcast (anti-join and " +
-          "member joins are hinted shuffles)"),
-      "d97_entry_promotion" ->
-        ("d94's adjudication verbatim — the identical merged-graph " +
-          "walk (bounded queries x NavBeam frontier + hop-expansion " +
-          "broadcasts, local-checkpointed per hop) with only the " +
-          "entry relation cut over to the promoted generation " +
-          "(≤ cells rows, the d84 medoid-entries shape); the " +
-          "graph/posting relations never broadcast"),
       "d95_two_level_route" ->
         ("the two-level descent's bounded broadcasts: the 4-row L2 " +
           "group centroids and |cells|-row cell→group relation " +

@@ -259,13 +259,9 @@ class RelationalSpec extends AnyFunSuite {
       // adjudication); the log anti-join itself is a hinted shuffle
       // equi-join and the postings joins are d25's equi-joins
       "d98_tombstone_delete",
-      // d86's registered plan (r14: loads the COMMITTED layer tree,
-      // no in-plan graph build) cross-joins the 1-row global entry
-      // by broadcast (the t12 scalar pattern); the walk joins are
-      // bounded frontier broadcasts — same adjudication as d84.
       // d87 is d81's probe leg over the COMPACTED committed tree —
       // the same bounded scan-fed centroid broadcast as d79/d81.
-      "d86_hnsw_search", "d87_index_compaction",
+      "d87_index_compaction",
       // d88 broadcasts the 8 packed query WORDS against the
       // signature scan (the d05/d45 8-row-query-set shape, but the
       // probe side is 8 bytes/row); d90's shortlist stage is the
@@ -282,13 +278,6 @@ class RelationalSpec extends AnyFunSuite {
       // selection-threshold scalar by broadcast (the t12/d58
       // pattern) — 1-row build sides, nothing quadratic
       "d92_dsir",
-      // d94 is d84's walk over the inserted graph: the bounded
-      // scan-fed centroid broadcast (d79's shape) for delta routing
-      // and query entry, plus the walk's bounded queries×beam
-      // frontier broadcasts — every data-scaling join (postings
-      // members, edge re-attach, merged-graph expansion) is a capped
-      // equi-join
-      "d94_nav_insert",
       // q93/q94 cross-join 1-row scalars by broadcast (the manifest
       // max routing the d46 bins; q94 adds the max-date scalar and
       // three 1-row quintile-cut relations) — the t12/d58 pattern,
