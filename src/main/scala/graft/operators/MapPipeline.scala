@@ -30,7 +30,8 @@ import graft.sources.Mapsforge.{Poi, Way}
   *     the min level seen; line rows then get the reference's two-pass
   *     endpoint-snap linemerge, row-local;
   *  4. split: the merged relation is persisted once and its vtag keys
-  *     collected once; points, lines and areas are filters of it.
+  *     collected once; points, lines and areas are filters of it, and
+  *     the SQLite sink reads it whole in one (table, fid) ordered pass.
   *
   * The reference walks tiles serially and mutates sqlite row-by-row;
   * here every stage is partition-parallel and the only data movement
@@ -46,7 +47,7 @@ object MapPipeline {
 
   /** The feature tables, in output order, with their id columns; a
     * fragment's `table` column is its index here. */
-  private val FeatureTables =
+  val FeatureTables: Seq[(String, String)] =
     Seq("points" -> "m2db_pnum", "lines" -> "m2db_lnum", "areas" -> "m2db_anum")
   private val PointT = 0
   private val LineT = 1
@@ -230,38 +231,51 @@ object MapPipeline {
         GeomFunctions.unionWkb(col("wkb")).as("m2db_geometry"))
   }
 
-  /** `release()` drops the relation the build persisted; call it after
-    * the last action on the tables (e.g. after the sink finishes).
-    * `decodedTiles()` reads the executor-side decode counter — a
-    * decode-once pipeline keeps it at the file's non-empty tile count
-    * (pinned by MapsforgeSpec). */
-  case class MapTables(points: DataFrame, lines: DataFrame,
-      areas: DataFrame, vtagKeys: Seq[String],
-      release: () => Unit = () => (),
-      decodedTiles: () => Long = () => 0L)
+  /** A build's three feature tables, over the one relation it
+    * persisted. `merged` holds `table` (an index of [[FeatureTables]]),
+    * `fid`, the m2db columns and `vtags`; `keys(t)` are the sorted vtag
+    * keys that table `t`'s rows carry. Each table gets one column per
+    * key, as the reference ALTER TABLEs them in (map2db.py:856-871):
+    * [[points]], [[lines]] and [[areas]] are filters of `merged` that
+    * project those columns, while the SQLite sink reads `merged` itself
+    * in one ordered pass. `release()` drops the persisted relation; call
+    * it after the last action on the tables. `decodedTiles()` reads the
+    * executor-side decode counter — a decode-once pipeline keeps it at
+    * the file's non-empty tile count (pinned by MapsforgeSpec). */
+  final case class MapTables(merged: DataFrame, keys: Seq[Seq[String]],
+      decoded: LongAccumulator) {
+    private def table(t: Int): DataFrame = {
+      val base = merged.filter(col("table") === t).drop("table")
+        .withColumnRenamed("fid", FeatureTables(t)._2)
+      keys(t).foldLeft(base)((df, k) =>
+        df.withColumn(k, col("vtags").getItem(k))).drop("vtags")
+    }
+    val points: DataFrame = table(PointT)
+    val lines: DataFrame = table(LineT)
+    val areas: DataFrame = table(AreaT)
+    def vtagKeys: Seq[String] = keys.flatten.distinct.sorted
+    def release(): Unit = { merged.unpersist(); () }
+    def decodedTiles(): Long = decoded.value
+  }
 
-  /** Splits one persisted relation of `table`, `fid`, the m2db columns
-    * and `vtags` into the three tables. The vtag key collect, as
-    * (table, key) pairs, is the first action on `merged`: it fills the
-    * cache, so decode, clip and merge run once, and the sink reads
-    * cached rows. Each table gets one column per key its rows carry,
-    * as the reference ALTER TABLEs them in (map2db.py:856-871); the key
+  /** Wraps a persisted relation of `table`, `fid`, the m2db columns and
+    * `vtags` as [[MapTables]], collecting each table's vtag keys. The
+    * collect is the first action on `merged`: it fills the cache, so
+    * decode, clip and merge run once, and the sinks read cached rows.
+    * Each partition returns its set of (table, key) pairs and the
+    * driver unions them, so the collect adds no exchange. The key
     * universe is the (small) tag dictionary, so the collect is
     * driver-safe. */
   private def split(merged: DataFrame, decoded: LongAccumulator): MapTables = {
-    val keys = merged.select(col("table"), explode(map_keys(col("vtags"))))
-      .distinct().collect().map(r => (r.getInt(0), r.getString(1))).toSeq
-    val Seq(points, lines, areas) = FeatureTables.zipWithIndex.map {
-      case ((_, idCol), t) =>
-        val base = merged.filter(col("table") === t).drop("table")
-          .withColumnRenamed("fid", idCol)
-        keys.collect { case (`t`, k) => k }.sorted
-          .foldLeft(base)((df, k) => df.withColumn(k, col("vtags").getItem(k)))
-          .drop("vtags")
-    }
-    MapTables(points, lines, areas, keys.map(_._2).distinct.sorted,
-      release = () => { merged.unpersist(); () },
-      decodedTiles = () => decoded.value)
+    import merged.sparkSession.implicits._
+    val keys = merged.select(col("table"), map_keys(col("vtags")))
+      .as[(Int, Seq[String])]
+      .mapPartitions(_.flatMap { case (t, ks) => ks.map(t -> _) }
+        .toSet.iterator)
+      .collect().distinct.toSeq
+    MapTables(merged,
+      FeatureTables.indices.map(t => keys.collect { case (`t`, k) => k }.sorted),
+      decoded)
   }
 
   /** Non-dbl path (map2db.py:878-885,958-964,1064-1070): no feature

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.operators.MapPipeline
 import graft.operators.MapPipeline.MapTables
 
 /** FDO RFC 16 database sink (SURVEY.md §2c; map2db.py:129-255,
@@ -32,47 +33,81 @@ object FdoSink {
     * filtering the full table. */
   def write(spark: SparkSession, tables: MapTables, header: Mapsforge.Header,
       srcPathname: String, outDir: String): Unit = {
-    import spark.implicits._
-
-    def save(df: DataFrame, name: String): Unit =
-      df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
     def saveByLevel(df: DataFrame, name: String): Unit =
       df.write.mode(SaveMode.Overwrite).partitionBy("m2db_level")
         .parquet(s"$outDir/$name")
 
-    // r17 (guide §2.6): the eight sink outputs are INDEPENDENT jobs
-    // over different directories — submit them from a small pool so
-    // each job's tasks back-fill the previous job's tail instead of
-    // paying eight sequential per-job scheduling floors. The three
-    // feature tables are filters of the relation the build persisted
-    // and filled, so the writes read cached rows.
+    // The three feature tables are filters of the relation the build
+    // persisted and filled, so their writes read cached rows. They are
+    // independent jobs over different directories, submitted from a
+    // small pool so each job's tasks back-fill the previous job's tail
+    // instead of paying three sequential per-job scheduling floors. The
+    // five metadata tables are rows the driver already holds: it writes
+    // them itself while those jobs run, and they cost no job.
     graft.Threads.inParallel(Seq(
       () => saveByLevel(tables.points, "points"),
       () => saveByLevel(tables.lines, "lines"),
       () => saveByLevel(tables.areas, "areas"),
+      () => metadataTables(spark, header, srcPathname).foreach {
+        case (name, df) => saveLocal(spark, df, s"$outDir/$name")
+      }))
+    ()
+  }
+
+  /** The five metadata tables of the parquet directory, by name, as
+    * local relations of rows the driver holds. */
+  private[graft] def metadataTables(spark: SparkSession,
+      header: Mapsforge.Header, srcPathname: String)
+      : Seq[(String, DataFrame)] = {
+    import spark.implicits._
+    Seq(
       // geometry_columns: 4=MultiPoint, 5=MultiLineString,
       // 6=MultiPolygon (map2db.py:196-241)
-      () => save(Seq(
+      "geometry_columns" -> Seq(
         ("points", "m2db_geometry", 4, 2, 1, "WKB"),
         ("lines", "m2db_geometry", 5, 2, 1, "WKB"),
         ("areas", "m2db_geometry", 6, 2, 1, "WKB"))
         .toDF("f_table_name", "f_geometry_column", "geometry_type",
           "coord_dimension", "srid", "geometry_format"),
-        "geometry_columns"),
-      () => save(Seq((1, "EPSG", 4326, Wgs84Srtext))
+      "spatial_ref_sys" -> Seq((1, "EPSG", 4326, Wgs84Srtext))
         .toDF("srid", "auth_name", "auth_srid", "srtext"),
-        "spatial_ref_sys"),
-      () => save(readmeRows(header, srcPathname).toDF("desc", "text"),
-        "README"),
-      () => save(header.subfiles.map(sf =>
+      "README" -> readmeRows(header, srcPathname).toDF("desc", "text"),
+      "subfiles" -> header.subfiles.map(sf =>
         (sf.index, sf.level, sf.minzoom, sf.maxzoom))
         .toDF("subfile_num", "level", "minzoom", "maxzoom"),
-        "subfiles"),
-      () => save(Seq(
+      "limits" -> Seq(
         ("minlat", header.minLat), ("minlon", header.minLon),
         ("maxlat", header.maxLat), ("maxlon", header.maxLon))
-        .toDF("key", "value"), "limits")))
-    ()
+        .toDF("key", "value"))
+  }
+
+  /** `df.write.mode(SaveMode.Overwrite).parquet(dir)` for a local
+    * relation, without a job: the driver runs Spark's own parquet
+    * writer over the relation's rows, into one part file and the
+    * `_SUCCESS` marker, through the Hadoop `FileSystem` of `dir`. */
+  private def saveLocal(spark: SparkSession, df: DataFrame, dir: String)
+      : Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val out = new Path(dir)
+    val fs = out.getFileSystem(job.getConfiguration)
+    fs.delete(out, true)
+    fs.mkdirs(out)
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, df.schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
+    val file = new Path(out, s"part-00000-${java.util.UUID.randomUUID}" +
+      s"-c000${factory.getFileExtension(ctx)}")
+    val w = factory.newInstance(file.toString, df.schema, ctx)
+    // a local relation's physical plan is a LocalTableScan, whose
+    // collect hands back its rows without running a job
+    try df.queryExecution.executedPlan.executeCollect().foreach(w.write)
+    finally w.close()
+    fs.create(new Path(out, "_SUCCESS")).close()
   }
 
   /** README rows (map2db.py:1365-1442,1521-1528), shared by the
@@ -129,25 +164,36 @@ object FdoSink {
   /** Single-file SQLite export — the reference's actual deliverable
     * (map2db.py:129-255, 1311-1345): the same tables, columns and
     * metadata rows as [[write]], in one `.db` file an FDO viewer or
-    * forgemap can open directly. Both sides of the driver stream:
-    * input rows arrive one partition at a time (toLocalIterator) and
-    * completed output pages spill to the file as the writer's bounded
-    * page cache fills (SqliteWriter.MaxCachedPages), so peak driver
-    * memory is partition + fringe, not the database image. The
-    * single-file analogue of `coalesce(1)`: right for sub-cluster
-    * outputs, while the parquet directory remains the cluster-scale
-    * form. Divergence: `spatial_ref_sys.srid` drops the reference's
-    * UNIQUE constraint (it would require an index b-tree; the table
-    * holds one row). */
+    * forgemap can open directly. Both sides of the driver stream: the
+    * build's merged relation arrives once, sorted by (table, fid), one
+    * partition at a time (toLocalIterator), and completed output pages
+    * spill to the file as the writer's bounded page cache fills
+    * (SqliteWriter.MaxCachedPages), so peak driver memory is partition
+    * + fringe, not the database image. The writer drains its tables in
+    * order, so points, lines and areas each take their consecutive run
+    * of that one iterator, in ascending rowid order as b-tree leaves
+    * need; the driver projects each row's vtag columns from its `vtags`
+    * map. The single-file analogue of `coalesce(1)`: right for
+    * sub-cluster outputs, while the parquet directory remains the
+    * cluster-scale form. Divergence: `spatial_ref_sys.srid` drops the
+    * reference's UNIQUE constraint (it would require an index b-tree;
+    * the table holds one row). */
   def writeSqlite(spark: SparkSession, tables: MapTables,
       header: Mapsforge.Header, srcPathname: String, path: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
     import SqliteWriter.Table
 
-    def featureTable(df: DataFrame, idCol: String, name: String): Table = {
-      val base = Seq(idCol, "m2db_level", "m2db_minz", "m2db_maxz",
-        "m2db_geometry", "m2db_layer_num", "m2db_tags")
-      val vtagCols = df.columns.filterNot(base.contains).toSeq
-      val ordered = base ++ vtagCols
+    val base = Seq("m2db_level", "m2db_minz", "m2db_maxz",
+      "m2db_geometry", "m2db_layer_num", "m2db_tags")
+    val rows = tables.merged
+      .select((Seq("table", "fid") ++ base :+ "vtags").map(col): _*)
+      .orderBy(col("table"), col("fid"))
+      .toLocalIterator().asScala.buffered
+
+    def featureTable(t: Int): Table = {
+      val (name, idCol) = MapPipeline.FeatureTables(t)
+      val keys = tables.keys(t)
       val sqlType = Map("m2db_geometry" -> "BLOB", "m2db_tags" -> "TEXT")
       // quote every identifier: vtag keys may contain ':' etc.; an
       // embedded '"' doubles per SQLite quoting rules (readSqliteTable's
@@ -155,27 +201,33 @@ object FdoSink {
       def q(ident: String): String =
         "\"" + ident.replace("\"", "\"\"") + "\""
       val colDefs = (s"""${q(idCol)} INTEGER PRIMARY KEY""" +:
-        ordered.tail.map(c =>
-          s"""${q(c)} ${sqlType.getOrElse(c,
-            if (vtagCols.contains(c)) "TEXT" else "INTEGER")}"""))
+        (base.map(c => s"""${q(c)} ${sqlType.getOrElse(c, "INTEGER")}""") ++
+          keys.map(k => s"""${q(k)} TEXT""")))
         .mkString(", ")
-      // b-tree leaves must ascend by rowid — sort by the id column
-      val proj = df
-        .select(ordered.map(org.apache.spark.sql.functions.col): _*)
-        .orderBy(org.apache.spark.sql.functions.col(idCol))
-      val it = proj.toLocalIterator()
       Table(name, s"CREATE TABLE $name ($colDefs)",
         new Iterator[Seq[Any]] {
-          override def hasNext: Boolean = it.hasNext
+          override def hasNext: Boolean =
+            rows.hasNext && rows.head.getInt(0) == t
           override def next(): Seq[Any] = {
-            val r = it.next()
-            (0 until r.length).map(i => r.get(i))
+            val r = rows.next()
+            val vtags = r.getMap[String, String](8)
+            (1 to 7).map(r.get) ++ keys.map(vtags.get(_).orNull)
           }
         },
         rowidCol = Some(0))
     }
 
-    val t = Seq(
+    SqliteWriter.write(path, sqliteTables(header, srcPathname,
+      MapPipeline.FeatureTables.indices.map(featureTable)))
+  }
+
+  /** The SQLite file's tables in file order: the metadata tables
+    * around `features`, the points, lines and areas tables. */
+  private[graft] def sqliteTables(header: Mapsforge.Header,
+      srcPathname: String, features: Seq[SqliteWriter.Table])
+      : Seq[SqliteWriter.Table] = {
+    import SqliteWriter.Table
+    Seq(
       Table("geometry_columns",
         "CREATE TABLE geometry_columns (f_table_name TEXT, " +
           "f_geometry_column TEXT, geometry_type INTEGER, " +
@@ -190,10 +242,7 @@ object FdoSink {
         Iterator(Seq(1L, "EPSG", 4326L, Wgs84Srtext))),
       Table("README", "CREATE TABLE README (desc TEXT, text TEXT)",
         readmeRows(header, srcPathname).iterator
-          .map { case (d, x) => Seq(d, x) }),
-      featureTable(tables.points, "m2db_pnum", "points"),
-      featureTable(tables.lines, "m2db_lnum", "lines"),
-      featureTable(tables.areas, "m2db_anum", "areas"),
+          .map { case (d, x) => Seq(d, x) })) ++ features ++ Seq(
       Table("subfiles",
         "CREATE TABLE subfiles (subfile_num INTEGER PRIMARY KEY, " +
           "level INTEGER, minzoom INTEGER, maxzoom INTEGER)",
@@ -205,7 +254,6 @@ object FdoSink {
         Iterator(
           Seq("minlat", header.minLat), Seq("minlon", header.minLon),
           Seq("maxlat", header.maxLat), Seq("maxlon", header.maxLon))))
-    SqliteWriter.write(path, t)
   }
 
   /** Inverse direction: load a table of an FDO RFC 16 SQLite database
@@ -400,7 +448,6 @@ object FdoSink {
   def map2db(spark: SparkSession, srcPathname: String, outDir: String,
       sqliteFile: Option[String] = None,
       progress: String => Unit = log.info(_)): MapTables = {
-    import graft.operators.MapPipeline
     val header = Mapsforge.readHeader(srcPathname)
     val nTiles = header.subfiles.map(sf =>
       (sf.maxX - sf.minX + 1) * (sf.maxY - sf.minY + 1)).sum
@@ -411,25 +458,26 @@ object FdoSink {
       else MapPipeline.buildRaw(spark, srcPathname)
     progress("map2db: decode→clip→merge plan built (" +
       (if (header.isDbl) "dbl cross-level merge" else "raw per-tile") + ")")
-    write(spark, tables, header, srcPathname, outDir)
-    progress(s"map2db: tables sunk to '$outDir'")
-    // optional drop-in-parity artifact: the reference's single-file
-    // SQLite form (reads the same cached tables the sink just wrote)
-    sqliteFile.foreach { p =>
-      writeSqlite(spark, tables, header, srcPathname, p)
-      progress(s"map2db: single-file SQLite written to '$p'")
-    }
-    if (header.isDbl) {
-      val toml = configToml(header, outDir, tables.vtagKeys)
-      val p = java.nio.file.Paths.get(outDir, "config.toml")
-      java.nio.file.Files.write(p,
-        toml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      progress("map2db: forgemap config.toml emitted")
-    }
-    // The sink was the last consumer of the build's cached relations;
-    // drop them. The returned tables stay valid (they recompute if
-    // acted on again).
-    tables.release()
+    // The sinks are the last consumers of the build's cached relation;
+    // drop it whether they succeed or not. The returned tables stay
+    // valid (they recompute if acted on again).
+    try {
+      write(spark, tables, header, srcPathname, outDir)
+      progress(s"map2db: tables sunk to '$outDir'")
+      // optional drop-in-parity artifact: the reference's single-file
+      // SQLite form (reads the same cached relation the sink just wrote)
+      sqliteFile.foreach { p =>
+        writeSqlite(spark, tables, header, srcPathname, p)
+        progress(s"map2db: single-file SQLite written to '$p'")
+      }
+      if (header.isDbl) {
+        val toml = configToml(header, outDir, tables.vtagKeys)
+        val p = java.nio.file.Paths.get(outDir, "config.toml")
+        java.nio.file.Files.write(p,
+          toml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        progress("map2db: forgemap config.toml emitted")
+      }
+    } finally tables.release()
     tables
   }
 }

@@ -24,89 +24,7 @@ import graft.sources.Mapsforge
   */
 class FusedBuildSpec extends AnyFunSuite {
   import SparkTestSession.spark
-
-  private val poiTags = Seq(
-    "amenity=cafe", "place=town", "__dbl_pnum=%i", "population=%i")
-  private val wayTags = Seq("highway=primary", "__dbl_lnum=%i",
-    "__dbl_anum=%i", "name:en=%s", "leisure=park",
-    "_lbd_=" + "ODbL-1.0".reverse)
-  private val (minLon, maxLon, minLat, maxLat) = (6.6, 7.6, 51.3, 51.6)
-
-  /** Level-`z` tiles whose boxes meet the box of `pts` (lon, lat). */
-  private def tilesOver(z: Int, pts: Seq[(Double, Double)]): Seq[(Long, Long)] =
-    for {
-      x <- Mapsforge.xFromLon(z, pts.map(_._1).min).toLong to
-        Mapsforge.xFromLon(z, pts.map(_._1).max).toLong
-      y <- Mapsforge.yFromLat(z, pts.map(_._2).max).toLong to
-        Mapsforge.yFromLat(z, pts.map(_._2).min).toLong
-    } yield (x, y)
-
-  private def crossingMap(seed: Long, withAreas: Boolean): MapSpec = {
-    val rnd = new scala.util.Random(seed)
-    def u(lo: Double, hi: Double): Double =
-      math.rint((lo + rnd.nextDouble() * (hi - lo)) * 1e6) / 1e6
-    val l8 = scala.collection.mutable.Map.empty[(Long, Long), TileSpec]
-    val l10 = scala.collection.mutable.Map.empty[(Long, Long), TileSpec]
-    def put(level: Int, at: (Long, Long), f: TileSpec => TileSpec): Unit = {
-      val m = if (level == 8) l8 else l10
-      m(at) = f(m.getOrElse(at, TileSpec(at._1, at._2)))
-    }
-    // POIs: every third also at level 8, same pnum and attributes
-    for (pnum <- 1 to 40) {
-      val (lon, lat) = (u(6.62, 7.58), u(51.32, 51.58))
-      val withPop = pnum % 2 == 1
-      val p = PoiSpec(tileZ = 9, lat = lat, lon = lon, layer = pnum % 3,
-        tagIdx = Seq(pnum % 2, 2) ++ (if (withPop) Seq(3) else Nil),
-        vtagValues = Seq(pnum) ++ (if (withPop) Seq(1000 * pnum) else Nil),
-        name = if (pnum % 4 == 0) Some(s"poi $pnum") else None)
-      tilesOver(10, Seq((lon, lat))).foreach(at =>
-        put(10, at, t => t.copy(pois = t.pois :+ p)))
-      if (pnum % 3 == 0)
-        tilesOver(8, Seq((lon, lat))).foreach(at =>
-          put(8, at, t => t.copy(pois = t.pois :+ p.copy(tileZ = 7))))
-    }
-    def way(w: WaySpec, pts: Seq[(Double, Double)], alsoL8: Boolean): Unit = {
-      tilesOver(10, pts).foreach(at =>
-        put(10, at, t => t.copy(ways = t.ways :+ w)))
-      if (alsoL8)
-        tilesOver(8, pts).foreach(at =>
-          put(8, at, t => t.copy(ways = t.ways :+ w.copy(tileZ = 7))))
-    }
-    // lines from west of lon 7.03125 to east of it (some past 7.38)
-    for (lnum <- 1 to 20) {
-      val lats = Seq.fill(4)(u(51.32, 51.58))
-      val lons = Seq(u(6.62, 6.9), u(6.92, 7.02), u(7.05, 7.3), u(7.1, 7.55))
-        .sorted
-      val pts = lons.zip(lats)
-      val named = lnum % 3 == 0
-      way(WaySpec(tileZ = 9, layer = lnum % 2, tagIdx =
-        Seq(0, 1) ++ (if (named) Seq(3) else Nil),
-        vtagValues = Seq(lnum) ++ (if (named) Seq(s"road $lnum") else Nil),
-        doubleDelta = lnum % 2 == 1, ref = if (lnum % 5 == 0)
-          Some(s"B$lnum") else None,
-        blocks = Seq(Seq(pts))), pts, alsoL8 = lnum % 2 == 0)
-    }
-    // areas straddling lon 7.03125, some with a hole
-    if (withAreas) for (anum <- 1 to 10) {
-      val (x0, x1) = (u(6.9, 7.0), u(7.06, 7.45))
-      val (y0, y1) = (u(51.32, 51.4), u(51.47, 51.58))
-      val shell = Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
-      val hx = (x0 + x1) / 2
-      val hole = Seq((hx - 0.01, y0 + 0.02), (hx + 0.01, y0 + 0.02),
-        (hx + 0.01, y0 + 0.04), (hx - 0.01, y0 + 0.04), (hx - 0.01, y0 + 0.02))
-      val named = anum % 2 == 0
-      way(WaySpec(tileZ = 9, layer = 0, tagIdx =
-        Seq(4, 2) ++ (if (named) Seq(3) else Nil),
-        vtagValues = Seq(anum) ++ (if (named) Seq(s"park $anum") else Nil),
-        blocks = Seq(if (anum % 2 == 0) Seq(shell, hole) else Seq(shell))),
-        shell, alsoL8 = anum % 2 == 1)
-    }
-    MapSpec(minLat = minLat, minLon = minLon, maxLat = maxLat,
-      maxLon = maxLon, poiTags = poiTags, wayTags = wayTags,
-      subfiles = Seq(
-        SubfileSpec(8, 6, 8, l8.values.toSeq.sortBy(t => (t.y, t.x))),
-        SubfileSpec(10, 9, 11, l10.values.toSeq.sortBy(t => (t.y, t.x)))))
-  }
+  import FusedBuildSpec._
 
   /** The per-table composition the fused build replaces. */
   private def reference(path: String): Seq[DataFrame] = {
@@ -187,5 +105,90 @@ class FusedBuildSpec extends AnyFunSuite {
         s"decoded ${t.decodedTiles()} tiles, the map has " +
           s"${nonEmptyTiles(path)} non-empty ones")
     } finally t.release()
+  }
+}
+
+object FusedBuildSpec {
+  private val poiTags = Seq(
+    "amenity=cafe", "place=town", "__dbl_pnum=%i", "population=%i")
+  private val wayTags = Seq("highway=primary", "__dbl_lnum=%i",
+    "__dbl_anum=%i", "name:en=%s", "leisure=park",
+    "_lbd_=" + "ODbL-1.0".reverse)
+  private val (minLon, maxLon, minLat, maxLat) = (6.6, 7.6, 51.3, 51.6)
+
+  /** Level-`z` tiles whose boxes meet the box of `pts` (lon, lat). */
+  private def tilesOver(z: Int, pts: Seq[(Double, Double)]): Seq[(Long, Long)] =
+    for {
+      x <- Mapsforge.xFromLon(z, pts.map(_._1).min).toLong to
+        Mapsforge.xFromLon(z, pts.map(_._1).max).toLong
+      y <- Mapsforge.yFromLat(z, pts.map(_._2).max).toLong to
+        Mapsforge.yFromLat(z, pts.map(_._2).min).toLong
+    } yield (x, y)
+
+  def crossingMap(seed: Long, withAreas: Boolean): MapSpec = {
+    val rnd = new scala.util.Random(seed)
+    def u(lo: Double, hi: Double): Double =
+      math.rint((lo + rnd.nextDouble() * (hi - lo)) * 1e6) / 1e6
+    val l8 = scala.collection.mutable.Map.empty[(Long, Long), TileSpec]
+    val l10 = scala.collection.mutable.Map.empty[(Long, Long), TileSpec]
+    def put(level: Int, at: (Long, Long), f: TileSpec => TileSpec): Unit = {
+      val m = if (level == 8) l8 else l10
+      m(at) = f(m.getOrElse(at, TileSpec(at._1, at._2)))
+    }
+    // POIs: every third also at level 8, same pnum and attributes
+    for (pnum <- 1 to 40) {
+      val (lon, lat) = (u(6.62, 7.58), u(51.32, 51.58))
+      val withPop = pnum % 2 == 1
+      val p = PoiSpec(tileZ = 9, lat = lat, lon = lon, layer = pnum % 3,
+        tagIdx = Seq(pnum % 2, 2) ++ (if (withPop) Seq(3) else Nil),
+        vtagValues = Seq(pnum) ++ (if (withPop) Seq(1000 * pnum) else Nil),
+        name = if (pnum % 4 == 0) Some(s"poi $pnum") else None)
+      tilesOver(10, Seq((lon, lat))).foreach(at =>
+        put(10, at, t => t.copy(pois = t.pois :+ p)))
+      if (pnum % 3 == 0)
+        tilesOver(8, Seq((lon, lat))).foreach(at =>
+          put(8, at, t => t.copy(pois = t.pois :+ p.copy(tileZ = 7))))
+    }
+    def way(w: WaySpec, pts: Seq[(Double, Double)], alsoL8: Boolean): Unit = {
+      tilesOver(10, pts).foreach(at =>
+        put(10, at, t => t.copy(ways = t.ways :+ w)))
+      if (alsoL8)
+        tilesOver(8, pts).foreach(at =>
+          put(8, at, t => t.copy(ways = t.ways :+ w.copy(tileZ = 7))))
+    }
+    // lines from west of lon 7.03125 to east of it (some past 7.38)
+    for (lnum <- 1 to 20) {
+      val lats = Seq.fill(4)(u(51.32, 51.58))
+      val lons = Seq(u(6.62, 6.9), u(6.92, 7.02), u(7.05, 7.3), u(7.1, 7.55))
+        .sorted
+      val pts = lons.zip(lats)
+      val named = lnum % 3 == 0
+      way(WaySpec(tileZ = 9, layer = lnum % 2, tagIdx =
+        Seq(0, 1) ++ (if (named) Seq(3) else Nil),
+        vtagValues = Seq(lnum) ++ (if (named) Seq(s"road $lnum") else Nil),
+        doubleDelta = lnum % 2 == 1, ref = if (lnum % 5 == 0)
+          Some(s"B$lnum") else None,
+        blocks = Seq(Seq(pts))), pts, alsoL8 = lnum % 2 == 0)
+    }
+    // areas straddling lon 7.03125, some with a hole
+    if (withAreas) for (anum <- 1 to 10) {
+      val (x0, x1) = (u(6.9, 7.0), u(7.06, 7.45))
+      val (y0, y1) = (u(51.32, 51.4), u(51.47, 51.58))
+      val shell = Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
+      val hx = (x0 + x1) / 2
+      val hole = Seq((hx - 0.01, y0 + 0.02), (hx + 0.01, y0 + 0.02),
+        (hx + 0.01, y0 + 0.04), (hx - 0.01, y0 + 0.04), (hx - 0.01, y0 + 0.02))
+      val named = anum % 2 == 0
+      way(WaySpec(tileZ = 9, layer = 0, tagIdx =
+        Seq(4, 2) ++ (if (named) Seq(3) else Nil),
+        vtagValues = Seq(anum) ++ (if (named) Seq(s"park $anum") else Nil),
+        blocks = Seq(if (anum % 2 == 0) Seq(shell, hole) else Seq(shell))),
+        shell, alsoL8 = anum % 2 == 1)
+    }
+    MapSpec(minLat = minLat, minLon = minLon, maxLat = maxLat,
+      maxLon = maxLon, poiTags = poiTags, wayTags = wayTags,
+      subfiles = Seq(
+        SubfileSpec(8, 6, 8, l8.values.toSeq.sortBy(t => (t.y, t.x))),
+        SubfileSpec(10, 9, 11, l10.values.toSeq.sortBy(t => (t.y, t.x)))))
   }
 }

@@ -16,53 +16,7 @@ import graft.sources.{FdoSink, Mapsforge}
   */
 class MapsforgeSpec extends AnyFunSuite {
   import SparkTestSession.spark
-
-  private val poiTags = Seq(
-    "amenity=cafe", "place=city", "__dbl_pnum=%i", "population=%i")
-  private val wayTags = Seq(
-    "highway=primary", "__dbl_lnum=%i", "__dbl_anum=%i", "name:en=%s",
-    "_lbd_=" + "ODbL-1.0".reverse)
-
-  private val edge = 7.3828125 // lonFromX(10, 533)
-  // the wire format quantizes to integer microdegrees (ties-to-even)
-  private val edgeQ = 7.382812
-
-  private def testMap: MapSpec = {
-    val cityL10 = PoiSpec(tileZ = 9, lat = 51.55, lon = 7.3, layer = 0,
-      tagIdx = Seq(1, 2, 3), vtagValues = Seq(1, 632000),
-      name = Some("Dortmund"), elevation = Some(86))
-    val cityL8 = cityL10.copy(tileZ = 7)
-    val poi2 = PoiSpec(tileZ = 10, lat = 51.5, lon = 7.5, layer = 1,
-      tagIdx = Seq(0, 2), vtagValues = Seq(2))
-    // road lnum=1 crossing the tile boundary; west fragment uses
-    // double-delta encoding
-    val roadWest = WaySpec(tileZ = 9, layer = 0, tagIdx = Seq(1),
-      vtagValues = Seq(1), name = Some("A40"), doubleDelta = true,
-      blocks = Seq(Seq(Seq((7.2, 51.55), (7.3, 51.55), (edge, 51.55)))))
-    val roadEast = roadWest.copy(doubleDelta = false,
-      blocks = Seq(Seq(Seq((edge, 51.55), (7.4, 51.55), (7.5, 51.55)))))
-    // area anum=1: two data blocks — square-with-hole + small square
-    val park = WaySpec(tileZ = 9, layer = 0, tagIdx = Seq(2, 3),
-      vtagValues = Seq(1, "park"),
-      blocks = Seq(
-        Seq(
-          Seq((7.1, 51.52), (7.2, 51.52), (7.2, 51.57), (7.1, 51.57),
-            (7.1, 51.52)),
-          Seq((7.13, 51.54), (7.17, 51.54), (7.17, 51.56), (7.13, 51.56),
-            (7.13, 51.54))),
-        Seq(
-          Seq((7.25, 51.52), (7.28, 51.52), (7.28, 51.54), (7.25, 51.54),
-            (7.25, 51.52)))))
-    MapSpec(minLat = 51.5, minLon = 7.1, maxLat = 51.6, maxLon = 7.6,
-      poiTags = poiTags, wayTags = wayTags,
-      subfiles = Seq(
-        SubfileSpec(8, 6, 8, Seq(TileSpec(133, 85, pois = Seq(cityL8)))),
-        SubfileSpec(10, 9, 11, Seq(
-          TileSpec(532, 340, pois = Seq(cityL10),
-            ways = Seq(roadWest, park)),
-          TileSpec(533, 340, pois = Seq(poi2), ways = Seq(roadEast))))),
-      comment = Some("test map"), createdBy = Some("graft-test"))
-  }
+  import MapsforgeSpec._
 
   private lazy val mapPath = MapEncoder.writeToTemp(testMap)
 
@@ -481,5 +435,54 @@ class MapsforgeSpec extends AnyFunSuite {
     assert(lines.exists(_.contains("decode\u2192clip\u2192merge plan built")))
     assert(lines.exists(_.contains(s"tables sunk to '$out'")))
     assert(lines.exists(_.contains("config.toml emitted")))
+  }
+}
+
+object MapsforgeSpec {
+  private val poiTags = Seq(
+    "amenity=cafe", "place=city", "__dbl_pnum=%i", "population=%i")
+  private val wayTags = Seq(
+    "highway=primary", "__dbl_lnum=%i", "__dbl_anum=%i", "name:en=%s",
+    "_lbd_=" + "ODbL-1.0".reverse)
+
+  private val edge = 7.3828125 // lonFromX(10, 533)
+  // the wire format quantizes to integer microdegrees (ties-to-even)
+  private val edgeQ = 7.382812
+
+  def testMap: MapSpec = {
+    val cityL10 = PoiSpec(tileZ = 9, lat = 51.55, lon = 7.3, layer = 0,
+      tagIdx = Seq(1, 2, 3), vtagValues = Seq(1, 632000),
+      name = Some("Dortmund"), elevation = Some(86))
+    val cityL8 = cityL10.copy(tileZ = 7)
+    val poi2 = PoiSpec(tileZ = 10, lat = 51.5, lon = 7.5, layer = 1,
+      tagIdx = Seq(0, 2), vtagValues = Seq(2))
+    // road lnum=1 crossing the tile boundary; west fragment uses
+    // double-delta encoding
+    val roadWest = WaySpec(tileZ = 9, layer = 0, tagIdx = Seq(1),
+      vtagValues = Seq(1), name = Some("A40"), doubleDelta = true,
+      blocks = Seq(Seq(Seq((7.2, 51.55), (7.3, 51.55), (edge, 51.55)))))
+    val roadEast = roadWest.copy(doubleDelta = false,
+      blocks = Seq(Seq(Seq((edge, 51.55), (7.4, 51.55), (7.5, 51.55)))))
+    // area anum=1: two data blocks — square-with-hole + small square
+    val park = WaySpec(tileZ = 9, layer = 0, tagIdx = Seq(2, 3),
+      vtagValues = Seq(1, "park"),
+      blocks = Seq(
+        Seq(
+          Seq((7.1, 51.52), (7.2, 51.52), (7.2, 51.57), (7.1, 51.57),
+            (7.1, 51.52)),
+          Seq((7.13, 51.54), (7.17, 51.54), (7.17, 51.56), (7.13, 51.56),
+            (7.13, 51.54))),
+        Seq(
+          Seq((7.25, 51.52), (7.28, 51.52), (7.28, 51.54), (7.25, 51.54),
+            (7.25, 51.52)))))
+    MapSpec(minLat = 51.5, minLon = 7.1, maxLat = 51.6, maxLon = 7.6,
+      poiTags = poiTags, wayTags = wayTags,
+      subfiles = Seq(
+        SubfileSpec(8, 6, 8, Seq(TileSpec(133, 85, pois = Seq(cityL8)))),
+        SubfileSpec(10, 9, 11, Seq(
+          TileSpec(532, 340, pois = Seq(cityL10),
+            ways = Seq(roadWest, park)),
+          TileSpec(533, 340, pois = Seq(poi2), ways = Seq(roadEast))))),
+      comment = Some("test map"), createdBy = Some("graft-test"))
   }
 }

@@ -14,29 +14,7 @@ import graft.sources.Mapsforge
   */
 class NonDblMapSpec extends AnyFunSuite {
   import SparkTestSession.spark
-
-  private val poiTags = Seq("amenity=cafe")
-  private val wayTags = Seq("highway=path", "landuse=grass")
-
-  private def testMap: MapSpec = {
-    val poi = PoiSpec(tileZ = 9, lat = 51.55, lon = 7.3, layer = 0,
-      tagIdx = Seq(0), name = Some("cafe1"))
-    // open polyline → inferred MULTILINESTRING; carries a label
-    // position offset from its first coordinate
-    val path = WaySpec(tileZ = 9, layer = 0, tagIdx = Seq(0),
-      labelOffset = Some((0.005, -0.01)),
-      blocks = Seq(Seq(Seq((7.1, 51.52), (7.2, 51.53), (7.3, 51.54)))))
-    // closed 5-point ring → inferred MULTIPOLYGON; end point is 1 µdeg
-    // off so the parser must force-close it (map2db.py:611-617)
-    val grass = WaySpec(tileZ = 10, layer = 0, tagIdx = Seq(1),
-      blocks = Seq(Seq(Seq((7.2, 51.5), (7.25, 51.5), (7.25, 51.53),
-        (7.2, 51.53), (7.200001, 51.5)))))
-    MapSpec(minLat = 51.45, minLon = 7.05, maxLat = 51.6, maxLon = 7.35,
-      poiTags = poiTags, wayTags = wayTags,
-      subfiles = Seq(SubfileSpec(10, 9, 11, Seq(
-        TileSpec(532, 340, pois = Seq(poi), ways = Seq(path, grass))))),
-      debugInfo = true)
-  }
+  import NonDblMapSpec._
 
   private lazy val mapPath = MapEncoder.writeToTemp(testMap)
 
@@ -107,5 +85,30 @@ class NonDblMapSpec extends AnyFunSuite {
       "does not appear to have been created by forgemap")))
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(out, "config.toml")))
+  }
+}
+
+object NonDblMapSpec {
+  private val poiTags = Seq("amenity=cafe")
+  private val wayTags = Seq("highway=path", "landuse=grass")
+
+  def testMap: MapSpec = {
+    val poi = PoiSpec(tileZ = 9, lat = 51.55, lon = 7.3, layer = 0,
+      tagIdx = Seq(0), name = Some("cafe1"))
+    // open polyline → inferred MULTILINESTRING; carries a label
+    // position offset from its first coordinate
+    val path = WaySpec(tileZ = 9, layer = 0, tagIdx = Seq(0),
+      labelOffset = Some((0.005, -0.01)),
+      blocks = Seq(Seq(Seq((7.1, 51.52), (7.2, 51.53), (7.3, 51.54)))))
+    // closed 5-point ring → inferred MULTIPOLYGON; end point is 1 µdeg
+    // off so the parser must force-close it (map2db.py:611-617)
+    val grass = WaySpec(tileZ = 10, layer = 0, tagIdx = Seq(1),
+      blocks = Seq(Seq(Seq((7.2, 51.5), (7.25, 51.5), (7.25, 51.53),
+        (7.2, 51.53), (7.200001, 51.5)))))
+    MapSpec(minLat = 51.45, minLon = 7.05, maxLat = 51.6, maxLon = 7.35,
+      poiTags = poiTags, wayTags = wayTags,
+      subfiles = Seq(SubfileSpec(10, 9, 11, Seq(
+        TileSpec(532, 340, pois = Seq(poi), ways = Seq(path, grass))))),
+      debugInfo = true)
   }
 }

@@ -5,7 +5,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Threads.inParallel` is the pool behind FdoSink.write's concurrent
-  * table writes: results come back in order, a failure surfaces as the
+  * writes (the three feature-table jobs and the driver's metadata
+  * tables): results come back in order, a failure surfaces as the
   * thunk's own exception, and its siblings are cancelled. */
 class ThreadsSpec extends AnyFunSuite {
 
