@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
@@ -7,7 +8,7 @@ object Bench {
     * every stdout byte counts toward the driver's bounded tail
     * capture.
     */
-  private def fmt(v: Double): String = {
+  private[graft] def fmt(v: Double): String = {
     val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     if (s.contains('.'))
       s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
@@ -17,6 +18,24 @@ object Bench {
   private def jsonMap(entries: Seq[(String, String)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+
+  /** Seconds to run `fn`'s complete plan into the noop sink, the one
+    * timed rep every harness main takes. Every pin and memo is freed
+    * first, so each rep pays its OWN pipeline (d02 memoizes the LSH
+    * pipeline d07 would otherwise read, turning d07's number into
+    * clustering-only), and the heap is collected so the rep does not
+    * inherit earlier garbage as GC pressure. The noop sink executes
+    * the whole plan: count() would let Catalyst drop sorts and
+    * projections and read no columns at all for pure selects. */
+  def timedNoop(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): Double = {
+    Pins.release()
+    System.gc()
+    Thread.sleep(50)
+    val t0 = System.nanoTime()
+    fn(spark, dir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -41,10 +60,8 @@ object Bench {
       * GC/compaction storm seeded by 200+ prior queries, so min-of-2
       * alone can't save a query whose whole window is polluted). Two
       * defenses now apply:
-      *   1. QUIESCE before every timed rep: System.gc() + a short
-      *      settle so the rep starts on a collected heap instead of
-      *      inheriting the previous queries' garbage as concurrent-GC
-      *      pressure inside its own window.
+      *   1. QUIESCE before every timed rep ([[timedNoop]]): the rep
+      *      starts on a collected heap.
       *   2. VARIANCE SENTINEL: if the reps of one query disagree by
       *      more than 2x (and the fast rep isn't sub-200ms noise), the
       *      measurement is suspect — take ONE extra quiesced rep and
@@ -57,31 +74,17 @@ object Bench {
       * flaky second rep keeps rep 1's valid measurement with the error
       * noted alongside.
       */
-    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession,
-        String) => org.apache.spark.sql.DataFrame, dir: String,
-        reps: Int): (String, Double, Option[String], Option[String]) = {
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame,
+        dir: String, reps: Int)
+        : (String, Double, Option[String], Option[String]) = {
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       var err: Option[String] = None
-      def rep(): Unit = {
-        // free every pin and memo so every query (and every rep) pays
-        // its OWN pipeline: d02 memoizes the LSH pipeline that d07
-        // would otherwise read, turning d07's number into
-        // clustering-only — a measurement artifact, not a speedup.
-        Pins.release()
-        System.gc()
-        Thread.sleep(50)
-        val t0 = System.nanoTime()
-        // noop sink executes the COMPLETE plan (count() would let
-        // Catalyst drop sorts/projections from row-level queries and
-        // read no parquet columns at all for pure selects).
-        try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          times += (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
+      def rep(): Unit =
+        try times += timedNoop(spark, fn, dir)
+        catch { case e: Throwable =>
           err = Some(Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\n\r\t]", " ").take(200))
         }
-      }
       (0 until reps).foreach(_ => rep())
       val tripped = times.size >= 2 && times.min > 0.2 &&
         times.max / times.min > 2.0

@@ -14,6 +14,7 @@ package graft
   * per-round wall-clock; this sweep is unbounded and manual.
   */
 object ScaleCurve {
+  import Bench.{fmt, timedNoop}
 
   /** family → representative query (one per SURVEY §2 family, plus a
     * second §2d entry so both the clustering and the text-kernel legs
@@ -67,13 +68,6 @@ object ScaleCurve {
     // reads 8 bytes/candidate, so its curve is the purest probe of
     // scan-bound scaling in the ANN family
     "2d_pipeline_binary" -> "d88_binary_rerank")
-
-  private def fmt(v: Double): String = {
-    val s = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    if (s.contains('.'))
-      s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
-    else s
-  }
 
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
@@ -176,13 +170,8 @@ object ScaleCurve {
             "d98_tomb_purge" -> tp)
         }
 
-    def time(key: String, dir: String): Double = {
-      Pins.release()
-      val fn = SparkEntry.queries(key)
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time(key: String, dir: String): Double =
+      timedNoop(spark, SparkEntry.queries(key), dir)
 
     // At sf10 the replica is GBs and the first execution pays the
     // page-cache miss: round 5 recorded 72 s for g11 where an earlier

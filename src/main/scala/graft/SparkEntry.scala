@@ -2,36 +2,32 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{MapOps, PipelineExtras, PipelineOps, Relational,
-  Relational2, Relational3, Relational4, Relational5, Relational6,
-  Relational7, Relational8, Relational9, TopK}
+import graft.operators.{CrawlE2e, DataSelection, MapOps, PipelineExtras,
+  PipelineOps, Relational, Relational2, Relational3, Relational4,
+  Relational5, Relational6, Relational7, Relational8, Relational9, TopK}
+import graft.sources.Interchange
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** The registered keys every harness main reads; SURVEY.md §2 is the
+  * inventory. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++
-      Relational4.queries ++ Relational5.queries ++ Relational6.queries ++
-      Relational7.queries ++ Relational8.queries ++ Relational9.queries ++
-      PipelineExtras.queries ++ MapOps.queries ++ PipelineOps.queries ++
-      graft.operators.DataSelection.queries ++
-      graft.operators.CrawlE2e.queries ++
-      graft.sources.Interchange.queries ++
-      Map("q15_grouped_topk" -> (TopK.q15GroupedTopk _))
+  /** Every implemented operator from SURVEY.md §2, each with its one
+    * check. A key registered twice fails here. */
+  val ops: Seq[Op] = Op.registry(Relational.ops, Relational2.ops,
+    Relational3.ops, Relational4.ops, Relational5.ops, Relational6.ops,
+    Relational7.ops, Relational8.ops, Relational9.ops, PipelineExtras.ops,
+    MapOps.ops, PipelineOps.ops, DataSelection.ops, CrawlE2e.ops,
+    Interchange.ops,
+    Seq(Op("q15_grouped_topk", TopK.q15GroupedTopk, TopK.q15Sql)))
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    ops.map(op => op.key -> op.run).toMap
+
+  /** For each key checked by an [[Oracle]], equivalent ANSI SQL runnable
+    * by DuckDB on the same parquet tables. */
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ Relational2.oracles ++ Relational3.oracles ++
-      Relational4.oracles ++ Relational5.oracles ++ Relational6.oracles ++
-      Relational7.oracles ++ Relational8.oracles ++ Relational9.oracles ++
-      PipelineExtras.oracles ++ MapOps.oracles ++ PipelineOps.oracles ++
-      graft.operators.DataSelection.oracles ++
-      graft.operators.CrawlE2e.oracles ++
-      graft.sources.Interchange.oracles ++
-      Map("q15_grouped_topk" -> TopK.q15Sql)
+    ops.collect { case Op(key, _, Oracle(sql)) => key -> sql }.toMap
 }

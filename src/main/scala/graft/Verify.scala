@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registered key's result → parquet, plus
+  * oracle_sql.json for the DuckDB compare of the [[Oracle]] keys; each
+  * [[Invariant]] key is checked here, on its written parquet. */
 object Verify {
 
   /** Hint every CTE in a builder-authored oracle as MATERIALIZED.
@@ -71,25 +72,33 @@ object Verify {
     // sets no env and always gets the full dump
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        // r17 (ADVICE r16): free every operator pin (Pins.release)
-        // before each query, exactly as Bench does between reps — the r16
-        // eager-checkpoint pins (d63/d72/d85/d92/d93/d21/q71/d74/
-        // d29/d47) otherwise ACCUMULATE
-        // MEMORY_AND_DISK blocks across all 300+ queries in this one
-        // session. Safe here: each query's parquet is fully written
-        // before the next query builds.
+    SparkEntry.ops
+      .filter(op => only.forall(_.contains(op.key)))
+      .foreach { op =>
+        // free every operator pin before each key, as Bench does between
+        // reps: eager-checkpoint pins (d63, d72, d85, d92, ...) otherwise
+        // accumulate MEMORY_AND_DISK blocks across all 300+ keys of this
+        // one session. Each key's parquet is written before the next.
         Pins.release()
         val t0 = System.nanoTime()
+        val out = s"$outDir/${op.key}"
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          op.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(out)
           System.err.println(
-            f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+            f"[verify] ${op.key} ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+          // an oracle key is checked by the driver's DuckDB compare;
+          // an invariant key is checked here, on the parquet just written
+          op.check match {
+            case Invariant(name, violations) =>
+              val bad = violations(spark, sfDir, spark.read.parquet(out))
+              System.err.println(s"[verify] ${op.key} invariant " + (
+                if (bad.isEmpty) s"ok: $name"
+                else s"failed: $name: ${bad.take(5).mkString("; ")}"))
+            case _: Oracle => ()
+          }
         } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] ${op.key} failed: ${e.getMessage}")
         }
       }
     spark.stop()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Op
+
 /** t41: the crawl front door as ONE composed plan (r14 verdict item
   * 2) — the product a 100 TB crawl user actually runs. The pieces
   * exist as isolated hash-verified keys (t35 extract, t37 entity
@@ -538,13 +540,9 @@ object CrawlE2e {
       .orderBy(col("doc_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t41_crawl_e2e" -> (t41CrawlE2e _),
-    "t45_crawl_e2e_full" -> (t45CrawlFull _))
-
-  def oracles: Map[String, String] = Map(
-    "t41_crawl_e2e" -> t41Sql,
-    "t45_crawl_e2e_full" -> t45Sql)
+  val ops: Seq[Op] = Seq(
+    Op("t41_crawl_e2e", t41CrawlE2e, t41Sql),
+    Op("t45_crawl_e2e_full", t45CrawlFull, t45Sql))
 
   /** The hex numeric-reference value as a DuckDB expression over a
     * piece `p` (nested-lambda digit walk — DuckDB has no conv()). */

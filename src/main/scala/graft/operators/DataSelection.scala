@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Pins, Tables}
+import graft.{Op, Pins, Tables}
 import graft.functions.TextFunctions
 
 /** Data-selection operators for the training-corpus pipeline
@@ -329,11 +329,7 @@ object DataSelection {
        |FROM per_doc d LEFT JOIN partners p USING (doc_id)
        |ORDER BY d.doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d92_dsir" -> (d92Dsir _),
-    "d93_winnowing" -> (d93Winnowing _))
-
-  val oracles: Map[String, String] = Map(
-    "d92_dsir" -> d92Sql,
-    "d93_winnowing" -> d93Sql)
+  val ops: Seq[Op] = Seq(
+    Op("d92_dsir", d92Dsir, d92Sql),
+    Op("d93_winnowing", d93Winnowing, d93Sql))
 }

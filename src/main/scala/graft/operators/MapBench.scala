@@ -5,7 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-import graft.{MapEncoder, Pins}
+import graft.{Invariant, MapEncoder, Pins}
 import graft.MapEncoder.{MapSpec, PoiSpec, SubfileSpec, TileSpec, WaySpec}
 import graft.Tables
 import graft.sources.FdoSink
@@ -18,8 +18,9 @@ import graft.sources.FdoSink
   * the reference walks tiles serially in Python (map2db.py:1487-1510);
   * here every tile is an independent task.
   *
-  * Rows-only correctness (no SQL oracle can re-decode the binary);
-  * the wire-format round-trip is pinned by MapsforgeSpec/NonDblMapSpec.
+  * No SQL oracle can re-decode the binary: [[g13Check]] and
+  * [[g14Check]] hold the outputs to the fixture's planted features,
+  * and MapsforgeSpec/NonDblMapSpec pin the wire-format round-trip.
   */
 object MapBench {
 
@@ -97,15 +98,24 @@ object MapBench {
   private val wayTags = Seq("highway=primary", "__dbl_lnum=%i",
     "leisure=park", "__dbl_anum=%i", "_lbd_=" + "ODbL-1.0".reverse)
 
+  private lazy val grid12: (Array[Long], Array[Long]) = (
+    (xFromLon(12, 7.0) until xFromLon(12, 8.0)).toArray,
+    (yFromLat(12, 52.0) until yFromLat(12, 51.0)).toArray)
+
+  /** What [[writeMap]] plants for `n` POIs: POI records (every 10th
+    * again at level 8), distinct POIs, lines and areas. */
+  private def planted(n: Long): (Long, Long, Long, Long) = {
+    val tiles = grid12._1.length.toLong * grid12._2.length
+    (n + (n + 9) / 10, n, tiles, (tiles + 2) / 3)
+  }
+
   /** Deterministic map: a level-12 tile grid over lat 51-52 / lon 7-8
     * holding `n` POIs round-robin (every 10th pnum repeated at level 8
     * to exercise the cross-level merge), plus one 3-vertex way per
     * level-12 tile. */
   private def writeMap(n: Long): String = {
     val z = 12
-    val x0 = xFromLon(z, 7.0); val x1 = xFromLon(z, 8.0) - 1
-    val y0 = yFromLat(z, 52.0); val y1 = yFromLat(z, 51.0) - 1
-    val xs = (x0 to x1).toArray; val ys = (y0 to y1).toArray
+    val (xs, ys) = grid12
     val nTiles = xs.length * ys.length
     val perTile = Array.fill(nTiles)(
       Vector.newBuilder[PoiSpec])
@@ -192,8 +202,8 @@ object MapBench {
     * scanMany pass (per-file tile tasks, broadcast dictionaries) and
     * aggregate per fileId; feature ids are per-file, so the count
     * groups by (fileId) and distinct-counts ids WITHIN each file.
-    * Rows-only (no SQL oracle can re-decode the binary); the
-    * two-file row-tagging invariants are pinned by NonDblMapSpec. */
+    * Checked by [[g14Check]]; NonDblMapSpec pins the two-file
+    * row-tagging. */
   def g14FleetScan(spark: SparkSession, dir: String): DataFrame = {
     val n = g14FixtureSize(spark, dir)
     val p1 = mapCache.getOrElseUpdate(n, encodeFixture(n))
@@ -218,6 +228,17 @@ object MapBench {
       .withColumn("n_ways", coalesce(col("n_ways"), lit(0L)))
       .orderBy(col("fileId"))
   }
+
+  /** g14's check: each file's counts are its fixture's planted ones. */
+  val g14Check: Invariant = Invariant("per-file counts equal the " +
+    "planted features", (spark, dir, res) => {
+      val n = g14FixtureSize(spark, dir)
+      Invariant.rowsEqual(res, Seq(n, n / 2).zipWithIndex.map {
+        case (m, file) =>
+          val (records, pois, lines, areas) = planted(m)
+          Seq(file, records, pois, lines + areas)
+      }: _*)
+    })
 
   def g13MapPipeline(spark: SparkSession, dir: String): DataFrame = {
     val n = g13FixtureSize(spark, dir)
@@ -244,4 +265,13 @@ object MapBench {
       // verdict #2)
     } finally deleteRecursively(out)
   }
+
+  /** g13's check: each FDO table holds the planted features, the
+    * level-8 POI copies merged away. */
+  val g13Check: Invariant = Invariant("table rows equal the planted " +
+    "features", (spark, dir, res) => {
+      val (_, pois, lines, areas) = planted(g13FixtureSize(spark, dir))
+      Invariant.rowsEqual(res,
+        Seq("areas", areas), Seq("lines", lines), Seq("points", pois))
+    })
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 import graft.functions.Tiles
 import graft.functions.varint._
 
@@ -461,45 +461,25 @@ object MapOps {
       |FROM tiles LEFT JOIN n ON tiles.tx = n.tx AND tiles.ty = n.ty
       |ORDER BY tiles.tx, tiles.ty""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g13_map_pipeline" -> (MapBench.g13MapPipeline _),
-    "g14_fleet_scan" -> (MapBench.g14FleetScan _),
-    "g10_bbox_agg" -> (g10BboxAgg _),
-    "g11_polyline_length" -> (g11PolylineLength _),
-    "g15_polygon_area" -> (g15PolygonArea _),
-    "g16_morton_layout" -> (ZOrder.g16MortonLayout _),
-    "g17_radius_join" -> (Spatial.g17RadiusJoin _),
-    "g18_point_in_polygon" -> (Spatial.g18PointInPolygon _),
-    "g19_tile_pyramid" -> (Spatial.g19TilePyramid _),
-    "g20_nearest_snap" -> (Spatial.g20NearestSnap _),
-    "g12_tile_neighbors" -> (g12TileNeighbors _),
-    "g01_varint_roundtrip" -> (g01VarintRoundtrip _),
-    "g02_tile_transforms" -> (g02TileTransforms _),
-    "g03_tilenum" -> (g03TileNum _),
-    "g04_delta_decode" -> (g04DeltaDecode _),
-    "g05_tag_parse" -> (g05TagParse _),
-    "g06_point_clip" -> (g06PointClip _),
-    "g07_ring_classify" -> (g07RingClassify _),
-    "g08_geom_union" -> (g08GeomUnion _),
-    "g09_zoom_dedup" -> (g09ZoomDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "g10_bbox_agg" -> g10Sql,
-    "g11_polyline_length" -> g11Sql,
-    "g15_polygon_area" -> g15Sql,
-    "g16_morton_layout" -> ZOrder.g16Sql,
-    "g17_radius_join" -> Spatial.g17Sql,
-    "g18_point_in_polygon" -> Spatial.g18Sql,
-    "g19_tile_pyramid" -> Spatial.g19Sql,
-    "g20_nearest_snap" -> Spatial.g20Sql,
-    "g12_tile_neighbors" -> g12Sql,
-    "g01_varint_roundtrip" -> g01Sql,
-    "g02_tile_transforms" -> g02Sql,
-    "g03_tilenum" -> g03Sql,
-    "g04_delta_decode" -> g04Sql,
-    "g05_tag_parse" -> g05Sql,
-    "g06_point_clip" -> g06Sql,
-    "g07_ring_classify" -> g07Sql,
-    "g08_geom_union" -> g08Sql,
-    "g09_zoom_dedup" -> g09Sql)
+  val ops: Seq[Op] = Seq(
+    Op("g13_map_pipeline", MapBench.g13MapPipeline, MapBench.g13Check),
+    Op("g14_fleet_scan", MapBench.g14FleetScan, MapBench.g14Check),
+    Op("g10_bbox_agg", g10BboxAgg, g10Sql),
+    Op("g11_polyline_length", g11PolylineLength, g11Sql),
+    Op("g15_polygon_area", g15PolygonArea, g15Sql),
+    Op("g16_morton_layout", ZOrder.g16MortonLayout, ZOrder.g16Sql),
+    Op("g17_radius_join", Spatial.g17RadiusJoin, Spatial.g17Sql),
+    Op("g18_point_in_polygon", Spatial.g18PointInPolygon, Spatial.g18Sql),
+    Op("g19_tile_pyramid", Spatial.g19TilePyramid, Spatial.g19Sql),
+    Op("g20_nearest_snap", Spatial.g20NearestSnap, Spatial.g20Sql),
+    Op("g12_tile_neighbors", g12TileNeighbors, g12Sql),
+    Op("g01_varint_roundtrip", g01VarintRoundtrip, g01Sql),
+    Op("g02_tile_transforms", g02TileTransforms, g02Sql),
+    Op("g03_tilenum", g03TileNum, g03Sql),
+    Op("g04_delta_decode", g04DeltaDecode, g04Sql),
+    Op("g05_tag_parse", g05TagParse, g05Sql),
+    Op("g06_point_clip", g06PointClip, g06Sql),
+    Op("g07_ring_classify", g07RingClassify, g07Sql),
+    Op("g08_geom_union", g08GeomUnion, g08Sql),
+    Op("g09_zoom_dedup", g09ZoomDedup, g09Sql))
 }

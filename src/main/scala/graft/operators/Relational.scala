@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Invariant, Op, Tables}
 
 /** The relational engine surface (SURVEY.md §2a).
   *
@@ -315,8 +315,7 @@ object Relational {
       |ORDER BY event_type""".stripMargin
 
   /** q12: approximate distinct (HLL++) — the scale path for distinct
-    * counting; no exact SQL oracle (rows-only check), exactness bounds
-    * asserted in RelationalSpec. */
+    * counting; no exact SQL oracle, so [[q12Check]] bounds its error. */
   def q12ApproxDistinct(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "lineitem")
       .groupBy(col("l_returnflag"))
@@ -326,6 +325,16 @@ object Relational {
       .agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"),
         approx_count_distinct(col("l_orderkey"), 0.02).as("approx_orders"))
       .orderBy(col("l_returnflag"))
+
+  /** q12's check: each sketch within 3 × rsd of q07's exact count. */
+  val q12Check: Invariant = Invariant("within 3 rsd of count(DISTINCT)",
+    (spark, dir, res) => {
+      def near(c: String, e: String) =
+        abs(col(c) - col(e)) <= col(e) * (3 * 0.02)
+      Invariant.failures(
+        res.join(q07Distinct(spark, dir), Seq("l_returnflag"), "full"),
+        near("approx_parts", "n_parts") && near("approx_orders", "n_orders"))
+    })
 
   /** q13: backward as-of join — each purchase matched to the same
     * user's most recent view at-or-before it. Views pre-deduped per
@@ -511,9 +520,9 @@ object Relational {
     * quantile sketch per group that partial-aggregates map-side and
     * merges across partitions, where exact `percentile` buffers every
     * value of a group in one aggregator. Accuracy 10000 bounds rank
-    * error at n/10000. Rows-only like q12 (sketch internals are
-    * engine-specific); RelationalSpec bounds the error against q16's
-    * exact answer. Scalar output columns only — the round-3 array
+    * error at n/10000, which [[q47Check]] holds it to (sketch
+    * internals are engine-specific, so no SQL oracle). Scalar output
+    * columns only — the round-3 array
     * form (`approx_percentile(x, array(...))`) crashed the driver's
     * result hashing, which can't sort array cells. */
   def q47ApproxPercentile(spark: SparkSession, dir: String): DataFrame =
@@ -526,6 +535,30 @@ object Relational {
           .as("p25_price"),
         count(lit(1)).as("n"))
       .orderBy(col("l_returnflag"))
+
+  /** q47's check: `n` is the exact row count, and each percentile is a
+    * value of its column whose rank is within n/10000 (the sketch's
+    * accuracy) of the target rank ceil(p·n). */
+  val q47Check: Invariant = Invariant("observed values at ranks within " +
+    "n/10000 of the target", (spark, dir, res) => {
+      val pcts = Seq(("p50_qty", "l_quantity", 0.5),
+        ("p90_qty", "l_quantity", 0.9), ("p25_price", "l_extendedprice", 0.25))
+      // per percentile: rows below it (lt) and at or below it (le)
+      val ranks = pcts.flatMap { case (p, c, _) => Seq(
+        sum(when(col(c) < col(p), 1L).otherwise(0L)).as(s"${p}_lt"),
+        sum(when(col(c) <= col(p), 1L).otherwise(0L)).as(s"${p}_le")) }
+      val per = Tables.load(spark, dir, "lineitem")
+        .join(res, Seq("l_returnflag"), "full")
+        .groupBy(col("l_returnflag"), col("n"))
+        .agg(count(col("l_orderkey")).as("exact_n"), ranks: _*)
+      val tol = col("exact_n") / 10000.0
+      Invariant.failures(per, pcts.map { case (p, _, q) =>
+        val target = ceil(col("exact_n") * q)
+        col(s"${p}_lt") + 1 <= target + tol &&
+          col(s"${p}_le") >= target - tol &&
+          col(s"${p}_le") > col(s"${p}_lt")
+      }.reduce(_ && _) && col("n") === col("exact_n"))
+    })
 
   /** q17: ROLLUP grouping sets — subtotals at (region, nation),
     * (region), and grand total in one Expand pass (no re-scan per
@@ -617,51 +650,28 @@ object Relational {
       |ORDER BY event_id""".stripMargin
 
   /** All §2a queries keyed as in SURVEY.md. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_filter_project" -> (q02FilterProject _),
-    "q03_join_broadcast" -> (q03JoinBroadcast _),
-    "q04_multi_join" -> (q04MultiJoin _),
-    "q05_topk_revenue" -> (q05TopkRevenue _),
-    "q06_window_rank" -> (q06WindowRank _),
-    "q07_distinct" -> (q07Distinct _),
-    "q08_anti_join" -> (q08AntiJoin _),
-    "q09_conditional_agg" -> (q09ConditionalAgg _),
-    "q10_union_merge" -> (q10UnionMerge _),
-    "q11_json_props" -> (q11JsonProps _),
-    "q12_approx_distinct" -> (q12ApproxDistinct _),
-    "q13_asof_join" -> (q13AsofJoin _),
-    "q14_range_join" -> (q14RangeJoin _),
-    "q48_gap_fill" -> (AsOf.q48GapFill _),
-    "q52_asof_tolerance" -> (q52AsofTolerance _),
-    "q59_asof_forward" -> (q59AsofForward _),
-    "q16_percentiles" -> (q16Percentiles _),
-    "q47_approx_percentile" -> (q47ApproxPercentile _),
-    "q17_rollup" -> (q17Rollup _),
-    "q18_pivot" -> (q18Pivot _),
-    "q19_set_ops" -> (q19SetOps _),
-    "q20_lag_lead" -> (q20LagLead _))
-
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_filter_project" -> q02Sql,
-    "q03_join_broadcast" -> q03Sql,
-    "q04_multi_join" -> q04Sql,
-    "q05_topk_revenue" -> q05Sql,
-    "q06_window_rank" -> q06Sql,
-    "q07_distinct" -> q07Sql,
-    "q08_anti_join" -> q08Sql,
-    "q09_conditional_agg" -> q09Sql,
-    "q10_union_merge" -> q10Sql,
-    "q11_json_props" -> q11Sql,
-    "q13_asof_join" -> q13Sql,
-    "q14_range_join" -> q14Sql,
-    "q48_gap_fill" -> AsOf.q48Sql,
-    "q52_asof_tolerance" -> q52Sql,
-    "q59_asof_forward" -> q59Sql,
-    "q16_percentiles" -> q16Sql,
-    "q17_rollup" -> q17Sql,
-    "q18_pivot" -> q18Sql,
-    "q19_set_ops" -> q19Sql,
-    "q20_lag_lead" -> q20Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q01_pricing_summary", q01PricingSummary, q01Sql),
+    Op("q02_filter_project", q02FilterProject, q02Sql),
+    Op("q03_join_broadcast", q03JoinBroadcast, q03Sql),
+    Op("q04_multi_join", q04MultiJoin, q04Sql),
+    Op("q05_topk_revenue", q05TopkRevenue, q05Sql),
+    Op("q06_window_rank", q06WindowRank, q06Sql),
+    Op("q07_distinct", q07Distinct, q07Sql),
+    Op("q08_anti_join", q08AntiJoin, q08Sql),
+    Op("q09_conditional_agg", q09ConditionalAgg, q09Sql),
+    Op("q10_union_merge", q10UnionMerge, q10Sql),
+    Op("q11_json_props", q11JsonProps, q11Sql),
+    Op("q12_approx_distinct", q12ApproxDistinct, q12Check),
+    Op("q13_asof_join", q13AsofJoin, q13Sql),
+    Op("q14_range_join", q14RangeJoin, q14Sql),
+    Op("q48_gap_fill", AsOf.q48GapFill, AsOf.q48Sql),
+    Op("q52_asof_tolerance", q52AsofTolerance, q52Sql),
+    Op("q59_asof_forward", q59AsofForward, q59Sql),
+    Op("q16_percentiles", q16Percentiles, q16Sql),
+    Op("q47_approx_percentile", q47ApproxPercentile, q47Check),
+    Op("q17_rollup", q17Rollup, q17Sql),
+    Op("q18_pivot", q18Pivot, q18Sql),
+    Op("q19_set_ops", q19SetOps, q19Sql),
+    Op("q20_lag_lead", q20LagLead, q20Sql))
 }

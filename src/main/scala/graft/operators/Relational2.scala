@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Second tranche of the relational engine surface (SURVEY.md §2a):
   * subquery decorrelation, grouping sets/cube, full outer joins,
@@ -822,63 +822,33 @@ object Relational2 {
       |FROM d GROUP BY 1, 2
       |ORDER BY cohort_week, week_offset""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q21_scalar_subquery" -> (q21ScalarSubquery _),
-    "q22_cube" -> (q22Cube _),
-    "q23_full_outer" -> (q23FullOuter _),
-    "q24_window_frames" -> (q24WindowFrames _),
-    "q25_rank_ratios" -> (q25RankRatios _),
-    "q26_string_funcs" -> (q26StringFuncs _),
-    "q27_regexp_extract" -> (q27RegexpExtract _),
-    "q28_date_arith" -> (q28DateArith _),
-    "q29_explode_words" -> (q29ExplodeWords _),
-    "q30_exact_stats" -> (q30ExactStats _),
-    "q31_mode_top" -> (q31ModeTop _),
-    "q32_distinct_cond" -> (q32DistinctCond _),
-    "q33_grouping_sets" -> (q33GroupingSets _),
-    "q34_bitwise_agg" -> (q34BitwiseAgg _),
-    "q35_sorted_list_agg" -> (q35SortedListAgg _),
-    "q36_argmax" -> (q36Argmax _),
-    "q37_unpivot" -> (q37Unpivot _),
-    "q38_nullsafe_join" -> (q38NullsafeJoin _),
-    "q39_try_cast" -> (q39TryCast _),
-    "q40_range_frame" -> (q40RangeFrame _),
-    "q41_multi_distinct" -> (q41MultiDistinct _),
-    "q44_set_ops_all" -> (q44SetOpsAll _),
-    "q46_offset" -> (q46Offset _),
-    "q49_ignore_nulls" -> (q49IgnoreNulls _),
-    "q50_histogram" -> (q50Histogram _),
-    "q51_funnel" -> (q51Funnel _),
-    "q53_lateral" -> (q53Lateral _),
-    "q54_cohort_retention" -> (q54CohortRetention _))
-
-  val oracles: Map[String, String] = Map(
-    "q21_scalar_subquery" -> q21Sql,
-    "q22_cube" -> q22Sql,
-    "q23_full_outer" -> q23Sql,
-    "q24_window_frames" -> q24Sql,
-    "q25_rank_ratios" -> q25Sql,
-    "q26_string_funcs" -> q26Sql,
-    "q27_regexp_extract" -> q27Sql,
-    "q28_date_arith" -> q28Sql,
-    "q29_explode_words" -> q29Sql,
-    "q30_exact_stats" -> q30Sql,
-    "q31_mode_top" -> q31Sql,
-    "q32_distinct_cond" -> q32Sql,
-    "q33_grouping_sets" -> q33Sql,
-    "q34_bitwise_agg" -> q34Sql,
-    "q35_sorted_list_agg" -> q35Sql,
-    "q36_argmax" -> q36Sql,
-    "q37_unpivot" -> q37Sql,
-    "q38_nullsafe_join" -> q38Sql,
-    "q39_try_cast" -> q39Sql,
-    "q40_range_frame" -> q40Sql,
-    "q41_multi_distinct" -> q41Sql,
-    "q44_set_ops_all" -> q44Sql,
-    "q46_offset" -> q46Sql,
-    "q49_ignore_nulls" -> q49Sql,
-    "q50_histogram" -> q50Sql,
-    "q51_funnel" -> q51Sql,
-    "q53_lateral" -> q53Sql,
-    "q54_cohort_retention" -> q54Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q21_scalar_subquery", q21ScalarSubquery, q21Sql),
+    Op("q22_cube", q22Cube, q22Sql),
+    Op("q23_full_outer", q23FullOuter, q23Sql),
+    Op("q24_window_frames", q24WindowFrames, q24Sql),
+    Op("q25_rank_ratios", q25RankRatios, q25Sql),
+    Op("q26_string_funcs", q26StringFuncs, q26Sql),
+    Op("q27_regexp_extract", q27RegexpExtract, q27Sql),
+    Op("q28_date_arith", q28DateArith, q28Sql),
+    Op("q29_explode_words", q29ExplodeWords, q29Sql),
+    Op("q30_exact_stats", q30ExactStats, q30Sql),
+    Op("q31_mode_top", q31ModeTop, q31Sql),
+    Op("q32_distinct_cond", q32DistinctCond, q32Sql),
+    Op("q33_grouping_sets", q33GroupingSets, q33Sql),
+    Op("q34_bitwise_agg", q34BitwiseAgg, q34Sql),
+    Op("q35_sorted_list_agg", q35SortedListAgg, q35Sql),
+    Op("q36_argmax", q36Argmax, q36Sql),
+    Op("q37_unpivot", q37Unpivot, q37Sql),
+    Op("q38_nullsafe_join", q38NullsafeJoin, q38Sql),
+    Op("q39_try_cast", q39TryCast, q39Sql),
+    Op("q40_range_frame", q40RangeFrame, q40Sql),
+    Op("q41_multi_distinct", q41MultiDistinct, q41Sql),
+    Op("q44_set_ops_all", q44SetOpsAll, q44Sql),
+    Op("q46_offset", q46Offset, q46Sql),
+    Op("q49_ignore_nulls", q49IgnoreNulls, q49Sql),
+    Op("q50_histogram", q50Histogram, q50Sql),
+    Op("q51_funnel", q51Funnel, q51Sql),
+    Op("q53_lateral", q53Lateral, q53Sql),
+    Op("q54_cohort_retention", q54CohortRetention, q54Sql))
 }

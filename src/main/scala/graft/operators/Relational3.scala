@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Pins, Tables}
+import graft.{Op, Pins, Tables}
 
 /** Third tranche of the relational surface (SURVEY.md §2a): OLS
   * regression aggregates and the higher-order array-function surface.
@@ -309,15 +309,9 @@ object Relational3 {
 
   val q58Sql: String = q58Body("orders")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q55_regression" -> (q55Regression _),
-    "q56_higher_order" -> (q56HigherOrder _),
-    "q57_scd2_merge" -> (q57Scd2 _),
-    "q58_recursive_chain" -> (q58Recursive _))
-
-  val oracles: Map[String, String] = Map(
-    "q55_regression" -> q55Sql,
-    "q56_higher_order" -> q56Sql,
-    "q57_scd2_merge" -> q57Sql,
-    "q58_recursive_chain" -> q58Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q55_regression", q55Regression, q55Sql),
+    Op("q56_higher_order", q56HigherOrder, q56Sql),
+    Op("q57_scd2_merge", q57Scd2, q57Sql),
+    Op("q58_recursive_chain", q58Recursive, q58Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Fourth tranche of the relational surface (SURVEY.md §2a):
   * interval concurrency, gaps-and-islands, ordered string
@@ -203,15 +203,9 @@ object Relational4 {
       |FROM li JOIN med USING (l_returnflag)
       |GROUP BY li.l_returnflag ORDER BY li.l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q60_concurrency" -> (q60Concurrency _),
-    "q61_islands" -> (q61Islands _),
-    "q62_listagg" -> (q62ListAgg _),
-    "q63_robust_stats" -> (q63RobustStats _))
-
-  val oracles: Map[String, String] = Map(
-    "q60_concurrency" -> q60Sql,
-    "q61_islands" -> q61Sql,
-    "q62_listagg" -> q62Sql,
-    "q63_robust_stats" -> q63Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q60_concurrency", q60Concurrency, q60Sql),
+    Op("q61_islands", q61Islands, q61Sql),
+    Op("q62_listagg", q62ListAgg, q62Sql),
+    Op("q63_robust_stats", q63RobustStats, q63Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Fifth relational tranche (SURVEY.md §2a): time-weighted averaging
   * and snapshot reconciliation. */
@@ -110,13 +110,9 @@ object Relational5 {
       |FROM cur c FULL OUTER JOIN snap s ON c.c_custkey = s.c_custkey
       |ORDER BY c_custkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q64_twap" -> (q64Twap _),
-    "q65_snapshot_diff" -> (q65SnapshotDiff _))
-
-  val oracles: Map[String, String] = Map(
-    "q64_twap" -> q64Sql,
-    "q65_snapshot_diff" -> q65Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q64_twap", q64Twap, q64Sql),
+    Op("q65_snapshot_diff", q65SnapshotDiff, q65Sql))
 }
 
 /** Two pipeline-admission operators that round out §2d: deterministic
@@ -213,11 +209,7 @@ object PipelineExtras {
        |    THEN 1 ELSE 0 END AS BIGINT) AS is_clean
        |FROM documents ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d50_split_assign" -> (d50SplitAssign _),
-    "t29_blocklist" -> (t29Blocklist _))
-
-  val oracles: Map[String, String] = Map(
-    "d50_split_assign" -> d50Sql,
-    "t29_blocklist" -> t29Sql)
+  val ops: Seq[Op] = Seq(
+    Op("d50_split_assign", d50SplitAssign, d50Sql),
+    Op("t29_blocklist", t29Blocklist, t29Sql))
 }

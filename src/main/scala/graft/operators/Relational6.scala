@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Pins, Tables}
+import graft.{Op, Pins, Tables}
 
 /** Sixth relational tranche (SURVEY.md §2a): the reporting-layer
   * analytics a warehouse user runs daily over the reference's data
@@ -525,25 +525,14 @@ object Relational6 {
        |FROM r ORDER BY f""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q66_pareto" -> (q66Pareto _),
-    "q67_yoy" -> (q67Yoy _),
-    "q68_cum_distinct" -> (q68CumDistinct _),
-    "q69_basket_pairs" -> (q69BasketPairs _),
-    "q70_drawdown" -> (q70Drawdown _),
-    "q71_median_histogram" -> (q71MedianHistogram _),
-    "q72_transitions" -> (q72Transitions _),
-    "q73_band_join" -> (q73BandJoin _),
-    "q74_percentiles_scale" -> (q74PercentileScale _))
-
-  val oracles: Map[String, String] = Map(
-    "q66_pareto" -> q66Sql,
-    "q67_yoy" -> q67Sql,
-    "q68_cum_distinct" -> q68Sql,
-    "q69_basket_pairs" -> q69Sql,
-    "q70_drawdown" -> q70Sql,
-    "q71_median_histogram" -> q71Sql,
-    "q72_transitions" -> q72Sql,
-    "q73_band_join" -> q73Sql,
-    "q74_percentiles_scale" -> q74Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q66_pareto", q66Pareto, q66Sql),
+    Op("q67_yoy", q67Yoy, q67Sql),
+    Op("q68_cum_distinct", q68CumDistinct, q68Sql),
+    Op("q69_basket_pairs", q69BasketPairs, q69Sql),
+    Op("q70_drawdown", q70Drawdown, q70Sql),
+    Op("q71_median_histogram", q71MedianHistogram, q71Sql),
+    Op("q72_transitions", q72Transitions, q72Sql),
+    Op("q73_band_join", q73BandJoin, q73Sql),
+    Op("q74_percentiles_scale", q74PercentileScale, q74Sql))
 }

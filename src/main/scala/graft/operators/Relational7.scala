@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Round-9 relational additions (SURVEY.md §2a): equi-depth
   * histograms, referential-integrity audit, weighted median. */
@@ -583,25 +583,14 @@ object Relational7 {
        |FROM snap a FULL OUTER JOIN delta b ON a.k = b.k
        |ORDER BY k""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q75_equidepth" -> (q75EquiDepth _),
-    "q76_ref_integrity" -> (q76RefIntegrity _),
-    "q77_weighted_median" -> (q77WeightedMedian _),
-    "q78_cdc_apply" -> (q78CdcApply _),
-    "q79_grouping_flags" -> (q79GroupingFlags _),
-    "q80_profile" -> (q80Profile _),
-    "q81_user_paths" -> (q81UserPaths _),
-    "q82_variant_props" -> (q82VariantProps _),
-    "q83_incremental_agg" -> (q83IncrementalAgg _))
-
-  val oracles: Map[String, String] = Map(
-    "q75_equidepth" -> q75Sql,
-    "q76_ref_integrity" -> q76Sql,
-    "q77_weighted_median" -> q77Sql,
-    "q78_cdc_apply" -> q78Sql,
-    "q79_grouping_flags" -> q79Sql,
-    "q80_profile" -> q80Sql,
-    "q81_user_paths" -> q81Sql,
-    "q82_variant_props" -> q82Sql,
-    "q83_incremental_agg" -> q83Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q75_equidepth", q75EquiDepth, q75Sql),
+    Op("q76_ref_integrity", q76RefIntegrity, q76Sql),
+    Op("q77_weighted_median", q77WeightedMedian, q77Sql),
+    Op("q78_cdc_apply", q78CdcApply, q78Sql),
+    Op("q79_grouping_flags", q79GroupingFlags, q79Sql),
+    Op("q80_profile", q80Profile, q80Sql),
+    Op("q81_user_paths", q81UserPaths, q81Sql),
+    Op("q82_variant_props", q82VariantProps, q82Sql),
+    Op("q83_incremental_agg", q83IncrementalAgg, q83Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Invariant, Op, Tables}
 
 /** Round-11 relational additions (SURVEY.md §2a): in-plan Bloom-filter
   * join pruning and the nearest-neighbor as-of join. */
@@ -250,12 +250,10 @@ object Relational8 {
     * (hll_sketch_agg — Spark-native, codegen'd, mergeable by
     * construction); refresh is hll_union on the BOUNDED sketch
     * relation — O(types · sketch bytes), never a re-scan of history —
-    * and the spec pins merge(base, delta) == one-shot full-corpus
+    * and [[q87Check]] holds merge(base, delta) == one-shot full-corpus
     * sketch (the statement that makes the refresh trustworthy) plus
-    * estimate-vs-exact error. DuckDB's approx_distinct uses a
-    * different sketch, so this is a declared rows-only entry (q12's
-    * contract); the exact_full column carries the ground truth in the
-    * report itself. */
+    * the estimate's error against the exact_full column. DuckDB's
+    * approx_distinct uses a different sketch, so no SQL oracle. */
   def q87HllMerge(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("event_id"))
@@ -276,10 +274,28 @@ object Relational8 {
           .as("est_merged"),
         expr("hll_sketch_estimate(sk_full)").as("est_full"),
         col("exact_full"),
+        // a union's estimate uses the composite estimator, a streamed
+        // sketch's the HIP one, so the full sketch is read through a
+        // union too: at sf0.1 the two unions serialize byte-identical,
+        // yet est_merged reads 1488 against est_full's 1494
         (expr("hll_sketch_estimate(hll_union(sk_base, sk_delta))") ===
-          expr("hll_sketch_estimate(sk_full)")).as("merge_consistent"))
+          expr("hll_sketch_estimate(hll_union(sk_full, sk_full))"))
+          .as("merge_consistent"))
       .orderBy(col("event_type"))
   }
+
+  /** q87's check: merging is lossless on every row, and `est_full` is
+    * within 3 standard errors (1.04/√4096, hll_sketch_agg's default
+    * lgConfigK 12) of the exact count, which `exact_full` must be. */
+  val q87Check: Invariant = Invariant("merge lossless, estimate within " +
+    "3 HLL standard errors", (spark, dir, res) => {
+      val exact = Tables.load(spark, dir, "events")
+        .groupBy(col("event_type"))
+        .agg(count_distinct(col("user_id")).as("exact"))
+      Invariant.failures(res.join(exact, Seq("event_type"), "full"),
+        col("merge_consistent") && col("exact_full") === col("exact") &&
+          abs(col("est_full") - col("exact")) <= col("exact") * (3 * 1.04 / 64))
+    })
 
   // ---- q88: winsorized robust aggregation ---------------------------
 
@@ -351,16 +367,10 @@ object Relational8 {
       |FROM v JOIN cuts USING (rf)
       |GROUP BY v.rf ORDER BY v.rf""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q84_bloom_prune" -> (q84BloomPrune _),
-    "q85_asof_nearest" -> (q85AsofNearest _),
-    "q86_exists_decorrelated" -> (q86ExistsDecorrelated _),
-    "q87_hll_merge" -> (q87HllMerge _),
-    "q88_winsorize" -> (q88Winsorize _))
-
-  val oracles: Map[String, String] = Map(
-    "q84_bloom_prune" -> q84Sql,
-    "q85_asof_nearest" -> q85Sql,
-    "q86_exists_decorrelated" -> q86Sql,
-    "q88_winsorize" -> q88Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q84_bloom_prune", q84BloomPrune, q84Sql),
+    Op("q85_asof_nearest", q85AsofNearest, q85Sql),
+    Op("q86_exists_decorrelated", q86ExistsDecorrelated, q86Sql),
+    Op("q87_hll_merge", q87HllMerge, q87Check),
+    Op("q88_winsorize", q88Winsorize, q88Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Relational surface, ninth installment (SURVEY.md §2a):
   * time-series LINEAR interpolation (q89) and sequence-pattern
@@ -963,23 +963,13 @@ object Relational9 {
        |  consequent
        |LIMIT $Apriori3TopK""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q89_interpolate" -> (q89Interpolate _),
-    "q90_seq_match" -> (q90SeqMatch _),
-    "q91_attribution" -> (q91Attribution _),
-    "q92_ab_test" -> (q92AbTest _),
-    "q93_file_binpack" -> (q93FileBinpack _),
-    "q94_rfm" -> (q94Rfm _),
-    "q95_assoc_rules" -> (q95AssocRules _),
-    "q96_apriori3" -> (q96Apriori3 _))
-
-  val oracles: Map[String, String] = Map(
-    "q89_interpolate" -> q89Sql,
-    "q90_seq_match" -> q90Sql,
-    "q91_attribution" -> q91Sql,
-    "q92_ab_test" -> q92Sql,
-    "q93_file_binpack" -> q93Sql,
-    "q94_rfm" -> q94Sql,
-    "q95_assoc_rules" -> q95Sql,
-    "q96_apriori3" -> q96Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q89_interpolate", q89Interpolate, q89Sql),
+    Op("q90_seq_match", q90SeqMatch, q90Sql),
+    Op("q91_attribution", q91Attribution, q91Sql),
+    Op("q92_ab_test", q92AbTest, q92Sql),
+    Op("q93_file_binpack", q93FileBinpack, q93Sql),
+    Op("q94_rfm", q94Rfm, q94Sql),
+    Op("q95_assoc_rules", q95AssocRules, q95Sql),
+    Op("q96_apriori3", q96Apriori3, q96Sql))
 }

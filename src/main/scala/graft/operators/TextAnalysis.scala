@@ -1028,8 +1028,8 @@ object TextAnalysis {
     * now computes each doc's (n, n_distinct, neg_ln_ni_sum) triple in
     * one codegen'd pass (bit-identical by construction AND by
     * EntropyKernelSpec's corpus pin), so the plan is scan → project →
-    * sort: zero aggregate exchanges, no row blowup. Same rows, same
-    * values — the DuckDB oracle is untouched. */
+    * sort: zero aggregate exchanges, no row blowup. `entropy` is
+    * ent_num_micro / n rounded half-up in integers, in both engines. */
   def t26CharEntropy(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
       .select(col("doc_id"), trim(col("text")).as("t"))
@@ -1047,12 +1047,17 @@ object TextAnalysis {
         // exactly by the oracle)
         (col("n").cast("long") *
           round(log(col("n").cast("double")) * lit(1e6), 0).cast("long")
-          + col("neg_ln_ni_sum")).as("ent_num_micro"),
-        round((col("n").cast("long") *
-          round(log(col("n").cast("double")) * lit(1e6), 0).cast("long")
-          + col("neg_ln_ni_sum")).cast("double")
-          / col("n").cast("double") / 1e6, 6).as("entropy"))
+          + col("neg_ln_ni_sum")).as("ent_num_micro"))
+      .withColumn("entropy", t26Entropy)
       .orderBy(col("doc_id"))
+
+  /** t26's entropy from its integer numerator: half-up integer division
+    * to micro-units, then one exact scale, as `t26Sql` computes it. A
+    * final round(double, 6) differs between the engines at an exact
+    * half: Spark rounds the shortest decimal form, DuckDB the binary
+    * value. */
+  def t26Entropy: Column = expr(
+    "CAST((2 * ent_num_micro + n_bigrams) div (2 * n_bigrams) AS DOUBLE)") / 1e6
 
   val t26Sql: String =
     """WITH bg AS (
@@ -1072,9 +1077,9 @@ object TextAnalysis {
       |SELECT doc_id, n AS n_bigrams, n_distinct,
       |  n * CAST(ROUND(ln(CAST(n AS DOUBLE)) * 1000000) AS BIGINT)
       |    + neg_ln_ni_sum AS ent_num_micro,
-      |  ROUND(CAST(n * CAST(ROUND(ln(CAST(n AS DOUBLE)) * 1000000)
-      |      AS BIGINT) + neg_ln_ni_sum AS DOUBLE)
-      |    / n / 1000000.0, 6) AS entropy
+      |  CAST((2 * (n * CAST(ROUND(ln(CAST(n AS DOUBLE)) * 1000000)
+      |      AS BIGINT) + neg_ln_ni_sum) + n) // (2 * n) AS DOUBLE)
+      |    / 1000000.0 AS entropy
       |FROM agg ORDER BY doc_id""".stripMargin
 
   val t24Sql: String = {

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Op, Tables}
 
 /** Interchange formats (SURVEY.md §2a): JSONL and CSV ingest/egress.
   *
@@ -558,31 +558,17 @@ object Interchange {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f01_jsonl_roundtrip" -> (f01JsonlRoundTrip _),
-    "f02_csv_roundtrip" -> (f02CsvRoundTrip _),
-    "f03_orc_roundtrip" -> (f03OrcRoundTrip _),
-    "f04_partition_prune" -> (f04PartitionedPrune _),
-    "f05_compaction" -> (f05Compact _),
-    "f06_tsv_roundtrip" -> (f06TsvRoundTrip _),
-    "f07_fixed_width_roundtrip" -> (f07FixedWidthRoundTrip _),
-    "f08_schema_evolution" -> (f08SchemaEvolution _),
-    "f09_codec_matrix" -> (f09CodecMatrix _),
-    "f10_partition_overwrite" -> (f10PartitionOverwrite _),
-    "f11_bucketed_join" -> (f11BucketedJoin _),
-    "f12_gzip_jsonl" -> (f12GzipJsonl _))
-
-  val oracles: Map[String, String] = Map(
-    "f01_jsonl_roundtrip" -> f01Sql,
-    "f02_csv_roundtrip" -> f02Sql,
-    "f03_orc_roundtrip" -> f03Sql,
-    "f04_partition_prune" -> f04Sql,
-    "f05_compaction" -> f05Sql,
-    "f06_tsv_roundtrip" -> f06Sql,
-    "f07_fixed_width_roundtrip" -> f07Sql,
-    "f08_schema_evolution" -> f08Sql,
-    "f09_codec_matrix" -> f09Sql,
-    "f10_partition_overwrite" -> f10Sql,
-    "f11_bucketed_join" -> f11Sql,
-    "f12_gzip_jsonl" -> f12Sql)
+  val ops: Seq[Op] = Seq(
+    Op("f01_jsonl_roundtrip", f01JsonlRoundTrip, f01Sql),
+    Op("f02_csv_roundtrip", f02CsvRoundTrip, f02Sql),
+    Op("f03_orc_roundtrip", f03OrcRoundTrip, f03Sql),
+    Op("f04_partition_prune", f04PartitionedPrune, f04Sql),
+    Op("f05_compaction", f05Compact, f05Sql),
+    Op("f06_tsv_roundtrip", f06TsvRoundTrip, f06Sql),
+    Op("f07_fixed_width_roundtrip", f07FixedWidthRoundTrip, f07Sql),
+    Op("f08_schema_evolution", f08SchemaEvolution, f08Sql),
+    Op("f09_codec_matrix", f09CodecMatrix, f09Sql),
+    Op("f10_partition_overwrite", f10PartitionOverwrite, f10Sql),
+    Op("f11_bucketed_join", f11BucketedJoin, f11Sql),
+    Op("f12_gzip_jsonl", f12GzipJsonl, f12Sql))
 }

@@ -8,9 +8,9 @@ class Relational2Spec extends AnyFunSuite {
   import SparkTestSession.{sf, spark}
 
   test("every second-tranche query runs non-empty at sf0.001") {
-    Relational2.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.count() > 0, s"$name returned no rows")
+    Relational2.ops.foreach { op =>
+      val df = op.run(spark, sf)
+      assert(df.count() > 0, s"${op.key} returned no rows")
     }
   }
 

@@ -216,6 +216,16 @@ class Relational3Spec extends AnyFunSuite {
     assert(r(2L)._3 > 0.6 && r(2L)._3 < 0.6932, r(2L)._3.toString)
   }
 
+  test("t26 entropy rounds an exact half up, as its oracle does") {
+    import graft.operators.TextAnalysis
+    // a bench-corpus document: ent_num_micro / n_bigrams is exactly
+    // 4046126.5 micro-nats; its double just below the half once made
+    // DuckDB's round(…, 6) read 4.046126 against Spark's 4.046127
+    val e = Seq((647380240L, 160L)).toDF("ent_num_micro", "n_bigrams")
+      .select(TextAnalysis.t26Entropy).head.getDouble(0)
+    assert(e == 4.046127)
+  }
+
   test("as-of joins resolve duplicate (key, ts) right rows " +
       "deterministically") {
     import graft.operators.AsOf

@@ -24,9 +24,9 @@ class RelationalSpec extends AnyFunSuite {
   import SparkTestSession.{sf, spark}
 
   test("every relational query runs non-empty at sf0.001") {
-    Relational.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.count() > 0, s"$name returned no rows")
+    Relational.ops.foreach { op =>
+      val df = op.run(spark, sf)
+      assert(df.count() > 0, s"${op.key} returned no rows")
     }
   }
 

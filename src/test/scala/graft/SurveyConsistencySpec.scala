@@ -34,11 +34,4 @@ class SurveyConsistencySpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"registered but not in the survey: ${missing.toSeq.sorted}")
   }
-
-  test("every oracle key has a registered query") {
-    val orphans = SparkEntry.oracleSql.keySet
-      .filterNot(SparkEntry.queries.keySet)
-    assert(orphans.isEmpty,
-      s"oracle without a query: ${orphans.toSeq.sorted}")
-  }
 }
