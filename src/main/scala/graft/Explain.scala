@@ -1,7 +1,11 @@
 package graft
 
 /** Plan-audit utility: print the formatted physical plan of one or
-  * more registered queries without executing them.
+  * more registered queries without executing the plans themselves.
+  * Building an ANN key's DataFrame still runs Spark jobs: k-means
+  * training ([[graft.operators.Similarity.kmeansGrouped]]) collects
+  * each round's sums, and a persisted-index key's
+  * `Artifact.ensure` builds its index when none is committed.
   *
   * Run: `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Explain q01_pricing_summary ..."`
   *

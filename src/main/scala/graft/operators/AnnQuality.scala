@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Pins
@@ -86,36 +85,45 @@ object AnnQuality {
   /** Exact top-k ground truth: every query against every corpus
     * vector. Quadratic by design — this is the calibration baseline
     * (the d11 role), bounded to the planted relation. */
-  def bruteTopK(queries: DataFrame, cands: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    cands.crossJoin(broadcast(queries))
-      .withColumn("dist", Similarity.qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+  def bruteTopK(queries: DataFrame, cands: DataFrame, k: Int): DataFrame =
+    Similarity.rankTop(cands.crossJoin(broadcast(queries))
+        .withColumn("dist", Similarity.qDist(col("q_qv"), col("qv"))),
+      "dist", k, col("q_id"), col("vec_id"))
       .select(col("q_id"), col("vec_id"))
+
+  /** The planted (corpus, queries) pair and its exact top-[[RecallK]]
+    * truth. */
+  private def planted(spark: SparkSession)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val corp = corpus(spark).select(col("vec_id"), col("qv"))
+    val qs = queries(spark)
+    (corp, qs, bruteTopK(qs, corp, RecallK))
   }
+
+  /** The planted corpus's k-means centroids, seeded by one member per
+    * cluster (the first [[Clusters]] ids) and trained on every vector
+    * of `corp`. */
+  private def trained(corp: DataFrame): DataFrame =
+    Similarity.kmeansQuantized(corp,
+      Similarity.seeds(corp, col("vec_id") < Clusters.toLong),
+      Similarity.KmIters)
+
+  /** recall@[[RecallK]]: the share of `truth`'s (q_id, vec_id) rows
+    * that `found` returns. */
+  private def recall(found: DataFrame, truth: DataFrame): Double =
+    found.select(col("q_id"), col("vec_id"))
+      .join(truth, Seq("q_id", "vec_id"), "left_semi")
+      .count() / (QueryN * RecallK).toDouble
 
   /** recall@[[RecallK]] per nprobe: train ONCE (the centroids are a
     * bounded local relation), sweep the probe width over the search
     * leg only. Returns (nprobe, recall) with recall ∈ [0, 1]. */
   def recallCurve(spark: SparkSession,
       nprobes: Seq[Int] = NProbes): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val init = corp.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(
-      corp, init, Similarity.KmIters)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    nprobes.map { np =>
-      val hits = Similarity.ivfSearchTrained(qs, corp, cents, np, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (np, hits / denom)
-    }
+    val (corp, qs, truth) = planted(spark)
+    val cents = trained(corp)
+    nprobes.map { np => (np, recall(
+      Similarity.ivfSearchTrained(qs, corp, cents, np, RecallK), truth)) }
   }
 
   /** Beam widths for the d84 nav-graph sweep. */
@@ -131,25 +139,14 @@ object AnnQuality {
     * buys recall at O(beam · NavK) scored candidates per hop. */
   def navRecallCurve(spark: SparkSession,
       beams: Seq[Int] = NavBeams): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val init = corp.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(
-      corp, init, Similarity.KmIters)
+    val (corp, qs, truth) = planted(spark)
+    val cents = trained(corp)
     val (edges, entries, _) = Similarity.navGraphParts(corp, cents)
     val edgesC = Pins.checkpoint(edges)
     val entriesC = Pins.checkpoint(entries)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    try beams.map { b =>
-      val hits = Similarity.navBeamWalk(qs, corp, cents, edgesC,
-        entriesC, b, Similarity.NavHops, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (b, hits / denom)
-    } finally { Pins.unpin(edgesC); Pins.unpin(entriesC) }
+    try beams.map { b => (b, recall(Similarity.navBeamWalk(qs, corp,
+      cents, edgesC, entriesC, b, Similarity.NavHops, RecallK), truth)) }
+    finally { Pins.unpin(edgesC); Pins.unpin(entriesC) }
   }
 
   /** recall@[[RecallK]] of the beam walk over the INSERTED graph
@@ -164,16 +161,12 @@ object AnnQuality {
     * before trusting d94 between rebuilds. */
   def insertRecallCurve(spark: SparkSession,
       beams: Seq[Int] = NavBeams): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
+    val (corp, qs, truth) = planted(spark)
     val base = corp.filter(col("vec_id") < Clusters.toLong ||
       col("vec_id") % Similarity.DeltaMod =!= 0)
     val delta = corp.filter(col("vec_id") >= Clusters.toLong &&
       col("vec_id") % Similarity.DeltaMod === 0)
-    val init = base.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(
-      base, init, Similarity.KmIters)
+    val cents = trained(base)
     val (bEdges, bEntries, bPosted) =
       Similarity.navGraphParts(base, cents)
     val cks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -183,16 +176,9 @@ object AnnQuality {
       Similarity.mergeNavEdges(bEdges, dEdges, redges))
     cks.foreach(Pins.unpin) // merged is materialized past them
     val entriesC = Pins.checkpoint(bEntries)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    try beams.map { b =>
-      val hits = Similarity.navBeamWalk(qs, corp, cents, merged,
-        entriesC, b, Similarity.NavHops, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (b, hits / denom)
-    } finally { Pins.unpin(merged); Pins.unpin(entriesC) }
+    try beams.map { b => (b, recall(Similarity.navBeamWalk(qs, corp,
+      cents, merged, entriesC, b, Similarity.NavHops, RecallK), truth)) }
+    finally { Pins.unpin(merged); Pins.unpin(entriesC) }
   }
 
   /** recall@[[RecallK]] of the HIERARCHICAL walk (d86) per beam
@@ -202,31 +188,11 @@ object AnnQuality {
     * entries at equal beam". */
   def hnswRecallCurve(spark: SparkSession,
       beams: Seq[Int] = NavBeams): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val init = corp.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(
-      corp, init, Similarity.KmIters)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    beams.map { b =>
-      val hits = Similarity.hnswWalk(qs, corp, cents, b,
-        Similarity.NavHops, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (b, hits / denom)
-    }
+    val (corp, qs, truth) = planted(spark)
+    val cents = trained(corp)
+    beams.map { b => (b, recall(Similarity.hnswWalk(qs, corp, cents, b,
+      Similarity.NavHops, RecallK), truth)) }
   }
-
-  private def pqSliced(df: DataFrame, idCol: String): DataFrame = df
-    .select(col(idCol),
-      explode(sequence(lit(0L), lit(Similarity.PqSubspaces - 1L)))
-        .as("grp"),
-      col("qv"))
-    .withColumn("qv", expr(
-      s"slice(qv, grp * ${Similarity.PqSubDim} + 1, ${Similarity.PqSubDim})"))
 
   /** recall@[[RecallK]] for the FULL d28 composition (IVF probe + PQ
     * codes + ADC ranking) vs the same exact-brute-force truth: the
@@ -238,54 +204,24 @@ object AnnQuality {
   def ivfpqRecallCurve(spark: SparkSession,
       nprobes: Seq[Int] = NProbes,
       nCodes: Int = Similarity.PqCodes): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val init = corp.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(corp, init, Similarity.KmIters)
-    val assigned = corp.join(broadcast(cents))
-      .withColumn("dist", Similarity.qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"))
-      .select(col("vec_id"), col("best.cent_id").as("cell"))
-    val slicedC = pqSliced(corp, "vec_id")
-    val binit = slicedC.filter(col("vec_id") < nCodes.toLong)
-      .select(col("grp"), col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val book = Similarity.kmeansGrouped(slicedC, binit, Similarity.KmIters)
-    val codes = slicedC.join(broadcast(book), Seq("grp"))
-      .withColumn("dist", Similarity.qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"), col("grp"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"))
-      .select(col("vec_id"), col("grp"), col("best.cent_id").as("code"))
-    val table = pqSliced(
-      qs.select(col("q_id"), col("q_qv").as("qv")), "q_id")
-      .join(broadcast(book), Seq("grp"))
-      .select(col("q_id"), col("grp"), col("cent_id").as("code"),
-        Similarity.qDist(col("qv"), col("qc")).as("qd"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cent_id"))
-    val probesAll = qs.join(broadcast(cents))
-      .withColumn("dist", Similarity.qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wp))
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("vec_id"))
+    val (corp, qs, truth) = planted(spark)
+    val cents = trained(corp)
+    val assigned = Similarity.ivfAssign(corp, cents)
+    val slicedC = Similarity.pqSlices(corp, "grp", col("vec_id"))
+    val book = Similarity.kmeansGrouped(slicedC,
+      slicedC.filter(col("vec_id") < nCodes.toLong)
+        .select(col("grp"), col("vec_id").as("cent_id"), col("qv").as("qc")),
+      Similarity.KmIters)
+    val codes = Similarity.groupedCodes(corp, book)
+    val table = Similarity.adcTable(qs.select(col("q_id"),
+      col("q_qv").as("qv")), book, "grp", "cent_id", col("q_id"))
     nprobes.map { np =>
-      val probes = probesAll.filter(col("rn") <= np)
-        .select(col("q_id"), col("cent_id").as("cell"))
-      val hits = broadcast(probes).join(assigned, Seq("cell"))
-        .select(col("q_id"), col("vec_id"))
-        .join(codes, Seq("vec_id"))
-        .join(broadcast(table), Seq("q_id", "grp", "code"))
-        .groupBy(col("q_id"), col("vec_id"))
-        .agg(sum(col("qd")).cast("long").as("adc"))
-        .withColumn("rank", row_number().over(wr))
-        .filter(col("rank") <= RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (np, hits / denom)
+      (np, recall(Similarity.adcRank(
+        Similarity.probed(qs, cents, np, assigned)
+          .select(col("q_id"), col("vec_id"))
+          .join(codes, Seq("vec_id"))
+          .join(broadcast(table), Seq("q_id", "sub", "code")), RecallK),
+        truth))
     }
   }
 
@@ -301,24 +237,12 @@ object AnnQuality {
   def residualRecallCurve(spark: SparkSession,
       nprobes: Seq[Int] = NProbes,
       nCodes: Int = Similarity.PqCodes): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val init = corp.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(corp, init, Similarity.KmIters)
+    val (corp, qs, truth) = planted(spark)
+    val cents = trained(corp)
     val resid = Similarity.cellResiduals(corp, cents)
     val book = Similarity.trainResidualBook(resid, nCodes.toLong)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    nprobes.map { np =>
-      val hits = Similarity.residualAdcScan(
-        qs.select(col("q_id"), col("q_qv")), resid, cents, book,
-        np, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (np, hits / denom)
-    }
+    nprobes.map { np => (np, recall(Similarity.residualAdcScan(
+      qs, resid, cents, book, np, RecallK), truth)) }
   }
 
   /** Shortlist widths / projection widths for the projected-rerank
@@ -340,24 +264,14 @@ object AnnQuality {
       rs: Seq[Int] = Seq(20, 50, 100),
       nCodes: Int = Similarity.PqCodes,
       np: Int = Similarity.NProbe): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val init = corp.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(corp, init, Similarity.KmIters)
+    val (corp, qs, truth) = planted(spark)
+    val cents = trained(corp)
     val resid = Similarity.cellResiduals(corp, cents)
     val book = Similarity.trainResidualBook(resid, nCodes.toLong)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
     rs.map { r =>
-      val short = Similarity.residualAdcScan(
-        qs.select(col("q_id"), col("q_qv")), resid, cents, book, np, r)
+      val short = Similarity.residualAdcScan(qs, resid, cents, book, np, r)
         .select(col("q_id"), col("vec_id"))
-      val hits = Similarity.exactRerank(short, corp, qs, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (r, hits / denom)
+      (r, recall(Similarity.exactRerank(short, corp, qs, RecallK), truth))
     }
   }
 
@@ -373,17 +287,9 @@ object AnnQuality {
     * distance concentration, nothing for the projection to keep). */
   def projectedRecallCurve(spark: SparkSession,
       rs: Seq[Int] = RerankRs): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    rs.map { r =>
-      val hits = Similarity.projectedRerank(qs, corp, r, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (r, hits / denom)
-    }
+    val (corp, qs, truth) = planted(spark)
+    rs.map { r => (r, recall(
+      Similarity.projectedRerank(qs, corp, r, RecallK), truth)) }
   }
 
   /** The other lever: recall vs PROJECTION width at fixed shortlist
@@ -391,17 +297,9 @@ object AnnQuality {
     * (the dims↔storage tradeoff knob). */
   def projectedDimsCurve(spark: SparkSession,
       dims: Seq[Int] = ProjDims, r: Int = 50): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    dims.map { d =>
-      val hits = Similarity.projectedRerank(qs, corp, r, RecallK, d)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (d, hits / denom)
-    }
+    val (corp, qs, truth) = planted(spark)
+    dims.map { d => (d, recall(
+      Similarity.projectedRerank(qs, corp, r, RecallK, d), truth)) }
   }
 
   /** MRL serving sweep widths (prefix dims) — 64 is the exactness
@@ -417,33 +315,17 @@ object AnnQuality {
   def mrlRerankCurve(spark: SparkSession,
       rs: Seq[Int] = MrlRs, width: Int = Similarity.MrlWidth)
       : Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    rs.map { r =>
-      val hits = Similarity.prefixRerank(qs, corp, r, RecallK, width)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (r, hits / denom)
-    }
+    val (corp, qs, truth) = planted(spark)
+    rs.map { r => (r, recall(
+      Similarity.prefixRerank(qs, corp, r, RecallK, width), truth)) }
   }
 
   /** The width leg of the d67 surface at fixed R. */
   def mrlWidthCurve(spark: SparkSession,
       widths: Seq[Int] = MrlWidths, r: Int = 50): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    widths.map { d =>
-      val hits = Similarity.prefixRerank(qs, corp, r, RecallK, d)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (d, hits / denom)
-    }
+    val (corp, qs, truth) = planted(spark)
+    widths.map { d => (d, recall(
+      Similarity.prefixRerank(qs, corp, r, RecallK, d), truth)) }
   }
 
   /** d88 recall curve: recall@[[RecallK]] of the 1-bit Hamming
@@ -458,17 +340,9 @@ object AnnQuality {
     * signatures stop being free. */
   def binaryRerankCurve(spark: SparkSession,
       rs: Seq[Int] = RerankRs): Seq[(Int, Double)] = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    rs.map { r =>
-      val hits = Similarity.binaryRerank(qs, corp, r, RecallK)
-        .select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count()
-      (r, hits / denom)
-    }
+    val (corp, qs, truth) = planted(spark)
+    rs.map { r => (r, recall(
+      Similarity.binaryRerank(qs, corp, r, RecallK), truth)) }
   }
 
   /** d91 fusion evidence: recall@[[RecallK]] of the BORDA-FUSED
@@ -478,34 +352,14 @@ object AnnQuality {
     * Returns (hammingOnly, prefixOnly, fusedByR). */
   def fusionRecallCurve(spark: SparkSession,
       rs: Seq[Int] = RerankRs): (Double, Double, Seq[(Int, Double)]) = {
-    val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val qs = queries(spark)
-    val truth = bruteTopK(qs, corp, RecallK)
-    val denom = (QueryN * RecallK).toDouble
-    def recallOf(sel: org.apache.spark.sql.DataFrame): Double =
-      sel.select(col("q_id"), col("vec_id"))
-        .join(truth, Seq("q_id", "vec_id"), "left_semi")
-        .count() / denom
+    val (corp, qs, truth) = planted(spark)
     val (qBits, cBits) = Similarity.binarySignatures(qs, corp)
-    val wH = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val hammingOnly = recallOf(cBits.crossJoin(broadcast(qBits))
-      .withColumn("hamming",
-        expr("bit_count(bits ^ q_bits)").cast("long"))
-      .withColumn("rnk", row_number().over(wH))
-      .filter(col("rnk") <= RecallK))
-    val wP = Window.partitionBy(col("q_id"))
-      .orderBy(col("pdist"), col("vec_id"))
-    val prefixOnly = recallOf(corp
-      .withColumn("pv", slice(col("qv"), 1, Similarity.MrlWidth))
-      .crossJoin(broadcast(qs
-        .withColumn("q_pv", slice(col("q_qv"), 1, Similarity.MrlWidth))
-        .select(col("q_id"), col("q_pv"))))
-      .withColumn("pdist", Similarity.qDist(col("q_pv"), col("pv")))
-      .withColumn("rnk", row_number().over(wP))
-      .filter(col("rnk") <= RecallK))
+    val hammingOnly = recall(Similarity.hammingRanks(qBits, cBits)
+      .filter(col("rnk") <= RecallK), truth)
+    val prefixOnly = recall(Similarity.prefixRanks(qs, corp)
+      .filter(col("rnk") <= RecallK), truth)
     val fused = rs.map { r =>
-      (r, recallOf(Similarity.rankFusion(qs, corp, r, RecallK)))
+      (r, recall(Similarity.rankFusion(qs, corp, r, RecallK), truth))
     }
     (hammingOnly, prefixOnly, fused)
   }
@@ -559,14 +413,7 @@ object AnnQuality {
     * the planted corpus — the d66 blocking, audit-side. */
   private def cellRanked(spark: SparkSession): DataFrame = {
     val corp = corpus(spark).select(col("vec_id"), col("qv"))
-    val init = corp.filter(col("vec_id") < Clusters.toLong)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = Similarity.kmeansQuantized(corp, init, Similarity.KmIters)
-    corp.join(broadcast(cents))
-      .withColumn("dist", Similarity.qDist(col("qv"), col("qc")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("dist"), col("cent_id"))))
+    Similarity.cellRanks(corp, trained(corp), "vec_id", "qv")
       .select(col("vec_id"), col("cent_id").as("cell"), col("rn"))
   }
 

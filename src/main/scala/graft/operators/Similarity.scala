@@ -833,23 +833,16 @@ object Similarity {
     * best graph, not the historical 8-bit banding; round-9 verdict
     * item 4). */
   private[operators] def cellKnnEdges(spark: SparkSession, dir: String): DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val init = qz.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
+    val qz = quantized(spark, dir)
     val cents = kmeansQuantized(qz.filter(col("vec_id") >= IvfCells),
-      init, KmIters)
+      seeds(qz, col("vec_id") < IvfCells), KmIters)
     // NOTE (r16): checkpointing the (vec_id, cell, rn) assignment to
     // share it between the posting and probe consumers was tried and
     // MEASURED SLOWER (d66 isolated 7.4→9.5 s vs this form; d74
     // regressed ~1.7 s) — AQE's runtime exchange reuse already dedups
     // the assignment-window subtree here, and the eager checkpoint
     // only added a materialization barrier (the q94 persist lesson).
-    val ranked = qz.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("dist"), col("cent_id"))))
+    val ranked = cellRanks(qz, cents, "vec_id", "qv")
     val posted = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("cent_id").as("cell"))
     val capped = posted.groupBy(col("cell"))
@@ -1073,14 +1066,13 @@ object Similarity {
   /** Core of d19 on any codebook (code_id, c_emb) × vectors
     * (vec_id, embedding) pair of relations. */
   def pqAssign(codebook: DataFrame, vecs: DataFrame): DataFrame =
-    vecs.join(broadcast(codebook))
+    nearest(vecs.join(broadcast(codebook))
       .select(col("vec_id"), col("code_id"), col("embedding"),
         col("c_emb"),
         explode(sequence(lit(0), lit(PqSubspaces - 1))).as("subspace"))
       .withColumn("dist", graft.functions.Vectors.quantizedSubL2(
-        col("embedding"), col("c_emb"), col("subspace"), PqSubDim))
-      .groupBy(col("vec_id"), col("subspace"))
-      .agg(min(struct(col("dist"), col("code_id"))).as("best"))
+        col("embedding"), col("c_emb"), col("subspace"), PqSubDim)),
+      "code_id", "vec_id", "subspace")()
       .select(col("vec_id"), col("subspace"),
         col("best.code_id").as("code"), col("best.dist").as("dist"))
       .orderBy(col("vec_id"), col("subspace"))
@@ -1204,14 +1196,149 @@ object Similarity {
   /** Assignment histogram under a quantized codebook: one row per
     * non-empty cell with its member count and total distortion. */
   def qAssignHistogram(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"))
+    nearest(scored(vecs, cents), "cent_id", "vec_id")()
       .groupBy(col("best.cent_id").as("cell"))
       .agg(count(lit(1)).as("n_vectors"),
         sum(col("best.dist")).cast("long").as("total_dist"))
       .orderBy(col("cell"))
+
+  // ---- the ANN core: split → train → assign → probe → rank ----------
+  //
+  // Every IVF/PQ query below composes these legs. Each leg's tie-break
+  // is part of the oracle contract (AnnCoreSpec pins them on exact
+  // distance ties): assign and probe prefer the smaller cent_id /
+  // code_id, rank the smaller vec_id.
+
+  /** split: the embeddings on the quantized grid, (vec_id, qv). */
+  def quantized(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "embeddings")
+      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
+
+  /** split: the query side (q_id, q_qv), vec_id < [[NumQueries]]. */
+  def querySide(qz: DataFrame): DataFrame =
+    qz.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
+
+  /** split: the candidates, every vector past the queries. */
+  def candidates(qz: DataFrame): DataFrame =
+    qz.filter(col("vec_id") >= NumQueries)
+
+  /** train: the rows `pick` selects as k-means seeds (cent_id, qc). */
+  def seeds(qz: DataFrame, pick: Column): DataFrame =
+    qz.filter(pick).select(col("vec_id").as("cent_id"), col("qv").as("qc"))
+
+  /** train: IVF centroids over `cells` cells — seeded by the first
+    * `cells` candidates, trained on the candidates past them that pass
+    * `keep`; `bounded` trains on only the first [[ProvTrainPerCell]]
+    * per cell of those (the sample bound of the provisioned builds). */
+  def trainIvf(qz: DataFrame, cells: Long = IvfCells,
+      bounded: Boolean = false, keep: Column = lit(true)): DataFrame = {
+    val past = NumQueries + cells
+    val train = col("vec_id") >= past &&
+      (if (bounded) col("vec_id") < past + ProvTrainPerCell * cells
+       else lit(true))
+    kmeansQuantized(qz.filter(train && keep),
+      seeds(qz, col("vec_id") >= NumQueries && col("vec_id") < past),
+      KmIters)
+  }
+
+  /** Every (row, centroid) pair of `vecs` × broadcast `cents` with its
+    * quantized distance `dist` between `v` and qc. */
+  def scored(vecs: DataFrame, cents: DataFrame, v: String = "qv")
+      : DataFrame =
+    vecs.join(broadcast(cents)).withColumn("dist", qDist(col(v), col("qc")))
+
+  /** assign: per `keys` group of a scored relation, `best` = the
+    * smallest (dist, `id`) — ties to the smaller id; each `carry`
+    * column rides along by first(). */
+  def nearest(scored: DataFrame, id: String, keys: String*)
+      (carry: String*): DataFrame =
+    scored.groupBy(keys.map(col): _*)
+      .agg(min(struct(col("dist"), col(id))).as("best"),
+        carry.map(c => first(col(c)).as(c)): _*)
+
+  /** assign: each vector to its argmin cell — (vec_id, cell, carry...).
+    * With `qv` carried, the posting relation the persisted indexes
+    * store. */
+  def ivfAssign(vecs: DataFrame, cents: DataFrame, carry: String*)
+      : DataFrame =
+    nearest(scored(vecs, cents), "cent_id", "vec_id")(carry: _*)
+      .select(col("vec_id") +: col("best.cent_id").as("cell") +:
+        carry.map(col): _*)
+
+  /** probe: every `id` row's cells ranked by (dist, cent_id) — rn = 1
+    * is the argmin cell. */
+  def cellRanks(vecs: DataFrame, cents: DataFrame, id: String,
+      v: String): DataFrame =
+    scored(vecs, cents, v).withColumn("rn", row_number().over(
+      Window.partitionBy(col(id)).orderBy(col("dist"), col("cent_id"))))
+
+  /** probe: each query's `nprobe` nearest cells — the query columns
+    * plus `cell`. */
+  def probe(queries: DataFrame, cents: DataFrame, nprobe: Int)
+      : DataFrame =
+    cellRanks(queries, cents, "q_id", "q_qv")
+      .filter(col("rn") <= nprobe)
+      .select(queries.columns.map(col) :+ col("cent_id").as("cell"): _*)
+
+  /** probe: the probed cells' postings — (query columns, cell, posting
+    * columns). */
+  def probed(queries: DataFrame, cents: DataFrame, nprobe: Int,
+      postings: DataFrame): DataFrame =
+    broadcast(probe(queries, cents, nprobe)).join(postings, Seq("cell"))
+
+  /** rank: each query's top `k` by (`by`, vec_id) — `out` (default
+    * q_id, vec_id, `by`) plus `rank`, ordered by (q_id, rank). */
+  def rankTop(scored: DataFrame, by: String, k: Int, out: Column*)
+      : DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col(by), col("vec_id"))
+    val cols = if (out.isEmpty) Seq(col("q_id"), col("vec_id"), col(by))
+      else out
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(cols :+ col("rank"): _*)
+      .orderBy(col("q_id"), col("rank"))
+  }
+
+  /** PQ: each row as its [[PqSubspaces]] subvector slices, (ids...,
+    * `key`, qv). A `sub` key is int (the code relations); a `grp` key
+    * is long, [[kmeansGrouped]]'s group key (the residual books). */
+  def pqSlices(df: DataFrame, key: String, ids: Column*): DataFrame = {
+    val keys =
+      if (key == "grp") sequence(lit(0L), lit(PqSubspaces - 1L))
+      else sequence(lit(0), lit(PqSubspaces - 1))
+    df.select(ids ++ Seq(explode(keys).as(key), col("qv")): _*)
+      .withColumn("qv", expr(s"slice(qv, $key * $PqSubDim + 1, $PqSubDim)"))
+  }
+
+  /** PQ: each vector's per-subspace argmin code under `book` (keyed by
+    * `key`, codes named `id`) — (vec_id, key, best). */
+  def pqCodes(vecs: DataFrame, book: DataFrame, key: String, id: String)
+      : DataFrame =
+    nearest(pqSlices(vecs, key, col("vec_id")).join(broadcast(book), Seq(key))
+      .withColumn("dist", qDist(col("qv"), col("qc"))), id, "vec_id", key)()
+
+  /** PQ: the ADC distance table — (ids..., sub, code, qd) for every
+    * query slice × `book` code (keyed by `key`, codes named `id`). */
+  def adcTable(queries: DataFrame, book: DataFrame, key: String,
+      id: String, ids: Column*): DataFrame = {
+    val sliced = pqSlices(queries, key, ids: _*)
+    sliced.join(broadcast(book), Seq(key))
+      .select(sliced.columns.filterNot(Set(key, "qv")).map(col) ++ Seq(
+        col(key).as("sub"), col(id).as("code"),
+        qDist(col("qv"), col("qc")).as("qd")): _*)
+  }
+
+  /** PQ + rank: ADC sums per (q_id, vec_id) over looked-up `qd`s, cut
+    * to each query's top `k` by (adc_dist, vec_id). */
+  def adcRank(lookups: DataFrame, k: Int): DataFrame =
+    rankTop(lookups.groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("qd")).cast("long").as("adc_dist")), "adc_dist", k)
+
+  /** Postings written cell-partitioned, so a probe reads only its
+    * cells. */
+  private def writeByCell(df: DataFrame, path: String): Unit =
+    df.repartition(col("cell")).write.partitionBy("cell").parquet(path)
 
   /** d22: IVF with TRAINED centroids — closes d10's documented "a
     * real pipeline would k-means" caveat. Same deterministic subset
@@ -1221,12 +1348,10 @@ object Similarity {
     * the identical iterations — training itself is verified, not just
     * asserted. */
   def d22KmeansIvf(spark: SparkSession, dir: String): DataFrame = {
-    val q = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val init = q.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
+    val q = quantized(spark, dir)
     val vecs = q.filter(col("vec_id") >= IvfCells)
-    qAssignHistogram(vecs, kmeansQuantized(vecs, init, KmIters))
+    qAssignHistogram(vecs, kmeansQuantized(vecs,
+      seeds(q, col("vec_id") < IvfCells), KmIters))
   }
 
   /** DuckDB oracle for d22: the same k-means, iterations unrolled as
@@ -1345,85 +1470,95 @@ object Similarity {
     * synthetic data). */
   def ivfSearch(spark: SparkSession, dir: String, nprobe: Int)
       : DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val cands = qz.filter(col("vec_id") >= NumQueries)
-    val init = qz.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val train = qz.filter(col("vec_id") >= NumQueries + IvfCells)
-    ivfSearchTrained(queries, cands, kmeansQuantized(train, init, KmIters),
+    val qz = quantized(spark, dir)
+    ivfSearchTrained(querySide(qz), candidates(qz), trainIvf(qz),
       nprobe, TopK)
   }
 
   /** The search leg alone, on an ALREADY-TRAINED centroid relation —
     * reusable on any (q_id, q_qv) × (vec_id, qv) pair (the AnnQuality
-    * recall sweep trains once and sweeps nprobe over this). Exactly
-    * d25's composition: assign candidates to their argmin cell, probe
-    * each query's best `nprobe` cells, exact-rank only their members. */
+    * recall sweep trains once and sweeps nprobe over this). */
   def ivfSearchTrained(queries: DataFrame, cands: DataFrame,
       cents: DataFrame, nprobe: Int, k: Int): DataFrame =
-    ivfProbeRank(queries, ivfAssign(cands, cents), cents, nprobe, k)
-
-  /** d25's assignment leg alone: each candidate to its argmin cell —
-    * (vec_id, cell, qv). Also the posting-list relation the persisted
-    * index (d79) stores. */
-  def ivfAssign(cands: DataFrame, cents: DataFrame): DataFrame =
-    cands.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"),
-        first(col("qv")).as("qv"))
-      .select(col("vec_id"), col("best.cent_id").as("cell"), col("qv"))
+    ivfProbeRank(queries, ivfAssign(cands, cents, "qv"), cents, nprobe, k)
 
   /** d25's probe+rank legs on an ALREADY-ASSIGNED posting relation
     * (vec_id, cell, qv) — the piece a persisted index reuses without
     * re-running assignment. */
   def ivfProbeRank(queries: DataFrame, assigned: DataFrame,
-      cents: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cent_id"))
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_qv"), col("cent_id").as("cell"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    broadcast(probes).join(assigned, Seq("cell"))
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+      cents: DataFrame, nprobe: Int, k: Int): DataFrame =
+    rankTop(probed(queries, cents, nprobe, assigned)
+      .withColumn("dist", qDist(col("q_qv"), col("qv"))), "dist", k)
 
-  val d25Sql: String =
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells}")},
-       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
+  val d25Sql: String = ivfSearchSql()
+
+  /** The oracle's IVF chain: [[kmeansCtes]] seeded by the
+    * [[IvfCells]] vectors after the queries and trained on
+    * `trainPred`, the query CTE qs (q_id, qqv), the candidates cand
+    * (`candPred` appended to their filter), their assignment sa and
+    * argmin asg (`asgCols`). */
+  private def ivfChainSql(trainPred: String = ivfTrainSql,
+      candPred: String = "", asgCols: String = "vec_id, qv, cent_id")
+      : String =
+    s"""${ivfKmeansSql(trainPred)},
+       |${candSql(candPred, asgCols)}""".stripMargin
+
+  /** [[kmeansCtes]] seeded by the [[IvfCells]] vectors after the
+    * queries, trained on `trainPred`. */
+  private def ivfKmeansSql(trainPred: String = ivfTrainSql): String =
+    kmeansCtes(s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
+      trainPred)
+
+  /** d25's training predicate: every vector past the seeds. */
+  private def ivfTrainSql: String = s"vec_id >= ${NumQueries + IvfCells}"
+
+  /** The sample-bounded training predicate of the provisioned builds at
+    * [[IvfCells]] cells. */
+  private def boundedTrainSql: String =
+    s"vec_id >= ${NumQueries + IvfCells} AND " +
+      s"vec_id < ${NumQueries + IvfCells + ProvTrainPerCell * IvfCells}"
+
+  /** The qs, cand, sa and asg CTEs of [[ivfChainSql]], over a chain
+    * whose centroids are `c$KmIters`. */
+  private def candSql(candPred: String = "",
+      asgCols: String = "vec_id, qv, cent_id"): String =
+    s"""qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
        |       WHERE vec_id < $NumQueries),
-       |cand AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries),
+       |cand AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries$candPred),
        |${assignCte("sa", "cand", s"c$KmIters")},
-       |asg AS (SELECT vec_id, qv, cent_id FROM sa WHERE rn = 1),
-       |pr AS (
-       |  SELECT q_id, qqv, cent_id, ROW_NUMBER() OVER (
+       |asg AS (SELECT $asgCols FROM sa WHERE rn = 1)""".stripMargin
+
+  /** The oracle's probe CTE pr: each qs row (`cols`) × its cells
+    * ranked by (dist, cent_id). */
+  private def probeSql(cols: String*): String =
+    s"""pr AS (
+       |  SELECT ${cols.mkString(", ")}, cent_id, ROW_NUMBER() OVER (
        |    PARTITION BY q_id ORDER BY dist, cent_id) AS rn
-       |  FROM (SELECT qs.q_id, qs.qqv, c.cent_id,
+       |  FROM (SELECT ${cols.map("qs." + _).mkString(", ")}, c.cent_id,
        |    ${qDistSql("qs.qqv", "c.qc")} AS dist
-       |  FROM qs CROSS JOIN c$KmIters c)),
-       |res AS (
+       |  FROM qs CROSS JOIN c$KmIters c))""".stripMargin
+
+  /** The oracle's rank CTE res and the final cut: the asg members of
+    * each query's [[NProbe]] probed cells (`probes`, aliased `p`, cell
+    * column `cell`) ranked by (dist, vec_id), top [[TopK]]. */
+  private def rankSql(probes: String = "pr", p: String = "pr",
+      cell: String = "cent_id"): String =
+    s"""res AS (
        |  SELECT q_id, vec_id, dist, ROW_NUMBER() OVER (
        |    PARTITION BY q_id ORDER BY dist, vec_id) AS rank
-       |  FROM (SELECT pr.q_id, a.vec_id,
-       |    ${qDistSql("pr.qqv", "a.qv")} AS dist
-       |  FROM pr JOIN asg a ON a.cent_id = pr.cent_id
-       |  WHERE pr.rn <= $NProbe))
+       |  FROM (SELECT $p.q_id, a.vec_id,
+       |    ${qDistSql(s"$p.qqv", "a.qv")} AS dist
+       |  FROM $probes JOIN asg a ON a.cent_id = $p.$cell
+       |  WHERE $p.rn <= $NProbe))
        |SELECT q_id, vec_id, dist, rank FROM res WHERE rank <= $TopK
        |ORDER BY q_id, rank""".stripMargin
+
+  /** The whole d25 replay: chain, probes, rank. */
+  private def ivfSearchSql(trainPred: String = ivfTrainSql,
+      candPred: String = ""): String =
+    s"""WITH ${ivfChainSql(trainPred, candPred)},
+       |${probeSql("q_id", "qqv")},
+       |${rankSql()}""".stripMargin
 
   // ---- d79: persisted IVF index (the ANN index lifecycle) -----------
 
@@ -1445,17 +1580,10 @@ object Similarity {
   lazy val IvfIndex: Artifact = Artifact(
       s"graft_ivf_idx_v${AnnIndexV}_c${IvfCells}i$KmIters", "embeddings") {
     (spark, dir, tmp) =>
-      val qz = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      val init = qz.filter(col("vec_id") >= NumQueries &&
-          col("vec_id") < NumQueries + IvfCells)
-        .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-      val train = qz.filter(col("vec_id") >= NumQueries + IvfCells)
-      val cents = kmeansQuantized(train, init, KmIters)
+      val qz = quantized(spark, dir)
+      val cents = trainIvf(qz)
       cents.coalesce(1).write.parquet(s"$tmp/centroids")
-      ivfAssign(qz.filter(col("vec_id") >= NumQueries), cents)
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/postings")
+      writeByCell(ivfAssign(candidates(qz), cents, "qv"), s"$tmp/postings")
   }
 
   /** d79: search over the PERSISTED index — load the committed
@@ -1466,13 +1594,9 @@ object Similarity {
     * end to end. */
   def d79PersistedIvf(spark: SparkSession, dir: String): DataFrame = {
     val root = IvfIndex.ensure(spark, dir)
-    val cents = Artifact.part(spark, root, "centroids")
-    val postings = Artifact.part(spark, root, "postings")
-    val queries = Tables.load(spark, dir, "embeddings")
-      .filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        quantizeVec(col("embedding")).as("q_qv"))
-    ivfProbeRank(queries, postings, cents, NProbe, TopK)
+    ivfProbeRank(querySide(quantized(spark, dir)),
+      Artifact.part(spark, root, "postings"),
+      Artifact.part(spark, root, "centroids"), NProbe, TopK)
   }
 
   /** The persisted PQ index — the compressed-corpus half of the index
@@ -1485,11 +1609,10 @@ object Similarity {
   lazy val PqIndex: Artifact = Artifact(
       s"graft_pq_idx_v${AnnIndexV}_s${PqSubspaces}c${PqCodes}i$KmIters",
       "embeddings") { (spark, dir, tmp) =>
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
     val book = trainPqCodebook(spark, dir)
     book.coalesce(1).write.parquet(s"$tmp/codebook")
-    pqAssignCodes(qz, book).write.parquet(s"$tmp/codes")
+    pqAssignCodes(quantized(spark, dir).filter(col("vec_id") >= PqCodes),
+      book).write.parquet(s"$tmp/codes")
   }
 
   /** d80: ADC search over the PERSISTED PQ index — load the committed
@@ -1502,11 +1625,8 @@ object Similarity {
     * IVF. */
   def d80PersistedPq(spark: SparkSession, dir: String): DataFrame = {
     val root = PqIndex.ensure(spark, dir)
-    val book = Artifact.part(spark, root, "codebook")
-    val codes = Artifact.part(spark, root, "codes")
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    adcScan(qz, codes, book, TopK)
+    adcScan(quantized(spark, dir), Artifact.part(spark, root, "codes"),
+      Artifact.part(spark, root, "codebook"), TopK)
   }
 
   // ---- d82: persisted PRODUCTION index (residual IVF+PQ + rerank) --
@@ -1521,22 +1641,13 @@ object Similarity {
   lazy val ProdIndex: Artifact = Artifact(
       s"graft_prod_idx_v${AnnIndexV}_c${IvfCells}s${PqSubspaces}" +
         s"p${PqCodes}i$KmIters", "embeddings") { (spark, dir, tmp) =>
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val cands = qz.filter(col("vec_id") >= NumQueries)
-    val init = qz.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = kmeansQuantized(
-      qz.filter(col("vec_id") >= NumQueries + IvfCells), init,
-      KmIters)
-    val resid = cellResiduals(cands, cents)
+    val qz = quantized(spark, dir)
+    val cents = trainIvf(qz)
+    val resid = cellResiduals(candidates(qz), cents)
     val book = trainResidualBook(resid, NumQueries + PqCodes)
     cents.coalesce(1).write.parquet(s"$tmp/centroids")
     book.coalesce(1).write.parquet(s"$tmp/book")
-    residualCellCodes(resid, book)
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$tmp/codes")
+    writeByCell(residualCellCodes(resid, book), s"$tmp/codes")
   }
 
   /** d82: the PRODUCTION search over the persisted index — load
@@ -1553,10 +1664,8 @@ object Similarity {
     val cents = Artifact.part(spark, root, "centroids")
     val book = Artifact.part(spark, root, "book")
     val cellCodes = Artifact.part(spark, root, "codes")
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
+    val qz = quantized(spark, dir)
+    val queries = querySide(qz)
     val shortlist = residualAdcScanCoded(queries, cellCodes, cents,
       book, NProbe, RerankR).select(col("q_id"), col("vec_id"))
     exactRerank(shortlist, qz, queries, TopK)
@@ -1578,20 +1687,13 @@ object Similarity {
     * d79. */
   lazy val IvfBase: Artifact = Artifact(ivfGenName("base"), "embeddings") {
     (spark, dir, tmp) =>
-      val qz = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      val init = qz.filter(col("vec_id") >= NumQueries &&
-          col("vec_id") < NumQueries + IvfCells)
-        .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-      val train = qz.filter(col("vec_id") >= NumQueries + IvfCells &&
-        col("vec_id") % DeltaMod =!= 0)
-      val cents = kmeansQuantized(train, init, KmIters)
+      val qz = quantized(spark, dir)
+      val cents = trainIvf(qz, keep = col("vec_id") % DeltaMod =!= 0)
       cents.coalesce(1).write.parquet(s"$tmp/centroids")
-      ivfAssign(qz.filter(col("vec_id") >= NumQueries &&
+      writeByCell(ivfAssign(qz.filter(col("vec_id") >= NumQueries &&
           (col("vec_id") < NumQueries + IvfCells ||
-            col("vec_id") % DeltaMod =!= 0)), cents)
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/postings")
+            col("vec_id") % DeltaMod =!= 0)), cents, "qv"),
+        s"$tmp/postings")
   }
 
   /** The INCREMENTAL update — the operation a production index runs
@@ -1604,13 +1706,10 @@ object Similarity {
     (spark, dir, tmp) =>
       val cents = Artifact.part(spark, IvfBase.ensure(spark, dir),
         "centroids")
-      val delta = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
+      val delta = quantized(spark, dir)
         .filter(col("vec_id") >= NumQueries + IvfCells &&
           col("vec_id") % DeltaMod === 0)
-      ivfAssign(delta, cents)
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/postings")
+      writeByCell(ivfAssign(delta, cents, "qv"), s"$tmp/postings")
   }
 
   /** d81's base ∪ delta postings (both cell-partitioned). */
@@ -1630,12 +1729,8 @@ object Similarity {
   def d81IncrementalIvf(spark: SparkSession, dir: String): DataFrame = {
     val cents = Artifact.part(spark, IvfBase.ensure(spark, dir),
       "centroids")
-    val postings = ivfBaseDeltaPostings(spark, dir)
-    val queries = Tables.load(spark, dir, "embeddings")
-      .filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        quantizeVec(col("embedding")).as("q_qv"))
-    ivfProbeRank(queries, postings, cents, NProbe, TopK)
+    ivfProbeRank(querySide(quantized(spark, dir)),
+      ivfBaseDeltaPostings(spark, dir), cents, NProbe, TopK)
   }
 
   // ---- d87: index COMPACTION (merge base + delta generations) ------
@@ -1657,9 +1752,7 @@ object Similarity {
     Artifact(ivfGenName("compact"), "embeddings") { (spark, dir, tmp) =>
       Artifact.part(spark, IvfBase.ensure(spark, dir), "centroids")
         .coalesce(1).write.parquet(s"$tmp/centroids")
-      ivfBaseDeltaPostings(spark, dir)
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/postings")
+      writeByCell(ivfBaseDeltaPostings(spark, dir), s"$tmp/postings")
     }
 
   /** d87: search over the COMPACTED generation — ONE committed tree,
@@ -1669,13 +1762,9 @@ object Similarity {
     * generations changes file layout, never results. */
   def d87CompactedSearch(spark: SparkSession, dir: String): DataFrame = {
     val root = IvfCompact.ensure(spark, dir)
-    val cents = Artifact.part(spark, root, "centroids")
-    val postings = Artifact.part(spark, root, "postings")
-    val queries = Tables.load(spark, dir, "embeddings")
-      .filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        quantizeVec(col("embedding")).as("q_qv"))
-    ivfProbeRank(queries, postings, cents, NProbe, TopK)
+    ivfProbeRank(querySide(quantized(spark, dir)),
+      Artifact.part(spark, root, "postings"),
+      Artifact.part(spark, root, "centroids"), NProbe, TopK)
   }
 
   /** The deterministic DELETE slice (vec_id ≡ [[TombRem]] mod
@@ -1715,11 +1804,8 @@ object Similarity {
     val postings = ivfBaseDeltaPostings(spark, dir)
       .join(tombstoneIds(spark, dir).hint("shuffle_hash"), Seq("vec_id"),
         "left_anti")
-    val queries = Tables.load(spark, dir, "embeddings")
-      .filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        quantizeVec(col("embedding")).as("q_qv"))
-    ivfProbeRank(queries, postings, cents, NProbe, TopK)
+    ivfProbeRank(querySide(quantized(spark, dir)), postings, cents,
+      NProbe, TopK)
   }
 
   /** d98: compaction WITH PURGE — d87's merge minus the tombstoned
@@ -1731,11 +1817,9 @@ object Similarity {
     Artifact(ivfGenName("purged"), "embeddings") { (spark, dir, tmp) =>
       Artifact.part(spark, IvfBase.ensure(spark, dir), "centroids")
         .coalesce(1).write.parquet(s"$tmp/centroids")
-      ivfBaseDeltaPostings(spark, dir)
+      writeByCell(ivfBaseDeltaPostings(spark, dir)
         .join(tombstoneIds(spark, dir).hint("shuffle_hash"), Seq("vec_id"),
-          "left_anti")
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/postings")
+          "left_anti"), s"$tmp/postings")
     }
 
   /** d98: search the PURGED generation — results must be IDENTICAL
@@ -1747,43 +1831,20 @@ object Similarity {
     * purge → serve — end to end. */
   def d98TombstoneDelete(spark: SparkSession, dir: String): DataFrame = {
     val root = Purged.ensure(spark, dir)
-    val cents = Artifact.part(spark, root, "centroids")
-    val postings = Artifact.part(spark, root, "postings")
-    val queries = Tables.load(spark, dir, "embeddings")
-      .filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        quantizeVec(col("embedding")).as("q_qv"))
-    ivfProbeRank(queries, postings, cents, NProbe, TopK)
+    ivfProbeRank(querySide(quantized(spark, dir)),
+      Artifact.part(spark, root, "postings"),
+      Artifact.part(spark, root, "centroids"), NProbe, TopK)
   }
 
   /** DuckDB oracle for d98: d81's replay with the tombstone slice
     * excluded from the CANDIDATES only — centroids still train on
     * the pre-delete base (deletes never retrain). */
-  val d98Sql: String =
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells} AND vec_id % $DeltaMod <> 0")},
-       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
-       |       WHERE vec_id < $NumQueries),
-       |cand AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries
-       |         AND vec_id % $TombMod <> $TombRem),
-       |${assignCte("sa", "cand", s"c$KmIters")},
-       |asg AS (SELECT vec_id, qv, cent_id FROM sa WHERE rn = 1),
-       |pr AS (
-       |  SELECT q_id, qqv, cent_id, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, cent_id) AS rn
-       |  FROM (SELECT qs.q_id, qs.qqv, c.cent_id,
-       |    ${qDistSql("qs.qqv", "c.qc")} AS dist
-       |  FROM qs CROSS JOIN c$KmIters c)),
-       |res AS (
-       |  SELECT q_id, vec_id, dist, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, vec_id) AS rank
-       |  FROM (SELECT pr.q_id, a.vec_id,
-       |    ${qDistSql("pr.qqv", "a.qv")} AS dist
-       |  FROM pr JOIN asg a ON a.cent_id = pr.cent_id
-       |  WHERE pr.rn <= $NProbe))
-       |SELECT q_id, vec_id, dist, rank FROM res WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+  val d98Sql: String = ivfSearchSql(baseTrainSql,
+    s"\n         AND vec_id % $TombMod <> $TombRem")
+
+  /** The base generation's training predicate: no [[DeltaMod]] slice. */
+  private def baseTrainSql: String =
+    s"vec_id >= ${NumQueries + IvfCells} AND vec_id % $DeltaMod <> 0"
 
   // ---- s21: streaming NN enrichment against the persisted index ----
 
@@ -1827,18 +1888,16 @@ object Similarity {
     val postings = Artifact.part(spark, IvfBase.ensure(spark, dir),
       "postings")
     val cents = baseCentroidsLocal(spark, dir)
-    val arrivals = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
+    val arrivals = quantized(spark, dir)
       .filter(col("vec_id") >= NumQueries + IvfCells &&
         col("vec_id") % DeltaMod === 0)
-    arrivals
+    nearest(arrivals
       .withColumn("cell", argminCellExpr(cents, col("qv")))
       .withColumnRenamed("qv", "a_qv")
       .join(postings.select(col("vec_id").as("nn_id"), col("cell"),
         col("qv")).hint("shuffle_hash"), Seq("cell"))
-      .withColumn("dist", qDist(col("a_qv"), col("qv")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("nn_id"))).as("best"))
+      .withColumn("dist", qDist(col("a_qv"), col("qv"))),
+      "nn_id", "vec_id")()
       .select(col("vec_id"), col("best.nn_id").as("nn_id"),
         col("best.dist").as("dist"))
       .orderBy(col("vec_id"))
@@ -1864,9 +1923,7 @@ object Similarity {
   /** DuckDB oracle for s21: base-trained chain (d81's), base posting
     * assignment, arrival argmin cell, cell-member argmin neighbor. */
   val s21Sql: String =
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells} AND vec_id % $DeltaMod <> 0")},
+    s"""WITH ${ivfKmeansSql(baseTrainSql)},
        |cand AS (
        |  SELECT vec_id, qv FROM q
        |  WHERE vec_id >= $NumQueries AND
@@ -1891,30 +1948,7 @@ object Similarity {
   /** DuckDB oracle for d81: the one-shot chain d81's incremental
     * lifecycle must equal — centroids trained on the BASE slice only,
     * assignment over the full candidate set, d25's probe+rank. */
-  val d81Sql: String =
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells} AND vec_id % $DeltaMod <> 0")},
-       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
-       |       WHERE vec_id < $NumQueries),
-       |cand AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries),
-       |${assignCte("sa", "cand", s"c$KmIters")},
-       |asg AS (SELECT vec_id, qv, cent_id FROM sa WHERE rn = 1),
-       |pr AS (
-       |  SELECT q_id, qqv, cent_id, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, cent_id) AS rn
-       |  FROM (SELECT qs.q_id, qs.qqv, c.cent_id,
-       |    ${qDistSql("qs.qqv", "c.qc")} AS dist
-       |  FROM qs CROSS JOIN c$KmIters c)),
-       |res AS (
-       |  SELECT q_id, vec_id, dist, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, vec_id) AS rank
-       |  FROM (SELECT pr.q_id, a.vec_id,
-       |    ${qDistSql("pr.qqv", "a.qv")} AS dist
-       |  FROM pr JOIN asg a ON a.cent_id = pr.cent_id
-       |  WHERE pr.rn <= $NProbe))
-       |SELECT q_id, vec_id, dist, rank FROM res WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+  val d81Sql: String = ivfSearchSql(baseTrainSql)
 
   // ---- d84: graph-navigable ANN search (HNSW-class serving leg) ----
 
@@ -1971,11 +2005,7 @@ object Similarity {
     * compute this once and filter per layer. */
   private[graft] def navRanked(corpus: DataFrame, cents: DataFrame)
       : DataFrame =
-    corpus.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("dist"), col("cent_id"))))
+    cellRanks(corpus, cents, "vec_id", "qv")
       .filter(col("rn") <= CellProbes)
       .select(col("vec_id"), col("cent_id").as("cell"), col("dist"),
         col("rn"), col("qv"))
@@ -1990,8 +2020,7 @@ object Similarity {
       : (DataFrame, DataFrame, DataFrame) = {
     val posted = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("cell"), col("dist"), col("qv"))
-    val entries = posted.groupBy(col("cell"))
-      .agg(min(struct(col("dist"), col("vec_id"))).as("best"))
+    val entries = nearest(posted, "vec_id", "cell")()
       .select(col("cell"), col("best.vec_id").as("entry_id"))
     val capped = posted.groupBy(col("cell"))
       .agg(count(lit(1)).as("n"))
@@ -2009,25 +2038,29 @@ object Similarity {
       .select(col("a.vec_id").as("vec_id"),
         col("b.vec_id").as("nbr_id"))
       .distinct()
-    // re-attach vectors BY ID to the narrow candidate relation, exact
-    // quantized L2, bounded per-vector top-NavK cut (the
-    // rankKnnCandidates shape on the integer grid); every member has
-    // exactly one rn = 1 row, so posted doubles as the (vec_id, qv)
-    // side relation
+    // every member has exactly one rn = 1 row, so posted doubles as
+    // the (vec_id, qv) side relation
+    (navEdgeCut(cand, posted), entries, posted.select(col("vec_id"),
+      col("cell"), col("qv")))
+  }
+
+  /** The [[NavK]] out-edge cut: re-attach vectors from `side` (vec_id,
+    * qv) BY ID to the narrow candidate relation (vec_id, nbr_id),
+    * exact quantized L2, each vector's nearest [[NavK]] by (dist,
+    * nbr_id) — the rankKnnCandidates shape on the integer grid. */
+  private def navEdgeCut(cand: DataFrame, side: DataFrame): DataFrame = {
     val we = Window.partitionBy(col("vec_id"))
       .orderBy(col("dist"), col("nbr_id"))
-    val edges = cand.hint("merge")
-      .join(posted.select(col("vec_id"), col("qv").as("qa")),
+    cand.hint("merge")
+      .join(side.select(col("vec_id"), col("qv").as("qa")),
         Seq("vec_id"))
-      .join(posted.select(col("vec_id").as("nbr_id"),
+      .join(side.select(col("vec_id").as("nbr_id"),
         col("qv").as("qb")), Seq("nbr_id"))
       .withColumn("dist", qDist(col("qa"), col("qb")))
       .select(col("vec_id"), col("nbr_id"), col("dist"))
       .withColumn("rn", row_number().over(we))
       .filter(col("rn") <= NavK)
       .select(col("vec_id"), col("nbr_id"))
-    (edges, entries, posted.select(col("vec_id"), col("cell"),
-      col("qv")))
   }
 
   def navGraphParts(corpus: DataFrame, cents: DataFrame)
@@ -2055,9 +2088,8 @@ object Similarity {
     *  - `entries/`   — one medoid per cell (≤ [[IvfCells]] rows). */
   lazy val NavIndex: Artifact =
     Artifact(navGenName("idx"), "embeddings") { (spark, dir, tmp) =>
-      val qz = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      val corpus = qz.filter(col("vec_id") >= NumQueries)
+      val qz = quantized(spark, dir)
+      val corpus = candidates(qz)
       // cells PROVISIONED from the corpus size (d89's rule): one
       // count job at BUILD time only, amortized across every
       // later query like the k-means itself. Every driver-verified
@@ -2066,9 +2098,6 @@ object Similarity {
       // the count provisions 64+ cells so per-cell postings stay
       // in the ~1 Ki band instead of growing with N.
       val cells = navCellsFor(corpus.count())
-      val init = qz.filter(col("vec_id") >= NumQueries &&
-          col("vec_id") < NumQueries + cells)
-        .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
       // training is SAMPLE-BOUNDED at ProvTrainPerCell vectors
       // per centroid (the FAISS-convention band) — without the
       // bound, provisioned cells make training cost cells×corpus
@@ -2078,10 +2107,7 @@ object Similarity {
       // 100 TB contract every codebook scaladoc asserts, now
       // wired). Deterministic prefix sample, so the oracle's
       // prov CTE replays the exact same bound.
-      val train = qz.filter(col("vec_id") >= NumQueries + cells &&
-        col("vec_id") < NumQueries + cells +
-          ProvTrainPerCell * cells)
-      val cents = kmeansQuantized(train, init, KmIters)
+      val cents = trainIvf(qz, cells, bounded = true)
       cents.coalesce(1).write.parquet(s"$tmp/centroids")
       val (edges, entries, _) = navGraphParts(corpus, cents)
       edges.write.parquet(s"$tmp/edges")
@@ -2256,12 +2282,8 @@ object Similarity {
     val cents = Artifact.part(spark, root, "centroids")
     val edges = Artifact.part(spark, root, "edges")
     val entries = Artifact.part(spark, root, "entries")
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val corpus = qz.filter(col("vec_id") >= NumQueries)
-    navBeamWalk(queries, corpus, cents, edges, entries,
+    val qz = quantized(spark, dir)
+    navBeamWalk(querySide(qz), candidates(qz), cents, edges, entries,
       NavBeam, NavHops, TopK)
   }
 
@@ -2270,34 +2292,8 @@ object Similarity {
     * election, query entry routing, and [[NavHops]] unrolled beam
     * hops (UNION dedups the (q_id, vec_id) frontier exactly like the
     * Spark side's distinct). */
-  lazy val d84Sql: String = {
-    val hops = (1 to NavHops).map { h =>
-      s"""u$h AS (
-         |  SELECT q_id, vec_id FROM b${h - 1}
-         |  UNION
-         |  SELECT p.q_id, e.nbr_id AS vec_id
-         |  FROM b${h - 1} p JOIN edges e ON e.vec_id = p.vec_id),
-         |s$h AS (
-         |  SELECT u.q_id, u.vec_id,
-         |    ${qDistSql("qs.qqv", "cv.qv")} AS dist,
-         |    ROW_NUMBER() OVER (PARTITION BY u.q_id
-         |      ORDER BY ${qDistSql("qs.qqv", "cv.qv")}, u.vec_id) AS rn
-         |  FROM u$h u JOIN qs ON qs.q_id = u.q_id
-         |  JOIN corpus cv ON cv.vec_id = u.vec_id),
-         |b$h AS (SELECT q_id, vec_id FROM s$h WHERE rn <= $NavBeam)"""
-        .stripMargin
-    }.mkString(",\n")
-    // the oracle re-derives the PROVISIONED cell count (navCellsFor:
-    // min 2^i with 2^i·target ≥ n, clamped) from the corpus itself,
-    // so the replay stays exact at ANY verify scale, not just the
-    // floor regime the driver-verified SFs sit in
-    s"""WITH prov AS (
-       |  SELECT LEAST($ProvCap, GREATEST($IvfCells, (
-       |    SELECT min(CAST(1 AS BIGINT) << i)
-       |    FROM (SELECT unnest(generate_series(0, 40)) AS i)
-       |    WHERE (CAST(1 AS BIGINT) << i) * $ProvTarget >=
-       |      (SELECT count(*) FROM embeddings
-       |       WHERE vec_id >= $NumQueries)))) AS cells),
+  lazy val d84Sql: String =
+    s"""WITH $provSql,
        |${kmeansCtes(
         s"vec_id >= $NumQueries AND vec_id < $NumQueries + " +
           "(SELECT cells FROM prov)",
@@ -2305,7 +2301,34 @@ object Similarity {
           s"vec_id < $NumQueries + (SELECT cells FROM prov) + " +
           s"$ProvTrainPerCell * (SELECT cells FROM prov)")},
        |corpus AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries),
-       |${assignCte("ca", "corpus", s"c$KmIters")},
+       |${navGraphSql("corpus")},
+       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
+       |       WHERE vec_id < $NumQueries),
+       |$entryCellsSql,
+       |b0 AS (SELECT qe.q_id, m.entry_id AS vec_id
+       |       FROM qe JOIN medoid m USING (cell)),
+       |${navHopsSql("edges", "corpus")}
+       |SELECT q_id, vec_id, dist, rn AS rank FROM s$NavHops
+       |WHERE rn <= $TopK ORDER BY q_id, rank""".stripMargin
+
+  /** The provisioned cell count as a CTE: the oracle re-derives
+    * [[navCellsFor]] (min 2^i with 2^i·target ≥ n, clamped) from the
+    * corpus itself, so the replay stays exact at ANY verify scale, not
+    * just the floor regime the driver-verified SFs sit in. */
+  private def provSql: String =
+    s"""prov AS (
+       |  SELECT LEAST($ProvCap, GREATEST($IvfCells, (
+       |    SELECT min(CAST(1 AS BIGINT) << i)
+       |    FROM (SELECT unnest(generate_series(0, 40)) AS i)
+       |    WHERE (CAST(1 AS BIGINT) << i) * $ProvTarget >=
+       |      (SELECT count(*) FROM embeddings
+       |       WHERE vec_id >= $NumQueries)))) AS cells)""".stripMargin
+
+  /** The nav-graph build over member CTE `src`: assignment ca,
+    * primary postings, medoid election, capped cells, the
+    * [[CellProbes]] probe fan, candidates and the [[NavK]] edge cut. */
+  private def navGraphSql(src: String): String =
+    s"""${assignCte("ca", src, s"c$KmIters")},
        |posted AS (SELECT vec_id, cent_id AS cell, dist
        |           FROM ca WHERE rn = 1),
        |medoid AS (
@@ -2328,23 +2351,40 @@ object Similarity {
        |    SELECT g.vec_id, g.nbr_id, ROW_NUMBER() OVER (
        |      PARTITION BY g.vec_id
        |      ORDER BY ${qDistSql("x.qv", "y.qv")}, g.nbr_id) AS rn
-       |    FROM gcand g JOIN corpus x ON x.vec_id = g.vec_id
-       |    JOIN corpus y ON y.vec_id = g.nbr_id)
-       |  WHERE rn <= $NavK),
-       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
-       |       WHERE vec_id < $NumQueries),
-       |qe AS (
+       |    FROM gcand g JOIN $src x ON x.vec_id = g.vec_id
+       |    JOIN $src y ON y.vec_id = g.nbr_id)
+       |  WHERE rn <= $NavK)""".stripMargin
+
+  /** Each query's [[NavEntryCells]] nearest cells, qe (q_id, cell). */
+  private def entryCellsSql: String =
+    s"""qe AS (
        |  SELECT q_id, cent_id AS cell FROM (
        |    SELECT qs.q_id, c.cent_id, ROW_NUMBER() OVER (
        |      PARTITION BY qs.q_id
        |      ORDER BY ${qDistSql("qs.qqv", "c.qc")}, c.cent_id) AS rn
-       |    FROM qs CROSS JOIN c$KmIters c) WHERE rn <= $NavEntryCells),
-       |b0 AS (SELECT qe.q_id, m.entry_id AS vec_id
-       |       FROM qe JOIN medoid m USING (cell)),
-       |$hops
-       |SELECT q_id, vec_id, dist, rn AS rank FROM s$NavHops
-       |WHERE rn <= $TopK ORDER BY q_id, rank""".stripMargin
-  }
+       |    FROM qs CROSS JOIN c$KmIters c) WHERE rn <= $NavEntryCells)"""
+      .stripMargin
+
+  /** The [[NavHops]] unrolled beam hops from b0 over edge CTE `edges`,
+    * scored against corpus CTE `corpus` (UNION dedups the (q_id,
+    * vec_id) frontier exactly like the Spark side's distinct). */
+  private def navHopsSql(edges: String, corpus: String): String =
+    (1 to NavHops).map { h =>
+      s"""u$h AS (
+         |  SELECT q_id, vec_id FROM b${h - 1}
+         |  UNION
+         |  SELECT p.q_id, e.nbr_id AS vec_id
+         |  FROM b${h - 1} p JOIN $edges e ON e.vec_id = p.vec_id),
+         |s$h AS (
+         |  SELECT u.q_id, u.vec_id,
+         |    ${qDistSql("qs.qqv", "cv.qv")} AS dist,
+         |    ROW_NUMBER() OVER (PARTITION BY u.q_id
+         |      ORDER BY ${qDistSql("qs.qqv", "cv.qv")}, u.vec_id) AS rn
+         |  FROM u$h u JOIN qs ON qs.q_id = u.q_id
+         |  JOIN $corpus cv ON cv.vec_id = u.vec_id),
+         |b$h AS (SELECT q_id, vec_id FROM s$h WHERE rn <= $NavBeam)"""
+        .stripMargin
+    }.mkString(",\n")
 
   // ---- d89: index provisioning — the cells ∝ N geometry contract ----
 
@@ -2533,33 +2573,35 @@ object Similarity {
     * BOTH k-means chains, the cell→group assignment, the two-level
     * descent, and the final ranking bit-for-bit. */
   def d95TwoLevelRoute(spark: SparkSession, dir: String): DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val cands = qz.filter(col("vec_id") >= NumQueries)
-    val init = qz.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
+    val qz = quantized(spark, dir)
     // sample-bounded training (the NavIndex contract — full-
     // corpus k-means is the measured 100 TB trap); the oracle
     // replays the same bound
-    val train = qz.filter(col("vec_id") >= NumQueries + IvfCells &&
-      col("vec_id") < NumQueries + IvfCells +
-        ProvTrainPerCell * IvfCells)
-    val cents = kmeansQuantized(train, init, KmIters)
-    // L2 trains over the L1 centroids AS vectors (k×dim literal —
-    // collected between rounds like every codebook here)
+    val cents = trainIvf(qz, bounded = true)
+    val (l2cents, cellGroups) = router(cents)
+    twoLevelSearch(querySide(qz), l2cents, cellGroups,
+      ivfAssign(candidates(qz), cents, "qv"))
+  }
+
+  /** The L2 router over trained L1 `cents`: k-means over the cell
+    * centroids AS vectors (k×dim literal — collected between rounds
+    * like every codebook here), and each L1 cell's group — (cell, grp,
+    * cqc), |cells| rows, bounded by construction. */
+  private def router(cents: DataFrame): (DataFrame, DataFrame) = {
     val cellVecs = cents.select(col("cent_id").as("vec_id"),
       col("qc").as("qv"))
-    val l2init = cellVecs
-      .filter(col("vec_id") < NumQueries + L2Groups)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val l2cents = kmeansQuantized(cellVecs, l2init, KmIters)
-    // each L1 cell's group — |cells| rows, bounded by construction
-    val cellGroups = ivfAssign(cellVecs, l2cents)
+    val l2cents = kmeansQuantized(cellVecs,
+      seeds(cellVecs, col("vec_id") < NumQueries + L2Groups), KmIters)
+    (l2cents, ivfAssign(cellVecs, l2cents, "qv")
       .select(col("vec_id").as("cell"), col("cell").as("grp"),
-        col("qv").as("cqc"))
+        col("qv").as("cqc")))
+  }
+
+  /** d95's descent: rank the `l2cents` groups, keep [[L2Probe]], rank
+    * only their member cells (`cellGroups`), keep [[NProbe]], then
+    * rank those cells' `assigned` postings to [[TopK]]. */
+  private def twoLevelSearch(queries: DataFrame, l2cents: DataFrame,
+      cellGroups: DataFrame, assigned: DataFrame): DataFrame = {
     val wg = Window.partitionBy(col("q_id"))
       .orderBy(col("dist"), col("grp"))
     val gprobes = queries.join(broadcast(l2cents))
@@ -2576,15 +2618,8 @@ object Similarity {
       .withColumn("rn", row_number().over(wc))
       .filter(col("rn") <= NProbe)
       .select(col("q_id"), col("q_qv"), col("cell"))
-    val assigned = ivfAssign(cands, cents)
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    broadcast(probes).join(assigned, Seq("cell"))
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    rankTop(broadcast(probes).join(assigned, Seq("cell"))
+      .withColumn("dist", qDist(col("q_qv"), col("qv"))), "dist", TopK)
   }
 
   /** Oracle for d95: d25's L1 chain + a SECOND [[kmeansCtes]] chain
@@ -2594,20 +2629,13 @@ object Similarity {
     * every stage the same integer arithmetic as the Spark plan. */
   lazy val d95Sql: String = {
     val l2src = s"(SELECT cent_id AS vec_id, qc AS qv FROM c$KmIters)"
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells} AND " +
-          s"vec_id < ${NumQueries + IvfCells + ProvTrainPerCell * IvfCells}")},
+    s"""WITH ${ivfKmeansSql(boundedTrainSql)},
        |${kmeansCtes(s"vec_id < ${NumQueries + L2Groups}", "TRUE",
           pre = "g", src = l2src)},
        |${assignCte("cga", "gq", s"gc$KmIters")},
        |cg AS (SELECT vec_id AS cell_id, cent_id AS grp, qv AS cqc
        |       FROM cga WHERE rn = 1),
-       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
-       |       WHERE vec_id < $NumQueries),
-       |cand AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries),
-       |${assignCte("sa", "cand", s"c$KmIters")},
-       |asg AS (SELECT vec_id, qv, cent_id FROM sa WHERE rn = 1),
+       |${candSql()},
        |gpr AS (
        |  SELECT q_id, qqv, grp, ROW_NUMBER() OVER (
        |    PARTITION BY q_id ORDER BY dist, grp) AS rn
@@ -2621,15 +2649,7 @@ object Similarity {
        |    ${qDistSql("g.qqv", "cg.cqc")} AS dist
        |  FROM gpr g JOIN cg ON cg.grp = g.grp
        |  WHERE g.rn <= $L2Probe)),
-       |res AS (
-       |  SELECT q_id, vec_id, dist, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, vec_id) AS rank
-       |  FROM (SELECT c.q_id, a.vec_id,
-       |    ${qDistSql("c.qqv", "a.qv")} AS dist
-       |  FROM cpr c JOIN asg a ON a.cent_id = c.cell
-       |  WHERE c.rn <= $NProbe))
-       |SELECT q_id, vec_id, dist, rank FROM res WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankSql("cpr c", "c", "cell")}""".stripMargin
   }
 
   /** The persisted TWO-LEVEL router — d95's routing as a committed
@@ -2644,33 +2664,12 @@ object Similarity {
       s"graft_router_idx_v${AnnIndexV}_g${L2Groups}p${L2Probe}" +
         s"i${KmIters}tb$ProvTrainPerCell", "embeddings") {
     (spark, dir, tmp) =>
-      val qz = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      val cands = qz.filter(col("vec_id") >= NumQueries)
-      val init = qz.filter(col("vec_id") >= NumQueries &&
-          col("vec_id") < NumQueries + IvfCells)
-        .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-      // sample-bounded training (the NavIndex contract — full-
-      // corpus k-means is the measured 100 TB trap); the oracle
-      // replays the same bound
-      val train = qz.filter(col("vec_id") >= NumQueries + IvfCells &&
-        col("vec_id") < NumQueries + IvfCells +
-          ProvTrainPerCell * IvfCells)
-      val cents = kmeansQuantized(train, init, KmIters)
-      val cellVecs = cents.select(col("cent_id").as("vec_id"),
-        col("qc").as("qv"))
-      val l2init = cellVecs
-        .filter(col("vec_id") < NumQueries + L2Groups)
-        .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-      val l2cents = kmeansQuantized(cellVecs, l2init, KmIters)
+      val qz = quantized(spark, dir)
+      val cents = trainIvf(qz, bounded = true)
+      val (l2cents, cellGroups) = router(cents)
       l2cents.coalesce(1).write.parquet(s"$tmp/l2cents")
-      ivfAssign(cellVecs, l2cents)
-        .select(col("vec_id").as("cell"), col("cell").as("grp"),
-          col("qv").as("cqc"))
-        .coalesce(1).write.parquet(s"$tmp/cellgroups")
-      ivfAssign(cands, cents)
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/postings")
+      cellGroups.coalesce(1).write.parquet(s"$tmp/cellgroups")
+      writeByCell(ivfAssign(candidates(qz), cents, "qv"), s"$tmp/postings")
   }
 
   /** d96: the two-level routed search over the PERSISTED router —
@@ -2684,37 +2683,10 @@ object Similarity {
     * deterministic), so d95's oracle verifies this key unchanged. */
   def d96PersistedRouter(spark: SparkSession, dir: String): DataFrame = {
     val root = RouterIndex.ensure(spark, dir)
-    val l2cents = Artifact.part(spark, root, "l2cents")
-    val cellGroups = Artifact.part(spark, root, "cellgroups")
-    val assigned = Artifact.part(spark, root, "postings")
-    val queries = Tables.load(spark, dir, "embeddings")
-      .filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        quantizeVec(col("embedding")).as("q_qv"))
-    val wg = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("grp"))
-    val gprobes = queries.join(broadcast(l2cents))
-      .withColumn("grp", col("cent_id"))
-      .withColumn("dist", qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wg))
-      .filter(col("rn") <= L2Probe)
-      .select(col("q_id"), col("q_qv"), col("grp"))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cell"))
-    val probes = gprobes
-      .join(broadcast(cellGroups), Seq("grp"))
-      .withColumn("dist", qDist(col("q_qv"), col("cqc")))
-      .withColumn("rn", row_number().over(wc))
-      .filter(col("rn") <= NProbe)
-      .select(col("q_id"), col("q_qv"), col("cell"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    broadcast(probes).join(assigned, Seq("cell"))
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    twoLevelSearch(querySide(quantized(spark, dir)),
+      Artifact.part(spark, root, "l2cents"),
+      Artifact.part(spark, root, "cellgroups"),
+      Artifact.part(spark, root, "postings"))
   }
 
   // ---- d94: incremental nav-graph INSERT (serving-graph freshness) -
@@ -2728,29 +2700,20 @@ object Similarity {
     * the layout detail that keeps the insert O(delta). */
   lazy val NavBase: Artifact =
     Artifact(navGenName("base"), "embeddings") { (spark, dir, tmp) =>
-      val qz = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
+      val qz = quantized(spark, dir)
       // provisioned from the FULL corpus (the geometry plans for
       // eventual size, so base and delta agree on the boundary)
-      val cells = navCellsFor(
-        qz.filter(col("vec_id") >= NumQueries).count())
+      val cells = navCellsFor(candidates(qz).count())
       val base = qz.filter(col("vec_id") >= NumQueries &&
         (col("vec_id") < NumQueries + cells ||
           col("vec_id") % DeltaMod =!= 0))
-      val init = qz.filter(col("vec_id") >= NumQueries &&
-          col("vec_id") < NumQueries + cells)
-        .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-      val train = qz.filter(col("vec_id") >= NumQueries + cells &&
-        col("vec_id") < NumQueries + cells +
-          ProvTrainPerCell * cells &&
-        col("vec_id") % DeltaMod =!= 0)
-      val cents = kmeansQuantized(train, init, KmIters)
+      val cents = trainIvf(qz, cells, bounded = true,
+        keep = col("vec_id") % DeltaMod =!= 0)
       cents.coalesce(1).write.parquet(s"$tmp/centroids")
       val (edges, entries, posted) = navGraphParts(base, cents)
       edges.write.parquet(s"$tmp/edges")
       entries.coalesce(1).write.parquet(s"$tmp/entries")
-      posted.repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/postings")
+      writeByCell(posted, s"$tmp/postings")
     }
 
   /** d94: INSERT the delta slice into the committed nav graph — the
@@ -2780,10 +2743,8 @@ object Similarity {
       val cents = Artifact.part(spark, basePath, "centroids")
       val basePost = Artifact.part(spark, basePath, "postings")
       val baseEdges = Artifact.part(spark, basePath, "edges")
-      val qz = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      val cells = navCellsFor(
-        qz.filter(col("vec_id") >= NumQueries).count())
+      val qz = quantized(spark, dir)
+      val cells = navCellsFor(candidates(qz).count())
       val delta = qz.filter(col("vec_id") >= NumQueries + cells &&
         col("vec_id") % DeltaMod === 0)
       val cks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -2792,8 +2753,7 @@ object Similarity {
       try {
         dEdges.write.parquet(s"$tmp/edges")
         redges.write.parquet(s"$tmp/redges")
-        dPosted.repartition(col("cell"))
-          .write.partitionBy("cell").parquet(s"$tmp/postings")
+        writeByCell(dPosted, s"$tmp/postings")
       } finally cks.foreach(Pins.unpin)
     }
 
@@ -2816,11 +2776,7 @@ object Similarity {
         scala.collection.mutable.ArrayBuffer.empty)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = qz.sparkSession
-    val ranked = delta.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("dist"), col("cent_id"))))
+    val ranked = cellRanks(delta, cents, "vec_id", "qv")
     val dPosted = ranked.filter(col("rn") === 1)
       .select(col("vec_id"), col("cent_id").as("cell"), col("qv"))
     // candidate pool: capped base cells + capped delta cells (the
@@ -2841,21 +2797,9 @@ object Similarity {
       .select(col("a.vec_id").as("vec_id"),
         col("b.vec_id").as("nbr_id"))
       .distinct()
-    val we = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist"), col("nbr_id"))
-    def rankCut(c: DataFrame): DataFrame = c.hint("merge")
-      .join(qz.select(col("vec_id"), col("qv").as("qa")),
-        Seq("vec_id"))
-      .join(qz.select(col("vec_id").as("nbr_id"),
-        col("qv").as("qb")), Seq("nbr_id"))
-      .withColumn("dist", qDist(col("qa"), col("qb")))
-      .select(col("vec_id"), col("nbr_id"), col("dist"))
-      .withColumn("rn", row_number().over(we))
-      .filter(col("rn") <= NavK)
-      .select(col("vec_id"), col("nbr_id"))
     // checkpointed (bounded: delta × NavK rows) AND re-rooted
     // constraint-free: the checkpoint's LogicalRDD preserves
-    // rankCut's window-filter constraint (rn ≤ NavK) whose rn
+    // the edge cut's window-filter constraint (rn ≤ NavK) whose rn
     // attribute the projection pruned, and any later Union over such
     // a child dies in Catalyst's constraint rewrite (AttributeMap
     // key-not-found) — createDataFrame over the materialized rows
@@ -2865,7 +2809,7 @@ object Similarity {
       checkpoints += ck
       spark.createDataFrame(ck.rdd, ck.schema)
     }
-    val dEdges = sever(rankCut(cand))
+    val dEdges = sever(navEdgeCut(cand, qz))
     // bidirectional link + shrink: every touched node re-ranks
     // (current edges ∪ suitors) once
     val touched = dEdges.select(col("nbr_id").as("vec_id"))
@@ -2874,8 +2818,8 @@ object Similarity {
       .join(touched.hint("shuffle_hash"), Seq("vec_id"))
     val suitors = dEdges.select(col("nbr_id").as("vec_id"),
       col("vec_id").as("nbr_id"))
-    val redges = sever(rankCut(
-      existing.unionByName(suitors).distinct()))
+    val redges = sever(navEdgeCut(
+      existing.unionByName(suitors).distinct(), qz))
     (dEdges, redges, dPosted)
   }
 
@@ -2909,11 +2853,9 @@ object Similarity {
     val all = basePost.select(col("vec_id"), col("cell"), col("qv"))
       .unionByName(
         dPosted.select(col("vec_id"), col("cell"), col("qv")))
-    all.join(broadcast(cents.select(col("cent_id").as("cell"),
+    nearest(all.join(broadcast(cents.select(col("cent_id").as("cell"),
         col("qc"))), Seq("cell"))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("cell"))
-      .agg(min(struct(col("dist"), col("vec_id"))).as("best"))
+      .withColumn("dist", qDist(col("qv"), col("qc"))), "vec_id", "cell")()
       .select(col("cell"), col("best.vec_id").as("entry_id"))
   }
 
@@ -2951,12 +2893,8 @@ object Similarity {
     val entries = Artifact.part(spark, NavPromote.ensure(spark, dir),
       "entries")
     val merged = mergedNavEdges(spark, dir)
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val corpus = qz.filter(col("vec_id") >= NumQueries)
-    navBeamWalk(queries, corpus, cents, merged, entries,
+    val qz = quantized(spark, dir)
+    navBeamWalk(querySide(qz), candidates(qz), cents, merged, entries,
       NavBeam, NavHops, TopK)
   }
 
@@ -2973,12 +2911,8 @@ object Similarity {
     val cents = Artifact.part(spark, basePath, "centroids")
     val entries = Artifact.part(spark, basePath, "entries")
     val merged = mergedNavEdges(spark, dir)
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val corpus = qz.filter(col("vec_id") >= NumQueries)
-    navBeamWalk(queries, corpus, cents, merged, entries,
+    val qz = quantized(spark, dir)
+    navBeamWalk(querySide(qz), candidates(qz), cents, merged, entries,
       NavBeam, NavHops, TopK)
   }
 
@@ -2997,30 +2931,8 @@ object Similarity {
     * selects which entry election feeds b0 — base-only medoids
     * (d94) or the two-generation promoted medoids (d97). */
   private def navMergedWalkSql(promote: Boolean): String = {
-    val hops = (1 to NavHops).map { h =>
-      s"""u$h AS (
-         |  SELECT q_id, vec_id FROM b${h - 1}
-         |  UNION
-         |  SELECT p.q_id, e.nbr_id AS vec_id
-         |  FROM b${h - 1} p JOIN merged e ON e.vec_id = p.vec_id),
-         |s$h AS (
-         |  SELECT u.q_id, u.vec_id,
-         |    ${qDistSql("qs.qqv", "cv.qv")} AS dist,
-         |    ROW_NUMBER() OVER (PARTITION BY u.q_id
-         |      ORDER BY ${qDistSql("qs.qqv", "cv.qv")}, u.vec_id) AS rn
-         |  FROM u$h u JOIN qs ON qs.q_id = u.q_id
-         |  JOIN fullc cv ON cv.vec_id = u.vec_id),
-         |b$h AS (SELECT q_id, vec_id FROM s$h WHERE rn <= $NavBeam)"""
-        .stripMargin
-    }.mkString(",\n")
     val cellsSub = "(SELECT cells FROM prov)"
-    s"""WITH prov AS (
-       |  SELECT LEAST($ProvCap, GREATEST($IvfCells, (
-       |    SELECT min(CAST(1 AS BIGINT) << i)
-       |    FROM (SELECT unnest(generate_series(0, 40)) AS i)
-       |    WHERE (CAST(1 AS BIGINT) << i) * $ProvTarget >=
-       |      (SELECT count(*) FROM embeddings
-       |       WHERE vec_id >= $NumQueries)))) AS cells),
+    s"""WITH $provSql,
        |${kmeansCtes(
         s"vec_id >= $NumQueries AND vec_id < $NumQueries + $cellsSub",
         s"vec_id >= $NumQueries + $cellsSub AND " +
@@ -3032,32 +2944,7 @@ object Similarity {
        |       OR vec_id % $DeltaMod <> 0)),
        |fullc AS (SELECT vec_id, qv FROM q
        |          WHERE vec_id >= $NumQueries),
-       |${assignCte("ca", "base", s"c$KmIters")},
-       |posted AS (SELECT vec_id, cent_id AS cell, dist
-       |           FROM ca WHERE rn = 1),
-       |medoid AS (
-       |  SELECT cell, vec_id AS entry_id FROM (
-       |    SELECT cell, vec_id, ROW_NUMBER() OVER (
-       |      PARTITION BY cell ORDER BY dist, vec_id) AS rn
-       |    FROM posted) WHERE rn = 1),
-       |capped AS (SELECT cell FROM posted GROUP BY cell
-       |           HAVING COUNT(*) <= $NearDupMaxBucket),
-       |postedc AS (SELECT p.vec_id, p.cell FROM posted p
-       |            JOIN capped USING (cell)),
-       |probes AS (SELECT vec_id, cent_id AS cell FROM ca
-       |           WHERE rn <= $CellProbes),
-       |gcand AS (
-       |  SELECT DISTINCT a.vec_id, b.vec_id AS nbr_id
-       |  FROM probes a JOIN postedc b
-       |    ON b.cell = a.cell AND b.vec_id <> a.vec_id),
-       |edges AS (
-       |  SELECT vec_id, nbr_id FROM (
-       |    SELECT g.vec_id, g.nbr_id, ROW_NUMBER() OVER (
-       |      PARTITION BY g.vec_id
-       |      ORDER BY ${qDistSql("x.qv", "y.qv")}, g.nbr_id) AS rn
-       |    FROM gcand g JOIN base x ON x.vec_id = g.vec_id
-       |    JOIN base y ON y.vec_id = g.nbr_id)
-       |  WHERE rn <= $NavK),
+       |${navGraphSql("base")},
        |delta AS (SELECT vec_id, qv FROM q
        |  WHERE vec_id >= $NumQueries + $cellsSub
        |    AND vec_id % $DeltaMod = 0),
@@ -3118,16 +3005,11 @@ object Similarity {
        |          UNION ALL
        |          SELECT cent_id AS cell, vec_id, dist FROM da
        |          WHERE rn = 1)) WHERE rn = 1),
-       |qe AS (
-       |  SELECT q_id, cent_id AS cell FROM (
-       |    SELECT qs.q_id, c.cent_id, ROW_NUMBER() OVER (
-       |      PARTITION BY qs.q_id
-       |      ORDER BY ${qDistSql("qs.qqv", "c.qc")}, c.cent_id) AS rn
-       |    FROM qs CROSS JOIN c$KmIters c) WHERE rn <= $NavEntryCells),
+       |$entryCellsSql,
        |b0 AS (SELECT qe.q_id, m.entry_id AS vec_id
        |       FROM qe JOIN ${if (promote) "pmedoid" else "medoid"}
        |         m USING (cell)),
-       |$hops
+       |${navHopsSql("merged", "fullc")}
        |SELECT q_id, vec_id, dist, rn AS rank FROM s$NavHops
        |WHERE rn <= $TopK ORDER BY q_id, rank""".stripMargin
   }
@@ -3203,11 +3085,8 @@ object Similarity {
     * integer grid — and query-time cost is now O(walk) like d84's. */
   def d86HnswSearch(spark: SparkSession, dir: String): DataFrame = {
     val root = HnswIndex.ensure(spark, dir)
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    hnswDescent(qz.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv")),
-      qz.filter(col("vec_id") >= NumQueries),
+    val qz = quantized(spark, dir)
+    hnswDescent(querySide(qz), candidates(qz),
       Artifact.part(spark, root, "entry"),
       l => Artifact.part(spark, root, s"edges_l$l"),
       NavBeam, NavHops, TopK)
@@ -3245,19 +3124,12 @@ object Similarity {
       s"graft_hnsw_idx_v${AnnIndexV}_L${HnswMaxLvl}k${NavK}" +
         s"i${KmIters}tb$ProvTrainPerCell", "embeddings") {
     (spark, dir, tmp) =>
-      val qz = Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      val corpus = qz.filter(col("vec_id") >= NumQueries)
-      val init = qz.filter(col("vec_id") >= NumQueries &&
-          col("vec_id") < NumQueries + IvfCells)
-        .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
+      val qz = quantized(spark, dir)
+      val corpus = candidates(qz)
       // sample-bounded training (the NavIndex contract — full-
       // corpus k-means is the measured 100 TB trap); the oracle
       // replays the same bound
-      val train = qz.filter(col("vec_id") >= NumQueries + IvfCells &&
-        col("vec_id") < NumQueries + IvfCells +
-          ProvTrainPerCell * IvfCells)
-      val cents = kmeansQuantized(train, init, KmIters)
+      val cents = trainIvf(qz, bounded = true)
       cents.coalesce(1).write.parquet(s"$tmp/centroids")
       val leveled = corpus.withColumn("lvl",
         hnswLevel(Dedup.md5Long(col("vec_id").cast("string"))))
@@ -3406,10 +3278,7 @@ object Similarity {
       seed + ",\n" +
         walkCtes(s"l$l", s"edgesl$l", HnswDescentHops, HnswDescentBeam)
     }.mkString(",\n")
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells} AND " +
-          s"vec_id < ${NumQueries + IvfCells + ProvTrainPerCell * IvfCells}")},
+    s"""WITH ${ivfKmeansSql(boundedTrainSql)},
        |corpus AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries),
        |${assignCte("ca", "corpus", s"c$KmIters")},
        |posted AS (SELECT vec_id, cent_id AS cell, dist
@@ -3446,8 +3315,7 @@ object Similarity {
     * than k — often zero — whenever the filter is selective: with L
     * uniform labels, post-filtering unfiltered top-k keeps ~k/L
     * rows. That failure mode is pinned in the spec, not just
-    * described. Composition: d22's training and d25's probe/assign
-    * legs verbatim; the filter is ONE pushed predicate on the
+    * described. The filter is ONE pushed predicate on the
     * (cell-blocked) posting join — no extra shuffle, no second
     * index. */
   def d75FilteredIvf(spark: SparkSession, dir: String): DataFrame = {
@@ -3457,47 +3325,20 @@ object Similarity {
     val queries = emb.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
         col("label").as("want"))
-    val init = emb.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val train = emb.filter(col("vec_id") >= NumQueries + IvfCells)
-      .select(col("vec_id"), col("qv"))
-    val cents = kmeansQuantized(train, init, KmIters)
-    val assigned = emb.filter(col("vec_id") >= NumQueries)
-      .join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"),
-        first(col("qv")).as("qv"), first(col("label")).as("lab"))
-      .select(col("vec_id"), col("best.cent_id").as("cell"),
-        col("qv"), col("lab"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cent_id"))
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= NProbe)
-      .select(col("q_id"), col("q_qv"), col("want"),
-        col("cent_id").as("cell"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    broadcast(probes).join(assigned, Seq("cell"))
-      .filter(col("lab") === col("want")) // PRE-filter, before rank
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("want").cast("long").as("label"),
-        col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    val cents = trainIvf(emb)
+    rankTop(probed(queries, cents, NProbe,
+        ivfAssign(candidates(emb), cents, "qv", "label"))
+      .filter(col("label") === col("want")) // PRE-filter, before rank
+      .withColumn("dist", qDist(col("q_qv"), col("qv"))), "dist", TopK,
+      col("q_id"), col("want").cast("long").as("label"), col("vec_id"),
+      col("dist"))
   }
 
   /** DuckDB oracle for d75: the d25 chain with labels re-joined and
     * the predicate applied inside the posting join, before the rank
     * window. */
   val d75Sql: String =
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells}")},
+    s"""WITH ${ivfKmeansSql()},
        |qs AS (SELECT q.vec_id AS q_id, q.qv AS qqv, e.label AS want
        |       FROM q JOIN embeddings e ON e.vec_id = q.vec_id
        |       WHERE q.vec_id < $NumQueries),
@@ -3507,12 +3348,7 @@ object Similarity {
        |  SELECT sa.vec_id, sa.qv, sa.cent_id, e.label AS lab
        |  FROM sa JOIN embeddings e ON e.vec_id = sa.vec_id
        |  WHERE rn = 1),
-       |pr AS (
-       |  SELECT q_id, qqv, want, cent_id, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, cent_id) AS rn
-       |  FROM (SELECT qs.q_id, qs.qqv, qs.want, c.cent_id,
-       |    ${qDistSql("qs.qqv", "c.qc")} AS dist
-       |  FROM qs CROSS JOIN c$KmIters c)),
+       |${probeSql("q_id", "qqv", "want")},
        |res AS (
        |  SELECT q_id, want, vec_id, dist, ROW_NUMBER() OVER (
        |    PARTITION BY q_id ORDER BY dist, vec_id) AS rank
@@ -3537,12 +3373,7 @@ object Similarity {
     * subspace. */
   def trainPqCodebook(spark: SparkSession, dir: String,
       sampleFraction: Double = 1.0): DataFrame = {
-    val sliced = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      .select(col("vec_id"),
-        explode(sequence(lit(0L), lit(PqSubspaces - 1L))).as("grp"),
-        col("qv"))
-      .withColumn("qv", expr(s"slice(qv, grp * $PqSubDim + 1, $PqSubDim)"))
+    val sliced = pqSlices(quantized(spark, dir), "grp", col("vec_id"))
     val init = sliced.filter(col("vec_id") < PqCodes)
       .select(col("grp"), col("vec_id").as("cent_id"), col("qv").as("qc"))
     kmeansGrouped(sliced.filter(col("vec_id") >= PqCodes), init,
@@ -3555,27 +3386,13 @@ object Similarity {
     * codebooks — d19's contract with [[trainPqCodebook]]'s books, the
     * PQ counterpart of d25 (train → assign, whole chain replayed by
     * the oracle: four per-subspace k-means CTE chains + assignment).
-    * Shape is d19's: explode subspaces, broadcast the (tiny) trained
-    * book, slice the quantized vector, one partial-aggregable
-    * struct-min — the vector side never shuffles. */
-  def d26PqTrained(spark: SparkSession, dir: String): DataFrame = {
-    val book = trainPqCodebook(spark, dir) // (sub, code_id, qc)
-    Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-      .filter(col("vec_id") >= PqCodes)
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"),
-        col("qv"))
-      .withColumn("qv",
-        expr(s"slice(qv, sub * $PqSubDim + 1, $PqSubDim)"))
-      .join(broadcast(book), Seq("sub"))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("dist"), col("code_id"))).as("best"))
+    * The vector side never shuffles. */
+  def d26PqTrained(spark: SparkSession, dir: String): DataFrame =
+    pqCodes(quantized(spark, dir).filter(col("vec_id") >= PqCodes),
+      trainPqCodebook(spark, dir), "sub", "code_id")
       .select(col("vec_id"), col("sub").as("subspace"),
         col("best.code_id").as("code"), col("best.dist").as("dist"))
       .orderBy(col("vec_id"), col("subspace"))
-  }
 
   /** d27: ADC search — asymmetric distance computation over PQ codes,
     * the memory-scale QUERY path (FAISS's IndexPQ contract, public
@@ -3598,53 +3415,27 @@ object Similarity {
   private def adcRanked(spark: SparkSession, dir: String, k: Int)
       : DataFrame = {
     val book = trainPqCodebook(spark, dir) // (sub, code_id, qc)
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    // corpus side: ONLY the trained code ids ride forward (d26's
-    // assignment, inlined so the plan is one chain)
-    adcScan(qz, pqAssignCodes(qz, book), book, k)
+    val qz = quantized(spark, dir)
+    // corpus side: ONLY the trained code ids ride forward
+    adcScan(qz, pqAssignCodes(qz.filter(col("vec_id") >= PqCodes), book),
+      book, k)
   }
 
-  /** d26's assignment as a reusable leg: (vec_id, sub, code) under
-    * `book` for every non-codebook vector — also the code relation
+  /** d26's assignment: (vec_id, sub, code) under `book` for every
+    * vector of `vecs` — on the non-codebook vectors, the code relation
     * the persisted PQ index (d80) stores. */
-  def pqAssignCodes(qz: DataFrame, book: DataFrame): DataFrame =
-    qz.filter(col("vec_id") >= PqCodes)
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"),
-        col("qv"))
-      .withColumn("qv", expr(s"slice(qv, sub * $PqSubDim + 1, $PqSubDim)"))
-      .join(broadcast(book), Seq("sub"))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("dist"), col("code_id"))).as("best"))
+  def pqAssignCodes(vecs: DataFrame, book: DataFrame): DataFrame =
+    pqCodes(vecs, book, "sub", "code_id")
       .select(col("vec_id"), col("sub"), col("best.code_id").as("code"))
 
-  /** The ADC table-lookup scan alone, over an ALREADY-CODED corpus —
-    * the piece a persisted PQ index reuses without retraining or
-    * re-assigning. `codes` = (vec_id, sub, code); queries come from
-    * the live `qz` relation. */
+  /** The ADC scan over an ALREADY-CODED corpus — the piece a persisted
+    * PQ index reuses without retraining or re-assigning. `codes` =
+    * (vec_id, sub, code); queries come from the live `qz` relation. */
   def adcScan(qz: DataFrame, codes: DataFrame, book: DataFrame,
-      k: Int): DataFrame = {
-    // query side: the bounded (q_id, sub, code) → distance table
-    val table = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"),
-        col("qv"))
-      .withColumn("qv", expr(s"slice(qv, sub * $PqSubDim + 1, $PqSubDim)"))
-      .join(broadcast(book), Seq("sub"))
-      .select(col("q_id"), col("sub"), col("code_id").as("code"),
-        qDist(col("qv"), col("qc")).as("qd"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-    codes.join(broadcast(table), Seq("sub", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("qd")).cast("long").as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("adc_dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+      k: Int): DataFrame =
+    adcRank(codes.join(broadcast(adcTable(qz.filter(col("vec_id") <
+      NumQueries), book, "sub", "code_id", col("vec_id").as("q_id"))),
+      Seq("sub", "code")), k)
 
   val RerankR = 20
 
@@ -3663,30 +3454,18 @@ object Similarity {
     * assignment, tables, the compressed shortlist scan, and the
     * exact re-rank. */
   def d30AdcRerank(spark: SparkSession, dir: String): DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val shortlist = adcRanked(spark, dir, RerankR)
-      .select(col("q_id"), col("vec_id"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    qz.join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    val qz = quantized(spark, dir)
+    exactRerank(adcRanked(spark, dir, RerankR)
+      .select(col("q_id"), col("vec_id")), qz, querySide(qz), TopK)
   }
 
-  /** DuckDB oracle for d30: d27's chains + shortlist cut at
-    * [[RerankR]] + the exact re-rank against full-precision
-    * quantized vectors. (lazy: [[d27Sql]] is declared later in the
-    * file — eager init would read it as null.) */
-  lazy val d30Sql: String = {
-    val inner = d27Sql
-      .replace(s"WHERE rank <= $TopK", s"WHERE rank <= $RerankR")
+  /** DuckDB oracle for d30: d27's chains cut at [[RerankR]] + the
+    * exact re-rank against full-precision quantized vectors. */
+  lazy val d30Sql: String = rerankSql(pqAdcSql(RerankR))
+
+  /** The exact re-rank oracle tail over the (q_id, vec_id) shortlist
+    * query `inner`: full-precision distances, top [[TopK]]. */
+  private def rerankSql(inner: String): String =
     s"""WITH short AS ($inner),
        |qq AS (
        |  SELECT vec_id AS q_id,
@@ -3712,18 +3491,42 @@ object Similarity {
        |  FROM rr)
        |SELECT q_id, vec_id, dist, rank FROM fin WHERE rank <= $TopK
        |ORDER BY q_id, rank""".stripMargin
-  }
 
   /** DuckDB oracle for d27: d26's four training+assignment chains,
     * plus per-subspace query distance tables and the summed ADC scan. */
-  val d27Sql: String = {
-    val chains = (0 until PqSubspaces).map { k =>
-      kmeansCtes(s"vec_id < $PqCodes", s"vec_id >= $PqCodes",
-        pre = s"s$k",
-        slice = s"list_slice(qv, ${k * PqSubDim + 1}, ${(k + 1) * PqSubDim})",
-        dim = PqSubDim) + ",\n" +
-        assignCte(s"s${k}sa", s"s${k}v", s"s${k}c$KmIters", PqSubDim)
-    }.mkString(",\n")
+  val d27Sql: String = pqAdcSql(TopK)
+
+  /** Subspace k's book chain (CTE prefix `s$k`): k-means over the
+    * k-th slice, seeded by the first [[PqCodes]] vectors. */
+  private def pqBookSql(k: Int): String =
+    kmeansCtes(s"vec_id < $PqCodes", s"vec_id >= $PqCodes",
+      pre = s"s$k",
+      slice = s"list_slice(qv, ${k * PqSubDim + 1}, ${(k + 1) * PqSubDim})",
+      dim = PqSubDim)
+
+  /** d26's chains: every subspace's book and its assignment
+    * `s${k}sa` over the training rows. */
+  private def pqCodeSql: String = (0 until PqSubspaces).map { k =>
+    pqBookSql(k) + ",\n" +
+      assignCte(s"s${k}sa", s"s${k}v", s"s${k}c$KmIters", PqSubDim)
+  }.mkString(",\n")
+
+  /** The ADC oracle tail: per-(q_id, vec_id) sums of the `terms`
+    * lookups, ranked by (adc_dist, vec_id), cut at `k`. */
+  private def adcSql(terms: String, k: Int): String =
+    s"""adc AS (
+       |  SELECT q_id, vec_id, CAST(SUM(qd) AS BIGINT) AS adc_dist
+       |  FROM ($terms) GROUP BY q_id, vec_id),
+       |res AS (
+       |  SELECT q_id, vec_id, adc_dist, ROW_NUMBER() OVER (
+       |    PARTITION BY q_id ORDER BY adc_dist, vec_id) AS rank
+       |  FROM adc)
+       |SELECT q_id, vec_id, adc_dist, rank FROM res WHERE rank <= $k
+       |ORDER BY q_id, rank""".stripMargin
+
+  /** d27's replay with the cut at `k` (d30's shortlist takes
+    * [[RerankR]]). */
+  private def pqAdcSql(k: Int): String = {
     val terms = (0 until PqSubspaces).map { k =>
       s"""SELECT t.q_id, c.vec_id, t.qd
          |FROM (SELECT vec_id, cent_id FROM s${k}sa WHERE rn = 1) c
@@ -3735,16 +3538,8 @@ object Similarity {
          |  CROSS JOIN s${k}c$KmIters b) t
          |  ON c.cent_id = t.cent_id""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH $chains,
-       |adc AS (
-       |  SELECT q_id, vec_id, CAST(SUM(qd) AS BIGINT) AS adc_dist
-       |  FROM ($terms) GROUP BY q_id, vec_id),
-       |res AS (
-       |  SELECT q_id, vec_id, adc_dist, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY adc_dist, vec_id) AS rank
-       |  FROM adc)
-       |SELECT q_id, vec_id, adc_dist, rank FROM res WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+    s"""WITH $pqCodeSql,
+       |${adcSql(terms, k)}""".stripMargin
   }
 
   /** d28: IVF+PQ search — the full composition every large-scale ANN
@@ -3761,62 +3556,20 @@ object Similarity {
     * oracle replays BOTH training chains, both assignments, probe
     * choice, and the ADC scan. */
   def d28IvfPqSearch(spark: SparkSession, dir: String): DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    // IVF leg: d25's exact relations
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val cands = qz.filter(col("vec_id") >= NumQueries)
-    val init = qz.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = kmeansQuantized(
-      qz.filter(col("vec_id") >= NumQueries + IvfCells), init, KmIters)
-    val assigned = cands.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"))
-      .select(col("vec_id"), col("best.cent_id").as("cell"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cent_id"))
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= NProbe)
-      .select(col("q_id"), col("cent_id").as("cell"))
-    // PQ leg: trained books, codes for EVERY candidate (d26's shape
-    // over the search candidate set), bounded query tables (d27's)
+    val qz = quantized(spark, dir)
+    val cands = candidates(qz)
+    val cents = trainIvf(qz)
     val book = trainPqCodebook(spark, dir)
-    def sliced(df: DataFrame, idCol: String) = df
-      .select(col(idCol),
-        explode(sequence(lit(0), lit(PqSubspaces - 1))).as("sub"),
-        col("qv"))
-      .withColumn("qv", expr(s"slice(qv, sub * $PqSubDim + 1, $PqSubDim)"))
-      .join(broadcast(book), Seq("sub"))
-    val codes = sliced(cands, "vec_id")
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("dist"), col("code_id"))).as("best"))
-      .select(col("vec_id"), col("sub"), col("best.code_id").as("code"))
-    val table = sliced(
-      qz.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("qv")), "q_id")
-      .select(col("q_id"), col("sub"), col("code_id").as("code"),
-        qDist(col("qv"), col("qc")).as("qd"))
-    // search: probed cells pick the candidate ids; codes + table
-    // lookups rank them — full vectors never reappear
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-    broadcast(probes).join(assigned, Seq("cell"))
+    // probed cells pick the candidate ids; codes + table lookups rank
+    // them — full vectors never reappear
+    adcRank(broadcast(probe(querySide(qz), cents, NProbe)
+        .select(col("q_id"), col("cell")))
+      .join(ivfAssign(cands, cents), Seq("cell"))
       .select(col("q_id"), col("vec_id"))
-      .join(codes, Seq("vec_id"))
-      .join(broadcast(table), Seq("q_id", "sub", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("qd")).cast("long").as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id"), col("adc_dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+      .join(pqAssignCodes(cands, book), Seq("vec_id"))
+      .join(broadcast(adcTable(qz.filter(col("vec_id") < NumQueries)
+        .select(col("vec_id").as("q_id"), col("qv")), book, "sub",
+        "code_id", col("q_id"))), Seq("q_id", "sub", "code")), TopK)
   }
 
   /** DuckDB oracle for d28: the d25 IVF chain (training, assignment,
@@ -3824,10 +3577,7 @@ object Similarity {
     * SEARCH candidate set + d27's query tables + the probed ADC scan. */
   val d28Sql: String = {
     val pqChains = (0 until PqSubspaces).map { k =>
-      kmeansCtes(s"vec_id < $PqCodes", s"vec_id >= $PqCodes",
-        pre = s"s$k",
-        slice = s"list_slice(qv, ${k * PqSubDim + 1}, ${(k + 1) * PqSubDim})",
-        dim = PqSubDim) + ",\n" +
+      pqBookSql(k) + ",\n" +
         s"""s${k}cand AS (SELECT vec_id, qv FROM s${k}q
            |  WHERE vec_id >= $NumQueries),""".stripMargin + "\n" +
         assignCte(s"s${k}ca", s"s${k}cand", s"s${k}c$KmIters", PqSubDim)
@@ -3845,34 +3595,14 @@ object Similarity {
          |  CROSS JOIN s${k}c$KmIters b) t
          |  ON t.q_id = pq.q_id AND t.cent_id = c.cent_id""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells}")},
-       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
-       |       WHERE vec_id < $NumQueries),
-       |cand AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries),
-       |${assignCte("sa", "cand", s"c$KmIters")},
-       |asg AS (SELECT vec_id, cent_id FROM sa WHERE rn = 1),
-       |pr AS (
-       |  SELECT q_id, cent_id, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, cent_id) AS rn
-       |  FROM (SELECT qs.q_id, c.cent_id,
-       |    ${qDistSql("qs.qqv", "c.qc")} AS dist
-       |  FROM qs CROSS JOIN c$KmIters c)),
+    s"""WITH ${ivfChainSql(asgCols = "vec_id, cent_id")},
+       |${probeSql("q_id")},
        |pairsq AS (
        |  SELECT pr.q_id, a.vec_id FROM pr
        |  JOIN asg a ON a.cent_id = pr.cent_id
        |  WHERE pr.rn <= $NProbe),
        |$pqChains,
-       |adc AS (
-       |  SELECT q_id, vec_id, CAST(SUM(qd) AS BIGINT) AS adc_dist
-       |  FROM ($terms) GROUP BY q_id, vec_id),
-       |res AS (
-       |  SELECT q_id, vec_id, adc_dist, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY adc_dist, vec_id) AS rank
-       |  FROM adc)
-       |SELECT q_id, vec_id, adc_dist, rank FROM res WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${adcSql(terms, TopK)}""".stripMargin
   }
 
   /** d29: residual IVF+PQ search — d28 with RESIDUAL encoding, the
@@ -3898,18 +3628,9 @@ object Similarity {
     * chains, code assignment, probe choice, per-cell query tables,
     * and the ADC scan. */
   def d29ResidualPq(spark: SparkSession, dir: String): DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val cands = qz.filter(col("vec_id") >= NumQueries)
-    val init = qz.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = kmeansQuantized(
-      qz.filter(col("vec_id") >= NumQueries + IvfCells), init, KmIters)
-    residualPqSearch(queries, cands, cents, NProbe, TopK,
-      NumQueries + PqCodes)
+    val qz = quantized(spark, dir)
+    residualPqSearch(querySide(qz), candidates(qz), trainIvf(qz), NProbe,
+      TopK, NumQueries + PqCodes)
   }
 
   /** The residual-encoded IVFADC leg on an already-trained centroid
@@ -3945,29 +3666,17 @@ object Similarity {
   def cellResiduals(cands: DataFrame, cents: DataFrame): DataFrame = {
     val cellSide = broadcast(cents
       .select(col("cent_id").as("cell"), col("qc").as("cell_qc")))
-    cands.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"),
-        first(col("qv")).as("qv"))
-      .select(col("vec_id"), col("best.cent_id").as("cell"), col("qv"))
-      .join(cellSide, Seq("cell"))
+    ivfAssign(cands, cents, "qv").join(cellSide, Seq("cell"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("qv"), col("cell_qc"), (x, c) => x - c).as("qv"))
   }
-
-  private def pqSlices(df: DataFrame, idCols: Seq[String]): DataFrame = df
-    .select(idCols.map(col) ++ Seq(
-      explode(sequence(lit(0L), lit(PqSubspaces - 1L))).as("grp"),
-      col("qv")): _*)
-    .withColumn("qv", expr(s"slice(qv, grp * $PqSubDim + 1, $PqSubDim)"))
 
   /** Per-subspace residual books, all four subspaces in ONE grouped
     * k-means chain; residuals with vec_id < `initBelow` seed the
     * codes (the d19/d26 deterministic-init convention). */
   def trainResidualBook(resid: DataFrame, initBelow: Long): DataFrame = {
-    val slicedR = pqSlices(resid.select(col("vec_id"), col("qv")),
-      Seq("vec_id"))
+    val slicedR = pqSlices(resid.select(col("vec_id"), col("qv")), "grp",
+      col("vec_id"))
     val binit = slicedR.filter(col("vec_id") < initBelow)
       .select(col("grp"), col("vec_id").as("cent_id"), col("qv").as("qc"))
     kmeansGrouped(slicedR.filter(col("vec_id") >= initBelow), binit,
@@ -3987,17 +3696,18 @@ object Similarity {
     * compressed corpus representation; also what the persisted
     * production index (d82) stores under `codes/`. */
   def residualCellCodes(resid: DataFrame, book: DataFrame): DataFrame = {
-    val codes = pqSlices(resid.select(col("vec_id"), col("qv")),
-      Seq("vec_id"))
-      .join(broadcast(book), Seq("grp"))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"), col("grp"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"))
-      .select(col("vec_id"), col("grp").as("sub"),
-        col("best.cent_id").as("code"))
+    val codes = groupedCodes(resid.select(col("vec_id"), col("qv")), book)
     resid.select(col("vec_id"), col("cell")).join(codes, Seq("vec_id"))
       .select(col("vec_id"), col("cell"), col("sub"), col("code"))
   }
+
+  /** (vec_id, sub, code) under a [[kmeansGrouped]] `book` (grp,
+    * cent_id, qc) — the residual codes, and the sweeps' raw-vector
+    * codes. */
+  def groupedCodes(vecs: DataFrame, book: DataFrame): DataFrame =
+    pqCodes(vecs, book, "grp", "cent_id")
+      .select(col("vec_id"), col("grp").as("sub"),
+        col("best.cent_id").as("code"))
 
   /** The residual ADC scan over an ALREADY-CODED corpus — the piece
     * the persisted production index reuses with zero training,
@@ -4008,44 +3718,25 @@ object Similarity {
     val cellSide = broadcast(cents
       .select(col("cent_id").as("cell"), col("qc").as("cell_qc")))
     // probes, then the query residual PER PROBED CELL
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cent_id"))
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("q_qv"), col("cent_id").as("cell"))
-    val qres = probes.join(cellSide, Seq("cell"))
+    val qres = probe(queries, cents, nprobe).join(cellSide, Seq("cell"))
       .select(col("q_id"), col("cell"),
         zip_with(col("q_qv"), col("cell_qc"), (x, c) => x - c).as("qv"))
-    // bounded (q_id, cell, sub, code) → distance table
-    val table = qres
-      .select(col("q_id"), col("cell"),
-        explode(sequence(lit(0L), lit(PqSubspaces - 1L))).as("grp"),
-        col("qv"))
-      .withColumn("qv", expr(s"slice(qv, grp * $PqSubDim + 1, $PqSubDim)"))
-      .join(broadcast(book), Seq("grp"))
-      .select(col("q_id"), col("cell"), col("grp").as("sub"),
-        col("cent_id").as("code"), qDist(col("qv"), col("qc")).as("qd"))
-    // scan: members of probed cells ranked by summed table lookups —
-    // the residual vectors themselves never reach the search join
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-    cellCodes
-      .join(broadcast(table), Seq("cell", "sub", "code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("qd")).cast("long").as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("adc_dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    // scan: members of probed cells ranked by summed lookups in the
+    // bounded (q_id, cell, sub, code) table — the residual vectors
+    // themselves never reach the search join
+    adcRank(cellCodes.join(broadcast(adcTable(qres, book, "grp", "cent_id",
+      col("q_id"), col("cell"))), Seq("cell", "sub", "code")), k)
   }
 
   /** DuckDB oracle for d29: the d25 IVF chain, residual formation,
     * four residual-PQ k-means chains trained FROM the rsd CTE (the
     * kmeansCtes `src` hook), per-(query, probed-cell) residual
     * tables, and the cell-keyed ADC scan. */
-  val d29Sql: String = {
+  val d29Sql: String = residualSql(TopK)
+
+  /** d29's replay with the cut at `k` (d47's shortlist takes
+    * [[RerankR]]). */
+  private def residualSql(k: Int): String = {
     val pqChains = (0 until PqSubspaces).map { k =>
       kmeansCtes(s"vec_id < ${NumQueries + PqCodes}",
         s"vec_id >= ${NumQueries + PqCodes}",
@@ -4071,25 +3762,13 @@ object Similarity {
          |  FROM r${k}t q CROSS JOIN r${k}c$KmIters b) t
          |  ON t.cell = m.cell AND t.cent_id = c.cent_id""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells}")},
-       |qs AS (SELECT vec_id AS q_id, qv AS qqv FROM q
-       |       WHERE vec_id < $NumQueries),
-       |cand AS (SELECT vec_id, qv FROM q WHERE vec_id >= $NumQueries),
-       |${assignCte("sa", "cand", s"c$KmIters")},
-       |asg AS (SELECT vec_id, qv, cent_id FROM sa WHERE rn = 1),
+    s"""WITH ${ivfChainSql()},
        |rsd AS (
        |  SELECT a.vec_id, a.cent_id AS cell,
        |    list_transform(generate_series(1, $QDim),
        |      j -> a.qv[j] - c.qc[j]) AS qv
        |  FROM asg a JOIN c$KmIters c ON c.cent_id = a.cent_id),
-       |pr AS (
-       |  SELECT q_id, qqv, cent_id, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, cent_id) AS rn
-       |  FROM (SELECT qs.q_id, qs.qqv, c.cent_id,
-       |    ${qDistSql("qs.qqv", "c.qc")} AS dist
-       |  FROM qs CROSS JOIN c$KmIters c)),
+       |${probeSql("q_id", "qqv")},
        |qrs AS (
        |  SELECT pr.q_id, pr.cent_id AS cell,
        |    list_transform(generate_series(1, $QDim),
@@ -4097,15 +3776,7 @@ object Similarity {
        |  FROM pr JOIN c$KmIters c ON c.cent_id = pr.cent_id
        |  WHERE pr.rn <= $NProbe),
        |$pqChains,
-       |adc AS (
-       |  SELECT q_id, vec_id, CAST(SUM(qd) AS BIGINT) AS adc_dist
-       |  FROM ($terms) GROUP BY q_id, vec_id),
-       |res AS (
-       |  SELECT q_id, vec_id, adc_dist, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY adc_dist, vec_id) AS rank
-       |  FROM adc)
-       |SELECT q_id, vec_id, adc_dist, rank FROM res WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${adcSql(terms, k)}""".stripMargin
   }
 
   /** Exact re-rank of a (q_id, vec_id) shortlist against the
@@ -4114,17 +3785,10 @@ object Similarity {
     * The shortlist is queries×R rows (bounded, broadcast), so the
     * exact pass touches R vectors per query, never the corpus. */
   def exactRerank(shortlist: DataFrame, vecs: DataFrame,
-      queries: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    vecs.join(broadcast(shortlist), Seq("vec_id"))
+      queries: DataFrame, k: Int): DataFrame =
+    rankTop(vecs.join(broadcast(shortlist), Seq("vec_id"))
       .join(broadcast(queries), Seq("q_id"))
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+      .withColumn("dist", qDist(col("q_qv"), col("qv"))), "dist", k)
 
   /** d47: residual IVF+PQ + exact re-rank — the PRODUCTION ANN
     * configuration (FAISS IndexIVFPQ + IndexRefineFlat, public
@@ -4142,68 +3806,24 @@ object Similarity {
     * corpus pass. Exact integer arithmetic end to end; the oracle
     * replays d29's whole chain cut at R plus the exact re-rank. */
   def d47ResidualRerank(spark: SparkSession, dir: String): DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val queries = qz.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"))
-    val cands = qz.filter(col("vec_id") >= NumQueries)
-    val init = qz.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val cents = kmeansQuantized(
-      qz.filter(col("vec_id") >= NumQueries + IvfCells), init, KmIters)
-    val shortlist = residualPqSearch(queries, cands, cents, NProbe,
-      RerankR, NumQueries + PqCodes)
+    val qz = quantized(spark, dir)
+    val queries = querySide(qz)
+    val shortlist = residualPqSearch(queries, candidates(qz), trainIvf(qz),
+      NProbe, RerankR, NumQueries + PqCodes)
       .select(col("q_id"), col("vec_id"))
     exactRerank(shortlist, qz, queries, TopK)
   }
 
-  /** DuckDB oracle for d47: d29's chain with the rank cut widened to
-    * [[RerankR]], then d30's exact re-rank tail. (lazy — d29Sql is
-    * initialized above but keep the d30Sql convention.) */
-  lazy val d47Sql: String = {
-    val inner = d29Sql
-      .replace(s"WHERE rank <= $TopK", s"WHERE rank <= $RerankR")
-    s"""WITH short AS ($inner),
-       |qq AS (
-       |  SELECT vec_id AS q_id,
-       |    list_transform(embedding,
-       |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-       |      AS qqv
-       |  FROM embeddings WHERE vec_id < $NumQueries),
-       |vv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |      x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-       |      AS qv
-       |  FROM embeddings),
-       |rr AS (
-       |  SELECT s.q_id, s.vec_id,
-       |    ${qDistSql("qq.qqv", "v.qv")} AS dist
-       |  FROM short s
-       |  JOIN vv v ON v.vec_id = s.vec_id
-       |  JOIN qq ON qq.q_id = s.q_id),
-       |fin AS (
-       |  SELECT q_id, vec_id, dist, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, vec_id) AS rank
-       |  FROM rr)
-       |SELECT q_id, vec_id, dist, rank FROM fin WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
-  }
+  /** DuckDB oracle for d47: d29's chain cut at [[RerankR]], then
+    * d30's exact re-rank tail. */
+  lazy val d47Sql: String = rerankSql(residualSql(RerankR))
 
   val d26Sql: String = {
-    val chains = (0 until PqSubspaces).map { k =>
-      kmeansCtes(s"vec_id < $PqCodes", s"vec_id >= $PqCodes",
-        pre = s"s$k",
-        slice = s"list_slice(qv, ${k * PqSubDim + 1}, ${(k + 1) * PqSubDim})",
-        dim = PqSubDim) + ",\n" +
-        assignCte(s"s${k}sa", s"s${k}v", s"s${k}c$KmIters", PqSubDim)
-    }.mkString(",\n")
     val selects = (0 until PqSubspaces).map { k =>
       s"""SELECT vec_id, $k AS subspace, cent_id AS code, dist
          |FROM s${k}sa WHERE rn = 1""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH $chains
+    s"""WITH $pqCodeSql
        |$selects
        |ORDER BY vec_id, subspace""".stripMargin
   }
@@ -4315,18 +3935,10 @@ object Similarity {
     * broadcast centroid relation, then ONE shuffle keyed on the cell
     * id for the self-join; the pair relation is cell-bounded. */
   def d33Semdedup(spark: SparkSession, dir: String): DataFrame = {
-    val qz = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    val init = qz.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
+    val qz = quantized(spark, dir)
     val cents = kmeansQuantized(qz.filter(col("vec_id") >= IvfCells),
-      init, KmIters)
-    val asg = qz.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"),
-        first(col("qv")).as("qv"))
-      .select(col("vec_id"), col("best.cent_id").as("cell"), col("qv"))
+      seeds(qz, col("vec_id") < IvfCells), KmIters)
+    val asg = ivfAssign(qz, cents, "qv")
     val a = asg.select(col("cell"), col("vec_id").as("keep_id"),
       col("qv").as("qa"))
     val b = asg.select(col("cell"), col("vec_id").as("dup_id"),
@@ -4352,11 +3964,10 @@ object Similarity {
   /** d34: HARD-NEGATIVE mining — the contrastive-training data-prep
     * step (ANCE/DPR-style, public pattern): for each anchor, the
     * nearest candidates whose label DIFFERS from the anchor's — the
-    * examples a contrastive loss learns most from. Composition is
-    * d25's trained-IVF search leg with the label threaded through
-    * assignment and a label-mismatch filter before ranking, so the
-    * cost shape is identical: O(N·nprobe/K) candidates per anchor,
-    * bounded centroid/probe broadcasts, one cell-keyed shuffle — the
+    * examples a contrastive loss learns most from. The label rides
+    * through assignment and a label-mismatch filter runs before
+    * ranking, so the cost shape is d25's: O(N·nprobe/K) candidates
+    * per anchor, bounded centroid/probe broadcasts, one cell-keyed shuffle — the
     * first operator to exercise the embeddings table's label column.
     * Caveat inherited from IVF: a negative hiding in an unprobed
     * cell is missed (the recall-vs-nprobe tradeoff ann_recall.json
@@ -4369,46 +3980,19 @@ object Similarity {
     val queries = qz.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("qv").as("q_qv"))
-    val cands = qz.filter(col("vec_id") >= NumQueries)
-    val init = qz.filter(col("vec_id") >= NumQueries &&
-        col("vec_id") < NumQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("qv").as("qc"))
-    val train = qz.filter(col("vec_id") >= NumQueries + IvfCells)
-      .select(col("vec_id"), col("qv"))
-    val cents = kmeansQuantized(train, init, KmIters)
-    val assigned = cands.join(broadcast(cents))
-      .withColumn("dist", qDist(col("qv"), col("qc")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cent_id"))).as("best"),
-        first(col("qv")).as("qv"), first(col("label")).as("label"))
-      .select(col("vec_id"), col("best.cent_id").as("cell"),
-        col("qv"), col("label"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cent_id"))
-    val probes = queries.join(broadcast(cents))
-      .withColumn("dist", qDist(col("q_qv"), col("qc")))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= NProbe)
-      .select(col("q_id"), col("q_label"), col("q_qv"),
-        col("cent_id").as("cell"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    broadcast(probes).join(assigned, Seq("cell"))
+    val cents = trainIvf(qz)
+    rankTop(probed(queries, cents, NProbe,
+        ivfAssign(candidates(qz), cents, "qv", "label"))
       .filter(col("label") =!= col("q_label"))
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= HnK)
-      .select(col("q_id"), col("q_label"), col("vec_id"),
-        col("label").as("neg_label"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+      .withColumn("dist", qDist(col("q_qv"), col("qv"))), "dist", HnK,
+      col("q_id"), col("q_label"), col("vec_id"),
+      col("label").as("neg_label"), col("dist"))
   }
 
   /** DuckDB oracle for d34: d25's chain with labels joined back from
     * the embeddings table and the mismatch filter before ranking. */
   val d34Sql: String =
-    s"""WITH ${kmeansCtes(
-        s"vec_id >= $NumQueries AND vec_id < ${NumQueries + IvfCells}",
-        s"vec_id >= ${NumQueries + IvfCells}")},
+    s"""WITH ${ivfKmeansSql()},
        |qs AS (
        |  SELECT q.vec_id AS q_id, CAST(e.label AS BIGINT) AS q_label,
        |    q.qv AS qqv
@@ -4421,12 +4005,7 @@ object Similarity {
        |    AS label
        |  FROM sa s JOIN embeddings e ON e.vec_id = s.vec_id
        |  WHERE s.rn = 1),
-       |pr AS (
-       |  SELECT q_id, q_label, qqv, cent_id, ROW_NUMBER() OVER (
-       |    PARTITION BY q_id ORDER BY dist, cent_id) AS rn
-       |  FROM (SELECT qs.q_id, qs.q_label, qs.qqv, c.cent_id,
-       |    ${qDistSql("qs.qqv", "c.qc")} AS dist
-       |  FROM qs CROSS JOIN c$KmIters c)),
+       |${probeSql("q_id", "q_label", "qqv")},
        |res AS (
        |  SELECT q_id, q_label, vec_id, neg_label, dist,
        |    ROW_NUMBER() OVER (
@@ -4579,9 +4158,7 @@ object Similarity {
     val planes = portablePlanes.take(RpDims).zipWithIndex
       .map { case (signs, i) => (i.toLong, signs.map(_.toLong)) }
       .toDF("plane", "signs")
-    val qz = graft.Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    qz.crossJoin(broadcast(planes))
+    quantized(spark, dir).crossJoin(broadcast(planes))
       .select(col("vec_id"), col("plane"),
         aggregate(zip_with(col("qv"), col("signs"), (x, y) => x * y),
           lit(0L), (a, v) => a + v).as("proj"))
@@ -4611,22 +4188,24 @@ object Similarity {
     * width, the re-rank join is queries×R bounded. */
   def d45ProjectedRerank(spark: SparkSession, dir: String)
       : DataFrame = {
-    val qz = graft.Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    projectedRerank(
-      qz.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv")),
-      qz.filter(col("vec_id") >= NumQueries),
-      RerankR, TopK)
+    val qz = quantized(spark, dir)
+    projectedRerank(querySide(qz), candidates(qz), RerankR, TopK)
   }
 
   /** d45's core on already-quantized relations — reused by
     * AnnQuality's projected-recall sweep on the planted clustered
     * corpus. `queries` = (q_id, q_qv), `cands` = (vec_id, qv). */
   def projectedRerank(queries: DataFrame, cands: DataFrame,
-      r: Int, k: Int, dims: Int = RpDims): DataFrame = {
-    val qs = queries.withColumn("q_pv", projVec(col("q_qv"), dims))
-    val cs = cands.withColumn("pv", projVec(col("qv"), dims))
+      r: Int, k: Int, dims: Int = RpDims): DataFrame =
+    shortlistRerank(queries, cands, r, k, projVec(_, dims))
+
+  /** The two-stage shape of d45/d67: each query's top `r` by the
+    * quantized L2 between `front`-transformed vectors, re-ranked to
+    * `k` by the full-width distance. */
+  private def shortlistRerank(queries: DataFrame, cands: DataFrame,
+      r: Int, k: Int, front: Column => Column): DataFrame = {
+    val qs = queries.withColumn("q_pv", front(col("q_qv")))
+    val cs = cands.withColumn("pv", front(col("qv")))
     val wShort = Window.partitionBy(col("q_id"))
       .orderBy(col("pdist"), col("vec_id"))
     val shortlist = cs.crossJoin(broadcast(qs))
@@ -4634,14 +4213,8 @@ object Similarity {
       .withColumn("prank", row_number().over(wShort))
       .filter(col("prank") <= r)
       .select(col("q_id"), col("vec_id"), col("q_qv"), col("qv"))
-    val wFinal = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    shortlist
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wFinal))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    rankTop(shortlist.withColumn("dist", qDist(col("q_qv"), col("qv"))),
+      "dist", k)
   }
 
   /** d67 serving prefix width: 16 of 64 dims — the same 4× front-end
@@ -4665,38 +4238,16 @@ object Similarity {
     * ranking and runs at 1/4 width, the re-rank join is queries×R
     * bounded — same contract as d45/d30. */
   def d67MrlRerank(spark: SparkSession, dir: String): DataFrame = {
-    val qz = graft.Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    prefixRerank(
-      qz.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv")),
-      qz.filter(col("vec_id") >= NumQueries),
-      RerankR, TopK)
+    val qz = quantized(spark, dir)
+    prefixRerank(querySide(qz), candidates(qz), RerankR, TopK)
   }
 
   /** d67's core on already-quantized relations — [[projectedRerank]]
     * with a PREFIX SLICE where that uses a JL projection; reused by
     * AnnQuality's MRL recall sweep on the planted corpus. */
   def prefixRerank(queries: DataFrame, cands: DataFrame,
-      r: Int, k: Int, width: Int = MrlWidth): DataFrame = {
-    val qs = queries.withColumn("q_pv", slice(col("q_qv"), 1, width))
-    val cs = cands.withColumn("pv", slice(col("qv"), 1, width))
-    val wShort = Window.partitionBy(col("q_id"))
-      .orderBy(col("pdist"), col("vec_id"))
-    val shortlist = cs.crossJoin(broadcast(qs))
-      .withColumn("pdist", qDist(col("q_pv"), col("pv")))
-      .withColumn("prank", row_number().over(wShort))
-      .filter(col("prank") <= r)
-      .select(col("q_id"), col("vec_id"), col("q_qv"), col("qv"))
-    val wFinal = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    shortlist
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wFinal))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("dist"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+      r: Int, k: Int, width: Int = MrlWidth): DataFrame =
+    shortlistRerank(queries, cands, r, k, slice(_, 1, width))
 
   /** Oracle for d67: quantize, prefix-slice L2 shortlist cut at
     * [[RerankR]], exact full-width re-rank — the d45 oracle shape
@@ -4833,13 +4384,8 @@ object Similarity {
     * distance next to the exact distance so the shortlist metric
     * itself is hash-verified, not just the final ranking. */
   def d88BinaryRerank(spark: SparkSession, dir: String): DataFrame = {
-    val qz = graft.Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    binaryRerank(
-      qz.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv")),
-      qz.filter(col("vec_id") >= NumQueries),
-      RerankR, TopK)
+    val qz = quantized(spark, dir)
+    binaryRerank(querySide(qz), candidates(qz), RerankR, TopK)
   }
 
   /** d88's packed-signature front end, shared with d91's fusion leg:
@@ -4873,27 +4419,37 @@ object Similarity {
   def binaryRerank(queries: DataFrame, cands: DataFrame,
       r: Int, k: Int): DataFrame = {
     val (qBits, cBits) = binarySignatures(queries, cands)
-    val wShort = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val shortlist = cBits.crossJoin(broadcast(qBits))
-      .withColumn("hamming",
-        expr("bit_count(bits ^ q_bits)").cast("long"))
-      .withColumn("hrank", row_number().over(wShort))
-      .filter(col("hrank") <= r)
+    val shortlist = hammingRanks(qBits, cBits)
+      .filter(col("rnk") <= r)
       .select(col("q_id"), col("vec_id"), col("hamming"))
     // re-rank: only queries×R rows re-meet the full vectors
-    val wFinal = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    broadcast(shortlist)
+    rankTop(broadcast(shortlist)
       .join(cands.select(col("vec_id"), col("qv")), Seq("vec_id"))
       .join(broadcast(queries), Seq("q_id"))
-      .withColumn("dist", qDist(col("q_qv"), col("qv")))
-      .withColumn("rank", row_number().over(wFinal))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id"), col("hamming"), col("dist"),
-        col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+      .withColumn("dist", qDist(col("q_qv"), col("qv"))), "dist", k,
+      col("q_id"), col("vec_id"), col("hamming"), col("dist"))
   }
+
+  /** Every (query, candidate) pair's Hamming distance between packed
+    * signatures, ranked per query by (hamming, vec_id) as `rnk`. */
+  def hammingRanks(qBits: DataFrame, cBits: DataFrame): DataFrame =
+    cBits.crossJoin(broadcast(qBits))
+      .withColumn("hamming",
+        expr("bit_count(bits ^ q_bits)").cast("long"))
+      .withColumn("rnk", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("hamming"), col("vec_id"))))
+
+  /** Every (query, candidate) pair's [[MrlWidth]]-prefix distance,
+    * ranked per query by (pdist, vec_id) as `rnk`. */
+  def prefixRanks(queries: DataFrame, cands: DataFrame): DataFrame =
+    cands
+      .withColumn("pv", slice(col("qv"), 1, MrlWidth))
+      .crossJoin(broadcast(queries
+        .withColumn("q_pv", slice(col("q_qv"), 1, MrlWidth))
+        .select(col("q_id"), col("q_pv"))))
+      .withColumn("pdist", qDist(col("q_pv"), col("pv")))
+      .withColumn("rnk", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("pdist"), col("vec_id"))))
 
   // ---- d90: MMR diversified top-k (maximal marginal relevance) -----
 
@@ -4919,13 +4475,8 @@ object Similarity {
     * arithmetic throughout; deterministic ties (score, vec_id); the
     * oracle unrolls all selection rounds as CTEs, bit-for-bit. */
   def d90MmrRerank(spark: SparkSession, dir: String): DataFrame = {
-    val qz = graft.Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    mmrSelect(
-      qz.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv")),
-      qz.filter(col("vec_id") >= NumQueries),
-      RerankR, TopK)
+    val qz = quantized(spark, dir)
+    mmrSelect(querySide(qz), candidates(qz), RerankR, TopK)
   }
 
   /** d90's core on already-quantized relations. `queries` = (q_id,
@@ -5062,13 +4613,8 @@ object Similarity {
     * scan narrow relations (8-byte signatures / 16-dim prefixes) and
     * the fusion is one groupBy over 2×queries×R rows. */
   def d91RankFusion(spark: SparkSession, dir: String): DataFrame = {
-    val qz = graft.Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), quantizeVec(col("embedding")).as("qv"))
-    rankFusion(
-      qz.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv")),
-      qz.filter(col("vec_id") >= NumQueries),
-      RerankR, TopK)
+    val qz = quantized(spark, dir)
+    rankFusion(querySide(qz), candidates(qz), RerankR, TopK)
   }
 
   /** d91's core on already-quantized relations; returns (q_id,
@@ -5076,27 +4622,12 @@ object Similarity {
   def rankFusion(queries: DataFrame, cands: DataFrame,
       r: Int, k: Int): DataFrame = {
     val (qBits, cBits) = binarySignatures(queries, cands)
-    val wH = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val hPts = cBits.crossJoin(broadcast(qBits))
-      .withColumn("hamming",
-        expr("bit_count(bits ^ q_bits)").cast("long"))
-      .withColumn("rnk", row_number().over(wH))
+    def points(ranks: DataFrame): DataFrame = ranks
       .filter(col("rnk") <= r)
       .select(col("q_id"), col("vec_id"),
         (lit(r + 1L) - col("rnk")).as("pts"))
-    val wP = Window.partitionBy(col("q_id"))
-      .orderBy(col("pdist"), col("vec_id"))
-    val pPts = cands
-      .withColumn("pv", slice(col("qv"), 1, MrlWidth))
-      .crossJoin(broadcast(queries
-        .withColumn("q_pv", slice(col("q_qv"), 1, MrlWidth))
-        .select(col("q_id"), col("q_pv"))))
-      .withColumn("pdist", qDist(col("q_pv"), col("pv")))
-      .withColumn("rnk", row_number().over(wP))
-      .filter(col("rnk") <= r)
-      .select(col("q_id"), col("vec_id"),
-        (lit(r + 1L) - col("rnk")).as("pts"))
+    val hPts = points(hammingRanks(qBits, cBits))
+    val pPts = points(prefixRanks(queries, cands))
     val wF = Window.partitionBy(col("q_id"))
       .orderBy(col("score").desc, col("vec_id"))
     hPts.unionByName(pPts)

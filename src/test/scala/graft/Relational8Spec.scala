@@ -271,11 +271,18 @@ class Relational8Spec extends AnyFunSuite {
     val got = Relational8.q87HllMerge(spark, sf)
       .as[(String, Long, Long, Long, Long, Boolean)].collect().toSeq
     assert(got.nonEmpty)
+    // the merge is lossless (merge_consistent reads both sketches
+    // through a union); the merged and streamed ESTIMATES may differ,
+    // since a union estimates with the composite estimator and a
+    // streamed sketch with HIP once past exact mode, so each is held
+    // to the same bound against exact instead of to each other
     got.foreach { case (t, _, estMerged, estFull, exact, consistent) =>
       assert(consistent, s"$t: merged sketch != full sketch")
-      assert(estMerged == estFull, s"$t estimates diverge")
-      assert(math.abs(estFull - exact).toDouble / exact <= 0.02,
-        s"$t estimate $estFull vs exact $exact")
+      Seq("merged" -> estMerged, "full" -> estFull).foreach {
+        case (what, est) =>
+          assert(math.abs(est - exact).toDouble / exact <= 0.02,
+            s"$t $what estimate $est vs exact $exact")
+      }
     }
   }
 
