@@ -56,18 +56,46 @@ object GeomOps {
   def fromWkb(b: Array[Byte]): Geometry = new WKBReader(gf).read(b)
 
   // ---- reference operations ----------------------------------------
-  /** `tile_box.intersection(geom, grid_size=1e-6)` — snap-to-grid
-    * overlay on the microdegree lattice (map2db.py:846,912,1018). */
+  /** `tile_box.intersection(geom, grid_size=1e-6)` (map2db.py:846,912,
+    * 1018): an `OverlayNG` intersection with the box under a fixed 1e-6
+    * `PrecisionModel`, i.e. snap rounding (Hobby 1999) on the
+    * microdegree grid. A line or area the box covers comes back as is
+    * (map2db.py:907 skips that clip).
+    *
+    * [[TileClip]] answers first the clips it can certify equal to the
+    * overlay; the rest run the overlay. Snap rounding only moves a
+    * segment that passes through the hot pixel (the half-open pixel
+    * square) of a vertex or an intersection, so the certificate is:
+    *
+    *  - every vertex and box corner is on the grid (`x ==
+    *    Math.round(x * 1e6) / 1e6`, JTS's `HotPixel` rounding);
+    *  - a single point is rounded and kept when in the closed box;
+    *  - a line or a hole-free polygon (one part) keeps every vertex more
+    *    than 1 px from the box boundary, every segment more than 1 px
+    *    from the box corners, and every two segments near the box (all
+    *    of a polygon's) more than 1 px apart, adjacent ones away from
+    *    their shared vertex; so each crossing of the boundary is a proper
+    *    crossing of an edge interior;
+    *  - each crossing is an exact rational whose `Math.round` is more
+    *    than 1e-5 px × (1 + slope) from a half pixel, and the grid point
+    *    it rounds to is more than 1 px from every other such segment.
+    *
+    * Then the overlay's only nodes in the box are the vertices, the
+    * corners and the rounded crossings. A line's answer is one
+    * `LineString` per inside run, a closed line's run through its first
+    * vertex (a graph node) in two; a polygon's is the box or nothing with
+    * no crossing,
+    * and with two the inside run closed along the box boundary through
+    * the corners on the polygon's side. Everything else (holes, more
+    * crossings, touches, collinear runs along an edge, self-intersections,
+    * off-grid input) runs the overlay. */
   def clipToBox(g: Geometry, minX: Double, minY: Double, maxX: Double,
-      maxY: Double): Geometry =
-    OverlayNG.overlay(g, box(minX, minY, maxX, maxY), OverlayNG.INTERSECTION,
-      new PrecisionModel(microGridScale))
-
-  /** Whether the box fully covers g (used to skip needless clips,
-    * map2db.py:907). */
-  def boxCovers(g: Geometry, minX: Double, minY: Double, maxX: Double,
-      maxY: Double): Boolean =
-    box(minX, minY, maxX, maxY).covers(g)
+      maxY: Double): Geometry = {
+    val certified = TileClip.clip(g, minX, minY, maxX, maxY)
+    if (certified != null) certified
+    else OverlayNG.overlay(g, box(minX, minY, maxX, maxY),
+      OverlayNG.INTERSECTION, new PrecisionModel(microGridScale))
+  }
 
   /** shapely make_valid (map2db.py:984), incl. the reference's
     * "collect only polygons from a collection" fallback (988-1003):

@@ -21,9 +21,12 @@ import graft.sources.Mapsforge.{Poi, Way}
   *  1. decode: executors decode their tiles (Mapsforge.decodeTiles,
   *     no shuffle) and hand the Poi/Way objects straight on;
   *  2. clip: per row, [[poiFeature]] / [[wayFeature]] build the
-  *     geometry, clip it to the row's tile box on the microdegree grid,
-  *     make areas valid and drop empties — row-local, and the decoded
-  *     tiles are never encoded as rows;
+  *     geometry, make areas valid, clip it to the row's tile box on the
+  *     microdegree grid and drop empties — row-local, and the decoded
+  *     tiles are never encoded as rows. The clip is
+  *     [[GeomOps.clipToBox]]: the exact [[graft.functions.TileClip]]
+  *     kernel where it can certify its answer, else an `OverlayNG`
+  *     overlay under a fixed 1e-6 `PrecisionModel`;
   *  3. merge: the fragments form one relation tagged by table, and one
   *     exchange on (table, fid) serves a window + aggregate that unions
   *     each feature's max-level fragments and extends its zoom range to
@@ -57,7 +60,7 @@ object MapPipeline {
     tags.map(t => "\"" + t.replace("\\", "\\\\").replace("\"", "\\\"")
       + "\"").mkString("[", ", ", "]")
 
-  private def tileBox(level: Int, tileX: Long, tileY: Long)
+  private[graft] def tileBox(level: Int, tileX: Long, tileY: Long)
       : (Double, Double, Double, Double) = {
     def r6(v: Double) = math.rint(v * 1e6) / 1e6
     (r6(Mapsforge.lonFromX(level, tileX)),
@@ -75,48 +78,47 @@ object MapPipeline {
   private def wayId(w: Way): Option[Long] =
     if (wayTable(w) == AreaT) w.anum else w.lnum
 
+  /** The geometry a POI clips. */
+  private[graft] def poiGeometry(p: Poi): Geometry =
+    GeomOps.multiPoint(Seq((p.lon, p.lat)))
+
+  /** The geometry a way clips: a line (map2db.py:888-966), or an area
+    * built as shell+holes per data block and made valid first
+    * (967-1003); None when no valid area is left. */
+  private[graft] def wayGeometry(w: Way): Option[Geometry] =
+    if (wayTable(w) == AreaT) {
+      val raw = GeomOps.multiPolygon(w.coords.map { dblock =>
+        GeomOps.polygon(dblock.head.map(c => (c.lon, c.lat)),
+          dblock.tail.map(_.map(c => (c.lon, c.lat))))
+      })
+      if (raw.isValid) Some(raw) else GeomOps.makeValidPolygonal(raw)
+    } else Some(GeomOps.multiLineString(
+      w.coords.flatten.map(_.map(c => (c.lon, c.lat)))))
+
   /** One POI clipped to its tile box (map2db.py:837-886); None when
     * the point lies in the tile's edge buffer. `fid` is the dbl pnum,
     * 0 on a map without one. */
   private def poiFeature(p: Poi): Option[Feature] = {
     val (minx, miny, maxx, maxy) = tileBox(p.level, p.tileX, p.tileY)
-    val clipped = GeomOps.clipToBox(GeomOps.multiPoint(Seq((p.lon, p.lat))),
-      minx, miny, maxx, maxy)
+    val clipped = GeomOps.clipToBox(poiGeometry(p), minx, miny, maxx, maxy)
     if (clipped.isEmpty) None
     else Some(Feature(p.pnum.getOrElse(0L), p.level, p.minz, p.maxz,
       p.layer, jsonArray(p.tags), p.vtags,
       GeomOps.toWkb(GeomOps.normalized(clipped))))
   }
 
-  /** One way clipped to its tile box: a line (map2db.py:888-966), or an
-    * area built as shell+holes per data block and made valid first
-    * (967-1072). None when nothing linear / polygonal is left. `fid` is
-    * the dbl lnum / anum, 0 on a map without one. */
+  /** One way clipped to its tile box (map2db.py:888-1072). None when
+    * nothing linear / polygonal is left. `fid` is the dbl lnum / anum,
+    * 0 on a map without one. */
   private def wayFeature(w: Way): Option[Feature] = {
     val (minx, miny, maxx, maxy) = tileBox(w.level, w.tileX, w.tileY)
-    def clip(g: Geometry): Option[Geometry] = {
-      val c =
-        if (GeomOps.boxCovers(g, minx, miny, maxx, maxy)) g
-        else GeomOps.clipToBox(g, minx, miny, maxx, maxy)
-      if (c.isEmpty) None else Some(c)
-    }
-    val kept =
-      if (wayTable(w) == AreaT) {
-        val raw = GeomOps.multiPolygon(w.coords.map { dblock =>
-          GeomOps.polygon(dblock.head.map(c => (c.lon, c.lat)),
-            dblock.tail.map(_.map(c => (c.lon, c.lat))))
-        })
-        val valid =
-          if (raw.isValid) Some(raw) else GeomOps.makeValidPolygonal(raw)
-        valid.flatMap(clip).flatMap(GeomOps.keepPolygonal)
-      } else {
-        clip(GeomOps.multiLineString(
-          w.coords.flatten.map(_.map(c => (c.lon, c.lat)))))
-          .flatMap(GeomOps.keepLinear)
-      }
-    kept.map(g => Feature(wayId(w).getOrElse(0L), w.level, w.minz, w.maxz,
-      w.layer, jsonArray(w.tags), w.vtags,
-      GeomOps.toWkb(GeomOps.normalized(g))))
+    val keep: Geometry => Option[Geometry] =
+      if (wayTable(w) == AreaT) GeomOps.keepPolygonal else GeomOps.keepLinear
+    wayGeometry(w).map(GeomOps.clipToBox(_, minx, miny, maxx, maxy))
+      .filter(!_.isEmpty).flatMap(keep)
+      .map(g => Feature(wayId(w).getOrElse(0L), w.level, w.minz, w.maxz,
+        w.layer, jsonArray(w.tags), w.vtags,
+        GeomOps.toWkb(GeomOps.normalized(g))))
   }
 
   /** POIs → point features of the dbl points table. Row-local. */

@@ -2,9 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.io.WKTReader
+
 import graft.functions.GeomOps
 
 class GeometrySpec extends AnyFunSuite {
+  import GeometrySpec._
 
   test("WKB roundtrip preserves geometry") {
     val mp = GeomOps.multiPoint(Seq((1.5, 2.5), (3.0, -4.0)))
@@ -148,4 +152,55 @@ class GeometrySpec extends AnyFunSuite {
     val sp = GeomOps.simplifyPreserving(poly, 10.0)
     assert(!sp.isEmpty && sp.getArea > 0, "preserving variant collapsed")
   }
+
+  for ((name, wkt, want) <- clipPins)
+    test(s"clipToBox keeps OverlayNG's answer on $name") {
+      val g = read(wkt)
+      assert(kept(g, GeomOps.clipToBox(g, 0, 0, 10, 10)) == want)
+    }
+}
+
+object GeometrySpec {
+  /** Edge cases of the tile clip, the POIs apart all left by its exact
+    * kernel to OverlayNG: (name, input, what map2db keeps of its clip to
+    * the box (0 0, 10 10), as OverlayNG answers). */
+  val clipPins: Seq[(String, String, String)] = Seq(
+    ("a line along a tile edge", "LINESTRING (-5 0, 5 0)",
+      "LINESTRING (0 0, 5 0)"),
+    ("a line touching the box only at a corner",
+      "LINESTRING (-5 5, 5 -5)", "NONE"),
+    ("a vertex exactly on the border", "LINESTRING (-5 5, 0 5, 5 8)",
+      "LINESTRING (0 5, 5 8)"),
+    ("a self-crossing line through the border",
+      "LINESTRING (-5 2, 8 8, 8 2, -5 8)",
+      "MULTILINESTRING ((0 4.307692, 1.5 5), (0 5.692308, 1.5 5), " +
+        "(1.5 5, 8 2, 8 8, 1.5 5))"),
+    ("a polygon with a hole crossing the border",
+      "POLYGON ((-5 2, 8 2, 8 8, -5 8, -5 2), (-2 4, 4 4, 4 6, -2 6, -2 4))",
+      "POLYGON ((0 2, 0 4, 4 4, 4 6, 0 6, 0 8, 8 8, 8 2, 0 2))"),
+    ("a concave polygon the clip splits in two",
+      "POLYGON ((-5 1, 5 1, 5 3, -3 3, -3 7, 5 7, 5 9, -5 9, -5 1))",
+      "MULTIPOLYGON (((0 1, 0 3, 5 3, 5 1, 0 1)), ((0 7, 0 9, 5 9, 5 7, 0 7)))"),
+    ("a crossing at an exact half microdegree",
+      "LINESTRING (-0.000003 5, 0.000003 5.000003)",
+      "LINESTRING (0 5.000002, 0.000003 5.000003)"),
+    ("a POI on the edge", "MULTIPOINT ((0 5))", "POINT (0 5)"),
+    ("a POI 0.4 udeg outside the edge", "MULTIPOINT ((-0.0000004 5))",
+      "POINT (0 5)"))
+
+  def read(wkt: String): Geometry = new WKTReader().read(wkt)
+
+  /** What map2db keeps of the clip `c` of `g`: a POI as clipped, a line
+    * or area the linear / polygonal part, normalized; None when nothing
+    * is kept. */
+  def keep(g: Geometry, c: Geometry): Option[Geometry] =
+    if (c.isEmpty) None
+    else (g.getDimension match {
+      case 0 => Some(c)
+      case 1 => GeomOps.keepLinear(c)
+      case _ => GeomOps.keepPolygonal(c)
+    }).map(GeomOps.normalized)
+
+  def kept(g: Geometry, c: Geometry): String =
+    keep(g, c).fold("NONE")(_.toText)
 }
