@@ -4,15 +4,10 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-import org.locationtech.jts.geom.Geometry
-
-/** Spark-facing geometry operators (SURVEY.md §2c).
-  *
-  * The union aggregate is the engine form of map2db's cross-tile
-  * geometry merge (map2db.py:776-784): fragments of one feature are
-  * co-located by the groupBy shuffle and unioned with partial
-  * (map-side) combining — the reference's row-at-a-time
-  * SELECT→union→UPDATE loop becomes one associative aggregate.
+/** Spark-facing geometry operators (SURVEY.md §2c): the point union
+  * aggregate and per-row WKB decorations. map2db's cross-tile geometry
+  * merge (map2db.py:776-784) is not an aggregate here: `MapPipeline`'s
+  * merge walk unions each feature's fragments with `GeomOps.unionAll`.
   */
 object GeomFunctions {
 
@@ -50,43 +45,9 @@ object GeomFunctions {
     override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Generic WKB union aggregate — any geometry type.
-    *
-    * Fragments accumulate as a WKB list and compact through JTS's
-    * cascaded union in batches of [[UnionBatch]]: a feature spanning
-    * hundreds of tiles (a long road) costs O(n log n) instead of the
-    * O(n²) point copying of a pairwise left fold, while the batch
-    * bound keeps the Tungsten buffer row small for map-side combine. */
-  case class GeomParts(parts: Seq[Array[Byte]])
-  val UnionBatch = 16
-
-  class WkbUnionAgg extends Aggregator[Array[Byte], GeomParts, Array[Byte]] {
-    private def compact(parts: Seq[Array[Byte]]): Seq[Array[Byte]] =
-      if (parts.size < UnionBatch) parts
-      else Seq(GeomOps.toWkb(GeomOps.unionAll(parts.map(GeomOps.fromWkb))))
-    override def zero: GeomParts = GeomParts(Vector.empty)
-    override def reduce(buf: GeomParts, wkb: Array[Byte]): GeomParts =
-      GeomParts(compact(buf.parts :+ wkb))
-    override def merge(a: GeomParts, b: GeomParts): GeomParts =
-      GeomParts(compact(a.parts ++ b.parts))
-    override def finish(buf: GeomParts): Array[Byte] = buf.parts match {
-      case Seq() => Array.emptyByteArray
-      case Seq(one) =>
-        GeomOps.toWkb(GeomOps.normalized(GeomOps.fromWkb(one)))
-      case many => GeomOps.toWkb(GeomOps.normalized(
-        GeomOps.unionAll(many.map(GeomOps.fromWkb))))
-    }
-    override def bufferEncoder: Encoder[GeomParts] =
-      Encoders.product[GeomParts]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
   /** `union_points(x, y)` as an untyped aggregate Column. */
   def unionPoints(x: Column, y: Column): Column =
     udaf(new PointUnionAgg, Encoders.product[PointXY]).apply(x, y)
-
-  def unionWkb(wkb: Column): Column =
-    udaf(new WkbUnionAgg, Encoders.BINARY).apply(wkb)
 
   /** Number of component geometries in a WKB value (post-aggregation
     * decoration; tiny cardinality, evaluated via deserialization). */

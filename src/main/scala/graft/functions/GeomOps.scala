@@ -13,9 +13,9 @@ import scala.jdk.CollectionConverters._
   * shapely (the reference's geometry library) is a binding to GEOS,
   * the C++ port of JTS — so these are the same algorithms the
   * reference runs, JVM-native. All functions are pure and
-  * serializable-safe (the factory is per-call or static), used inside
-  * typed Aggregators / mapGroups where a shuffle already co-located
-  * the feature's fragments.
+  * serializable-safe (the factory is per-call or static), called row by
+  * row inside Spark tasks, e.g. by map2db's merge walk once a shuffle
+  * has co-located a feature's fragments.
   */
 object GeomOps {
   private val gf = new GeometryFactory(new PrecisionModel(), 4326)
@@ -168,12 +168,41 @@ object GeomOps {
 
   def union(a: Geometry, b: Geometry): Geometry = a.union(b)
 
-  /** N-way union via JTS UnaryUnionOp (cascaded) — O(n log n)-ish vs
-    * the O(n²) point copying of a pairwise left fold. */
+  /** N-way union of a feature's fragments (map2db.py:776-784): JTS's
+    * `UnaryUnionOp`, whose classic overlay nodes every segment pair,
+    * keeps every vertex of the edges it outputs and dissolves shared
+    * edges.
+    *
+    * [[TileUnion]] answers first the unions it can prove equal to the
+    * overlay's; the rest run the overlay. Every coordinate must be finite
+    * and not -0.0, and no part may repeat a vertex consecutively. Then:
+    *
+    *  - lines: every part is open. Two segments of different parts meet
+    *    only at a point that is an end vertex of both parts; within a
+    *    part, only adjacent segments meet, at their shared vertex. The
+    *    overlay makes no new node, so the answer is the parts themselves;
+    *  - areas: every piece is hole-free, every shell turns the same way
+    *    and no directed segment occurs twice. A segment whose reverse is
+    *    in another piece cancels with it; any other contact between
+    *    pieces is at a vertex of both, and within a piece only adjacent
+    *    segments meet. The segments left must form exactly one cycle,
+    *    each vertex with one edge in and one out. Their chain then bounds
+    *    the union (the pieces' indicator functions sum to the cycle's),
+    *    and the answer is that polygon. A valid coverage dissolves by
+    *    this edge matching, as JTS's `CoverageUnion` does.
+    *
+    * Everything else runs the overlay: points, mixed dimensions, holes,
+    * closed lines, T-junctions, crossings, collinear overlaps, pieces
+    * touching at a single point and remainders of several cycles (a
+    * hole, or disjoint parts). */
   def unionAll(gs: Seq[Geometry]): Geometry = {
-    val coll = new java.util.ArrayList[Geometry](gs.size)
-    gs.foreach(coll.add)
-    org.locationtech.jts.operation.union.UnaryUnionOp.union(coll)
+    val certified = TileUnion.union(gs)
+    if (certified != null) certified
+    else {
+      val coll = new java.util.ArrayList[Geometry](gs.size)
+      gs.foreach(coll.add)
+      org.locationtech.jts.operation.union.UnaryUnionOp.union(coll)
+    }
   }
 
   /** JTS linemerge — shapely's linemerge is this class. */

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * extends its zoom range downward; fragments of a feature from
   * several tiles at one level union their geometries.
   *
-  * Here both collapse to single partial-aggregable `groupBy(fid)`
-  * passes — one shuffle each regardless of scale, map-side combined,
-  * AQE-skew-splittable. No driver-side loop.
+  * `MapPipeline`'s merge walk does both in one sorted pass per feature
+  * over one fid exchange; this object keeps the level dedup as a
+  * `groupBy(fid)` aggregate and the reference's line stitching as a
+  * row-local column. No driver-side loop.
   */
 object FeatureMerge {
 
@@ -28,18 +29,11 @@ object FeatureMerge {
         max_by(col("maxz"), col("lvl")).as("maxz"),
         count(lit(1)).as("n_frag"))
 
-  /** Cross-tile geometry union per feature (map2db.py:776-784): one
-    * partial-aggregable shuffle on the feature id. */
-  def unionGeoms(feats: DataFrame, fidCol: String,
-      wkbCol: String): DataFrame =
-    feats.groupBy(col(fidCol))
-      .agg(graft.functions.GeomFunctions.unionWkb(col(wkbCol)).as(wkbCol))
-
   /** The reference's post-union line stitching pass
     * (map2db.py:1080-1182): linemerge each feature's multi-part
     * geometry, snapping near-coincident endpoints (2.1 µdeg) before a
-    * second merge. Row-local (the heavy co-location already happened
-    * in [[unionGeoms]]), so it pipelines with no extra shuffle. */
+    * second merge. Row-local (it runs on rows already merged per
+    * feature), so it pipelines with no extra shuffle. */
   def mergeLines(feats: DataFrame, wkbCol: String): DataFrame =
     feats.withColumn(wkbCol, mergedLine(col(wkbCol)))
 

@@ -1,12 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 import org.locationtech.jts.geom.Geometry
 
-import graft.functions.{GeomFunctions, GeomOps}
+import graft.functions.GeomOps
 import graft.sources.Mapsforge
 import graft.sources.Mapsforge.{Poi, Way}
 
@@ -27,11 +30,14 @@ import graft.sources.Mapsforge.{Poi, Way}
   *     [[GeomOps.clipToBox]]: the exact [[graft.functions.TileClip]]
   *     kernel where it can certify its answer, else an `OverlayNG`
   *     overlay under a fixed 1e-6 `PrecisionModel`;
-  *  3. merge: the fragments form one relation tagged by table, and one
-  *     exchange on (table, fid) serves a window + aggregate that unions
-  *     each feature's max-level fragments and extends its zoom range to
-  *     the min level seen; line rows then get the reference's two-pass
-  *     endpoint-snap linemerge, row-local;
+  *  3. merge: the fragments form one relation tagged by table, hash
+  *     exchanged on (table, fid) and sorted within each partition; one
+  *     row-local walk then emits a row per feature: its max-level
+  *     fragments' union ([[GeomOps.unionAll]]: the exact
+  *     [[graft.functions.TileUnion]] kernel where it can certify its
+  *     answer, else JTS's classic overlay), its zoom range extended to
+  *     the min level seen, and for line rows the reference's two-pass
+  *     endpoint-snap linemerge;
   *  4. split: the merged relation is persisted once and its vtag keys
   *     collected once; points, lines and areas are filters of it, and
   *     the SQLite sink reads it whole in one (table, fid) ordered pass.
@@ -145,7 +151,7 @@ object MapPipeline {
     * tables' fragments, `table` followed by [[Feature]]'s columns. With
     * `dbl`, rows without their feature id are dropped, as the per-table
     * functions above drop them. */
-  private def fragments(spark: SparkSession, path: String, dbl: Boolean)
+  private[graft] def fragments(spark: SparkSession, path: String, dbl: Boolean)
       : (DataFrame, LongAccumulator) = {
     import spark.implicits._
     val (tiles, decoded) =
@@ -209,29 +215,77 @@ object MapPipeline {
   /** Cross-tile + cross-level merge (map2db.py:747-812): geometry is
     * the union of the max-level fragments; m2db_minz extends to the
     * lowest level seen; attributes come from the max level. One fid
-    * exchange, reused by the window and the aggregate. */
+    * exchange and one sorted walk. */
   def mergeFeatures(feats: Dataset[Feature]): DataFrame =
-    mergeBy(feats.toDF(), Seq("fid"))
+    mergeBy(feats.toDF(), Seq("fid"), _ => false)
 
-  /** [[mergeFeatures]] with features identified by the `keys` columns
-    * (the window and the aggregate share their one exchange). */
-  private def mergeBy(feats: DataFrame, keys: Seq[String]): DataFrame = {
+  /** [[mergeFeatures]] with features identified by the `keys` columns.
+    * One exchange hash-partitioned on the keys; each partition sorted by
+    * the keys, max level first; then a row-local walk emits one row per
+    * feature, holding only that feature's fragments (see [[walk]]). The
+    * keys keep their input nullability, the other columns are nullable.
+    * Rows for which `stitch` holds get the reference's endpoint-snap
+    * linemerge on their unioned geometry. */
+  private def mergeBy(feats: DataFrame, keys: Seq[String],
+      stitch: Row => Boolean): DataFrame = {
     val k = keys.map(col)
-    val w = Window.partitionBy(k: _*)
-    feats
-      .withColumn("max_level", max(col("level")).over(w))
-      .withColumn("minz_all", min(col("minz")).over(w))
-      .filter(col("level") === col("max_level"))
-      .groupBy(k: _*)
-      .agg(
-        first(col("max_level")).as("m2db_level"),
-        first(col("minz_all")).as("m2db_minz"),
-        first(col("maxz")).as("m2db_maxz"),
-        first(col("layer")).as("m2db_layer_num"),
-        first(col("tags")).as("m2db_tags"),
-        first(col("vtags")).as("vtags"),
-        GeomFunctions.unionWkb(col("wkb")).as("m2db_geometry"))
+    val out = StructType(keys.map(feats.schema(_)) ++ Seq(
+      StructField("m2db_level", IntegerType),
+      StructField("m2db_minz", IntegerType),
+      StructField("m2db_maxz", IntegerType),
+      StructField("m2db_layer_num", IntegerType),
+      StructField("m2db_tags", StringType),
+      StructField("vtags", feats.schema("vtags").dataType),
+      StructField("m2db_geometry", BinaryType)))
+    val nk = keys.size
+    feats.select(k ++ Seq("level", "minz", "maxz", "layer", "tags", "vtags",
+      "wkb").map(col): _*)
+      .repartition(k: _*)
+      .sortWithinPartitions(k :+ col("level").desc: _*)
+      .mapPartitions(walk(_, nk, stitch))(Encoders.row(out))
   }
+
+  /** One merged row per feature of `rows`: the keys (the first `nk`
+    * columns, by which `rows` arrive grouped, max level first), the max
+    * level, the min `minz`, the first max-level fragment's maxz, layer,
+    * tags and vtags, and the union of the max-level fragments. A single
+    * fragment keeps its bytes, which the clip wrote normalized. */
+  private def walk(rows: Iterator[Row], nk: Int, stitch: Row => Boolean)
+      : Iterator[Row] = {
+    val in = rows.buffered
+    def same(r: Row, head: Row): Boolean =
+      (0 until nk).forall(i => r.get(i) == head.get(i))
+    new Iterator[Row] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Row = {
+        val head = in.next()
+        val level = head.getInt(nk)
+        var minz = head.getInt(nk + 1)
+        val wkbs = mutable.ArrayBuffer(head.getAs[Array[Byte]](nk + 6))
+        while (in.hasNext && same(in.head, head)) {
+          val r = in.next()
+          if (r.getInt(nk) == level) wkbs += r.getAs[Array[Byte]](nk + 6)
+          minz = math.min(minz, r.getInt(nk + 1))
+        }
+        Row.fromSeq((0 until nk).map(head.get) ++ Seq(level, minz,
+          head.get(nk + 2), head.get(nk + 3), head.get(nk + 4),
+          head.get(nk + 5), merged(wkbs, stitch(head))))
+      }
+    }
+  }
+
+  /** The merged geometry of one feature's max-level fragments. */
+  private def merged(wkbs: mutable.ArrayBuffer[Array[Byte]], line: Boolean)
+      : Array[Byte] =
+    if (wkbs.size == 1 && !line) wkbs.head
+    else {
+      val g =
+        if (wkbs.size == 1) GeomOps.fromWkb(wkbs.head)
+        else GeomOps.normalized(GeomOps.unionAll(
+          wkbs.iterator.map(GeomOps.fromWkb).toSeq))
+      val m = if (line) GeomOps.mergeLineFeature(g) else g
+      if ((m eq g) && wkbs.size == 1) wkbs.head else GeomOps.toWkb(m)
+    }
 
   /** A build's three feature tables, over the one relation it
     * persisted. `merged` holds `table` (an index of [[FeatureTables]]),
@@ -318,11 +372,7 @@ object MapPipeline {
         bad.map(r => s"${FeatureTables(r.getInt(0))._1} " +
           s"${r.getLong(1)}:${r.getString(2)}").mkString(", "))
     }
-    val geom = col("m2db_geometry")
-    val merged = mergeBy(frags, Seq("table", "fid"))
-      .withColumn("m2db_geometry",
-        when(col("table") === LineT, FeatureMerge.mergedLine(geom))
-          .otherwise(geom))
+    val merged = mergeBy(frags, Seq("table", "fid"), _.getInt(0) == LineT)
       .persist()
     val tables = split(merged, decoded)
     if (strict) frags.unpersist()

@@ -5,7 +5,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MapPipeline
@@ -51,6 +51,16 @@ class FdoSinkSpec extends AnyFunSuite {
       featureTable(t.lines, "m2db_lnum", "lines"),
       featureTable(t.areas, "m2db_anum", "areas"))))
   }
+
+  /** A feature table's schema as the build gives it: every column
+    * nullable, the id column included. */
+  private def featureSchema(idCol: String, vtagCols: String*): StructType =
+    StructType(Seq(StructField(idCol, LongType)) ++
+      Seq("m2db_level", "m2db_minz", "m2db_maxz", "m2db_layer_num")
+        .map(StructField(_, IntegerType)) ++
+      Seq(StructField("m2db_tags", StringType),
+        StructField("m2db_geometry", BinaryType)) ++
+      vtagCols.map(StructField(_, StringType)))
 
   private def nullable(s: StructType): StructType =
     StructType(s.map(_.copy(nullable = true)))
@@ -106,6 +116,19 @@ class FdoSinkSpec extends AnyFunSuite {
     val path = MapEncoder.writeToTemp(
       FusedBuildSpec.crossingMap(42L, withAreas = false))
     check(path, MapPipeline.build(spark, path))
+  }
+
+  test("feature tables keep their schemas, nullability included") {
+    val path = MapEncoder.writeToTemp(
+      FusedBuildSpec.crossingMap(41L, withAreas = true))
+    val t = MapPipeline.build(spark, path)
+    try {
+      assert(t.points.schema ==
+        featureSchema("m2db_pnum", "m2db_name", "population"))
+      assert(t.lines.schema ==
+        featureSchema("m2db_lnum", "m2db_reference", "name:en"))
+      assert(t.areas.schema == featureSchema("m2db_anum", "name:en"))
+    } finally t.release()
   }
 
   test("sinks agree with the per-table form: raw non-dbl map") {

@@ -16,18 +16,18 @@ class GeometrySpec extends AnyFunSuite {
     assert(back.equalsExact(mp))
   }
 
-  test("wkb union aggregate merges 100 fragments via cascaded batches") {
+  test("merge walk unions 100 fragments of one feature in one cascaded call") {
     import SparkTestSession.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import graft.operators.MapPipeline
     // 100 consecutive segments of one long road, worst-case ordering
     val segs = (0 until 100).map { i =>
-      GeomOps.toWkb(GeomOps.multiLineString(
-        Seq(Seq((i * 1e-4, 0.0), ((i + 1) * 1e-4, 0.0)))))
+      MapPipeline.Feature(1L, 10, 9, 11, 0, "[]", Map.empty,
+        GeomOps.toWkb(GeomOps.multiLineString(
+          Seq(Seq((i * 1e-4, 0.0), ((i + 1) * 1e-4, 0.0))))))
     }.reverse
-    val out = segs.toDF("wkb").groupBy()
-      .agg(graft.functions.GeomFunctions.unionWkb(col("wkb")).as("u"))
-      .collect().head.getAs[Array[Byte]]("u")
+    val out = MapPipeline.mergeFeatures(segs.toDS())
+      .collect().head.getAs[Array[Byte]]("m2db_geometry")
     val g = GeomOps.fromWkb(out)
     assert(math.abs(g.getLength - 100 * 1e-4) < 1e-12)
     val env = g.getEnvelopeInternal
@@ -153,6 +153,12 @@ class GeometrySpec extends AnyFunSuite {
     assert(!sp.isEmpty && sp.getArea > 0, "preserving variant collapsed")
   }
 
+  for ((name, parts, want) <- unionPins)
+    test(s"unionAll keeps the classic overlay's answer on $name") {
+      assert(GeomOps.normalized(GeomOps.unionAll(parts.map(read))).toText ==
+        want)
+    }
+
   for ((name, wkt, want) <- clipPins)
     test(s"clipToBox keeps OverlayNG's answer on $name") {
       val g = read(wkt)
@@ -187,6 +193,54 @@ object GeometrySpec {
     ("a POI on the edge", "MULTIPOINT ((0 5))", "POINT (0 5)"),
     ("a POI 0.4 udeg outside the edge", "MULTIPOINT ((-0.0000004 5))",
       "POINT (0 5)"))
+
+  /** Unions of fragments that the exact union kernel leaves to the
+    * classic overlay: (name, fragments, the overlay's normalized answer).
+    * Shells turn clockwise, as map2db's normalized fragments do. */
+  val unionPins: Seq[(String, Seq[String], String)] = Seq(
+    ("two crossing lines",
+      Seq("LINESTRING (0 0, 2 2)", "LINESTRING (0 2, 2 0)"),
+      "MULTILINESTRING ((0 0, 1 1), (0 2, 1 1), (1 1, 2 0), " +
+        "(1 1, 2 2))"),
+    ("a line ending on another line's interior vertex",
+      Seq("LINESTRING (0 0, 1 1, 2 0)", "LINESTRING (1 1, 1 3)"),
+      "MULTILINESTRING ((0 0, 1 1), (1 1, 1 3), (1 1, 2 0))"),
+    ("collinear overlapping fragments",
+      Seq("LINESTRING (0 0, 2 0)", "LINESTRING (1 0, 3 0)"),
+      "MULTILINESTRING ((0 0, 1 0), (1 0, 2 0), (2 0, 3 0))"),
+    ("a duplicated fragment",
+      Seq("LINESTRING (0 0, 1 1, 2 1)", "LINESTRING (0 0, 1 1, 2 1)"),
+      "MULTILINESTRING ((0 0, 1 1), (1 1, 2 1))"),
+    ("a closed line part",
+      Seq("LINESTRING (0 0, 0 2, 2 2, 0 0)", "LINESTRING (2 2, 3 3)"),
+      "MULTILINESTRING ((0 0, 0 2, 2 2), (0 0, 2 2), (2 2, 3 3))"),
+    ("a piece with a hole",
+      Seq("POLYGON ((0 0, 0 4, 2 4, 2 0, 0 0), " +
+        "(0.5 1, 1.5 1, 1.5 3, 0.5 3, 0.5 1))",
+        "POLYGON ((2 0, 2 4, 4 4, 4 0, 2 0))"),
+      "POLYGON ((0 0, 0 4, 2 4, 4 4, 4 0, 2 0, 0 0), (0.5 1, " +
+        "1.5 1, 1.5 3, 0.5 3, 0.5 1))"),
+    ("four pieces ringing a gap",
+      Seq("POLYGON ((0 0, 0 1, 1 1, 2 1, 3 1, 3 0, 0 0))",
+        "POLYGON ((0 2, 0 3, 3 3, 3 2, 2 2, 1 2, 0 2))",
+        "POLYGON ((0 1, 0 2, 1 2, 1 1, 0 1))",
+        "POLYGON ((2 1, 2 2, 3 2, 3 1, 2 1))"),
+      "POLYGON ((0 0, 0 1, 0 2, 0 3, 3 3, 3 2, 3 1, 3 0, 0 0), " +
+        "(1 1, 2 1, 2 2, 1 2, 1 1))"),
+    ("two pieces touching at one vertex",
+      Seq("POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))",
+        "POLYGON ((1 1, 1 2, 2 2, 2 1, 1 1))"),
+      "MULTIPOLYGON (((0 0, 0 1, 1 1, 1 0, 0 0)), ((1 1, 1 2, " +
+        "2 2, 2 1, 1 1)))"),
+    ("a shared edge split by a T-junction",
+      Seq("POLYGON ((0 0, 0 2, 1 2, 1 0, 0 0))",
+        "POLYGON ((1 0, 1 1, 1 2, 2 2, 2 0, 1 0))"),
+      "POLYGON ((0 0, 0 2, 1 2, 2 2, 2 0, 1 0, 0 0))"),
+    ("disjoint pieces",
+      Seq("POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))",
+        "POLYGON ((2 0, 2 1, 3 1, 3 0, 2 0))"),
+      "MULTIPOLYGON (((0 0, 0 1, 1 1, 1 0, 0 0)), ((2 0, 2 1, " +
+        "3 1, 3 0, 2 0)))"))
 
   def read(wkt: String): Geometry = new WKTReader().read(wkt)
 

@@ -128,15 +128,18 @@ class MapsforgeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
       QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    // every shuffle of a plan, walking into the final adaptive plan
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-      case q: QueryStageExec => shuffles(q.plan)
-      case e: ShuffleExchangeExec => e +: shuffles(e.child)
-      case _ => p.children.flatMap(shuffles)
+    import org.apache.spark.sql.execution.window.WindowExec
+    // every node of a plan, walking into the final adaptive plan
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
     }
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      nodes(p).collect { case e: ShuffleExchangeExec => e }
     // the tile scan ships its tasks without a shuffle (no
     // round-robin repartition of the task list)
     val (pois, ways) = Mapsforge.scan(spark, mapPath)
@@ -153,10 +156,15 @@ class MapsforgeSpec extends AnyFunSuite {
         })
       assert(caches.forall(_.size == 1))
       assert(caches.flatten.forall(_ eq caches.head.head))
-      // ...merged over one exchange on (table, fid), reused by the
-      // window and the aggregate — a second exchange means the
-      // single-shuffle design broke
+      // ...merged over one exchange on (table, fid) and walked once per
+      // feature — a second exchange means the single-shuffle design
+      // broke, a window or an aggregate that the walk came undone
       val plan = caches.head.head.cachedPlan
+      val grouped = nodes(plan).filter {
+        case _: WindowExec | _: BaseAggregateExec => true
+        case _ => false
+      }
+      assert(grouped.isEmpty, s"window or aggregate in the merge\n$plan")
       val ex = shuffles(plan)
       assert(ex.size == 1, s"expected 1 exchange, got ${ex.size}\n$plan")
       ex.head.outputPartitioning match {
