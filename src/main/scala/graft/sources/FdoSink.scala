@@ -169,31 +169,24 @@ object FdoSink {
     * partition at a time (toLocalIterator), and completed output pages
     * spill to the file as the writer's bounded page cache fills
     * (SqliteWriter.MaxCachedPages), so peak driver memory is partition
-    * + fringe, not the database image. The writer drains its tables in
-    * order, so points, lines and areas each take their consecutive run
-    * of that one iterator, in ascending rowid order as b-tree leaves
-    * need; the driver projects each row's vtag columns from its `vtags`
-    * map. The single-file analogue of `coalesce(1)`: right for
-    * sub-cluster outputs, while the parquet directory remains the
-    * cluster-scale form. Divergence: `spatial_ref_sys.srid` drops the
-    * reference's UNIQUE constraint (it would require an index b-tree;
-    * the table holds one row). */
+    * + fringe, not the database image. The rows arrive as finished
+    * records ([[sqliteRecords]]), so the driver only packs pages. The
+    * writer drains its tables in order, so points, lines and areas each
+    * take their consecutive run of that one iterator, in ascending
+    * rowid order as b-tree leaves need. The single-file analogue of
+    * `coalesce(1)`: right for sub-cluster outputs, while the parquet
+    * directory remains the cluster-scale form. Divergence:
+    * `spatial_ref_sys.srid` drops the reference's UNIQUE constraint (it
+    * would require an index b-tree; the table holds one row). */
   def writeSqlite(spark: SparkSession, tables: MapTables,
       header: Mapsforge.Header, srcPathname: String, path: String): Unit = {
-    import org.apache.spark.sql.functions.col
     import scala.jdk.CollectionConverters._
-    import SqliteWriter.Table
+    import SqliteWriter.{Record, Table}
 
-    val base = Seq("m2db_level", "m2db_minz", "m2db_maxz",
-      "m2db_geometry", "m2db_layer_num", "m2db_tags")
-    val rows = tables.merged
-      .select((Seq("table", "fid") ++ base :+ "vtags").map(col): _*)
-      .orderBy(col("table"), col("fid"))
-      .toLocalIterator().asScala.buffered
+    val rows = sqliteRecords(tables).toLocalIterator().asScala.buffered
 
     def featureTable(t: Int): Table = {
       val (name, idCol) = MapPipeline.FeatureTables(t)
-      val keys = tables.keys(t)
       val sqlType = Map("m2db_geometry" -> "BLOB", "m2db_tags" -> "TEXT")
       // quote every identifier: vtag keys may contain ':' etc.; an
       // embedded '"' doubles per SQLite quoting rules (readSqliteTable's
@@ -201,24 +194,46 @@ object FdoSink {
       def q(ident: String): String =
         "\"" + ident.replace("\"", "\"\"") + "\""
       val colDefs = (s"""${q(idCol)} INTEGER PRIMARY KEY""" +:
-        (base.map(c => s"""${q(c)} ${sqlType.getOrElse(c, "INTEGER")}""") ++
-          keys.map(k => s"""${q(k)} TEXT""")))
+        (SqliteBase.map(c => s"""${q(c)} ${sqlType.getOrElse(c, "INTEGER")}""") ++
+          tables.keys(t).map(k => s"""${q(k)} TEXT""")))
         .mkString(", ")
       Table(name, s"CREATE TABLE $name ($colDefs)",
-        new Iterator[Seq[Any]] {
+        new Iterator[Record] {
           override def hasNext: Boolean =
             rows.hasNext && rows.head.getInt(0) == t
-          override def next(): Seq[Any] = {
+          override def next(): Record = {
             val r = rows.next()
-            val vtags = r.getMap[String, String](8)
-            (1 to 7).map(r.get) ++ keys.map(vtags.get(_).orNull)
+            Record(r.getLong(1), r.getAs[Array[Byte]](2))
           }
-        },
-        rowidCol = Some(0))
+        })
     }
 
     SqliteWriter.write(path, sqliteTables(header, srcPathname,
       MapPipeline.FeatureTables.indices.map(featureTable)))
+  }
+
+  /** The feature tables' SQLite columns after the id. */
+  private val SqliteBase = Seq("m2db_level", "m2db_minz", "m2db_maxz",
+    "m2db_geometry", "m2db_layer_num", "m2db_tags")
+
+  /** The SQLite pass over the build's merged relation: `table`, `fid`
+    * and each row's finished SQLite `record`, in (table, fid) order.
+    * The record is encoded in the tasks that read the cached relation,
+    * before the sort's exchange, so the encoding runs on every core and
+    * the exchange and the sort carry three columns: the id column (the
+    * rowid alias, stored as NULL), the m2db columns, then the table's
+    * vtag columns, each read from `vtags` by its key (NULL when the row
+    * lacks it). */
+  private[graft] def sqliteRecords(tables: MapTables): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    def recordOf(t: Int) = SqliteWriter.recordColumn(lit(null) +:
+      (SqliteBase.map(col) ++ tables.keys(t).map(col("vtags").getItem)))
+    val ts = MapPipeline.FeatureTables.indices
+    val record = ts.tail.foldLeft(when(col("table") === ts.head,
+      recordOf(ts.head)))((w, t) => w.when(col("table") === t, recordOf(t)))
+    tables.merged
+      .select(col("table"), col("fid"), record.as("record"))
+      .orderBy(col("table"), col("fid"))
   }
 
   /** The SQLite file's tables in file order: the metadata tables
@@ -228,7 +243,7 @@ object FdoSink {
       : Seq[SqliteWriter.Table] = {
     import SqliteWriter.Table
     Seq(
-      Table("geometry_columns",
+      Table.fromRows("geometry_columns",
         "CREATE TABLE geometry_columns (f_table_name TEXT, " +
           "f_geometry_column TEXT, geometry_type INTEGER, " +
           "coord_dimension INTEGER, srid INTEGER, geometry_format TEXT)",
@@ -236,21 +251,21 @@ object FdoSink {
           Seq("points", "m2db_geometry", 4L, 2L, 1L, "WKB"),
           Seq("lines", "m2db_geometry", 5L, 2L, 1L, "WKB"),
           Seq("areas", "m2db_geometry", 6L, 2L, 1L, "WKB"))),
-      Table("spatial_ref_sys",
+      Table.fromRows("spatial_ref_sys",
         "CREATE TABLE spatial_ref_sys (srid INTEGER, auth_name TEXT, " +
           "auth_srid INTEGER, srtext TEXT)",
         Iterator(Seq(1L, "EPSG", 4326L, Wgs84Srtext))),
-      Table("README", "CREATE TABLE README (desc TEXT, text TEXT)",
+      Table.fromRows("README", "CREATE TABLE README (desc TEXT, text TEXT)",
         readmeRows(header, srcPathname).iterator
           .map { case (d, x) => Seq(d, x) })) ++ features ++ Seq(
-      Table("subfiles",
+      Table.fromRows("subfiles",
         "CREATE TABLE subfiles (subfile_num INTEGER PRIMARY KEY, " +
           "level INTEGER, minzoom INTEGER, maxzoom INTEGER)",
         header.subfiles.iterator.map(sf =>
           Seq(sf.index.toLong, sf.level.toLong, sf.minzoom.toLong,
             sf.maxzoom.toLong)),
         rowidCol = Some(0)),
-      Table("limits", "CREATE TABLE limits (key TEXT, value REAL)",
+      Table.fromRows("limits", "CREATE TABLE limits (key TEXT, value REAL)",
         Iterator(
           Seq("minlat", header.minLat), Seq("minlon", header.minLon),
           Seq("maxlat", header.maxLat), Seq("maxlon", header.maxLon))))

@@ -1,6 +1,17 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+
 import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal single-file SQLite 3 database WRITER, from the public file
   * format specification (https://www.sqlite.org/fileformat2.html).
@@ -18,9 +29,11 @@ import scala.collection.mutable.ArrayBuffer
   * are rowid tables. Files written here open in stock sqlite3
   * (validated by tools/check_sqlite.py via Python's stdlib driver).
   *
-  * This is the sub-cluster-scale export: rows stream through the
-  * driver into one local file, the single-file analogue of
-  * `coalesce(1)`. The cluster-scale output remains FdoSink.write's
+  * This is the sub-cluster-scale export, the single-file analogue of
+  * `coalesce(1)`: records are encoded where the rows are computed (in
+  * Spark tasks, by [[RecordColumn]]), and the driver only packs the
+  * finished records, streamed in rowid order, into the pages of one
+  * local file. The cluster-scale output remains FdoSink.write's
   * parquet directory.
   */
 object SqliteWriter {
@@ -29,87 +42,240 @@ object SqliteWriter {
   private val Usable = PageSize // reserved-per-page = 0
 
   /** One table: `createSql` is the schema as it should appear in
-    * sqlite_master; `rowidCol` names the 0-based column index whose
-    * Long value is the rowid (an INTEGER PRIMARY KEY alias column —
-    * stored as NULL in the record per the format spec), or None for
-    * sequential rowids. Row values may be null, Long, Int, Double,
-    * String or Array[Byte]. */
-  case class Table(name: String, createSql: String,
-      rows: Iterator[Seq[Any]], rowidCol: Option[Int] = None)
+    * sqlite_master, `records` its rows as encoded records in strictly
+    * ascending rowid order. [[Table.fromRows]] encodes rows of values;
+    * [[RecordColumn]] encodes them inside a Spark task. */
+  final case class Table(name: String, createSql: String,
+      records: Iterator[Record])
+
+  /** One row: its rowid and its encoded record ([[RecordBuilder]]). */
+  final case class Record(rowid: Long, payload: Array[Byte])
+
+  object Table {
+    /** A table of value rows: `rowidCol` names the 0-based column
+      * whose integral value is the rowid (an INTEGER PRIMARY KEY alias
+      * column, stored as NULL in the record per the format spec), or
+      * None for sequential rowids from 1. Values are those
+      * [[RecordBuilder.add]] takes. */
+    def fromRows(name: String, createSql: String, rows: Iterator[Seq[Any]],
+        rowidCol: Option[Int] = None): Table = {
+      var n = 0L
+      Table(name, createSql, rows.map { vals =>
+        n += 1
+        val rowid = rowidCol.fold(n)(i => vals(i) match {
+          case l: Long => l
+          case i2: Int => i2.toLong
+          case other => throw new IllegalArgumentException(
+            s"rowid column must be integral, got $other")
+        })
+        Record(rowid, record(rowidCol.fold(vals)(vals.updated(_, null))))
+      })
+    }
+  }
 
   // ---- varint + record encoding ------------------------------------
-  private def varint(v: Long): Array[Byte] = {
-    if (v >= 0 && v <= 127) return Array(v.toByte)
-    // values needing more than 8 seven-bit groups (negative, or
-    // >= 2^56) use the 9-byte form: 8 continuation groups of 7 bits
-    // + a final byte carrying the low 8 bits (the spec's layout;
-    // Reader.readVarint mirrors it)
+  /** Bytes of `v` as a SQLite varint: one per 7-bit group, except that
+    * values needing more than 8 groups (negative, or >= 2^56) take the
+    * 9-byte form (8 groups + a final byte of the low 8 bits). */
+  private[graft] def varintLen(v: Long): Int =
+    if (v < 0 || v >= (1L << 56)) 9
+    else {
+      var n = 1
+      var x = v >>> 7
+      while (x != 0) { n += 1; x >>>= 7 }
+      n
+    }
+
+  /** Writes `v` as a varint at `off`; returns the offset after it.
+    * Reader.readVarint mirrors the layout. */
+  private[graft] def putVarint(b: Array[Byte], off: Int, v: Long): Int = {
+    val n = varintLen(v)
     var x = v
-    if (x < 0 || x >= (1L << 56)) {
-      val bytes = new Array[Byte](9)
-      bytes(8) = (x & 0xFF).toByte
-      x = x >>> 8
-      var i = 7
-      while (i >= 0) { bytes(i) = ((x & 0x7F) | 0x80).toByte; x >>>= 7; i -= 1 }
-      return bytes
-    }
-    val out = new ArrayBuffer[Byte](9)
-    var shift = 0
-    var tmp = x
-    while (tmp > 0) { shift += 7; tmp >>= 7 }
-    var s = shift - 7
-    while (s > 0) { out += (((x >> s) & 0x7F) | 0x80).toByte; s -= 7 }
-    out += (x & 0x7F).toByte
-    out.toArray
+    var i = n - 1
+    if (n == 9) { b(off + 8) = (x & 0xFF).toByte; x >>>= 8; i = 7 }
+    else { b(off + i) = (x & 0x7F).toByte; x >>>= 7; i -= 1 }
+    while (i >= 0) { b(off + i) = ((x & 0x7F) | 0x80).toByte; x >>>= 7; i -= 1 }
+    off + n
   }
 
-  private def intBytes(v: Long): (Long, Array[Byte]) = {
-    // smallest twos-complement big-endian width: serial types 1,2,3,4,5,6
-    def fit(n: Int): Boolean = {
-      val shift = 64 - n * 8
-      (v << shift >> shift) == v
-    }
-    val (st, n) =
-      if (v == 0) (8L, 0) else if (v == 1) (9L, 0)
-      else if (fit(1)) (1L, 1) else if (fit(2)) (2L, 2)
-      else if (fit(3)) (3L, 3) else if (fit(4)) (4L, 4)
-      else if (fit(6)) (5L, 6) else (6L, 8)
-    val b = new Array[Byte](n)
-    var i = 0
-    while (i < n) { b(i) = (v >> ((n - 1 - i) * 8) & 0xFF).toByte; i += 1 }
-    (st, b)
+  /** Serial type of an integer: 8/9 for the constants 0/1, else 1-6
+    * for the smallest twos-complement width (1, 2, 3, 4, 6, 8 bytes). */
+  private def intSerial(v: Long): Long = {
+    def fits(n: Int): Boolean = { val s = 64 - n * 8; (v << s >> s) == v }
+    if (v == 0) 8 else if (v == 1) 9 else if (fits(1)) 1 else if (fits(2)) 2
+    else if (fits(3)) 3 else if (fits(4)) 4 else if (fits(6)) 5 else 6
   }
 
-  /** SQLite record: header of serial types + body. */
-  private def record(values: Seq[Any]): Array[Byte] = {
-    val parts = values.map {
-      case null => (0L, Array.emptyByteArray)
-      case b: Boolean => intBytes(if (b) 1L else 0L)
-      case i: Int => intBytes(i.toLong)
-      case l: Long => intBytes(l)
-      case d: Double =>
-        val bits = java.lang.Double.doubleToLongBits(d)
-        (7L, (0 until 8).map(i => (bits >> ((7 - i) * 8) & 0xFF).toByte)
-          .toArray)
-      case f: Float =>
-        val bits = java.lang.Double.doubleToLongBits(f.toDouble)
-        (7L, (0 until 8).map(i => (bits >> ((7 - i) * 8) & 0xFF).toByte)
-          .toArray)
-      case s: String =>
-        val b = s.getBytes("UTF-8")
-        (13L + 2 * b.length, b)
-      case b: Array[Byte] => (12L + 2 * b.length, b)
+  /** Body bytes of a value of serial type `st`. */
+  private def bodyLen(st: Long): Int =
+    if (st >= 12) ((st - 12) / 2).toInt
+    else (st.toInt: @annotation.switch) match {
+      case 1 => 1; case 2 => 2; case 3 => 3; case 4 => 4; case 5 => 6
+      case 6 | 7 => 8; case _ => 0
+    }
+
+  /** The record kernel: one SQLite record (a header of serial-type
+    * varints, then the values' bodies) built value by value, then
+    * written into one exactly-sized array. Adding a value only notes
+    * its serial type and where its body comes from; [[result]] sizes
+    * the record and writes header and bodies in place. A builder is
+    * reused row after row, by one thread. */
+  final class RecordBuilder {
+    private var n = 0
+    private var serial = new Array[Long](16)
+    // an integer's value or a double's bits; a text or blob's bytes
+    // (an Array[Byte], or a UTF8String copied straight from Spark)
+    private var num = new Array[Long](16)
+    private var ref = new Array[AnyRef](16)
+
+    private def push(st: Long, v: Long, r: AnyRef): Unit = {
+      if (n == serial.length) {
+        serial = java.util.Arrays.copyOf(serial, 2 * n)
+        num = java.util.Arrays.copyOf(num, 2 * n)
+        ref = java.util.Arrays.copyOf(ref, 2 * n)
+      }
+      serial(n) = st; num(n) = v; ref(n) = r; n += 1
+    }
+
+    def addNull(): Unit = push(0, 0, null)
+    def addLong(v: Long): Unit = push(intSerial(v), v, null)
+    def addBoolean(v: Boolean): Unit = addLong(if (v) 1L else 0L)
+    /** REAL, as the canonical bits `doubleToLongBits` gives (one NaN). */
+    def addDouble(d: Double): Unit =
+      push(7, java.lang.Double.doubleToLongBits(d), null)
+    def addText(utf8: Array[Byte]): Unit = push(13L + 2L * utf8.length, 0, utf8)
+    def addText(s: UTF8String): Unit = push(13L + 2L * s.numBytes, 0, s)
+    def addBlob(b: Array[Byte]): Unit = push(12L + 2L * b.length, 0, b)
+
+    /** A value of a row: null, Boolean, Int, Long, Float, Double,
+      * String (stored as UTF-8) or Array[Byte]. */
+    def add(v: Any): Unit = v match {
+      case null => addNull()
+      case b: Boolean => addBoolean(b)
+      case i: Int => addLong(i.toLong)
+      case l: Long => addLong(l)
+      case d: Double => addDouble(d)
+      case f: Float => addDouble(f.toDouble)
+      case s: String => addText(s.getBytes(StandardCharsets.UTF_8))
+      case b: Array[Byte] => addBlob(b)
       case other => throw new IllegalArgumentException(
         s"unsupported SQLite value: ${other.getClass}")
     }
-    val serials = parts.flatMap(p => varint(p._1)).toArray
-    // header size varint includes its own length: fixpoint in ≤2 tries
-    val hdrLen =
-      if (serials.length + 1 <= 127) serials.length + 1
-      else serials.length + varint(serials.length + 2).length
-    val hdr = varint(hdrLen) ++ serials
-    hdr ++ parts.flatMap(_._2)
+
+    /** The record of the values added since the last result. */
+    def result(): Array[Byte] = {
+      var serials = 0
+      var body = 0
+      var i = 0
+      while (i < n) {
+        serials += varintLen(serial(i)); body += bodyLen(serial(i)); i += 1
+      }
+      // the header length counts its own varint: fixpoint in ≤2 tries
+      val hdrLen =
+        if (serials + 1 <= 127) serials + 1
+        else serials + varintLen(serials + 2)
+      val out = new Array[Byte](hdrLen + body)
+      var h = putVarint(out, 0, hdrLen)
+      var p = hdrLen
+      i = 0
+      while (i < n) {
+        val st = serial(i)
+        h = putVarint(out, h, st)
+        val len = bodyLen(st)
+        if (st >= 12) ref(i) match {
+          case b: Array[Byte] => System.arraycopy(b, 0, out, p, len)
+          case s: UTF8String =>
+            s.writeToMemory(out, Platform.BYTE_ARRAY_OFFSET + p.toLong)
+        } else {
+          // big-endian integer of `len` bytes (a double's bits: 8)
+          val v = num(i)
+          var k = 0
+          while (k < len) { out(p + k) = (v >> ((len - 1 - k) * 8)).toByte; k += 1 }
+        }
+        ref(i) = null
+        p += len
+        i += 1
+      }
+      n = 0
+      out
+    }
   }
+
+  /** One record of `values` ([[RecordBuilder.add]]'s value domain). */
+  def record(values: Seq[Any]): Array[Byte] = {
+    val b = new RecordBuilder
+    values.foreach(b.add)
+    b.result()
+  }
+
+  /** Catalyst expression: its children's values as one SQLite record,
+    * encoded inside the task that computes the row, from Spark's own
+    * value forms (a string's UTF-8 bytes are copied as they are), in
+    * generated code that feeds each child's value straight to a
+    * [[RecordBuilder]]. Children may be integral, boolean, float,
+    * double, string or binary; a null value, or a NullType child, is a
+    * NULL. */
+  final case class RecordColumn(children: Seq[Expression]) extends Expression {
+    override def nullable: Boolean = false
+    override def dataType: DataType = BinaryType
+
+    /** The builder call that adds a value of each child's type. */
+    @transient private lazy val adds: IndexedSeq[String] =
+      children.map(_.dataType match {
+        case NullType => "addNull"
+        case ByteType | ShortType | IntegerType | LongType => "addLong"
+        case BooleanType => "addBoolean"
+        case FloatType | DoubleType => "addDouble"
+        case _: StringType => "addText"
+        case BinaryType => "addBlob"
+        case other => throw new IllegalArgumentException(
+          s"unsupported SQLite column type: $other")
+      }).toIndexedSeq
+    @transient private lazy val builder = new RecordBuilder
+    // the builder is mutable state: each projection gets a fresh copy,
+    // as Spark does for CreateMap's map builder
+    override def stateful: Boolean = true
+
+    override def eval(input: InternalRow): Any = {
+      val b = builder
+      children.iterator.zip(adds.iterator).foreach { case (c, add) =>
+        val v = c.eval(input)
+        if (v == null) b.addNull()
+        else add match {
+          case "addNull" => b.addNull()
+          case "addLong" => b.addLong(v.asInstanceOf[Number].longValue)
+          case "addBoolean" => b.addBoolean(v.asInstanceOf[Boolean])
+          case "addDouble" => b.addDouble(v.asInstanceOf[Number].doubleValue)
+          case "addText" => b.addText(v.asInstanceOf[UTF8String])
+          case "addBlob" => b.addBlob(v.asInstanceOf[Array[Byte]])
+        }
+      }
+      b.result()
+    }
+
+    override protected def doGenCode(ctx: CodegenContext,
+        ev: ExprCode): ExprCode = {
+      val b = ctx.addMutableState(classOf[RecordBuilder].getName,
+        "recordBuilder", v => s"$v = new ${classOf[RecordBuilder].getName}();")
+      val values = children.zip(adds).map { case (c, add) =>
+        val v = c.genCode(ctx)
+        val put = if (add == "addNull") s"$b.addNull();" else s"$b.$add(${v.value});"
+        // no stripMargin over generated code: a line of it may start
+        // with '|'
+        s"""${v.code}
+          if (${v.isNull}) $b.addNull(); else $put"""
+      }
+      ev.copy(code = code"""${ctx.splitExpressionsWithCurrentInputs(values)}
+        byte[] ${ev.value} = $b.result();""", isNull = FalseLiteral)
+    }
+
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): Expression = copy(children = c)
+  }
+
+  /** The record of `cols` as a binary column ([[RecordColumn]]). */
+  def recordColumn(cols: Seq[Column]): Column =
+    GraftShim.column(RecordColumn(cols.map(GraftShim.expression)))
 
   // ---- page assembly ------------------------------------------------
   /** Pages are 1-based, backed by the output file itself: completed
@@ -122,7 +288,7 @@ object SqliteWriter {
     * header — stay correct regardless of eviction timing. Callers
     * must NOT retain a page array across `alloc()` calls (eviction
     * would orphan their mutations); they re-fetch via `apply`. */
-  private final class PageStore(path: String) {
+  private[graft] final class PageStore(path: String) {
     private val file = new java.io.RandomAccessFile(path, "rw")
     file.setLength(0) // truncate any pre-existing file
     private val cache =
@@ -174,39 +340,44 @@ object SqliteWriter {
 
   /** A leaf cell image (already including any overflow pointer) plus
     * its rowid, ready to pack into a page. */
-  private case class Cell(rowid: Long, bytes: Array[Byte])
+  private[graft] case class Cell(rowid: Long, bytes: Array[Byte])
 
   /** Payload → leaf cell, spilling to overflow pages as the spec
-    * prescribes (maxLocal = U-35; minLocal = (U-12)*32/255-23). */
-  private def makeCell(store: PageStore, rowid: Long,
+    * prescribes (maxLocal = U-35; minLocal = (U-12)*32/255-23). The
+    * cell is sized up front: length and rowid varints, the local part
+    * of the payload and, when it spills, the first overflow page. */
+  private[graft] def makeCell(store: PageStore, rowid: Long,
       payload: Array[Byte]): Cell = {
     val maxLocal = Usable - 35
-    if (payload.length <= maxLocal)
-      Cell(rowid, varint(payload.length) ++ varint(rowid) ++ payload)
-    else {
-      val minLocal = (Usable - 12) * 32 / 255 - 23
-      val k = minLocal + (payload.length - minLocal) % (Usable - 4)
-      val local = if (k <= maxLocal) k else minLocal
-      var rest = payload.drop(local)
+    val n = payload.length
+    val local =
+      if (n <= maxLocal) n
+      else {
+        val minLocal = (Usable - 12) * 32 / 255 - 23
+        val k = minLocal + (n - minLocal) % (Usable - 4)
+        if (k <= maxLocal) k else minLocal
+      }
+    val head = varintLen(n) + varintLen(rowid)
+    val cell = new Array[Byte](head + local + (if (local < n) 4 else 0))
+    putVarint(cell, putVarint(cell, 0, n), rowid)
+    System.arraycopy(payload, 0, cell, head, local)
+    if (local < n) {
       // build the chain; link pages as we go. Track the previous page
       // by NUMBER and re-fetch for the back-link: holding the array
       // across alloc() would let cache eviction orphan the mutation.
-      var firstPage = 0
+      var off = local
       var prevPn = 0
-      while (rest.nonEmpty) {
+      while (off < n) {
         val pn = store.alloc()
-        if (prevPn != 0) put4(store(prevPn), 0, pn) else firstPage = pn
-        val pg = store(pn)
-        val take = math.min(Usable - 4, rest.length)
-        System.arraycopy(rest, 0, pg, 4, take)
-        rest = rest.drop(take)
+        if (prevPn != 0) put4(store(prevPn), 0, pn)
+        else put4(cell, cell.length - 4, pn)
+        val take = math.min(Usable - 4, n - off)
+        System.arraycopy(payload, off, store(pn), 4, take)
+        off += take
         prevPn = pn
       }
-      val head = varint(payload.length) ++ varint(rowid) ++
-        payload.take(local) ++ Array[Byte](0, 0, 0, 0)
-      put4(head, head.length - 4, firstPage)
-      Cell(rowid, head)
     }
+    Cell(rowid, cell)
   }
 
   /** Pack cells into table-leaf pages (type 0x0D). `headerRoom` > 0
@@ -284,10 +455,10 @@ object SqliteWriter {
         var content = Usable
         var ptrOff = 12
         group.dropRight(1).foreach { case (child, maxKey) =>
-          val cell = new Array[Byte](4) ++ varint(maxKey)
-          put4(cell, 0, child)
-          content -= cell.length
-          System.arraycopy(cell, 0, page, content, cell.length)
+          // cell: 4-byte child page + varint key, written in place
+          content -= 4 + varintLen(maxKey)
+          put4(page, content, child)
+          putVarint(page, content + 4, maxKey)
           put2(page, ptrOff, content); ptrOff += 2
         }
         put2(page, 5, content)
@@ -333,27 +504,8 @@ object SqliteWriter {
 
     val masterRows = new ArrayBuffer[Seq[Any]]()
     tables.foreach { t =>
-      var n = 0L
-      val cells = t.rows.map { vals =>
-        n += 1
-        val rowid = t.rowidCol match {
-          case Some(i) => vals(i) match {
-            case l: Long => l
-            case i2: Int => i2.toLong
-            case other => throw new IllegalArgumentException(
-              s"rowid column must be integral, got $other")
-          }
-          case None => n
-        }
-        // rowid-alias column is stored as NULL per the format
-        val stored = t.rowidCol match {
-          case Some(i) => vals.updated(i, null)
-          case None => vals
-        }
-        makeCell(store, rowid, record(stored))
-      }
-      val leaves = packLeaves(store, cells)
-      val root = buildTree(store, leaves)
+      val cells = t.records.map(r => makeCell(store, r.rowid, r.payload))
+      val root = buildTree(store, packLeaves(store, cells))
       masterRows += Seq("table", t.name, t.name, root.toLong, t.createSql)
     }
 

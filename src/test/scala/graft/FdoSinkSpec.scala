@@ -14,6 +14,8 @@ import graft.sources.{FdoSink, Mapsforge, SqliteWriter}
 
 /** Differential spec for the two sinks of `FdoSink.map2db`:
   *
+  *  - the SQLite pass hands the driver only `(table, fid, record)`
+  *    rows, records already encoded, in (table, fid) order;
   *  - the SQLite file, written from one (table, fid) ordered pass over
   *    the build's merged relation, is byte-identical to one written
   *    from each feature table collected by id on its own;
@@ -43,7 +45,7 @@ class FdoSinkSpec extends AnyFunSuite {
           vtagCols.map(c => s"${q(c)} TEXT"))).mkString(", ")
       val rows = df.select((base ++ vtagCols).map(col): _*)
         .orderBy(col(idCol)).collect()
-      Table(name, s"CREATE TABLE $name ($colDefs)",
+      Table.fromRows(name, s"CREATE TABLE $name ($colDefs)",
         rows.iterator.map(_.toSeq), rowidCol = Some(0))
     }
     SqliteWriter.write(path, FdoSink.sqliteTables(header, src, Seq(
@@ -76,6 +78,14 @@ class FdoSinkSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-sink")
     val t = build
     try {
+      // the driver receives finished records, in (table, fid) order
+      val recs = FdoSink.sqliteRecords(t)
+      assert(recs.schema.map(f => f.name -> f.dataType) == Seq(
+        "table" -> IntegerType, "fid" -> LongType, "record" -> BinaryType))
+      val ids = recs.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+      assert(ids.nonEmpty && ids.zip(ids.tail).forall { case (a, b) =>
+        Ordering[(Int, Long)].lt(a, b) }, "records out of (table, fid) order")
+
       val (got, want) = (tmp.resolve("got.db"), tmp.resolve("want.db"))
       FdoSink.writeSqlite(spark, t, header, src, got.toString)
       perTableSqlite(t, header, src, want.toString)

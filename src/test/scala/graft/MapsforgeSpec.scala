@@ -297,7 +297,7 @@ class MapsforgeSpec extends AnyFunSuite {
     }
     val path = java.nio.file.Files.createTempDirectory("graft-sql-stress")
       .resolve("s.db").toString
-    SqliteWriter.write(path, Seq(Table("t",
+    SqliteWriter.write(path, Seq(Table.fromRows("t",
       "CREATE TABLE t (id INTEGER PRIMARY KEY, payload BLOB, note TEXT)",
       rows.iterator.map { case (id, b) => Seq(id, b, s"row$id") },
       rowidCol = Some(0))))
@@ -322,7 +322,7 @@ class MapsforgeSpec extends AnyFunSuite {
     // tail rowids >= 2^56 force the 9-byte varint form (8 7-bit
     // groups + full low byte) in both leaf cells and interior keys
     val huge = Seq((1L << 56) + 5, Long.MaxValue - 1)
-    SqliteWriter.write(path, Seq(Table("t",
+    SqliteWriter.write(path, Seq(Table.fromRows("t",
       "CREATE TABLE t (id INTEGER PRIMARY KEY, v INTEGER)",
       ((1 to n).iterator.map(_.toLong) ++ huge.iterator)
         .map(i => Seq(i, i * 3)),
@@ -341,29 +341,35 @@ class MapsforgeSpec extends AnyFunSuite {
     // pages spill and late patches (overflow back-links, the page-1
     // re-home, the final header) hit RE-READ pages — the paths no
     // small-file test touches. 2 KiB strings keep leaves multi-row;
-    // 20 KiB blobs force overflow chains that straddle evictions.
+    // 20 KiB blobs force overflow chains that straddle evictions, and
+    // one 4 MiB blob a chain longer than the whole cache, copied page
+    // by page from its offset.
     val path = java.nio.file.Files.createTempDirectory("graft-sql-spill")
       .resolve("s.db").toString
-    val nSmall = 3500; val nBig = 200
+    val nSmall = 3500; val nBig = 200; val n = nSmall + nBig + 1
     def blob(i: Int) =
       Array.tabulate[Byte](20000)(j => ((i * 31 + j) & 0xFF).toByte)
-    SqliteWriter.write(path, Seq(Table("t",
+    val huge = Array.tabulate[Byte](4 << 20)(j => ((j >>> 12) + j).toByte)
+    SqliteWriter.write(path, Seq(Table.fromRows("t",
       "CREATE TABLE t (id INTEGER PRIMARY KEY, s TEXT, b BLOB)",
-      (1 to nSmall + nBig).iterator.map { i =>
+      (1 to n).iterator.map { i =>
         if (i <= nSmall) Seq(i.toLong, ("x" * 2000) + i, null)
-        else Seq(i.toLong, null, blob(i))
+        else if (i < n) Seq(i.toLong, null, blob(i))
+        else Seq(i.toLong, null, huge)
       },
       rowidCol = Some(0))))
     assert(new java.io.File(path).length() > 8L * 1024 * 1024,
       "fixture too small to cross the cache bound")
     val got = new SqliteWriter.Reader.Db(path).tableRows("t")
-    assert(got.size == nSmall + nBig)
-    assert(got.map(_._1) == (1 to nSmall + nBig).map(_.toLong))
+    assert(got.size == n)
+    assert(got.map(_._1) == (1 to n).map(_.toLong))
     assert(got.take(nSmall).forall { case (id, vals) =>
       vals(1) == ("x" * 2000) + id })
-    assert(got.drop(nSmall).forall { case (id, vals) =>
+    assert(got.slice(nSmall, n - 1).forall { case (id, vals) =>
       java.util.Arrays.equals(vals(2).asInstanceOf[Array[Byte]],
         blob(id.toInt)) })
+    assert(java.util.Arrays.equals(got.last._2(2).asInstanceOf[Array[Byte]],
+      huge), "4 MiB blob mismatch")
     // the REAL engine's structural validation (covers freelist, cell
     // ordering, overflow chain integrity) when python3 is available
     val ic = try {
@@ -373,7 +379,7 @@ class MapsforgeSpec extends AnyFunSuite {
            |ok,=c.execute("PRAGMA integrity_check").fetchone()
            |print(ok)
            |n,=c.execute("SELECT COUNT(*) FROM t").fetchone()
-           |sys.exit(0 if (ok=="ok" and n==${nSmall + nBig}) else 1)"""
+           |sys.exit(0 if (ok=="ok" and n==$n) else 1)"""
           .stripMargin)).! == 0
     } catch { case _: Throwable => true } // no python3: Reader pass stands
     assert(ic, "real-engine integrity_check failed on the spilled file")
