@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -39,8 +39,10 @@ import graft.sources.Mapsforge.{Poi, Way}
   *     the min level seen, and for line rows the reference's two-pass
   *     endpoint-snap linemerge;
   *  4. split: the merged relation is persisted once and its vtag keys
-  *     collected once; points, lines and areas are filters of it, and
-  *     the SQLite sink reads it whole in one (table, fid) ordered pass.
+  *     collected once; points, lines and areas are filters of it, the
+  *     parquet sink reads it whole in one pass that routes each row to
+  *     its table's writer, and the SQLite sink in one (table, fid)
+  *     ordered pass.
   *
   * The reference walks tiles serially and mutates sqlite row-by-row;
   * here every stage is partition-parallel and the only data movement
@@ -293,19 +295,24 @@ object MapPipeline {
     * keys that table `t`'s rows carry. Each table gets one column per
     * key, as the reference ALTER TABLEs them in (map2db.py:856-871):
     * [[points]], [[lines]] and [[areas]] are filters of `merged` that
-    * project those columns, while the SQLite sink reads `merged` itself
-    * in one ordered pass. `release()` drops the persisted relation; call
+    * project those columns ([[columns]]), while the sinks read `merged`
+    * itself in one pass each. `release()` drops the persisted relation; call
     * it after the last action on the tables. `decodedTiles()` reads the
     * executor-side decode counter — a decode-once pipeline keeps it at
     * the file's non-empty tile count (pinned by MapsforgeSpec). */
   final case class MapTables(merged: DataFrame, keys: Seq[Seq[String]],
       decoded: LongAccumulator) {
-    private def table(t: Int): DataFrame = {
-      val base = merged.filter(col("table") === t).drop("table")
-        .withColumnRenamed("fid", FeatureTables(t)._2)
-      keys(t).foldLeft(base)((df, k) =>
-        df.withColumn(k, col("vtags").getItem(k))).drop("vtags")
-    }
+    /** Table `t`'s columns over a row of `merged`: `fid` as the table's
+      * id column, the m2db columns in `merged`'s order, then `vtags[k]`
+      * for each key. */
+    private[graft] def columns(t: Int): Seq[Column] =
+      merged.columns.toSeq.flatMap {
+        case "table" | "vtags" => Nil
+        case "fid" => Seq(col("fid").as(FeatureTables(t)._2))
+        case c => Seq(col(c))
+      } ++ keys(t).map(k => col("vtags").getItem(k).as(k))
+    private def table(t: Int): DataFrame =
+      merged.filter(col("table") === t).select(columns(t): _*)
     val points: DataFrame = table(PointT)
     val lines: DataFrame = table(LineT)
     val areas: DataFrame = table(AreaT)

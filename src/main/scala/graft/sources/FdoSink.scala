@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.MapPipeline
 import graft.operators.MapPipeline.MapTables
@@ -30,28 +30,182 @@ object FdoSink {
     * m2db_level: the dominant read pattern is level-targeted (a map
     * build reads one zoom interval at a time), so level becomes a
     * directory key and those scans prune to one partition instead of
-    * filtering the full table. */
+    * filtering the full table.
+    *
+    * The layout is what `df.write.mode(Overwrite).partitionBy(
+    * "m2db_level").parquet(s"$outDir/<table>")` makes of each feature
+    * table — `<table>/m2db_level=<L>/part-<task>-<job>.c000.snappy.parquet`
+    * and `<table>/_SUCCESS`, an empty table's included — but all three
+    * tables are written by ONE job over the relation the build persisted
+    * and filled ([[writeFeatures]]): each task routes every cached row,
+    * by its `table` and `m2db_level`, to a parquet writer for that
+    * (table, level), and every file commits through one Spark
+    * `FileCommitProtocol` over `outDir`. The five metadata tables are
+    * rows the driver already holds: it writes them itself while that
+    * job runs, and they cost no job. */
   def write(spark: SparkSession, tables: MapTables, header: Mapsforge.Header,
       srcPathname: String, outDir: String): Unit = {
-    def saveByLevel(df: DataFrame, name: String): Unit =
-      df.write.mode(SaveMode.Overwrite).partitionBy("m2db_level")
-        .parquet(s"$outDir/$name")
-
-    // The three feature tables are filters of the relation the build
-    // persisted and filled, so their writes read cached rows. They are
-    // independent jobs over different directories, submitted from a
-    // small pool so each job's tasks back-fill the previous job's tail
-    // instead of paying three sequential per-job scheduling floors. The
-    // five metadata tables are rows the driver already holds: it writes
-    // them itself while those jobs run, and they cost no job.
     graft.Threads.inParallel(Seq(
-      () => saveByLevel(tables.points, "points"),
-      () => saveByLevel(tables.lines, "lines"),
-      () => saveByLevel(tables.areas, "areas"),
+      () => writeFeatures(spark, tables, outDir),
       () => metadataTables(spark, header, srcPathname).foreach {
         case (name, df) => saveLocal(spark, df, s"$outDir/$name")
       }))
     ()
+  }
+
+  /** The feature tables of [[write]], in one job over `tables.merged`.
+    *
+    *  - Writers: table `t`'s rows are [[MapTables.columns]] without
+    *    `m2db_level` (one `UnsafeProjection` per table), written with
+    *    the schema Spark's writer stores for them: those columns' names,
+    *    types and nullability (a raw map's id is not nullable, a merged
+    *    map's is). A task opens a (table, level) writer at its
+    *    first row and keeps it open until the task ends, as the rows of
+    *    the tables and levels interleave; so a task holds at most
+    *    (feature tables × subfile levels) open writers, whose row
+    *    groups parquet-mr's `MemoryManager` sizes. A writer rolls to
+    *    its next file (`c001`, `c002`, …) after
+    *    `spark.sql.files.maxRecordsPerFile` rows, as Spark's does.
+    *  - Commit: one protocol of the session's
+    *    `spark.sql.sources.commitProtocolClass` over `outDir`, each file
+    *    under the relative dir `<table>/m2db_level=<L>`. A failed task
+    *    closes its writers and aborts its attempt; a failed job is
+    *    aborted; either way the cause is rethrown. Each table dir is
+    *    replaced whole before the job (Overwrite), and the job's
+    *    `_SUCCESS` marker goes in each table dir rather than in
+    *    `outDir`, which gains no file of its own.
+    *  - Plumbing: the per-table Hadoop confs (each set up by
+    *    `ParquetFileFormat.prepareWrite` for its schema) are broadcast
+    *    once, so an executor deserializes them once rather than each
+    *    task; a task copies them before setting its own task ids. */
+  private def writeFeatures(spark: SparkSession, tables: MapTables,
+      outDir: String): Unit = {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapred.JobID
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.TaskContext
+    import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.datasources.OutputWriter
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import org.apache.spark.util.SerializableConfiguration
+
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val names = MapPipeline.FeatureTables.map(_._1)
+    // planned afresh, so the scan reads the cache the build filled, or
+    // recomputes once that is released
+    val input = state.executePlan(tables.merged.queryExecution.analyzed)
+    val inAttrs = input.executedPlan.output
+    val (tableOrd, levelOrd) = (inAttrs.indexWhere(_.name == "table"),
+      inAttrs.indexWhere(_.name == "m2db_level"))
+    val projections = names.indices.map { t =>
+      tables.merged.select(tables.columns(t): _*).queryExecution.analyzed match {
+        case Project(cols, _) => cols.filterNot(_.name == "m2db_level")
+      }
+    }
+    val schemas = projections.map(cols =>
+      StructType(cols.map(c =>
+        StructField(c.name, c.dataType, c.nullable, c.metadata))))
+    val hadoopConf = state.newHadoopConf()
+    val jobs = schemas.map { schema =>
+      val job = Job.getInstance(hadoopConf)
+      FileOutputFormat.setOutputPath(job, new Path(outDir))
+      (job, new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema))
+    }
+    val factories = jobs.map(_._2)
+    val commitJob = Job.getInstance(jobs.head._1.getConfiguration)
+    commitJob.getConfiguration.setBoolean(
+      "mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
+    val protocol = FileCommitProtocol.instantiate(state.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID.toString, outDir)
+    val maxRecords = state.conf.maxRecordsPerFile
+    val tracker = new java.text.SimpleDateFormat("yyyyMMddHHmmss",
+      java.util.Locale.US).format(new java.util.Date)
+    val sc = spark.sparkContext
+    val confs = sc.broadcast(jobs.map(j =>
+      new SerializableConfiguration(j._1.getConfiguration)))
+
+    def task(ctx: TaskContext, rows: Iterator[InternalRow])
+        : FileCommitProtocol.TaskCommitMessage = {
+      val attempt = new TaskAttemptID(new TaskID(
+        new JobID(tracker, ctx.stageId), TaskType.MAP, ctx.partitionId),
+        ctx.attemptNumber)
+      val contexts = confs.value.map { c =>
+        val hc = new Configuration(c.value)
+        hc.set("mapreduce.job.id", attempt.getJobID.toString)
+        hc.set("mapreduce.task.id", attempt.getTaskID.toString)
+        hc.set("mapreduce.task.attempt.id", attempt.toString)
+        hc.setBoolean("mapreduce.task.ismap", true)
+        hc.setInt("mapreduce.task.partition", 0)
+        new TaskAttemptContextImpl(hc, attempt)
+      }
+      /** The files of one (table, level), one open at a time. */
+      final class Writer(t: Int, level: Int) {
+        private var file = -1
+        private var rowsInFile = 0L
+        private var out: OutputWriter = null
+        def write(row: InternalRow): Unit = {
+          if (out == null || (maxRecords > 0 && rowsInFile >= maxRecords)) {
+            close()
+            file += 1
+            require(file < 1000, s"file counter $file is beyond 999")
+            val path = protocol.newTaskTempFile(contexts(t),
+              Some(s"${names(t)}/m2db_level=$level"), FileNameSpec("",
+                f".c$file%03d" + factories(t).getFileExtension(contexts(t))))
+            out = factories(t).newInstance(path, schemas(t), contexts(t))
+            rowsInFile = 0
+          }
+          out.write(row)
+          rowsInFile += 1
+        }
+        def close(): Unit =
+          if (out != null) { val o = out; out = null; o.close() }
+      }
+      protocol.setupTask(contexts.head)
+      val writers = scala.collection.mutable.HashMap.empty[(Int, Int), Writer]
+      try {
+        val project = projections.map(UnsafeProjection.create(_, inAttrs))
+        rows.foreach { row =>
+          val t = row.getInt(tableOrd)
+          require(!row.isNullAt(levelOrd), s"${names(t)} row without a level")
+          val level = row.getInt(levelOrd)
+          writers.getOrElseUpdate((t, level), new Writer(t, level))
+            .write(project(t)(row))
+        }
+        writers.values.foreach(_.close())
+        protocol.commitTask(contexts.head)
+      } catch {
+        case e: Throwable =>
+          try {
+            writers.values.foreach(w =>
+              try w.close() catch { case c: Throwable => e.addSuppressed(c) })
+            protocol.abortTask(contexts.head)
+          } catch { case a: Throwable => e.addSuppressed(a) }
+          throw e
+      }
+    }
+
+    try {
+      val fs = new Path(outDir).getFileSystem(hadoopConf)
+      names.foreach(n => fs.delete(new Path(outDir, n), true))
+      try {
+        protocol.setupJob(commitJob)
+        protocol.commitJob(commitJob, sc.runJob(input.toRdd, task _).toSeq)
+      } catch {
+        case e: Throwable =>
+          try protocol.abortJob(commitJob)
+          catch { case a: Throwable => e.addSuppressed(a) }
+          throw e
+      }
+      names.foreach(n => fs.create(new Path(outDir, s"$n/_SUCCESS")).close())
+    } finally confs.destroy()
   }
 
   /** The five metadata tables of the parquet directory, by name, as

@@ -2,8 +2,11 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +24,14 @@ import graft.sources.{FdoSink, Mapsforge, SqliteWriter}
   *    from each feature table collected by id on its own;
   *  - the metadata tables, written by the driver without a job, read
   *    back as their `toDF` forms, and a second write into the same
-  *    directory overwrites every table, leaving no stale part file.
+  *    directory overwrites every table, leaving no stale part file;
+  *  - the feature tables, written by one routed job, are file for file
+  *    and byte for byte what `df.write.mode(Overwrite).partitionBy(
+  *    "m2db_level").parquet` writes of each table (the form that job
+  *    replaced), `spark.sql.files.maxRecordsPerFile` included, with a
+  *    `_SUCCESS` in each table dir and nothing else at the root;
+  *  - a failed write aborts its job, rethrows the IO cause, leaves no
+  *    part file or `_temporary`, and frees the build's relation.
   *
   * Fixtures: FusedBuildSpec's crossing map with and without areas (an
   * empty areas table), NonDblMapSpec's raw map. */
@@ -67,6 +77,58 @@ class FdoSinkSpec extends AnyFunSuite {
   private def nullable(s: StructType): StructType =
     StructType(s.map(_.copy(nullable = true)))
 
+  /** The reference form of the feature tables: one partitioned
+    * DataFrame write per table. */
+  private def perTableParquet(t: MapTables, dir: String): Unit =
+    Seq("points" -> t.points, "lines" -> t.lines, "areas" -> t.areas)
+      .foreach { case (name, df) =>
+        df.write.mode(SaveMode.Overwrite).partitionBy("m2db_level")
+          .parquet(s"$dir/$name")
+      }
+
+  private val PartName =
+    """part-(\d{5})-[0-9a-f-]{36}\.(c\d{3})\.snappy\.parquet""".r
+
+  /** A table dir's part files by (level dir, part index, file counter):
+    * every file name but the job's UUID. */
+  private def partsByKey(tableDir: String): Map[(String, String, String), File] =
+    Option(new File(tableDir).listFiles).toSeq.flatten
+      .filter(_.isDirectory).flatMap { level =>
+        level.listFiles.toSeq.filter(_.getName.startsWith("part-")).map { f =>
+          val PartName(part, counter) = (f.getName: @unchecked)
+          (level.getName, part, counter) -> f
+        }
+      }.toMap
+
+  private val FeatureNames = Seq("points", "lines", "areas")
+
+  /** `out`'s root holds only the eight tables (plus `extra`), each
+    * feature table dir its `_SUCCESS`. */
+  private def checkLayout(out: String, extra: Set[String] = Set.empty)
+      : Unit = {
+    assert(new File(out).list.toSet == FeatureNames.toSet ++ Set(
+      "geometry_columns", "spatial_ref_sys", "README", "subfiles",
+      "limits") ++ extra, "outDir's root")
+    FeatureNames.foreach(n =>
+      assert(new File(s"$out/$n/_SUCCESS").isFile, s"$n/_SUCCESS"))
+  }
+
+  /** `got` has [[checkLayout]]'s layout and, for each (table, level,
+    * part index, file counter) of `want`, a byte-identical part file.
+    * Returns the number of part files compared. */
+  private def sameFeatureTables(got: String, want: String): Int = {
+    checkLayout(got)
+    FeatureNames.map { name =>
+      val (g, w) = (partsByKey(s"$got/$name"), partsByKey(s"$want/$name"))
+      assert(g.keySet == w.keySet, name)
+      w.foreach { case (k, f) =>
+        assert(java.util.Arrays.equals(Files.readAllBytes(g(k).toPath),
+          Files.readAllBytes(f.toPath)), s"$name $k ${g(k)} $f")
+      }
+      w.size
+    }.sum
+  }
+
   private def partFiles(dir: String): Set[String] =
     Option(new File(dir).listFiles).toSeq.flatten.flatMap { f =>
       if (f.isDirectory) partFiles(f.getPath)
@@ -93,11 +155,16 @@ class FdoSinkSpec extends AnyFunSuite {
         Files.readAllBytes(want)), "SQLite files differ")
 
       val out = tmp.resolve("db").toString
+      val decoded = t.decodedTiles()
       FdoSink.write(spark, t, header, src, out)
       val first = partFiles(out)
       FdoSink.write(spark, t, header, src, out)
       assert((partFiles(out) & first).isEmpty,
         "a part file of the first write survived the second")
+      assert(t.decodedTiles() == decoded, "the write recomputed the build")
+      val ref = tmp.resolve("ref").toString
+      perTableParquet(t, ref)
+      assert(sameFeatureTables(out, ref) > 0)
       FdoSink.metadataTables(spark, header, src).foreach { case (name, df) =>
         val back = spark.read.parquet(s"$out/$name")
         assert(back.schema == nullable(df.schema), name)
@@ -146,6 +213,33 @@ class FdoSinkSpec extends AnyFunSuite {
     check(path, MapPipeline.buildRaw(spark, path))
   }
 
+  test("feature tables roll files at maxRecordsPerFile as Spark's writer") {
+    val path = MapEncoder.writeToTemp(
+      FusedBuildSpec.crossingMap(41L, withAreas = true))
+    val tmp = Files.createTempDirectory("graft-sink")
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val t = MapPipeline.build(spark, path)
+    spark.conf.set(key, "3")
+    try {
+      FdoSink.write(spark, t, Mapsforge.readHeader(path), path,
+        tmp.resolve("db").toString)
+      perTableParquet(t, tmp.resolve("ref").toString)
+      assert(partsByKey(tmp.resolve("ref/lines").toString).keySet
+        .exists(_._3 == "c001"), "the reference did not roll")
+      assert(sameFeatureTables(tmp.resolve("db").toString,
+        tmp.resolve("ref").toString) > 0)
+    } finally { spark.conf.unset(key); t.release() }
+  }
+
+  test("map2db output dir: the tables, config.toml, nothing else") {
+    val path = MapEncoder.writeToTemp(
+      FusedBuildSpec.crossingMap(42L, withAreas = false))
+    val tmp = Files.createTempDirectory("graft-sink")
+    val out = tmp.resolve("db").toString
+    FdoSink.map2db(spark, path, out)
+    checkLayout(out, Set("config.toml"))
+  }
+
   test("map2db frees the build's relation when a sink fails") {
     val path = MapEncoder.writeToTemp(MapsforgeSpec.testMap)
     // the SQLite file's parent is a regular file
@@ -156,5 +250,34 @@ class FdoSinkSpec extends AnyFunSuite {
         .toString, sqliteFile = Some(notADir.resolve("map.db").toString))
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+
+    // the parquet job cannot set up: `_temporary` is a regular file
+    val out = Files.createTempDirectory("graft-sink")
+    Files.createFile(out.resolve("_temporary"))
+    val key = "spark.sql.sources.commitProtocolClass"
+    spark.conf.set(key, classOf[AbortCountingProtocol].getName)
+    val aborted = AbortCountingProtocol.aborted.get
+    try {
+      intercept[java.io.IOException] {
+        FdoSink.map2db(spark, path, out.toString)
+      }
+    } finally spark.conf.unset(key)
+    assert(AbortCountingProtocol.aborted.get == aborted + 1, "job not aborted")
+    assert(FeatureNames.forall(n => partFiles(out.resolve(n).toString).isEmpty))
+    assert(!Files.exists(out.resolve("_temporary")), "_temporary left")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
+}
+
+/** Spark's default commit protocol, counting the jobs it aborts. */
+class AbortCountingProtocol(jobId: String, path: String, dynamic: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamic) {
+  override def abortJob(ctx: JobContext): Unit = {
+    AbortCountingProtocol.aborted.incrementAndGet()
+    super.abortJob(ctx)
+  }
+}
+
+object AbortCountingProtocol {
+  val aborted = new AtomicInteger
 }

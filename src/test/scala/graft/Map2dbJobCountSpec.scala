@@ -9,11 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.FdoSink
 
 /** A conversion's fixed job count: 3 to build (the merged relation's
-  * stages and the vtag key collect), one per feature-table write, none
-  * for the metadata tables (the driver writes them) and 3 for the
-  * SQLite file (one ordered pass over the build's relation). The cap
-  * fails if per-table SQLite passes or job-run metadata writes come
-  * back: that form ran 21 jobs. */
+  * stages and the vtag key collect), one for the three feature tables
+  * (each task routes its rows to per-(table, level) writers), none for
+  * the metadata tables (the driver writes them) and 3 for the SQLite
+  * file (one ordered pass over the build's relation). The cap fails if
+  * per-table parquet or SQLite passes or job-run metadata writes come
+  * back: one write job per feature table ran 9, per-table sinks 21. */
 class Map2dbJobCountSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
@@ -30,7 +31,7 @@ class Map2dbJobCountSpec extends AnyFunSuite {
     n.get
   }
 
-  test("map2db with both sinks runs at most 10 jobs") {
+  test("map2db with both sinks runs at most 7 jobs") {
     val path = MapEncoder.writeToTemp(MapsforgeSpec.testMap)
     val out = java.nio.file.Files.createTempDirectory("graft-jobs")
     val n = jobs {
@@ -38,6 +39,6 @@ class Map2dbJobCountSpec extends AnyFunSuite {
         sqliteFile = Some(out.resolve("map.db").toString))
     }
     info(s"$n jobs")
-    assert(n <= 10, s"map2db ran $n jobs")
+    assert(n <= 7, s"map2db ran $n jobs")
   }
 }
