@@ -37,4 +37,28 @@ private[graft] object Threads {
       } finally pool.shutdownNow()
     }
   }
+
+  /** Run `other` on a new thread while this thread runs `here`, and
+    * return `here`'s result once both have ended. Neither is cancelled
+    * when the other fails: each runs to its end, then `other`'s failure
+    * is rethrown if it failed (with `here`'s suppressed), else `here`'s.
+    * The caller's thread keeps its own work, so a thread-CPU account of
+    * the caller sees exactly what it saw when the two ran in turn. */
+  def alongside[T](other: () => Unit)(here: => T): T = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val fut = pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = other()
+      })
+      val mine = try Right(here) catch { case e: Throwable => Left(e) }
+      val theirs =
+        try { fut.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      (theirs, mine) match {
+        case (Some(e), m) => m.left.foreach(e.addSuppressed); throw e
+        case (None, Left(e)) => throw e
+        case (None, Right(t)) => t
+      }
+    } finally pool.shutdown()
+  }
 }

@@ -631,14 +631,19 @@ object FdoSink {
     // drop it whether they succeed or not. The returned tables stay
     // valid (they recompute if acted on again).
     try {
-      write(spark, tables, header, srcPathname, outDir)
-      progress(s"map2db: tables sunk to '$outDir'")
       // optional drop-in-parity artifact: the reference's single-file
-      // SQLite form (reads the same cached relation the sink just wrote)
-      sqliteFile.foreach { p =>
-        writeSqlite(spark, tables, header, srcPathname, p)
-        progress(s"map2db: single-file SQLite written to '$p'")
+      // SQLite form. Both sinks only read the cached relation, so the
+      // parquet job runs on a pool thread beside the SQLite pass and
+      // fills the cores that the pass's one-partition fetches and
+      // driver-side page packing leave idle. The SQLite pass keeps the
+      // calling thread; a failure surfaces once both sinks have ended.
+      graft.Threads.alongside(() => write(spark, tables, header,
+          srcPathname, outDir)) {
+        sqliteFile.foreach(writeSqlite(spark, tables, header, srcPathname, _))
       }
+      progress(s"map2db: tables sunk to '$outDir'")
+      sqliteFile.foreach(p =>
+        progress(s"map2db: single-file SQLite written to '$p'"))
       if (header.isDbl) {
         val toml = configToml(header, outDir, tables.vtagKeys)
         val p = java.nio.file.Paths.get(outDir, "config.toml")
